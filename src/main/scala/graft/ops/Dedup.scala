@@ -593,12 +593,14 @@ object Dedup {
     * takes the minimum label among itself and its neighbors; converged when
     * the label sum stops decreasing (labels only decrease, so the DECIMAL
     * sum is a monotone convergence witness — one cheap agg per round, no
-    * row-level diff join). Near-dup graphs are clique-ish, so convergence
-    * is 2–3 rounds; the round count is bounded by graph diameter. Each
-    * round is one join + one group-by — all shuffles on the node id. For
-    * web-scale or high-diameter graphs use [[connectedComponentsStars]]
-    * (same API, same labeling): O(log n) rounds independent of diameter,
-    * where this variant needs diameter-many rounds.
+    * row-level diff join). Each round runs two propagation hops (one
+    * join + one group-by each — all shuffles on the node id), so the
+    * round count is bounded by half the graph diameter, plus the one
+    * round that witnesses convergence; near-dup graphs are clique-ish,
+    * so that is 2–3 rounds. For web-scale or high-diameter graphs use
+    * [[connectedComponentsStars]] (same API, same labeling): O(log n)
+    * rounds independent of diameter, where this variant needs
+    * diameter/2-many rounds.
     *
     * @param ids   relation with column `id` (one row per node)
     * @param pairs relation with columns `id_a`,`id_b` (undirected edges)
@@ -659,9 +661,10 @@ object Dedup {
     edges.unpersist()
     if (!converged)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"connectedComponents exhausted maxIter=$maxIter without the " +
-          "sum-convergence witness — labels may be partial (graph diameter " +
-          "> maxIter); survivors computed from them will over-count")
+        s"connectedComponents exhausted maxIter=$maxIter rounds (two hops " +
+          "each) without the sum-convergence witness — labels may be " +
+          "partial (graph diameter > 2·maxIter); survivors computed from " +
+          "them will over-count")
     labels
   }
 

@@ -2,10 +2,11 @@ package graft.store
 
 import graft.model.{DataQualityMetrics, FeatureConfig, FeatureMetadata}
 import graft.quality.DataQualityValidator
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 import java.security.MessageDigest
 
@@ -28,6 +29,18 @@ import java.security.MessageDigest
   *    mutation (no lost update, both commits visible). Readers load the
   *    max generation; superseded generations are garbage-collected a safe
   *    distance behind.
+  *
+  * A committed generation is immutable (exclusive create, sealed by the
+  * commit marker), so each instance memoizes the rows of the newest
+  * complete generation it has parsed, keyed on (generation, file length,
+  * modification time). Every read still lists `metadata/`, so commits by
+  * other instances or processes are visible at once and in-flight claims
+  * are still skipped; only the parse of an unchanged generation is
+  * saved. A serve that hits the cache therefore runs no Spark job.
+  *
+  * `registerFeatures` persists the registered relation once, so the
+  * quality scan, the fingerprint and the partition write read its
+  * materialized blocks instead of each recomputing its lineage.
   *
   * Scale posture: feature data only ever moves through distributed
   * scans/writes; the only `collect` is the serving tail (single user slice),
@@ -74,28 +87,43 @@ final class FeatureStore(
   private val metadataPath = s"$basePath/metadata"
   private val sketchesPath = s"$basePath/sketches"
 
+  /** The newest complete manifest this instance has read; see
+    * [[readCommitted]].
+    */
+  @volatile private var manifestMemo: Option[FeatureStore.Manifest] = None
+
   /** Register a feature relation: quality scan → content fingerprint →
     * stamped append (partitioned by version) → metadata upsert → monitor +
     * cache hooks. Returns the version hash.
     * (`register_features`, `ML Feature Store Pipeline.py:295-361`.)
     */
   def registerFeatures(df: DataFrame, meta: FeatureMetadata): String = {
-    val metrics = validator.validate(df)
-    val version = FeatureStore.fingerprint(df)
-    val createdAt = clock()
-
-    // Write DIRECTLY into this version's partition directory (standard
-    // hive layout, so readers still partition-discover feature_version):
-    // re-registering identical content replaces its own partition instead
-    // of appending duplicates (divergence from the reference, which would
-    // double-insert; documented in SURVEY §7.4), and — unlike a
-    // partitionBy write to the table root — CONCURRENT registrations of
-    // different versions never share a commit `_temporary` directory, so
-    // two writers can land their partitions in parallel. Also immune to
-    // the foreachBatch cloned-session conf trap StreamingSpec caught.
-    df.withColumn("created_at", lit(createdAt))
-      .write.mode("overwrite")
-      .parquet(s"$featuresPath/feature_version=$version")
+    // validate, fingerprint and the write each run jobs over df: compute
+    // it once. A relation the caller already persisted stays theirs.
+    val owned = df.storageLevel == StorageLevel.NONE
+    if (owned) df.persist(StorageLevel.MEMORY_AND_DISK)
+    val (metrics, version, createdAt) = try {
+      val metrics = validator.validate(df)
+      val version = FeatureStore.fingerprint(df)
+      val createdAt = clock()
+      // Write DIRECTLY into this version's partition directory (standard
+      // hive layout, so readers still partition-discover feature_version):
+      // re-registering identical content replaces its own partition
+      // instead of appending duplicates (divergence from the reference,
+      // which would double-insert; documented in SURVEY §7.4), and —
+      // unlike a partitionBy write to the table root — CONCURRENT
+      // registrations of different versions never share a commit
+      // `_temporary` directory, so two writers can land their partitions
+      // in parallel. Also immune to the foreachBatch cloned-session conf
+      // trap StreamingSpec caught. Spark does not coalesce a cached
+      // plan's output partitions, so the write rebalances: AQE then sizes
+      // the files as it did when df was written straight from its lineage
+      // (one file for a small version, not one per shuffle partition).
+      df.withColumn("created_at", lit(createdAt)).hint("rebalance")
+        .write.mode("overwrite")
+        .parquet(s"$featuresPath/feature_version=$version")
+      (metrics, version, createdAt)
+    } finally if (owned) df.unpersist()
 
     upsertMetadata(MetadataRow(
       feature_version = version,
@@ -369,7 +397,7 @@ final class FeatureStore(
     * DataFrame to serve for this call.
     */
   private def cacheFill(key: String, df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
     val n = p.count()
     if (n <= cacheMaxRows) {
       val slice = (p.schema, p.collect())
@@ -391,14 +419,18 @@ final class FeatureStore(
   private def manifestPath(gen: Long): Path =
     new Path(metadataPath, f"manifest-$gen%012d.json")
 
-  /** Highest manifest generation present, or -1 for an empty store. */
-  private def latestGen(fs: org.apache.hadoop.fs.FileSystem): Long = {
+  /** Manifest generations present, newest first. Other names in
+    * `metadata/` (a stray `manifest-old.json`, a backup) are ignored.
+    */
+  private def manifests(fs: FileSystem): Seq[(Long, FileStatus)] = {
     val dir = new Path(metadataPath)
-    if (!fs.exists(dir)) -1L
-    else fs.listStatus(dir).iterator.map(_.getPath.getName)
-      .filter(n => n.startsWith("manifest-") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("manifest-").stripSuffix(".json").toLong)
-      .foldLeft(-1L)(math.max)
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.flatMap { st =>
+      st.getPath.getName match {
+        case FeatureStore.ManifestName(g) => Some(g.toLong -> st)
+        case _ => None
+      }
+    }.sortBy(-_._1)
   }
 
   /** Commit marker: the final line of a COMPLETE manifest. A generation
@@ -418,7 +450,7 @@ final class FeatureStore(
     * would plug a conditional PUT here. Returns false when the
     * generation was already claimed.
     */
-  private def exclusiveCreate(fs: org.apache.hadoop.fs.FileSystem,
+  private def exclusiveCreate(fs: FileSystem,
       path: Path, payload: Array[Byte]): Boolean =
     if (fs.getScheme == "file") {
       val nio = java.nio.file.Paths.get(path.toUri.getPath)
@@ -442,37 +474,43 @@ final class FeatureStore(
       }
     }
 
-  /** Rows of the newest COMPLETE manifest at or below `gen` (skipping
-    * in-flight/crashed claims), or Nil for an empty chain.
+  /** Rows of the newest COMPLETE manifest in `listed` (skipping
+    * in-flight/crashed claims), or Nil for an empty chain. A generation
+    * whose (number, length, modification time) matches the memo returns
+    * the memoized rows without reading the file; otherwise the file is
+    * read, and a complete one is parsed and becomes the memo.
     */
-  private def readCommitted(fs: org.apache.hadoop.fs.FileSystem,
-      gen: Long): Seq[MetadataRow] = {
+  private def readCommitted(fs: FileSystem,
+      listed: Seq[(Long, FileStatus)]): Seq[MetadataRow] = {
     import spark.implicits._
-    var g = gen
-    while (g >= 0) {
-      val p = manifestPath(g)
-      if (fs.exists(p)) {
-        val in = fs.open(p)
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
+    listed.iterator.map { case (gen, st) =>
+      val key = (gen, st.getLen, st.getModificationTime)
+      manifestMemo.filter(_.key == key).map(_.rows).orElse {
+        val text =
+          try {
+            val in = fs.open(st.getPath)
+            try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+            finally in.close()
+          } catch { case _: java.io.FileNotFoundException => "" }
         val lines = text.split('\n').toIndexedSeq.filter(_.nonEmpty)
-        if (lines.lastOption.contains(CommitMark)) {
-          val rows = lines.dropRight(1)
-          return if (rows.isEmpty) Nil
-          else spark.read
-            .schema(implicitly[org.apache.spark.sql.Encoder[MetadataRow]]
-              .schema)
-            .json(rows.toDS()).as[MetadataRow].collect().toSeq
+        if (!lines.lastOption.contains(CommitMark)) None
+        else {
+          val json = lines.dropRight(1)
+          val rows = if (json.isEmpty) Nil
+            else spark.read
+              .schema(implicitly[org.apache.spark.sql.Encoder[MetadataRow]]
+                .schema)
+              .json(json.toDS()).as[MetadataRow].collect().toSeq
+          manifestMemo = Some(FeatureStore.Manifest(key, rows))
+          Some(rows)
         }
       }
-      g -= 1
-    }
-    Nil
+    }.collectFirst { case Some(rows) => rows }.getOrElse(Nil)
   }
 
   private def readMetadata(): Seq[MetadataRow] = {
     val fs = hadoopFs()
-    readCommitted(fs, latestGen(fs))
+    readCommitted(fs, manifests(fs))
   }
 
   /** Optimistic CAS commit: read the newest complete manifest, apply
@@ -494,12 +532,18 @@ final class FeatureStore(
     while (!done) {
       attempts += 1
       require(attempts <= 64, "metadata CAS: 64 straight lost races")
-      val gen = latestGen(fs)
-      val next = mutate(readCommitted(fs, gen))
+      val listed = manifests(fs)
+      val gen = listed.headOption.fold(-1L)(_._1)
+      val next = mutate(readCommitted(fs, listed))
       val payload = (next.toDS().toJSON.collect() :+ CommitMark)
         .mkString("\n").getBytes("UTF-8")
-      if (exclusiveCreate(fs, manifestPath(gen + 1), payload)) {
+      val path = manifestPath(gen + 1)
+      if (exclusiveCreate(fs, path, payload)) {
         done = true
+        // our own commit needs no re-parse
+        val st = fs.getFileStatus(path)
+        manifestMemo = Some(FeatureStore.Manifest(
+          (gen + 1, st.getLen, st.getModificationTime), next))
         val gc = gen - 8
         if (gc >= 0) fs.delete(manifestPath(gc), false)
       }
@@ -512,6 +556,14 @@ final class FeatureStore(
 }
 
 object FeatureStore {
+
+  private val ManifestName = """manifest-(\d{1,18})\.json""".r
+
+  /** Parsed rows of one complete manifest generation, keyed by
+    * (generation, file length, modification time).
+    */
+  private final case class Manifest(key: (Long, Long, Long),
+      rows: Seq[MetadataRow])
 
   /** Metadata table row (reference DDL `:282-292`); nested values are native
     * Spark types rather than JSON strings.

@@ -69,6 +69,36 @@ class QualitySpec extends AnyFunSuite {
     assert(v.validate(df).overallScore == 0.0)
   }
 
+  test("default checks answer from the stats scan: metrics on degenerate " +
+      "frames match the closure-based defaults they replace") {
+    import graft.model.DataQualityMetrics
+    def score(nullPct: Double, dupPct: Double, violations: Long) =
+      DataQualityMetrics(nullPct, dupPct, 0.0, violations,
+        math.max(0.0, 1.0 - (nullPct + dupPct + 0.0 + 0.1 * violations)))
+    def metrics(df: org.apache.spark.sql.DataFrame) =
+      new DataQualityValidator().validate(df)
+    // empty: non_empty and no_all_null_columns fail
+    assert(metrics(Seq.empty[(Long, Double)].toDF("user_id", "value")) ==
+      score(0.0, 0.0, 2L))
+    // an all-null column fails no_all_null_columns only
+    assert(metrics(Seq((1L, Option.empty[Double]), (2L, Option.empty[Double]))
+      .toDF("user_id", "value")) == score(0.5, 0.0, 1L))
+    // zero columns: vacuously no all-null column, but no user_id; the
+    // column-less rows all dedup to one
+    assert(metrics(spark.range(3).select()) == score(0.0, 2.0 / 3, 1L))
+    assert(metrics(spark.emptyDataFrame) == score(0.0, 0.0, 2L))
+    // a user check named like a default runs its own closure, beside the
+    // default rather than instead of it
+    val clean = Seq((1L, 10.0), (2L, 11.0)).toDF("user_id", "value")
+    assert(new DataQualityValidator().addCheck("non_empty", _ => false)
+      .validate(clean) == score(0.0, 0.0, 1L))
+    val v = new DataQualityValidator().addCheck("non_empty", _ => true)
+    assert(v.validate(Seq.empty[(Long, Double)].toDF("user_id", "value")) ==
+      score(0.0, 0.0, 2L))
+    assert(v.checkNames ==
+      Seq("non_empty", "no_all_null_columns", "has_user_id", "non_empty"))
+  }
+
   test("madOutliers: the far point is the only outlier; a shifted-scale " +
       "group keeps its own fences") {
     // group A: nine values near 10 plus one at 1000; median 10, MAD small

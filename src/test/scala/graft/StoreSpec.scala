@@ -2,9 +2,11 @@ package graft
 
 import graft.model.{FeatureConfig, FeatureMetadata}
 import graft.store.{FeatureStore, TtlCache}
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 class StoreSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -18,6 +20,32 @@ class StoreSpec extends AnyFunSuite {
 
   private def feats(rows: (Long, Double)*) =
     rows.toSeq.toDF("user_id", "total_amount")
+
+  /** `body`'s result and the number of Spark jobs it launched. Only jobs
+    * of this thread's job group count, so work from other threads never
+    * shows up.
+    */
+  private def jobsIn[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "counted")
+    try {
+      val a = body
+      TestBus.drain(sc)
+      (a, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 
   private val meta = FeatureMetadata("", "test features", "",
     Seq(FeatureConfig("user_id", "int64"), FeatureConfig("total_amount", "float64")),
@@ -100,6 +128,98 @@ class StoreSpec extends AnyFunSuite {
     now = 10001L
     assert(c.get("k").isEmpty)
     assert(c.hits == 2 && c.misses == 1)
+  }
+
+  test("TTL cache: a replaced value is evicted once, a re-put of the same " +
+      "object is not, and delete/clear evict the rest") {
+    val evicted = scala.collection.mutable.ArrayBuffer.empty[String]
+    val c = new TtlCache[String, String](ttlSeconds = 10,
+      onEvict = (v: String) => { evicted += v; () })
+    val a = new String("a")
+    val b = new String("b")
+    c.put("k", a)
+    c.put("k", b)
+    assert(evicted == Seq("a"))
+    c.put("k", b)
+    assert(evicted == Seq("a"))
+    assert(c.get("k").contains("b"))
+    c.delete("k")
+    assert(evicted == Seq("a", "b"))
+    c.put("x", a)
+    c.clear()
+    assert(evicted == Seq("a", "b", "a") && c.size == 0)
+    assert(c.hits == 1 && c.misses == 0)
+  }
+
+  test("a cache hit on the latest version launches no Spark job") {
+    val store = freshStore()
+    store.registerFeatures(feats(1L -> 10.0, 2L -> 20.0), meta)
+    // a single-user slice is not cached yet: the miss reads the partition
+    val (first, missJobs) = jobsIn(store.serveFeatures(2L))
+    assert(first.get("total_amount") == 20.0)
+    assert(missJobs > 0)
+    val (again, hitJobs) = jobsIn(store.serveFeatures(2L))
+    assert(again == first)
+    assert(hitJobs == 0)
+  }
+
+  test("one instance sees another instance's commits at once: a new " +
+      "version serves right after it registers, and cleanup shows in the " +
+      "listing") {
+    val dir = Files.createTempDirectory("graft-store-2").toString
+    var i = 0
+    val clock = () => { i += 1; f"2024-01-01T00:00:$i%02dZ" }
+    val a = new FeatureStore(spark, dir, clock = clock)
+    val b = new FeatureStore(spark, dir, clock = clock)
+    val v1 = b.registerFeatures(feats(1L -> 1.0), meta)
+    assert(a.serveFeatures(1L).get("total_amount") == 1.0)
+    val v2 = b.registerFeatures(feats(1L -> 2.0), meta)
+    assert(a.serveFeatures(1L).get("total_amount") == 2.0)
+    assert(a.listFeatureVersions().map(_.featureVersion) == Seq(v2, v1))
+    // b's view of its own commit equals a's view parsed from the file
+    assert(a.listFeatureVersions() == b.listFeatureVersions())
+    assert(b.cleanupOldVersions(keepN = 1) == Seq(v1))
+    assert(a.listFeatureVersions().map(_.featureVersion) == Seq(v2))
+  }
+
+  test("stray manifest-*.json names in metadata/ are ignored") {
+    val dir = Files.createTempDirectory("graft-store-stray").toString
+    val store = new FeatureStore(spark, dir)
+    val v1 = store.registerFeatures(feats(1L -> 1.0), meta)
+    Seq("manifest-old.json", "manifest-.json", "manifest-12.json.bak")
+      .foreach(n => Files.writeString(Paths.get(dir, "metadata", n), "junk"))
+    assert(store.listFeatureVersions().map(_.featureVersion) == Seq(v1))
+    val v2 = store.registerFeatures(feats(1L -> 2.0), meta)
+    assert(new FeatureStore(spark, dir).listFeatureVersions()
+      .map(_.featureVersion) == Seq(v2, v1))
+  }
+
+  test("manifest format: the bytes a commit writes are pinned, and a " +
+      "manifest with those bytes reads back") {
+    val dir = Files.createTempDirectory("graft-store-fmt").toString
+    val store = new FeatureStore(spark, dir,
+      clock = () => "2024-01-01T00:00:01Z")
+    val v = store.registerFeatures(feats(1L -> 1.0, 2L -> 2.0), meta)
+    val text = Files.readString(
+      Paths.get(dir, "metadata", "manifest-000000000000.json"))
+    val expected =
+      s"""{"feature_version":"$v","description":"test features",""" +
+      """"created_at":"2024-01-01T00:00:01Z","features_config":[""" +
+      """{"name":"user_id","dtype":"int64","description":"","tags":[],""" +
+      """"owner":""},{"name":"total_amount","dtype":"float64",""" +
+      """"description":"","tags":[],"owner":""}],"null_percentage":0.0,""" +
+      """"duplicate_percentage":0.0,"outlier_percentage":0.0,""" +
+      """"schema_violations":0,"overall_score":1.0,""" +
+      """"lineage":{"source":"unit-test"},"tags":["test"]}""" + "\n#commit"
+    assert(text == expected)
+    // the same bytes, laid down by hand, read back by a fresh instance
+    val copy = Files.createTempDirectory("graft-store-fmt2")
+    Files.createDirectories(copy.resolve("metadata"))
+    Files.writeString(copy.resolve("metadata/manifest-000000000007.json"),
+      expected)
+    val listed = new FeatureStore(spark, copy.toString).listFeatureVersions()
+    assert(listed == store.listFeatureVersions())
+    assert(listed.map(_.featureVersion) == Seq(v))
   }
 
   test("get_features caching is observable via dashboard counters") {

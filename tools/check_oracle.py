@@ -6,6 +6,9 @@ Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 Loads every <name>.parquet under verifyOutDir (written by graft.Verify),
 runs the matching SQL from oracle_sql.json in DuckDB against the sfDir
 tables, sorts columns by name and rows by all columns, and compares values.
+An oracle_sql.json entry with no output directory is a failure too (the
+query crashed in graft.Verify; verify_failures.json, when present, gives
+the error). Exits non-zero on any failure.
 """
 import json, sys, glob, os
 import duckdb
@@ -76,6 +79,16 @@ def main(sf_dir: str, out_dir: str) -> int:
             n_pass += 1
         else:
             print(f"✗ {name}: " + " | ".join(status[:3]))
+            n_fail += 1
+    failures_path = f"{out_dir}/verify_failures.json"
+    errors = {}
+    if os.path.exists(failures_path):
+        with open(failures_path) as f:
+            errors = json.load(f)
+    for name in sorted(oracle):
+        if not os.path.isdir(f"{out_dir}/{name}"):
+            print(f"✗ {name}: no output directory"
+                  + (f" ({errors[name]})" if name in errors else ""))
             n_fail += 1
     print(f"== {n_pass} pass, {n_fail} fail ==")
     return 1 if n_fail else 0
