@@ -3,11 +3,12 @@ package graft
 import graft.queries._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Query-registry contract — see SURVEY.md §7.
   *
-  * `queries` maps operator names to oracle-shaped DataFrame builders;
-  * `oracleSql` carries the equivalent DuckDB SQL. Families live under
-  * `graft.queries.*`; the library operators they exercise live under
+  * Every query is registered once, in its family's `registry` (builder
+  * plus optional oracle SQL); `queries` and `oracleSql` are derived from
+  * [[families]]. Families live under `graft.queries.*`; the library
+  * operators they exercise live under
   * `graft.{extract,quality,store,ops,functions,sources,streaming}`.
   */
 object SparkEntry {
@@ -15,22 +16,28 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ParityQueries.userEventFeatures(spark, "/root/testdata/sf0.001")
 
+  /** Every query family, by name — the one list a new family joins. */
+  lazy val families: Seq[(String, Map[String, Query])] = Seq(
+    "parity" -> ParityQueries.registry,
+    "quality" -> QualityQueries.registry,
+    "relational" -> RelationalQueries.registry,
+    "dedup" -> DedupQueries.registry,
+    "similarity" -> SimilarityQueries.registry,
+    "text" -> TextQueries.registry,
+    "multimodal" -> MultimodalQueries.registry,
+    "scale" -> ScaleQueries.registry,
+    "prep" -> PrepQueries.registry,
+    "feature" -> FeatureQueries.registry,
+    "eval" -> EvalQueries.registry,
+    "model" -> ModelQueries.registry)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ParityQueries.queries ++ QualityQueries.queries ++
-      RelationalQueries.queries ++ DedupQueries.queries ++
-      SimilarityQueries.queries ++ TextQueries.queries ++
-      MultimodalQueries.queries ++ ScaleQueries.queries ++
-      PrepQueries.queries ++ FeatureQueries.queries ++
-      EvalQueries.queries ++ ModelQueries.queries
+    families.flatMap(_._2).map { case (n, q) => n -> q.build }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    ParityQueries.oracle ++ QualityQueries.oracle ++
-      RelationalQueries.oracle ++ DedupQueries.oracle ++
-      SimilarityQueries.oracle ++ TextQueries.oracle ++
-      MultimodalQueries.oracle ++ ScaleQueries.oracle ++
-      PrepQueries.oracle ++ FeatureQueries.oracle ++
-      EvalQueries.oracle ++ ModelQueries.oracle
+    families.flatMap(_._2).flatMap { case (n, q) => q.oracleSql.map(n -> _) }
+      .toMap
 }

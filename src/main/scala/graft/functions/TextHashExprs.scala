@@ -173,7 +173,7 @@ object BucketCounts {
   * through a 32-char hex STRING plus a radix-conversion parse per row;
   * this computes the long straight off the digest bytes — same value,
   * no string allocation (measured 31.3 → 10.0 s on the 22M-token
-  * (doc, bucket) count build, ProbeRound11 occ mode). Registered as SQL
+  * (doc, bucket) count build, SURVEY §6.0b). Registered as SQL
   * function `graft_md5_48(key)`.
   */
 case class Md5Hash48(child: Expression)

@@ -99,7 +99,7 @@ object Dedup {
     * sub-vocabulary is alphabet-bounded, ≤ |Σ|^(q(d−1)+1) values.
     * Returns (s_a, s_b, dist), s_a < s_b, dist ≤ maxDist.
     *
-    * Sizing (ProbeEditDist, SURVEY §6.1): gram buckets hold ~vocab/|Σ|^q
+    * Sizing (edit-distance join, SURVEY §6.1): gram buckets hold ~vocab/|Σ|^q
     * values, so Σ bucket² grows quadratically in the vocabulary at fixed
     * q — raise q as the vocabulary grows (q = 3 gives 26³ gram values on
     * a lowercase alphabet) to keep the blocking sub-quadratic; on dense
@@ -691,8 +691,8 @@ object Dedup {
     * aggregate, no edge-set anti-join. Same output contract as
     * [[connectedComponents]]: (id, component = min reachable id).
     *
-    * Selection rule (measured, SURVEY §6.1 ProbeStars): use THIS variant
-    * by default at scale. On the 50k dup-dense corpus' shared 90.6M
+    * Selection rule (measured, SURVEY §6.1 CC-variant isolation): use
+    * THIS variant by default at scale. On the 50k dup-dense corpus' shared 90.6M
     * verified edge set it produced the identical labeling 2.1× faster
     * than min-label (73 s vs 156 s — its per-round working set is the
     * shrinking edge list, not edges ⋈ labels); on a 200k-node chain

@@ -44,8 +44,9 @@ object Graph {
     * the node id at cluster scale) + one 1-row dangling aggregate. The
     * degree-weighted edge relation (src, dst, deg) and the dangling-node
     * set build ONCE outside the loop — joining out-degrees inside the
-    * round re-shuffled the full edge relation every iteration (ProbeGraph
-    * measured 134 s → 18 s for 3 rounds at 6M edges from hoisting them).
+    * round re-shuffled the full edge relation every iteration (SURVEY
+    * §6.1 iterative graph family: 134 s → 18 s for 3 rounds at 6M edges
+    * from hoisting them).
     * Returns (node, rank) — rank as DOUBLE rounded 9 dp.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
@@ -316,7 +317,7 @@ object Graph {
     * against the adjacency on (node, index) to fetch the chosen neighbor
     * — O(1) work per walk per step. The earlier argmin-over-neighbors
     * formulation (min over md5(start|r|v)) costs Σ walks·deg(cur) per
-    * step, which a celebrity hub turns quadratic: ProbeGraph measured
+    * step, which a celebrity hub turns quadratic: SURVEY §6.1 measured
     * 1052 s at 6M edges with a 600k-degree hub vs ~17 s for this shape —
     * and the (node, index) join key is intrinsically salted, a hub's
     * lookups spreading across its whole neighbor range instead of one hot

@@ -2,7 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.hadoop.fs.Path
 
+import java.security.MessageDigest
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -45,21 +47,34 @@ object Ivf {
   /** Clear the in-JVM index cache (tests only — disk artifacts remain). */
   def invalidateCache(): Unit = cache.clear()
 
-  /** Fingerprint binding a disk index to its inputs and build knobs: the
-    * corpus' resolved input file list (parquet part names are unique per
-    * write, so a regenerated dataset at the same directory changes the
-    * list), the id/vector columns, cluster count, and sample/seed knobs.
-    * Driver-side file-index listing only — no Spark job. An index written
-    * under one fingerprint is never served for another (stale or foreign
-    * `/tmp` artifacts rebuild instead of silently answering).
+  /** MD5 hex fingerprint of a relation's inputs plus `knobs`: each
+    * resolved input file's path, length and modification time (its Hadoop
+    * `FileStatus` — driver-side metadata calls, no Spark job), so a file
+    * rewritten under the same name changes the fingerprint just as a new
+    * part name does. Every cross-JVM `/tmp` artifact (IVF indexes, the
+    * incremental-dedup state, saved SGD weights) is keyed on it; an
+    * artifact written under one fingerprint is never served for another.
     */
-  def indexFingerprint(emb: DataFrame, idCol: String, vecCol: String,
-      nClusters: Int, sampleCap: Int, seed: Long): String = {
-    val key = emb.inputFiles.sorted.mkString(",") +
-      s"|$idCol|$vecCol|$nClusters|$sampleCap|$seed"
-    java.security.MessageDigest.getInstance("MD5")
+  def inputFingerprint(df: DataFrame, knobs: String): String = {
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
+    val files = df.inputFiles.sorted.map { f =>
+      val p = new Path(f)
+      val st = p.getFileSystem(conf).getFileStatus(p)
+      s"$f:${st.getLen}:${st.getModificationTime}"
+    }
+    val key = files.mkString(",") + "|" + knobs
+    MessageDigest.getInstance("MD5")
       .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
   }
+
+  /** Fingerprint binding a disk index to its inputs ([[inputFingerprint]])
+    * and build knobs: the id/vector columns, cluster count, and
+    * sample/seed knobs. Stale or foreign `/tmp` artifacts rebuild instead
+    * of silently answering.
+    */
+  def indexFingerprint(emb: DataFrame, idCol: String, vecCol: String,
+      nClusters: Int, sampleCap: Int, seed: Long): String =
+    inputFingerprint(emb, s"$idCol|$vecCol|$nClusters|$sampleCap|$seed")
 
   /** Fit the coarse quantizer: seeded Lloyd iterations on a BOUNDED sample,
     * run on the driver. The sample is ≤ `sampleCap` rows by construction
@@ -216,16 +231,13 @@ object Ivf {
   }
 
   /** Fingerprint for a FIXED-centroid index ([[buildCachedFixed]]): the
-    * corpus' resolved input file list + columns + the centroid values
+    * corpus' [[inputFingerprint]] + columns + the centroid values
     * themselves. No fit knobs — the quantizer IS the literal centroids.
     */
   def fixedFingerprint(emb: DataFrame, idCol: String, vecCol: String,
-      centroids: Array[Array[Double]]): String = {
-    val key = emb.inputFiles.sorted.mkString(",") +
-      s"|$idCol|$vecCol|fixed|" + centroids.map(_.mkString(":")).mkString(";")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
+      centroids: Array[Array[Double]]): String =
+    inputFingerprint(emb, s"$idCol|$vecCol|fixed|" +
+      centroids.map(_.mkString(":")).mkString(";"))
 
   /** Build-or-reuse an index whose coarse quantizer is the GIVEN literal
     * centroids — no KMeans fit at all ([[fits]] untouched). The audit

@@ -345,8 +345,8 @@ object SaltedGrid {
     * a MATERIALIZED input is bounded work and strictly faster than the
     * salted grid's fixed costs (edge pass, offsets broadcast, extra
     * shuffle: ~2 s of plan/stage overhead at any size; measured crossover
-    * ~8–10 M rows on local[32], see ProbeNtile); above it the salted path
-    * is the only one that finishes — callers count their checkpointed
+    * ~8–10 M rows on local[32], SURVEY §6.1 salted ntile); above it the
+    * salted path is the only one that finishes — callers count their checkpointed
     * input (a cached-block pass, no shuffle) and dispatch. Both paths are
     * spec-pinned hash-identical on ties, NULL groups and NULL order
     * values, so the dispatch can never move a result. Tunable per session

@@ -263,7 +263,7 @@ object Similarity {
     * [[graft.ops.Ivf]] `sim_ivf_exact` witness pattern, so the
     * registered query stays hash-checked end-to-end through the funnel
     * machinery); partial probes trade boundary-pair recall for
-    * Σ cell-product candidate work (measured in ProbeRound12 /
+    * Σ cell-product candidate work (round-12 funnel measurements,
     * SURVEY §6.1).
     */
   def bitextMarginFunnel(xs: DataFrame, ys: DataFrame, idCol: String,
@@ -1129,8 +1129,8 @@ object Similarity {
     * centroid relation, min-struct ties to the smallest cid). Returns
     * (__id, __cell).
     */
-  private def fittedCells(emb: DataFrame, idCol: String, vecCol: String,
-      k: Int, rounds: Int): DataFrame = {
+  private[graft] def fittedCells(emb: DataFrame, idCol: String,
+      vecCol: String, k: Int, rounds: Int): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val X9 = DecimalType(12, 9)
     val Dif = DecimalType(14, 9)
@@ -1144,9 +1144,12 @@ object Similarity {
       .select(col("cid"), col("dim"),
         round(col("centroid"), 9).cast(X9).as("__c9"))
       .collect().toSeq
+    // one column per FITTED cid: with fewer than k ids kmeansFit has
+    // fewer cids, and a missing column's NULL distance would win least()
+    val nc = cents.map(_.getLong(0)).distinct.size
     val wide = cents.groupBy(_.getLong(1)).toSeq.sortBy(_._1).map {
       case (dim, rs) =>
-        val cs = new Array[Any](k)
+        val cs = new Array[Any](nc)
         rs.foreach(r => cs(r.getLong(0).toInt) = r.getDecimal(2))
         org.apache.spark.sql.Row.fromSeq(dim.toInt +: cs.toSeq)
     }
@@ -1155,7 +1158,7 @@ object Similarity {
       org.apache.spark.sql.types.StructType(
         org.apache.spark.sql.types.StructField("dim",
           org.apache.spark.sql.types.IntegerType, nullable = false) +:
-        (0 until k).map(i => org.apache.spark.sql.types.StructField(
+        (0 until nc).map(i => org.apache.spark.sql.types.StructField(
           s"__c$i", X9))))
     val x = emb.select(col(idCol).as("__id"),
         posexplode(col(vecCol).cast("array<double>"))
@@ -1167,13 +1170,13 @@ object Similarity {
       sum(d * d).as(s"__s$i")
     }
     val argmin =
-      if (k == 1) lit(0)
-      else least((0 until k).map(i =>
+      if (nc == 1) lit(0)
+      else least((0 until nc).map(i =>
         struct(col(s"__s$i").as("__dist"), lit(i.toLong).as("cid"))): _*)
         .getField("cid")
     x.join(broadcast(centsWide), Seq("dim"))
       .groupBy("__id")
-      .agg(sq(0), (1 until k).map(sq): _*)
+      .agg(sq(0), (1 until nc).map(sq): _*)
       .select(col("__id"), argmin.cast("int").as("__cell"))
   }
 
@@ -1526,7 +1529,9 @@ object Similarity {
     * so a DuckDB oracle replays every round bit-identically. Seeds are
     * the k ids smallest by md5(id) (hash-random yet engine-stable — the
     * library-wide sampling rule). Empty clusters keep their previous
-    * centroid.
+    * centroid. With fewer than k distinct ids there are only that many
+    * seeds, so the fit has one cluster per id (cids 0 until #ids, each
+    * centroid its own point) — never a centroid-less cid.
     *
     * Per round: one broadcast join of the (id, dim, x) relation against
     * the k·d centroid relation + two partial-aggregable shuffles
@@ -1574,6 +1579,11 @@ object Similarity {
       seeds.join(x, Seq("id"))
         .select(col("cid").cast("int").as("cid"),
           col("dim").cast("int").as("dim"), col("x9").cast(D9).as("c")))
+    // the seeds number min(k, #ids): cids are 0 until nc. Pivot columns
+    // and argmin arms exist only for those — a centroid-less cid would
+    // sum to a NULL distance, which sorts FIRST in least(struct) and
+    // captures every point
+    val nc = cents.map(_.getInt(0)).distinct.size
     // per-(cid, dim=0) member count of the LAST round's aggregate = the
     // per-cid assignment size (posexplode emits dim 0 for every
     // non-empty vector, and empty vectors never enter x at all)
@@ -1589,7 +1599,7 @@ object Similarity {
     def centsWideRel(rows: Seq[org.apache.spark.sql.Row]): DataFrame = {
       val wide = rows.groupBy(_.getInt(1)).toSeq.sortBy(_._1).map {
         case (dim, rs) =>
-          val cs = new Array[Any](k)
+          val cs = new Array[Any](nc)
           rs.foreach(r => cs(r.getInt(0)) = r.getDecimal(2))
           org.apache.spark.sql.Row.fromSeq(dim +: cs.toSeq)
       }
@@ -1598,7 +1608,7 @@ object Similarity {
         org.apache.spark.sql.types.StructType(
           org.apache.spark.sql.types.StructField("dim",
             org.apache.spark.sql.types.IntegerType, nullable = false) +:
-          (0 until k).map(i => org.apache.spark.sql.types.StructField(
+          (0 until nc).map(i => org.apache.spark.sql.types.StructField(
             s"__c$i", D9))))
     }
     def argminCid(k: Int): Column =
@@ -1613,8 +1623,8 @@ object Similarity {
       }
       val assign = x.join(broadcast(centsWideRel(cents)), Seq("dim"))
         .groupBy("id")
-        .agg(sq(0), (1 until k).map(sq): _*)
-        .select(col("id"), argminCid(k).as("cid"))
+        .agg(sq(0), (1 until nc).map(sq): _*)
+        .select(col("id"), argminCid(nc).as("cid"))
       lastFresh = localCents(assign.join(x, Seq("id"))
         .groupBy("cid", "dim")
         .agg(round(sum(col("x9")).cast("double") / count(lit(1)), 9)

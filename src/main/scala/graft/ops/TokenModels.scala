@@ -139,8 +139,9 @@ object TokenModels {
     * residual per DOC keeps all BigDecimal-boxed division work on the
     * doc-count relation; the wide (doc, bucket) relation only ever sees
     * compact long products (measured 8.7 → 1.2 s/round at 1M docs on
-    * local[32], ProbeRound11). The bias is bucket id `buckets` with
-    * count `biasCount` on every doc (token-less docs still train it) —
+    * local[32], SURVEY §6.1 round-11 operators). The bias is bucket id
+    * `buckets` with count `biasCount` on every doc (token-less docs still
+    * train it) —
     * feature SCALING, not semantics: with unit bias against token
     * counts of ~50, the boundary offset learns ~50× slower than the
     * weights and batch GD oscillates around the origin (measured on the
@@ -206,8 +207,8 @@ object TokenModels {
     * occ ⋈ residual gradient join then both reuse this ONE layout —
     * without it every round re-shuffles the full count relation on id
     * (measured 11.3 → 8.7 s/round at 1M docs before the per-doc
-    * quantization; ProbeRound11). Bias rides as bucket `buckets` with
-    * count `biasCount`.
+    * quantization; SURVEY §6.1 round-11 operators). Bias rides as
+    * bucket `buckets` with count `biasCount`.
     */
   private[graft] def sgdCounts(docs: DataFrame, idCol: String,
       textCol: String, targetPred: Column, buckets: Int,
@@ -492,21 +493,16 @@ object TokenModels {
   /** Fits recorded by [[fitOrLoadSgd]] (tests observe cache behavior). */
   val sgdFits = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Fingerprint binding a saved model to its training inputs and knobs —
-    * the [[graft.ops.Ivf.indexFingerprint]] discipline: the corpus'
-    * resolved input file list (parquet part names are unique per write),
-    * the columns, the target predicate's SQL, and every hyperparameter.
+  /** Fingerprint binding a saved model to its training inputs and knobs
+    * ([[graft.ops.Ivf.inputFingerprint]]): the corpus' input files, the
+    * columns, the target predicate's SQL, and every hyperparameter.
     * A model written under one fingerprint is never served for another.
     */
   def modelFingerprint(docs: DataFrame, idCol: String, textCol: String,
       targetPred: Column, buckets: Int, iters: Int, etaShift: Int,
-      biasCount: Int): String = {
-    val key = docs.inputFiles.sorted.mkString(",") +
-      s"|$idCol|$textCol|${targetPred.toString}" +
-      s"|$buckets|$iters|$etaShift|$biasCount"
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
+      biasCount: Int): String =
+    Ivf.inputFingerprint(docs, s"$idCol|$textCol|${targetPred.toString}" +
+      s"|$buckets|$iters|$etaShift|$biasCount")
 
   /** Train-once / serve-many for the GD linear classifier: load the
     * weights at `path` if present, readable AND fingerprint-matched,

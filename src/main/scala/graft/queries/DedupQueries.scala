@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.ops.{Dedup, Linkage, SuffixArray}
+import graft.ops.{Dedup, Ivf, Linkage, SuffixArray}
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -178,17 +178,16 @@ object DedupQueries {
     * disk — the production semantics the operator claims (re-deriving the
     * state per query would re-hash the old corpus every run, exactly what
     * incremental dedup exists to avoid). Same discipline as the IVF index
-    * cache: the path is keyed by a fingerprint of the resolved input file
-    * list + build knobs (regenerated data ⇒ different path ⇒ rebuild; stale
-    * `/tmp` artifacts are never served), and the write lands via an atomic
-    * rename so a crashed build can't leave a half-readable index.
+    * cache: the path is keyed by [[graft.ops.Ivf.inputFingerprint]] of the
+    * input files (name, length, mtime) + build knobs (regenerated or
+    * rewritten data ⇒ different path ⇒ rebuild; stale `/tmp` artifacts
+    * are never served), and the write lands via an atomic rename so a
+    * crashed build can't leave a half-readable index.
     */
   private def cachedState(spark: SparkSession, dir: String,
       oldDocs: DataFrame): DataFrame = {
-    val key = oldDocs.inputFiles.sorted.mkString(",") +
-      s"|$NumHashes|$Bands|0.9|mod4ne3|v1"
-    val fp = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
+    val fp = Ivf.inputFingerprint(oldDocs,
+      s"$NumHashes|$Bands|0.9|mod4ne3|v1").take(16)
     val path = "/tmp/graft_incstate/" +
       dir.replaceAll("[^A-Za-z0-9._-]", "_") + "_" + fp
     val loaded =
@@ -397,32 +396,6 @@ object DedupQueries {
         LinkEmIters)
       .orderBy("agree_name", "agree_seg", "agree_bal")
   }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_record_linkage" -> recordLinkage,
-    "dedup_linkage_em" -> linkageEmQ,
-    "dedup_linkage_recall" -> linkageRecallQ,
-    "dedup_linkage_multipass" -> linkageMultipassQ,
-    "dedup_linkage_upass" -> linkageUpassQ,
-    "dedup_lsh_plan" -> lshPlanQ,
-    "dedup_span_removal" -> spanLevel,
-    "dedup_suffix_spans" -> suffixSpans,
-    "dedup_chunks" -> chunkLevel,
-    "dedup_containment" -> containment3gram,
-    "dedup_exact_groups" -> exactGroups,
-    "dedup_size_histogram" -> sizeHistogram,
-    "dedup_exact_keep_first" -> exactKeepFirst,
-    "dedup_keep_best" -> exactKeepBest,
-    "dedup_editdist_names" -> editDistNames,
-    "dedup_cross_slice" -> crossSlice,
-    "dedup_jaccard_pairs" -> jaccardPairs,
-    "dedup_jaccard_2gram" -> jaccard2gram,
-    "dedup_minhash_lsh" -> minhashLsh,
-    "dedup_cluster_survivors" -> clusterSurvivors,
-    "dedup_cluster_stars" -> clusterSurvivorsStars,
-    "dedup_cluster_fast" -> clusterSurvivorsFast,
-    "dedup_incremental" -> incrementalSurvivors,
-    "dedup_simhash" -> simhashDocs)
 
   // ---- oracle SQL -------------------------------------------------------------
 
@@ -662,13 +635,13 @@ object DedupQueries {
        |FROM pat, p$LinkEmIters ORDER BY 1, 2, 3""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
+  val registry: Map[String, Query] = Map(
     // the FS-EM sufficient statistic is the agreement-pattern count
     // table; the whole EM runs on it in exact integers
-    "dedup_linkage_em" -> linkageEmSql,
+    "dedup_linkage_em" -> Query(linkageEmQ, Some(linkageEmSql)),
     // multi-pass FS: the record-linkage replay on the DISTINCT union of
     // the balance-band and case-folded-name candidate passes
-    "dedup_linkage_multipass" -> {
+    "dedup_linkage_multipass" -> Query(linkageMultipassQ, Some({
       def hbSql(suffix: String, n: Int) =
         s"('0x' || substr(md5(id::VARCHAR || '$suffix'), 1, 12))::BIGINT" +
           s" % $n = 0"
@@ -744,13 +717,13 @@ object DedupQueries {
          |  FROM cand, w)
          |SELECT aid AS a_id, bid AS b_id, n_agree, weight, is_match
          |FROM sc WHERE weight >= 0.0 ORDER BY 1, 2""".stripMargin
-    },
+    })),
     // per-pass u: pairs assigned to their FIRST reaching pass (min pass
     // over the union arms — grouped, never DISTINCT's arbitrary
     // survivor), u estimated per pass (pass grid LEFT JOIN keeps an
     // all-match pass on the Laplace floor), m pooled, each pair scored
     // under its own pass's weights
-    "dedup_linkage_upass" -> {
+    "dedup_linkage_upass" -> Query(linkageUpassQ, Some({
       def hbSql(suffix: String, n: Int) =
         s"('0x' || substr(md5(id::VARCHAR || '$suffix'), 1, 12))::BIGINT" +
           s" % $n = 0"
@@ -837,14 +810,14 @@ object DedupQueries {
          |    AS pass,
          |  n_agree, weight, is_match
          |FROM sc WHERE weight >= 0.0 ORDER BY 1, 2""".stripMargin
-    },
+    })),
     // blocking recall: reachability from the id-joined truth, candidate
     // volumes from block-count aggregates, union by inclusion-exclusion.
     // Volume joins are IS NOT DISTINCT FROM (never USING/=): Spark's
     // blockingRecall joins block keys with <=>, so a NULL blocking key
     // forms a real block there — a null-rejecting oracle join would
     // silently drop its volume and skew the inclusion-exclusion union
-    "dedup_linkage_recall" -> {
+    "dedup_linkage_recall" -> Query(linkageRecallQ, Some({
       def hbSql(suffix: String, n: Int) =
         s"('0x' || substr(md5(id::VARCHAR || '$suffix'), 1, 12))::BIGINT" +
           s" % $n = 0"
@@ -897,14 +870,14 @@ object DedupQueries {
          |    c1.v + c2.v - c12.v
          |  FROM t, c1, c2, c12
          |) ORDER BY pass""".stripMargin
-    },
+    })),
     // full FS replay: md5-keyed corruption, (nation, balance-band)
     // blocking, m from the id-joined true pairs, u from in-block
     // non-matches, Laplace-smoothed 9-dp log2 weights, exact decimal
     // pair scores. The balance band must FLOOR on negative balances
     // (Spark's pmod spelling does); DuckDB's integer `//` truncates
     // toward zero, so the band routes through the same pmod identity
-    "dedup_record_linkage" -> {
+    "dedup_record_linkage" -> Query(recordLinkage, Some({
       val ln2 = math.log(2.0)
       s"""$linkCandCtes,
          |tp AS (SELECT count(*) AS n,
@@ -947,10 +920,10 @@ object DedupQueries {
          |  FROM cand, w)
          |SELECT aid AS a_id, bid AS b_id, n_agree, weight, is_match
          |FROM sc WHERE weight >= 0.0 ORDER BY 1, 2""".stripMargin
-    },
+    })),
     // the S-curve integral on the same midpoint grid: 9-dp DECIMAL
     // contributions, exact sums, min-struct winner — the planner replays
-    "dedup_lsh_plan" ->
+    "dedup_lsh_plan" -> Query(lshPlanQ, Some(
       s"""WITH bp AS (SELECT b AS bands, $PlanPerms // b AS rows_per_band
          |  FROM (SELECT unnest(generate_series(1, $PlanPerms)) AS b)
          |  WHERE $PlanPerms % b = 0),
@@ -975,21 +948,22 @@ object DedupQueries {
          |  round(CAST(fps + fns AS DOUBLE) / $PlanGridN, 9) AS total_error,
          |  (fps + fns = struct_extract(m, 'e')
          |    AND bands = struct_extract(m, 'b')) AS chosen
-         |FROM sums, best ORDER BY bands""".stripMargin,
+         |FROM sums, best ORDER BY bands""".stripMargin)),
     // gram identity by STRING (equality classes identical to the plan's
     // xxhash64 barring collisions); duplicated grams union their covers
     // via a correlated generate_series, survivors anti-join and
     // reassemble in pos order — NULL clean_text = fully-duplicated doc
-    "dedup_span_removal" -> spanReplaySql(SpanTokens),
+    "dedup_span_removal" -> Query(spanLevel, Some(spanReplaySql(SpanTokens))),
     // the SAME string-identity replay at the 6-token window: a replay by
     // gram STRING is exactly the collision-free equality class the
     // suffix-rank construction computes, so the suffix path needs no
     // separate oracle shape
-    "dedup_suffix_spans" -> spanReplaySql(SuffixTokens),
+    "dedup_suffix_spans" -> Query(suffixSpans,
+      Some(spanReplaySql(SuffixTokens))),
     // first occurrence per chunk content = min (doc_id, start) over the
     // chunk's group; reassembly string_aggs surviving chunks in order —
     // NULL when every chunk of a doc was seen earlier
-    "dedup_chunks" ->
+    "dedup_chunks" -> Query(chunkLevel, Some(
       s"""WITH d AS (SELECT doc_id,
          |  list_filter(string_split(text, ' '), t -> t <> '') AS toks
          |  FROM documents),
@@ -1011,11 +985,11 @@ object DedupQueries {
          |    string_agg(CASE WHEN kept THEN chunk_text END, ' '
          |               ORDER BY chunk_idx)
          |  END AS dedup_text
-         |FROM k GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+         |FROM k GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
     // directed pairs (a.id <> b.id), containment normalized by A's gram
     // count only — the n_common*1.0/n division is the same single IEEE op
     // Dedup.containmentPairs performs
-    "dedup_containment" ->
+    "dedup_containment" -> Query(containment3gram, Some(
       """WITH d AS (SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS toks
         |           FROM documents),
         |tok AS (
@@ -1034,8 +1008,8 @@ object DedupQueries {
         |  n_common * 1.0 / sa.n_tokens AS containment
         |FROM inter JOIN sz sa ON id_a = sa.id
         |WHERE n_common * 1.0 / sa.n_tokens >= 0.8
-        |ORDER BY id_a, id_b""".stripMargin,
-    "dedup_size_histogram" ->
+        |ORDER BY id_a, id_b""".stripMargin)),
+    "dedup_size_histogram" -> Query(sizeHistogram, Some(
       s"""WITH n AS (SELECT doc_id, $normSql AS norm FROM documents),
          |g AS (SELECT count(*) AS group_size FROM n GROUP BY norm),
          |h AS (SELECT group_size, count(*) AS n_groups,
@@ -1044,28 +1018,28 @@ object DedupQueries {
          |SELECT group_size, n_groups, CAST(n_docs AS BIGINT) AS n_docs,
          |  round(CAST(n_docs AS DOUBLE) / sum(n_docs) OVER (), 9)
          |    AS doc_share
-         |FROM h ORDER BY group_size""".stripMargin,
-    "dedup_exact_groups" ->
+         |FROM h ORDER BY group_size""".stripMargin)),
+    "dedup_exact_groups" -> Query(exactGroups, Some(
       s"""WITH n AS (SELECT doc_id, $normSql AS norm FROM documents)
          |SELECT md5(norm) AS content_md5, min(doc_id) AS canonical_id,
          |  count(*) AS group_size
-         |FROM n GROUP BY md5(norm) ORDER BY content_md5""".stripMargin,
-    "dedup_exact_keep_first" ->
+         |FROM n GROUP BY md5(norm) ORDER BY content_md5""".stripMargin)),
+    "dedup_exact_keep_first" -> Query(exactKeepFirst, Some(
       s"""WITH n AS (SELECT doc_id, $normSql AS norm FROM documents)
          |SELECT count(*) AS n_kept, CAST(sum(canonical_id) AS BIGINT) AS id_checksum
-         |FROM (SELECT min(doc_id) AS canonical_id FROM n GROUP BY norm)""".stripMargin,
+         |FROM (SELECT min(doc_id) AS canonical_id FROM n GROUP BY norm)""".stripMargin)),
     // distinct (content digest, label) pairs self-joined on the digest
-    "dedup_cross_slice" ->
+    "dedup_cross_slice" -> Query(crossSlice, Some(
       s"""WITH d AS (SELECT DISTINCT md5($normSql) AS h,
          |    CAST(lang AS VARCHAR) AS l
          |  FROM documents)
          |SELECT a.l AS lang_a, b.l AS lang_b,
          |  count(*) AS n_shared_contents
          |FROM d a JOIN d b ON a.h = b.h AND a.l < b.l
-         |GROUP BY 1, 2 ORDER BY lang_a, lang_b""".stripMargin,
+         |GROUP BY 1, 2 ORDER BY lang_a, lang_b""".stripMargin)),
     // the oracle may brute-force the vocabulary² pairs (64 names) — the
     // plan's q-gram blocking is the scale path, spec-pinned lossless
-    "dedup_editdist_names" ->
+    "dedup_editdist_names" -> Query(editDistNames, Some(
       s"""WITH v AS (SELECT DISTINCT p_name AS s FROM part
          |           WHERE p_name IS NOT NULL AND p_name <> '')
          |SELECT a.s AS s_a, b.s AS s_b,
@@ -1073,11 +1047,11 @@ object DedupQueries {
          |FROM v a JOIN v b ON a.s < b.s
          |WHERE levenshtein(a.s, b.s) <= $EditDist
          |  AND abs(length(a.s) - length(b.s)) <= $EditDist
-         |ORDER BY s_a, s_b""".stripMargin,
+         |ORDER BY s_a, s_b""".stripMargin)),
     // keep-BEST: max-struct (quality_score, -doc_id) per normalized
     // content group — highest score survives, ties to the smallest id;
     // score = the text_quality_score product rounded at 6 dp
-    "dedup_keep_best" ->
+    "dedup_keep_best" -> Query(exactKeepBest, Some(
       s"""WITH d AS (SELECT doc_id, text,
          |    list_filter(string_split(text, ' '), t -> t <> '') AS toks
          |  FROM documents),
@@ -1100,8 +1074,8 @@ object DedupQueries {
          |      FROM j GROUP BY 1)
          |SELECT CAST(-struct_extract(b, 'nid') AS BIGINT) AS doc_id,
          |  content_md5, group_size, struct_extract(b, 's') AS quality_score
-         |FROM g ORDER BY doc_id""".stripMargin,
-    "dedup_jaccard_pairs" ->
+         |FROM g ORDER BY doc_id""".stripMargin)),
+    "dedup_jaccard_pairs" -> Query(jaccardPairs, Some(
       s"""WITH $tokCte,
          |$thCte,
          |sz AS (SELECT id, count(*) AS n_tokens FROM th GROUP BY id),
@@ -1109,8 +1083,8 @@ object DedupQueries {
          |  SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_common
          |  FROM th a JOIN th b ON a.th = b.th AND a.id < b.id
          |  GROUP BY 1, 2)
-         |${jaccardTail(0.9)}""".stripMargin,
-    "dedup_jaccard_2gram" ->
+         |${jaccardTail(0.9)}""".stripMargin)),
+    "dedup_jaccard_2gram" -> Query(jaccard2gram, Some(
       s"""WITH d AS (SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS toks
          |           FROM documents),
          |tok AS (
@@ -1123,8 +1097,8 @@ object DedupQueries {
          |  SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_common
          |  FROM th a JOIN th b ON a.th = b.th AND a.id < b.id
          |  GROUP BY 1, 2)
-         |${jaccardTail(0.5)}""".stripMargin,
-    "dedup_minhash_lsh" ->
+         |${jaccardTail(0.5)}""".stripMargin)),
+    "dedup_minhash_lsh" -> Query(minhashLsh, Some(
       s"""WITH $tokCte,
          |$thCte,
          |$hshCte,
@@ -1141,17 +1115,17 @@ object DedupQueries {
          |  JOIN th a ON a.id = c.id_a
          |  JOIN th b ON b.id = c.id_b AND b.th = a.th
          |  GROUP BY 1, 2)
-         |${jaccardTail(0.9, extraCols = "")}""".stripMargin,
-    "dedup_simhash" ->
+         |${jaccardTail(0.9, extraCols = "")}""".stripMargin)),
+    "dedup_simhash" -> Query(simhashDocs, Some(
       s"""WITH $tokCte,
          |votes AS (SELECT id, $simhashVotes FROM tok GROUP BY id)
          |SELECT id, CAST($simhashBits AS BIGINT) AS simhash
-         |FROM votes ORDER BY id""".stripMargin,
+         |FROM votes ORDER BY id""".stripMargin)),
     // full-corpus pair-graph survivors: the incremental split must land on
     // the identical answer (contraction preserves components and minima),
     // so its oracle is split-free — candidates by band-slice equality,
     // exact-Jaccard edges, recursive CC, min per component
-    "dedup_incremental" ->
+    "dedup_incremental" -> Query(incrementalSurvivors, Some(
       s"""WITH RECURSIVE $tokCte,
          |$thCte,
          |$hshCte,
@@ -1173,15 +1147,17 @@ object DedupQueries {
          |  JOIN sz sa ON id_a = sa.id
          |  JOIN sz sb ON id_b = sb.id
          |  WHERE n_common * 1.0 / (sa.n_tokens + sb.n_tokens - n_common) >= 0.9),
-         |$componentTail""".stripMargin,
-    "dedup_cluster_stars" -> clusterSurvivorsOracle,
-    "dedup_cluster_survivors" -> clusterSurvivorsOracle,
-    "dedup_cluster_fast" ->
+         |$componentTail""".stripMargin)),
+    "dedup_cluster_stars" -> Query(clusterSurvivorsStars,
+      Some(clusterSurvivorsOracle)),
+    "dedup_cluster_survivors" -> Query(clusterSurvivors,
+      Some(clusterSurvivorsOracle)),
+    "dedup_cluster_fast" -> Query(clusterSurvivorsFast, Some(
       s"""WITH RECURSIVE $tokCte,
          |$thCte,
          |$hshCte,
          |sig AS (SELECT id, $sigSelect FROM hsh GROUP BY id),
          |$starEdgesCtes,
          |edges AS (SELECT id_a, id_b FROM edges0),
-         |$componentTail""".stripMargin)
+         |$componentTail""".stripMargin)))
 }

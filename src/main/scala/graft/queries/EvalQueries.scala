@@ -414,31 +414,6 @@ object EvalQueries {
       .orderBy("k")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "eval_pass_at_k" -> passAtKQ,
-    "eval_fleiss_kappa" -> fleissKappaQ,
-    "eval_cohen_kappa" -> cohenKappaQ,
-    "eval_kappa_drift" -> kappaDriftQ,
-    "eval_krippendorff_alpha" -> krippendorffQ,
-    "eval_markov_perplexity" -> markovPerplexityQ,
-    "eval_map_at_k" -> mapAtKCf,
-    "eval_woe_iv" -> woeClicks,
-    "eval_ab_experiment" -> abExperiment,
-    "eval_rouge_dedup" -> rougeDedup,
-    "eval_auc_clicks" -> aucClicks,
-    "eval_avg_precision" -> averagePrecisionClicks,
-    "eval_mcnemar" -> mcnemarClicksViews,
-    "eval_gains_deciles" -> gainsDeciles,
-    "eval_best_threshold" -> bestThresholdClicks,
-    "eval_confusion_lang" -> confusionLang,
-    "eval_retrieval_labels" -> retrievalLabels,
-    "eval_isotonic" -> isotonicClicks,
-    "eval_brier" -> brierClicks,
-    "eval_sliced_auc" -> slicedAuc,
-    "eval_conformal" -> conformalPrice,
-    "eval_calibration_bins" -> calibrationClicks,
-    "eval_survival_curve" -> survivalCurve)
-
   // ---- oracle SQL -----------------------------------------------------------
 
   /** The [[ratingsPanel]] replay: md5-drawn agreement and alternative
@@ -529,12 +504,12 @@ object EvalQueries {
        |SELECT * FROM ($arms) ORDER BY k""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
-    "eval_pass_at_k" -> passAtKOracleSql,
+  val registry: Map[String, Query] = Map(
+    "eval_pass_at_k" -> Query(passAtKQ, Some(passAtKOracleSql)),
     // exact HUGEINT count arithmetic end to end; κ is ONE IEEE division
     // of the cross-multiplied integers (A·D − C·B) / (B·(D − C)) — never
     // a round() of a rational — and NULL when chance agreement is total
-    "eval_fleiss_kappa" ->
+    "eval_fleiss_kappa" -> Query(fleissKappaQ, Some(
       s"""WITH ${ratingsPanelSql(3)},
          |cell AS (SELECT doc_id, rating, count(*) AS n FROM rt
          |  GROUP BY 1, 2),
@@ -558,12 +533,12 @@ object EvalQueries {
          |  CAST(c AS DOUBLE) / CAST(d AS DOUBLE) AS p_e,
          |  CASE WHEN d > c THEN CAST(a * d - c * b AS DOUBLE)
          |    / CAST(b * (d - c) AS DOUBLE) END AS kappa
-         |FROM f""".stripMargin,
+         |FROM f""".stripMargin)),
     // the ragged-panel coefficient: per-unit (m² − Σ n_uc²) disagreeing
     // ordered pairs, 1/(m−1) weights cleared by lcm(1..9) = 2520 (every
     // m−1 ≤ 9 divides it — `//` is exact), category totals over
     // surviving units; α is ONE IEEE division of exact HUGEINTs
-    "eval_krippendorff_alpha" ->
+    "eval_krippendorff_alpha" -> Query(krippendorffQ, Some(
       s"""WITH ${ratingsPanelSql(3)},
          |rg AS (SELECT doc_id, rater, rating FROM rt
          |  WHERE ('0x' || substr(md5(doc_id || '|' || rater || '|on'),
@@ -588,12 +563,12 @@ object EvalQueries {
          |  CASE WHEN n * n - ncsq > 0 THEN
          |    1.0 - CAST((n - 1) * dos AS DOUBLE)
          |      / CAST(2520 * (n * n - ncsq) AS DOUBLE) END AS alpha
-         |FROM ds, cat""".stripMargin,
+         |FROM ds, cat""".stripMargin)),
     // the drifting-panel replay: window = doc_id % 4, rater 1's agree
     // threshold drops to 40 in windows >= 2; per-window κ is the same
     // exact HUGEINT arithmetic keyed by window, and the drift column is
     // a full-frame first/last window-function difference
-    "eval_kappa_drift" -> {
+    "eval_kappa_drift" -> Query(kappaDriftQ, Some({
       def hb(e: String) = s"('0x' || substr(md5($e), 1, 12))::BIGINT"
       s"""WITH b AS (SELECT doc_id, least(n_chars // 150, 3) AS t
          |  FROM documents),
@@ -638,10 +613,10 @@ object EvalQueries {
          |WINDOW w AS (ORDER BY "window" ROWS BETWEEN UNBOUNDED PRECEDING
          |  AND UNBOUNDED FOLLOWING)
          |ORDER BY "window"""".stripMargin
-    },
+    })),
     // per-rater marginals (unlike Fleiss' pooled): p_e = Σ a_c·b_c/N²,
     // κ = (agree·N − Σ a·b)/(N² − Σ a·b) in exact HUGEINT
-    "eval_cohen_kappa" ->
+    "eval_cohen_kappa" -> Query(cohenKappaQ, Some(
       s"""WITH ${ratingsPanelSql(2)},
          |pp AS (SELECT pa.doc_id, pa.rating AS c0, pb.rating AS c1
          |  FROM (SELECT doc_id, rating FROM rt WHERE rater = 0) pa
@@ -663,11 +638,11 @@ object EvalQueries {
          |    CAST(CAST(agree AS HUGEINT) * nn - ab AS DOUBLE)
          |      / CAST(CAST(nn AS HUGEINT) * nn - ab AS DOUBLE) END
          |    AS kappa
-         |FROM na, mm""".stripMargin,
+         |FROM na, mm""".stripMargin)),
     // sequence-level md5 split; add-one transition model from the train
     // folds; 9-dp per-transition bits scale by exact test counts, ONE
     // IEEE division at the end
-    "eval_markov_perplexity" ->
+    "eval_markov_perplexity" -> Query(markovPerplexityQ, Some(
       s"""WITH t AS (SELECT user_id,
          |    event_type::VARCHAR AS next,
          |    lag(event_type::VARCHAR) OVER (PARTITION BY user_id
@@ -695,10 +670,10 @@ object EvalQueries {
          |  (SELECT v FROM v) AS vocab_size,
          |  round(CAST(sum(bits * tc) AS DOUBLE) / sum(tc), 6)
          |    AS bits_per_transition
-         |FROM sc""".stripMargin,
+         |FROM sc""".stripMargin)),
     // x2 clears the Laplace halves: each WOE is one ln of an exact
     // integer ratio; IV contributions ride the same ln, DECIMAL-summed
-    "eval_woe_iv" ->
+    "eval_woe_iv" -> Query(woeClicks, Some(
       """WITH g AS (SELECT user_id, epoch_us(ts) // 86400000000 AS day,
         |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
         |      AS s_clicks,
@@ -722,10 +697,10 @@ object EvalQueries {
         |  FROM b, t)
         |SELECT score, n, n_pos, n_neg, woe,
         |  CAST(sum(c) OVER () AS DOUBLE) AS iv
-        |FROM w ORDER BY score""".stripMargin,
+        |FROM w ORDER BY score""".stripMargin)),
     // leave-last-order-out CF eval: the item_cf sim CTEs, DECIMAL score
     // sums, the lcm(1..10)=2520 exact-AP clearing, truncating nano APs
-    "eval_map_at_k" ->
+    "eval_map_at_k" -> Query(mapAtKCf, Some(
       """WITH rk AS (SELECT o_orderkey, o_custkey,
         |    row_number() OVER (PARTITION BY o_custkey
         |      ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
@@ -786,11 +761,11 @@ object EvalQueries {
         |  CASE WHEN count(*) > 0 THEN
         |    CAST(sum(CASE WHEN hit THEN 1 ELSE 0 END) AS DOUBLE) /
         |      CAST(count(*) AS DOUBLE) END AS hit_rate
-        |FROM pn""".stripMargin,
+        |FROM pn""".stripMargin)),
     // md5 2-arm assignment on the shared hash idiom; SRM χ² = (n0−n1)²/n
     // and 2×2 χ² = n·(ad−bc)²/(r0·r1·c0·c1) in HUGEINT until ONE double
     // division each; χ²(1) critical values as shared exact literals
-    "eval_ab_experiment" ->
+    "eval_ab_experiment" -> Query(abExperiment, Some(
       """WITH u AS (SELECT CAST(user_id AS VARCHAR) AS uu,
         |    CAST(max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
         |      AS BIGINT) AS c
@@ -829,13 +804,13 @@ object EvalQueries {
         |  srm_chi2, srm_chi2 > 3.841458821 AS srm_flag_5pct,
         |  effect_chi2, effect_chi2 > 3.841458821 AS effect_flag_5pct,
         |  effect_chi2 > 6.634896601 AS effect_flag_1pct
-        |FROM k2""".stripMargin,
+        |FROM k2""".stripMargin)),
     // span-removal replay (the dedup_span_removal oracle chain at the
     // same 8-gram) feeding a clipped-bigram overlap; gram identity by
     // STRING (plan uses xxhash64 — equality classes identical barring
     // collisions, the established span-oracle convention); f1 computes
     // from the ROUNDED p/r doubles exactly as the plan does
-    "eval_rouge_dedup" -> {
+    "eval_rouge_dedup" -> Query(rougeDedup, Some({
       val L = RougeSpanTokens
       s"""WITH d AS (SELECT doc_id,
          |  list_filter(string_split(text, ' '), t -> t <> '') AS toks
@@ -893,10 +868,10 @@ object EvalQueries {
          |       WHEN prec + rec = 0 THEN 0.0
          |       ELSE round(2.0 * prec * rec / (prec + rec), 9) END AS f1
          |FROM sel ORDER BY pair_id""".stripMargin
-    },
+    })),
     // all-integer utility sweep over the distinct-score grid; ties break
     // to the highest threshold
-    "eval_best_threshold" ->
+    "eval_best_threshold" -> Query(bestThresholdClicks, Some(
       s"""WITH lab AS (
          |  SELECT user_id, epoch_us(ts) // 86400000000 AS day,
          |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS s,
@@ -920,10 +895,10 @@ object EvalQueries {
          |      AS utility
          |  FROM w)
          |SELECT threshold, tp, fp, fn, tn, utility FROM u
-         |ORDER BY utility DESC, threshold DESC LIMIT 1""".stripMargin,
+         |ORDER BY utility DESC, threshold DESC LIMIT 1""".stripMargin)),
     // the same ntile band order (score desc, user, day); every statistic
     // is an integer ratio with the identical fixed IEEE sequence
-    "eval_gains_deciles" ->
+    "eval_gains_deciles" -> Query(gainsDeciles, Some(
       """WITH lab AS (
         |  SELECT user_id, epoch_us(ts) // 86400000000 AS day,
         |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS s,
@@ -949,10 +924,10 @@ object EvalQueries {
         |  CASE WHEN tp > 0 THEN
         |    round(CAST(n_pos AS DOUBLE) * tn / (CAST(n AS DOUBLE) * tp), 9)
         |    END AS lift
-        |FROM w ORDER BY decile""".stripMargin,
+        |FROM w ORDER BY decile""".stripMargin)),
     // discordant-cell counts are exact integers; the continuity-corrected
     // statistic spends one IEEE division
-    "eval_mcnemar" ->
+    "eval_mcnemar" -> Query(mcnemarClicksViews, Some(
       """WITH g AS (SELECT user_id, epoch_us(ts) // 86400000000 AS day,
         |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS sc,
         |    sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS sv,
@@ -975,10 +950,10 @@ object EvalQueries {
         |    round(CAST(greatest(abs(b_only_a - c_only_b) - 1, 0)
         |        * greatest(abs(b_only_a - c_only_b) - 1, 0) AS DOUBLE)
         |      / (b_only_a + c_only_b), 9) END AS mcnemar_chi2
-        |FROM t""".stripMargin,
+        |FROM t""".stripMargin)),
     // distinct-score grid, descending: per-threshold term cp·CP/CN rounds
     // 9 dp into exact DECIMAL, one final division by n_pos
-    "eval_avg_precision" ->
+    "eval_avg_precision" -> Query(averagePrecisionClicks, Some(
       """WITH lab AS (
         |  SELECT user_id, epoch_us(ts) // 86400000000 AS day,
         |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS s,
@@ -998,8 +973,8 @@ object EvalQueries {
         |    round(CAST(sum(CAST(round(CAST(cp * cump AS DOUBLE) / cumn, 9)
         |      AS DECIMAL(28,9))) AS DOUBLE) / sum(cp), 9) END
         |    AS avg_precision
-        |FROM w""".stripMargin,
-    "eval_auc_clicks" ->
+        |FROM w""".stripMargin)),
+    "eval_auc_clicks" -> Query(aucClicks, Some(
       """WITH lab AS (
         |  SELECT user_id, epoch_us(ts) // 86400000000 AS day,
         |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS s,
@@ -1017,8 +992,8 @@ object EvalQueries {
         |  CAST(rs2 - n_pos * (n_pos + 1) AS BIGINT) AS auc_num,
         |  round(CAST(rs2 - n_pos * (n_pos + 1) AS DOUBLE)
         |    / (CAST(n_pos AS DOUBLE) * n_neg * 2), 9) AS auc
-        |FROM a ORDER BY n_pos""".stripMargin,
-    "eval_confusion_lang" ->
+        |FROM a ORDER BY n_pos""".stripMargin)),
+    "eval_confusion_lang" -> Query(confusionLang, Some(
       s"""WITH ${TextQueries.toksCte},
          |p AS (SELECT doc_id, lang, ${TextQueries.maxScoreSql} AS __m, toks
          |  FROM d),
@@ -1042,8 +1017,8 @@ object EvalQueries {
          |    THEN round(CAST(tp AS DOUBLE) / n_actual, 9) END AS rec,
          |  CASE WHEN n_actual + n_pred > 0
          |    THEN round(2.0 * tp / (n_actual + n_pred), 9) END AS f1
-         |FROM j ORDER BY class""".stripMargin,
-    "eval_retrieval_labels" ->
+         |FROM j ORDER BY class""".stripMargin)),
+    "eval_retrieval_labels" -> Query(retrievalLabels, Some(
       s"""WITH q AS (SELECT vec_id AS q_id, embedding AS qv, label AS ql
          |           FROM embeddings WHERE vec_id < $RetrievalQueries),
          |s AS (SELECT q_id, ql, vec_id, label,
@@ -1071,8 +1046,8 @@ object EvalQueries {
          |    ELSE round(CAST(dcg_d AS DOUBLE) / CAST(
          |      ${idcgCaseSql(s"least(n_rel, $RetrievalK)")} AS DOUBLE), 9)
          |  END AS ndcg
-         |FROM pq JOIN nr ON pq.q_id = nr.q_id ORDER BY pq.q_id""".stripMargin,
-    "eval_sliced_auc" ->
+         |FROM pq JOIN nr ON pq.q_id = nr.q_id ORDER BY pq.q_id""".stripMargin)),
+    "eval_sliced_auc" -> Query(slicedAuc, Some(
       """WITH lab AS (
         |  SELECT user_id, epoch_us(ts) // 86400000000 AS day,
         |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS s,
@@ -1105,8 +1080,8 @@ object EvalQueries {
         |  FROM a)
         |SELECT slice, n_pos, n_neg, auc, pooled_auc,
         |  round(auc - pooled_auc, 9) AS gap
-        |FROM sl CROSS JOIN pooled ORDER BY slice""".stripMargin,
-    "eval_conformal" ->
+        |FROM sl CROSS JOIN pooled ORDER BY slice""".stripMargin)),
+    "eval_conformal" -> Query(conformalPrice, Some(
       """WITH b AS (
         |  SELECT ('0x' || substr(md5(l_orderkey::VARCHAR || '_'
         |      || l_linenumber::VARCHAR), 1, 12))::BIGINT % 100 AS b,
@@ -1133,8 +1108,8 @@ object EvalQueries {
         |SELECT tr.n_train, q.n_cal, t.n_test, tr.y_hat, q.q_hat,
         |  t.n_covered,
         |  round(CAST(t.n_covered AS DOUBLE) / t.n_test, 9) AS coverage
-        |FROM tr CROSS JOIN q CROSS JOIN t""".stripMargin,
-    "eval_isotonic" ->
+        |FROM tr CROSS JOIN q CROSS JOIN t""".stripMargin)),
+    "eval_isotonic" -> Query(isotonicClicks, Some(
       s"""WITH $calibBinnedCte,
          |pre AS (SELECT bin, n, n_pos,
          |    sum(n) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING) AS cn,
@@ -1151,10 +1126,10 @@ object EvalQueries {
          |SELECT b.bin, b.n, b.n_pos,
          |  round(CAST(b.n_pos AS DOUBLE) / b.n, 9) AS pos_rate,
          |  iso.iso_rate
-         |FROM binned b JOIN iso ON iso.k = b.bin ORDER BY bin""".stripMargin,
+         |FROM binned b JOIN iso ON iso.k = b.bin ORDER BY bin""".stripMargin)),
     // same binned relation; per-bin terms multiply the already-9dp rates,
     // round 9, exact-DECIMAL sum, one division per normalization
-    "eval_brier" ->
+    "eval_brier" -> Query(brierClicks, Some(
       s"""WITH $calibBinnedCte,
          |b2 AS (SELECT n, n_pos,
          |    round(CAST(sum_num AS DOUBLE) / (n * den), 9) AS pb,
@@ -1177,8 +1152,8 @@ object EvalQueries {
          |  round(round(CAST(reln AS DOUBLE) / nn, 9)
          |    - round(CAST(resn AS DOUBLE) / nn, 9)
          |    + round(obar * (1.0 - obar), 9), 9) AS brier
-         |FROM s""".stripMargin,
-    "eval_calibration_bins" ->
+         |FROM s""".stripMargin)),
+    "eval_calibration_bins" -> Query(calibrationClicks, Some(
       s"""WITH $calibBinnedCte,
          |b2 AS (
          |  SELECT bin, n, n_pos,
@@ -1190,12 +1165,12 @@ object EvalQueries {
          |SELECT bin, n, n_pos, avg_prob, pos_rate, abs_gap,
          |  round(CAST(sum(CAST(round(abs_gap * n, 9) AS DECIMAL(28,9)))
          |      OVER () AS DOUBLE) / sum(n) OVER (), 9) AS ece
-         |FROM b3 ORDER BY bin""".stripMargin,
+         |FROM b3 ORDER BY bin""".stripMargin)),
     // KM/NA replay: nano-unit BIGINT hazard and ln-factor per grid row
     // (round 9 dp → DECIMAL(18,9) → ×10⁹, the widen-before-multiply rule),
     // exact BIGINT window sums, one ÷10⁹ + exp/round at the end; the
     // labels CTEs mirror feat_survival_labels
-    "eval_survival_curve" ->
+    "eval_survival_curve" -> Query(survivalCurve, Some(
       s"""WITH a AS (SELECT max(epoch_us(ts)) - $SurvHorizonUs
          |             AS anchor FROM events),
          |r AS (SELECT user_id, count(*) AS n_prior, max(anchor) AS anc
@@ -1235,5 +1210,5 @@ object EvalQueries {
          |  CASE WHEN cz > 0 THEN 0.0
          |    ELSE round(exp(CAST(cl AS DOUBLE) / 1000000000.0), 9)
          |    END AS km_survival
-         |FROM c2 WHERE d > 0 ORDER BY duration_us""".stripMargin)
+         |FROM c2 WHERE d > 0 ORDER BY duration_us""".stripMargin)))
 }

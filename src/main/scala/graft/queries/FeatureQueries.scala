@@ -666,64 +666,6 @@ object FeatureQueries {
     EventOps.rfm(Tables.events(spark, dir), "user_id", "ts", "value")
       .orderBy("user_id")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "feat_item_cf" -> itemCf,
-    "feat_seasonality" -> seasonality,
-    "feat_rfm" -> rfmScores,
-    "feat_rolling_anomaly" -> rollingAnomaly,
-    "feat_survival_labels" -> survivalLabels,
-    "feat_user_entropy" -> userEntropy,
-    "feat_assoc_rules" -> assocRules,
-    "feat_seq_patterns" -> seqPatterns,
-    "feat_cohort_retention" -> cohortRetention,
-    "feat_churn_labels" -> churnLabels,
-    "feat_attribution_credit" -> attributionCredit,
-    "feat_activity_gaps" -> activityGaps,
-    "feat_rolling_origin" -> rollingOrigin,
-    "feat_lateness" -> lateness,
-    "feat_attribution_window" -> attributionWindow,
-    "feat_decay_value" -> decayValue,
-    "feat_session_pmi" -> sessionPmi,
-    "feat_wilson_rank" -> wilsonRank,
-    "feat_pagerank" -> pageRankSuppliers,
-    "feat_lpa_communities" -> lpaCommunities,
-    "feat_modularity" -> lpaModularity,
-    "feat_ari_nations" -> ariNations,
-    "feat_ktruss" -> ktrussParts,
-    "feat_ppr" -> personalizedPr,
-    "feat_hits" -> hitsSuppliers,
-    "feat_theilsen_trend" -> theilSen,
-    "feat_trend_ols" -> olsTrendQ,
-    "feat_cusum_alarm" -> cusum,
-    "feat_binseg_changepoints" -> binseg,
-    "feat_acf_pacf" -> acfPacf,
-    "feat_spend_gini" -> spendGini,
-    "feat_ewma_forecast" -> ewmaForecastQ,
-    "feat_conformal_naive" -> conformalNaive,
-    "feat_forecast_mase" -> forecastMase,
-    "feat_dtw_pairs" -> dtwPairs,
-    "feat_fano_burstiness" -> fano,
-    "feat_kcore" -> kcore,
-    "feat_random_walks" -> randomWalks,
-    "feat_seasonal_naive" -> seasonalNaive,
-    "feat_holt_winters" -> holtWintersQ,
-    "feat_holt_winters_mult" -> holtWintersMultQ,
-    "feat_degree_stats" -> degreeStats,
-    "feat_markov_transitions" -> markovTransitions,
-    "feat_forward_fill" -> forwardFill,
-    "feat_rolling_dau" -> rollingDau,
-    "feat_snapshot_diff" -> snapshotDiff,
-    "feat_cdc_apply" -> cdcApply,
-    "feat_agg_refresh" -> aggRefresh,
-    "feat_merge_upsert" -> mergeUpsert,
-    "feat_event_sequence" -> eventSequence,
-    "pit_training_matrix" -> pitTrainingMatrix,
-    "feat_rolling_window" -> rollingWindow,
-    "feat_funnel_steps" -> funnelSteps,
-    "feat_funnel_timing" -> funnelTiming,
-    "feat_scd2_intervals" -> scd2Intervals,
-    "feat_time_split" -> timeSplit)
-
   // unrolled peel rounds — each round re-derives degrees from the
   // previous round's edge set and keeps both endpoints alive
   // unrolled LPA rounds: per-(node, label) counts, argmin by
@@ -1074,10 +1016,10 @@ object FeatureQueries {
       .orderBy("user_id", "click_id")
   }
 
-  val oracle: Map[String, String] = Map(
+  val registry: Map[String, Query] = Map(
     // distinct (basket, item) first; pair join bounded by basket size;
     // sim = one fixed IEEE sequence (sqrt·sqrt, ×, ÷) rounded 9 dp
-    "feat_item_cf" ->
+    "feat_item_cf" -> Query(itemCf, Some(
       s"""WITH present AS (SELECT DISTINCT l_orderkey AS b, l_partkey AS i
          |                 FROM lineitem),
          |ic AS (SELECT i, count(*) AS n FROM present GROUP BY 1),
@@ -1097,11 +1039,11 @@ object FeatureQueries {
          |        ORDER BY sim DESC, neighbor) AS rank FROM s)
          |SELECT item, neighbor, n_ab, n_i, n_j, sim,
          |  CAST(rank AS BIGINT) AS rank
-         |FROM r WHERE rank <= $ItemCfK ORDER BY item, rank""".stripMargin,
+         |FROM r WHERE rank <= $ItemCfK ORDER BY item, rank""".stripMargin)),
     // integer calendar arithmetic only: hour from epoch-µs remainder,
     // the PMI/WOE ln discipline: one division, round(p*ln p, 9), exact
     // DECIMAL sum, negated (+0.0 canonicalizes a single-type key's -0.0)
-    "feat_user_entropy" ->
+    "feat_user_entropy" -> Query(userEntropy, Some(
       """WITH c AS (SELECT user_id, event_type, count(*) AS c
         |  FROM events GROUP BY 1, 2),
         |t AS (SELECT user_id, c,
@@ -1114,10 +1056,10 @@ object FeatureQueries {
         |  FROM t GROUP BY user_id, n_events)
         |SELECT user_id, CAST(n_events AS BIGINT) AS n_events, n_types,
         |  -CAST(s AS DOUBLE) + 0.0 AS entropy_nats
-        |FROM e ORDER BY user_id""".stripMargin,
+        |FROM e ORDER BY user_id""".stripMargin)),
     // integer epoch-micros only; keys first active after the anchor are
     // excluded (never at risk)
-    "feat_survival_labels" ->
+    "feat_survival_labels" -> Query(survivalLabels, Some(
       s"""WITH a AS (SELECT max(epoch_us(ts)) - $SurvivalHorizonUs
          |             AS anchor FROM events),
          |r AS (SELECT user_id, count(*) AS n_prior, max(anchor) AS anc
@@ -1134,10 +1076,10 @@ object FeatureQueries {
          |  CAST(CASE WHEN f.t_event IS NOT NULL THEN 1 ELSE 0 END
          |    AS BIGINT) AS event
          |FROM r LEFT JOIN f USING (user_id)
-         |ORDER BY user_id""".stripMargin,
+         |ORDER BY user_id""".stripMargin)),
     // the identical RANGE frame (self and exact-ts peers excluded) and
     // DECIMAL-exact trailing sums; z is one fixed IEEE sequence
-    "feat_rolling_anomaly" ->
+    "feat_rolling_anomaly" -> Query(rollingAnomaly, Some(
       s"""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us, value
          |  FROM events WHERE user_id < 20),
          |q AS (SELECT user_id, event_id, ts_us, value,
@@ -1166,10 +1108,10 @@ object FeatureQueries {
          |  CASE WHEN n_window >= $AnomalyMinEvents AND varnum > 0
          |    THEN abs(round((value - m) / sqrt(var_raw), 6)) > 2.0 END
          |    AS is_anomaly
-         |FROM v ORDER BY user_id, event_id""".stripMargin,
+         |FROM v ORDER BY user_id, event_id""".stripMargin)),
     // same ntile orders with key tie-breaks; monetary sums round(value,6)
     // through DECIMAL(18,6) exactly as the Spark side
-    "feat_rfm" ->
+    "feat_rfm" -> Query(rfmScores, Some(
       """WITH a AS (SELECT max(epoch_us(ts)) AS anchor FROM events),
         |k AS (SELECT user_id,
         |    CAST((anchor - max(epoch_us(ts))) // 86400000000 AS BIGINT)
@@ -1188,9 +1130,9 @@ object FeatureQueries {
         |  FROM k)
         |SELECT user_id, frequency, monetary, recency_days, r_score, f_score,
         |  m_score, r_score * 100 + f_score * 10 + m_score AS rfm_code
-        |FROM s ORDER BY user_id""".stripMargin,
+        |FROM s ORDER BY user_id""".stripMargin)),
     // dow = (epoch_day + 4) mod 7 with 0 = Sunday — no calendar functions
-    "feat_seasonality" ->
+    "feat_seasonality" -> Query(seasonality, Some(
       """WITH b AS (SELECT user_id,
         |    (((epoch_us(ts) % 86400000000) + 86400000000) % 86400000000)
         |      // 3600000000 AS hour,
@@ -1213,10 +1155,10 @@ object FeatureQueries {
         |    AS weekend_share
         |FROM pk JOIN nh ON pk.user_id = nh.user_id
         |        JOIN pkh ON pk.user_id = pkh.user_id AND pkh.rn = 1
-        |ORDER BY pk.user_id""".stripMargin,
+        |ORDER BY pk.user_id""".stripMargin)),
     // sessionize CTEs shared with feat_session_pmi; both directed rules
     // from each undirected pair; integer counts until one division each
-    "feat_assoc_rules" ->
+    "feat_assoc_rules" -> Query(assocRules, Some(
       s"""WITH l AS (SELECT user_id, event_id, ts, event_type,
          |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
          |      AS prev_ts
@@ -1254,10 +1196,10 @@ object FeatureQueries {
          |FROM dr
          |JOIN ic a ON a.event_type = dr.antecedent
          |JOIN ic b ON b.event_type = dr.consequent, tot
-         |ORDER BY antecedent, consequent""".stripMargin,
+         |ORDER BY antecedent, consequent""".stripMargin)),
     // sessionize CTEs shared with feat_session_pmi; firsts via rn=1 on
     // (ts, event_id) ≡ the min-struct; strict (ts, id) precedence compare
-    "feat_seq_patterns" ->
+    "feat_seq_patterns" -> Query(seqPatterns, Some(
       s"""WITH l AS (SELECT user_id, event_id, ts, event_type,
          |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
          |      AS prev_ts
@@ -1294,10 +1236,10 @@ object FeatureQueries {
          |  round(CAST(n_seq AS DOUBLE) / n_sessions, 9) AS support,
          |  round(CAST(n_seq AS DOUBLE) / ic.n_item, 9) AS confidence
          |FROM pr JOIN ic ON ic.item = pr.antecedent, tot
-         |ORDER BY antecedent, consequent""".stripMargin,
+         |ORDER BY antecedent, consequent""".stripMargin)),
     // cohort = each user's min activity week; cohort_size = the cell at
     // offset 0 (every user is active in its own first week by definition)
-    "feat_cohort_retention" ->
+    "feat_cohort_retention" -> Query(cohortRetention, Some(
       s"""WITH kp AS (SELECT DISTINCT user_id,
          |    (epoch_us(ts) // 86400000000) // $CohortBucketDays AS p
          |  FROM events),
@@ -1311,9 +1253,9 @@ object FeatureQueries {
          |  FROM cells)
          |SELECT cohort_period, period_offset, n_active, cohort_size,
          |  round(CAST(n_active AS DOUBLE) / cohort_size, 9) AS retention
-         |FROM sized ORDER BY cohort_period, period_offset""".stripMargin,
+         |FROM sized ORDER BY cohort_period, period_offset""".stripMargin)),
     // observed-before-cut users only; churned = no activity in the window
-    "feat_churn_labels" ->
+    "feat_churn_labels" -> Query(churnLabels, Some(
       s"""WITH m AS (SELECT max(epoch_us(ts)) AS mx FROM events),
          |e AS (SELECT user_id, epoch_us(ts) AS ts_us,
          |    epoch_us(ts) <= mx - $ChurnHorizonUs AS obs
@@ -1325,10 +1267,10 @@ object FeatureQueries {
          |    max(CASE WHEN NOT obs THEN 1 ELSE 0 END) AS act
          |  FROM e GROUP BY 1)
          |SELECT user_id, n_events_obs, last_seen_us, act = 0 AS churned
-         |FROM g WHERE n_events_obs > 0 ORDER BY user_id""".stripMargin,
+         |FROM g WHERE n_events_obs > 0 ORDER BY user_id""".stripMargin)),
     // candidates via the BETWEEN predicate (≡ the bucketed equi-join);
     // credit = round(1/n, 9) DECIMAL so per-click sums are exact
-    "feat_attribution_credit" ->
+    "feat_attribution_credit" -> Query(attributionCredit, Some(
       s"""WITH p AS (SELECT user_id, event_id AS purchase_id,
          |    epoch_us(ts) - $AttribWindowUs AS lo, epoch_us(ts) AS hi
          |  FROM events WHERE event_type = 'purchase'),
@@ -1349,8 +1291,8 @@ object FeatureQueries {
          |    AS n_first_touch,
          |  CAST(sum(CASE WHEN rn = n THEN 1 ELSE 0 END) AS BIGINT)
          |    AS n_last_touch
-         |FROM w GROUP BY 1, 2 ORDER BY user_id, click_id""".stripMargin,
-    "feat_rolling_origin" ->
+         |FROM w GROUP BY 1, 2 ORDER BY user_id, click_id""".stripMargin)),
+    "feat_rolling_origin" -> Query(rollingOrigin, Some(
       s"""WITH a AS (SELECT max(epoch_us(ts) // 86400000000) AS maxday
          |           FROM events),
          |e AS (SELECT user_id, event_id,
@@ -1364,8 +1306,8 @@ object FeatureQueries {
          |  FROM e CROSS JOIN a CROSS JOIN f)
          |SELECT user_id, event_id, fold, role FROM x
          |WHERE role IS NOT NULL
-         |ORDER BY user_id, event_id, fold""".stripMargin,
-    "feat_lateness" ->
+         |ORDER BY user_id, event_id, fold""".stripMargin)),
+    "feat_lateness" -> Query(lateness, Some(
       s"""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us
          |           FROM events),
          |l AS (SELECT user_id,
@@ -1380,8 +1322,8 @@ object FeatureQueries {
          |  CAST(max(late) AS BIGINT) AS max_lateness_us,
          |  round(CAST(sum(late) AS DOUBLE) / count(*), 9)
          |    AS mean_lateness_us
-         |FROM l GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "feat_activity_gaps" ->
+         |FROM l GROUP BY user_id ORDER BY user_id""".stripMargin)),
+    "feat_activity_gaps" -> Query(activityGaps, Some(
       """WITH d AS (SELECT DISTINCT user_id,
         |    epoch_us(ts) // 86400000000 AS day FROM events),
         |g AS (SELECT user_id, day,
@@ -1393,9 +1335,9 @@ object FeatureQueries {
         |  CAST(max(day) - min(day) + 1 - count(*) AS BIGINT)
         |    AS missing_days,
         |  CAST(coalesce(max(gap), 0) AS BIGINT) AS max_gap_days
-        |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin)),
     // the bucketed equi-join ≡ the declarative BETWEEN join
-    "feat_attribution_window" ->
+    "feat_attribution_window" -> Query(attributionWindow, Some(
       s"""WITH p AS (SELECT user_id, event_id AS purchase_id,
          |    epoch_us(ts) - $AttribWindowUs AS lo, epoch_us(ts) AS hi
          |  FROM events WHERE event_type = 'purchase'),
@@ -1411,10 +1353,10 @@ object FeatureQueries {
          |  coalesce(a.n_clicks, 0) AS n_clicks,
          |  coalesce(a.click_value, 0.0) AS click_value
          |FROM p LEFT JOIN a USING (user_id, purchase_id)
-         |ORDER BY user_id, purchase_id""".stripMargin,
+         |ORDER BY user_id, purchase_id""".stripMargin)),
     // weight CASE chain shares EventOps.decayWeight's DECIMAL literals;
     // contributions are exact DECIMAL(18,2)·DECIMAL(10,9) products
-    "feat_decay_value" -> {
+    "feat_decay_value" -> Query(decayValue, Some({
       val arms = (0 to DecayHorizon).map { d =>
         val w = EventOps.decayWeight(d, DecayHalfLife)
         s"WHEN delta = $d THEN CAST($w AS DECIMAL(10,9))"
@@ -1433,11 +1375,11 @@ object FeatureQueries {
          |  CAST(sum(wt) AS DOUBLE) AS decay_weight,
          |  CAST(sum(v * wt) AS DOUBLE) AS decay_value
          |FROM w GROUP BY user_id ORDER BY user_id""".stripMargin
-    },
+    })),
     // sessionize CTEs shared with prep_sessionize (full stream, no user
     // filter); presence-distinct per session, integer products exact in
     // BIGINT, one division + ln rounded 9 dp
-    "feat_session_pmi" ->
+    "feat_session_pmi" -> Query(sessionPmi, Some(
       s"""WITH l AS (SELECT user_id, event_id, ts, event_type,
          |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
          |      AS prev_ts
@@ -1469,10 +1411,10 @@ object FeatureQueries {
          |FROM pr
          |JOIN ic a ON a.event_type = pr.item_a
          |JOIN ic b ON b.event_type = pr.item_b, tot
-         |ORDER BY item_a, item_b""".stripMargin,
+         |ORDER BY item_a, item_b""".stripMargin)),
     // the bound is the identical IEEE op sequence as the Spark expression:
     // p = s/n, (p + zz/(2n) − z·sqrt((p(1−p) + zz/(4n))/n)) / (1 + zz/n)
-    "feat_wilson_rank" ->
+    "feat_wilson_rank" -> Query(wilsonRank, Some(
       s"""WITH g AS (SELECT user_id, count(*) AS n,
          |    CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
          |      AS BIGINT) AS s
@@ -1485,14 +1427,14 @@ object FeatureQueries {
          |  round((p + zz / (n * 2)
          |      - $WilsonZ * sqrt((p * (1.0 - p) + zz / (n * 4)) / n))
          |    / (1.0 + zz / n), 9) AS wilson_lb
-         |FROM w ORDER BY wilson_lb DESC, user_id LIMIT $WilsonTopK""".stripMargin,
-    "feat_pagerank" -> pageRankSql,
-    "feat_ppr" -> pprSql,
-    "feat_lpa_communities" -> lpaSql,
+         |FROM w ORDER BY wilson_lb DESC, user_id LIMIT $WilsonTopK""".stripMargin)),
+    "feat_pagerank" -> Query(pageRankSuppliers, Some(pageRankSql)),
+    "feat_ppr" -> Query(personalizedPr, Some(pprSql)),
+    "feat_lpa_communities" -> Query(lpaCommunities, Some(lpaSql)),
     // the SAME per-round peel unrolled by one Scala loop: degree-ordered
     // orientation (row-value compare), wedge close via EXISTS, 3-way
     // triangle credit explode, support filter
-    "feat_ktruss" -> {
+    "feat_ktruss" -> Query(ktrussParts, Some({
       val k = KtrussK; val rounds = KtrussRounds
       val roundCtes = (1 to rounds).map { r =>
         s"""deg$r AS MATERIALIZED (SELECT n, count(*) AS d FROM (
@@ -1532,10 +1474,10 @@ object FeatureQueries {
          |SELECT e.u, e.v, coalesce(c.support, 0) AS support
          |FROM e$rounds e LEFT JOIN cr$rounds c USING (u, v)
          |ORDER BY u, v""".stripMargin
-    },
+    })),
     // pair counts C(x,2) exact in HUGEINT (x(x-1) even => // 2 exact);
     // labels replayed by the SAME unrolled-LPA CTEs; one division
-    "feat_ari_nations" ->
+    "feat_ari_nations" -> Query(ariNations, Some(
       s"""WITH $lpaCtes,
          |lab AS (SELECT node, community AS a FROM l$LpaRounds),
          |nat AS (SELECT 'c' || c_custkey AS node,
@@ -1564,11 +1506,11 @@ object FeatureQueries {
          |    CAST(2 * sum_comb * tot - 2 * sum_a * sum_b AS DOUBLE) /
          |      CAST((sum_a + sum_b) * tot - 2 * sum_a * sum_b AS DOUBLE)
          |  END AS ari
-         |FROM t ORDER BY n""".stripMargin,
+         |FROM t ORDER BY n""".stripMargin)),
     // Q all-integer as (4m·Σe_c − Σdeg_c²)/(4m²) down to one division;
     // labels replayed by the SAME unrolled-LPA CTEs; c-nodes sort
     // before s-nodes so e0 is already the canonical undirected set
-    "feat_modularity" ->
+    "feat_modularity" -> Query(lpaModularity, Some(
       s"""WITH $lpaCtes,
          |lab AS (SELECT node, community FROM l$LpaRounds),
          |em AS (SELECT CAST(count(*) AS BIGINT) AS m FROM e0),
@@ -1591,11 +1533,11 @@ object FeatureQueries {
          |  CAST(4 * CAST(m AS HUGEINT) * sum_int - sum_deg2 AS DOUBLE) /
          |    CAST(4 * CAST(m AS HUGEINT) * m AS DOUBLE) AS modularity
          |FROM dc LEFT JOIN ec USING (community), em, tot, ti
-         |ORDER BY community""".stripMargin,
-    "feat_hits" -> hitsSql,
+         |ORDER BY community""".stripMargin)),
+    "feat_hits" -> Query(hitsSuppliers, Some(hitsSql)),
     // F = (n·Σc² − (Σc)²)/(n·Σc): one rational of integer sums, one
     // division rounded 9 dp; HUGEINT carries the squares
-    "feat_fano_burstiness" ->
+    "feat_fano_burstiness" -> Query(fano, Some(
       """WITH g AS (SELECT user_id AS key,
         |    epoch_us(ts) // 86400000000 AS d, count(*) AS c
         |  FROM events GROUP BY 1, 2),
@@ -1608,14 +1550,14 @@ object FeatureQueries {
         |  round(CAST(n_days::HUGEINT * ss - n_events::HUGEINT * n_events
         |      AS DOUBLE) / CAST(n_days::HUGEINT * n_events AS DOUBLE), 9)
         |    AS fano
-        |FROM a ORDER BY key""".stripMargin,
+        |FROM a ORDER BY key""".stripMargin)),
     // CUSUM prefix closed form: s⁺ = prefix − min(prefix, 0 incl.),
     // s⁻ symmetric; 9-dp contributions in exact DECIMAL prefix sums,
     // μ/σ/k/h fixed IEEE steps from integer count sums
     // two unrolled binseg levels: per-segment prefix sums, the exact
     // Otsu-form gain from BIGINT products (< 2^53, casts exact), argmax
     // struct with earliest-day tie-break; one-day segments don't re-split
-    "feat_binseg_changepoints" -> {
+    "feat_binseg_changepoints" -> Query(binseg, Some({
       def level(t: Int, seg: String) =
         s"""pf$t AS (SELECT s.lo, s.hi, g.idx, g.d,
            |    CAST(sum(g.x) OVER (PARTITION BY s.lo, s.hi ORDER BY g.idx)
@@ -1663,8 +1605,8 @@ object FeatureQueries {
          |  gain
          |FROM (SELECT * FROM r1 UNION ALL SELECT * FROM r2)
          |ORDER BY level, lo_day""".stripMargin
-    },
-    "feat_cusum_alarm" ->
+    })),
+    "feat_cusum_alarm" -> Query(cusum, Some(
       """WITH daily AS (SELECT epoch_us(ts) // 86400000000 AS d,
         |    count(*) AS c
         |  FROM events GROUP BY 1),
@@ -1692,12 +1634,12 @@ object FeatureQueries {
         |  CAST(pu - mpu AS DOUBLE) / 1e9 AS cusum_pos,
         |  CAST(mpd - pd AS DOUBLE) / 1e9 AS cusum_neg,
         |  (pu - mpu > hn OR mpd - pd > hn) AS alarm
-        |FROM mm ORDER BY day""".stripMargin,
+        |FROM mm ORDER BY day""".stripMargin)),
     // sufficient statistics in HUGEINT (the Spark twin is DECIMAL(38,0));
     // slope is ONE division of two exact integer->double casts, intercept
     // and r2 are the same fixed-order double chains as the Spark plan —
     // no display rounding anywhere
-    "feat_trend_ols" ->
+    "feat_trend_ols" -> Query(olsTrendQ, Some(
       """WITH xy AS (SELECT o_custkey AS k,
         |    epoch_us(o_orderdate) // 86400000000 AS x,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS y
@@ -1721,11 +1663,11 @@ object FeatureQueries {
         |    AS intercept,
         |  CASE WHEN cxx > 0 AND cyy > 0
         |    THEN (cxy / cxx) * (cxy / cyy) END AS r2
-        |FROM c ORDER BY o_custkey""".stripMargin,
+        |FROM c ORDER BY o_custkey""".stripMargin)),
     // pairwise integer-count slopes (one IEEE division each), LOWER
     // median by (slope, da, db) order statistic — no summation anywhere;
     // residual median reuses the UNROUNDED slope, rounding only at output
-    "feat_theilsen_trend" ->
+    "feat_theilsen_trend" -> Query(theilSen, Some(
       """WITH daily AS (SELECT epoch_us(ts) // 86400000000 AS d,
         |    count(*) AS c
         |  FROM events GROUP BY 1),
@@ -1744,10 +1686,10 @@ object FeatureQueries {
         |f AS (SELECT *, row_number() OVER (ORDER BY rr, d) AS rn FROM r)
         |SELECT nd.n_days, f.n_pairs, round(f.slope, 9) AS slope,
         |  round(f.rr, 9) AS intercept
-        |FROM f, nd WHERE f.rn = (nd.n_days + 1) // 2""".stripMargin,
-    "feat_kcore" -> kcoreSql,
-    "feat_random_walks" -> walkSql,
-    "feat_degree_stats" ->
+        |FROM f, nd WHERE f.rn = (nd.n_days + 1) // 2""".stripMargin)),
+    "feat_kcore" -> Query(kcore, Some(kcoreSql)),
+    "feat_random_walks" -> Query(randomWalks, Some(walkSql)),
+    "feat_degree_stats" -> Query(degreeStats, Some(
       """WITH e AS (SELECT DISTINCT 'c' || o_custkey AS src,
         |             's' || l_suppkey AS dst
         |           FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
@@ -1756,7 +1698,7 @@ object FeatureQueries {
         |SELECT coalesce(o.node, i.node) AS node,
         |  coalesce(out_deg, 0) AS out_deg, coalesce(in_deg, 0) AS in_deg
         |FROM o FULL JOIN i ON o.node = i.node
-        |ORDER BY node""".stripMargin,
+        |ORDER BY node""".stripMargin)),
     // EWMA nano errors vs naive lag-7 errors on the shared grid; MASE =
     // one division of two exact sums
     // zero-filled day grid, lag-7 naive |error| in exact cents; q = the
@@ -1765,7 +1707,7 @@ object FeatureQueries {
     // exact integers; a rank beyond n_cal yields the NULL-q row (infinite
     // interval, coverage 1); an EMPTY TEST HALF yields zero rows -- both
     // engines agree on both degeneracies (EventOpsSpec)
-    "feat_conformal_naive" ->
+    "feat_conformal_naive" -> Query(conformalNaive, Some(
       """WITH daily AS (SELECT epoch_us(ts) // 86400000000 AS d,
         |    CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT))
         |      AS BIGINT) AS x
@@ -1793,8 +1735,8 @@ object FeatureQueries {
         |      THEN 1 ELSE 0 END)
         |      AS DOUBLE) / CAST(count(*) AS DOUBLE) AS coverage
         |FROM err e, q WHERE NOT e.cal
-        |GROUP BY q.n_cal, q.q_cents""".stripMargin,
-    "feat_forecast_mase" ->
+        |GROUP BY q.n_cal, q.q_cents""".stripMargin)),
+    "feat_forecast_mase" -> Query(forecastMase, Some(
       s"""WITH daily AS (SELECT epoch_us(ts) // 86400000000 AS d,
          |    CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT))
          |      AS BIGINT) AS x
@@ -1832,12 +1774,12 @@ object FeatureQueries {
          |    (CAST(n_days AS DOUBLE) * 1000000000.0) END AS mae_ewma_cents,
          |  CASE WHEN CAST(sn AS DOUBLE) > 0 THEN
          |    CAST(se AS DOUBLE) / CAST(sn AS DOUBLE) END AS mase
-         |FROM a""".stripMargin,
+         |FROM a""".stripMargin)),
     // the SAME integer DP as the kernel, replayed as an anti-diagonal
     // wavefront recursive CTE: each step emits diag k+1 (min over the
     // three predecessors + |Δ| cost) and re-emits diag k as the next
     // step's k−1; the Sakoe–Chiba corridor is the |i−j| bound
-    "feat_dtw_pairs" -> {
+    "feat_dtw_pairs" -> Query(dtwPairs, Some({
       val band = 7
       s"""WITH RECURSIVE
          |daily AS (SELECT event_type AS t,
@@ -1888,11 +1830,11 @@ object FeatureQueries {
          |WHERE i = (SELECT tn FROM tl) AND j = (SELECT tn FROM tl)
          |  AND k = 2 * (SELECT tn FROM tl)
          |GROUP BY ta, tb ORDER BY type_a, type_b""".stripMargin
-    },
+    })),
     // α=1/2 ⇒ every closed-form weight an exact power of two; per-term
     // truncating nano division; power table from the SAME loop
     // (EventOps.pow2ValuesSql) as the Spark broadcast relation
-    "feat_ewma_forecast" ->
+    "feat_ewma_forecast" -> Query(ewmaForecastQ, Some(
       s"""WITH daily AS (SELECT epoch_us(ts) // 86400000000 AS d,
          |    CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT))
          |      AS BIGINT) AS x
@@ -1919,10 +1861,10 @@ object FeatureQueries {
          |  CAST(nano AS DOUBLE) / 1000000000.0 AS forecast_cents,
          |  CAST(abs(CAST(actual AS HUGEINT) * 1000000000 - nano) AS DOUBLE)
          |    / 1000000000.0 AS abs_err_cents
-         |FROM n ORDER BY day""".stripMargin,
+         |FROM n ORDER BY day""".stripMargin)),
     // tie-group rank sums collapse to v·c·(2C−c−n), all-integer to one
     // division; boundary rank r* = (9n) div 10 integer floor division
-    "feat_spend_gini" ->
+    "feat_spend_gini" -> Query(spendGini, Some(
       """WITH pk AS (SELECT user_id,
         |    CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT))
         |      AS BIGINT) AS v
@@ -1948,11 +1890,11 @@ object FeatureQueries {
         |  CASE WHEN st > 0 THEN
         |    CAST(st - coalesce(cum_at, 0) AS DOUBLE) / CAST(st AS DOUBLE)
         |  END AS top_decile_share
-        |FROM a""".stripMargin,
+        |FROM a""".stripMargin)),
     // n-scaled integer deviations (e = n·x − Σx, exact cents) → ACF is
     // one division per lag; PACF CTE chain emitted by the SAME
     // Durbin–Levinson loops as the Spark plan (EventOps.durbinLevinsonSql)
-    "feat_acf_pacf" -> {
+    "feat_acf_pacf" -> Query(acfPacf, Some({
       val maxLag = 7
       val rdefs = (1 to maxLag).map(k =>
         s"""max(CASE WHEN lag = $k THEN
@@ -1984,9 +1926,9 @@ object FeatureQueries {
          |${graft.ops.EventOps.durbinLevinsonSql("r", maxLag)}
          |$outs
          |ORDER BY lag""".stripMargin
-    },
+    })),
     // integer counts; the lag is a self-join of the per-day grid on d-7
-    "feat_seasonal_naive" ->
+    "feat_seasonal_naive" -> Query(seasonalNaive, Some(
       """WITH d AS (SELECT epoch_us(ts) // 86400000000 AS day,
         |    count(*) AS actual
         |  FROM events GROUP BY 1)
@@ -1994,13 +1936,13 @@ object FeatureQueries {
         |  CASE WHEN f.actual IS NOT NULL
         |    THEN abs(a.actual - f.actual) END AS abs_err
         |FROM d a LEFT JOIN d f ON a.day = f.day + 7
-        |ORDER BY a.day""".stripMargin,
+        |ORDER BY a.day""".stripMargin)),
     // the nano-integer Holt-Winters recursion as a recursive CTE over
     // the zero-filled 70-day grid: the seasonal state rides as a LIST
     // rotated one slot per day; every update is an integer linear
     // combination + ONE pmod-floor division by the small rational
     // denominator, so the replay is bit-identical (no rounding surface)
-    "feat_holt_winters" -> {
+    "feat_holt_winters" -> Query(holtWintersQ, Some({
       val (m, gd) = (7, 70)
       def fdiv(x: String, d: Int) =
         s"(($x) - ((($x) % $d + $d) % $d)) // $d"
@@ -2040,7 +1982,7 @@ object FeatureQueries {
          |SELECT day, actual, fc AS forecast_nano, l AS level_nano,
          |  b AS trend_nano, snew AS season_nano
          |FROM hw WHERE day IS NOT NULL ORDER BY day""".stripMargin
-    },
+    })),
     // the multiplicative recursion in HUGEINT (the Spark twin is
     // DECIMAL(38,0)): grid anchored at the first observed day, model on
     // the +1-shifted series (the ratio form is undefined on zeros),
@@ -2048,7 +1990,7 @@ object FeatureQueries {
     // of y′·10¹⁸ by greatest(state, 1), same rotating-list seasonal
     // state as the additive replay; the output forecast subtracts the
     // shift back
-    "feat_holt_winters_mult" -> {
+    "feat_holt_winters_mult" -> Query(holtWintersMultQ, Some({
       val (m, gd) = (7, 70)
       def fdiv(x: String, d: String) =
         s"(($x) - ((($x) % ($d) + ($d)) % ($d))) // ($d)"
@@ -2097,8 +2039,8 @@ object FeatureQueries {
          |  CAST(l AS BIGINT) AS level_nano, CAST(b AS BIGINT) AS trend_nano,
          |  CAST(snew AS BIGINT) AS season_ratio_nano
          |FROM hw WHERE day IS NOT NULL ORDER BY day""".stripMargin
-    },
-    "feat_markov_transitions" ->
+    })),
+    "feat_markov_transitions" -> Query(markovTransitions, Some(
       """WITH p AS (SELECT event_type AS next_state,
         |  lag(event_type) OVER (PARTITION BY user_id
         |    ORDER BY epoch_us(ts), event_id) AS state
@@ -2108,10 +2050,10 @@ object FeatureQueries {
         |SELECT state, next_state, n_transitions,
         |  round(n_transitions * 1.0 /
         |    sum(n_transitions) OVER (PARTITION BY state), 6) AS p
-        |FROM c ORDER BY state, next_state""".stripMargin,
+        |FROM c ORDER BY state, next_state""".stripMargin)),
     // raw parquet doubles pass through both engines untouched (no
     // arithmetic), so the fill is bit-identical; leading nulls stay null
-    "feat_forward_fill" ->
+    "feat_forward_fill" -> Query(forwardFill, Some(
       """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
         |  CASE WHEN event_type = 'error' THEN NULL ELSE value END AS value_m
         |  FROM events WHERE user_id < 10)
@@ -2119,11 +2061,11 @@ object FeatureQueries {
         |  last_value(value_m IGNORE NULLS) OVER (PARTITION BY user_id
         |    ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING)
         |    AS value_m_ffill
-        |FROM e ORDER BY user_id, event_id""".stripMargin,
+        |FROM e ORDER BY user_id, event_id""".stripMargin)),
     // integer epoch days; each (user, day) activity contributes to the 7
     // window-end days it falls inside — rolling distinct as a plain
     // group-by
-    "feat_rolling_dau" ->
+    "feat_rolling_dau" -> Query(rollingDau, Some(
       s"""WITH ud AS (SELECT DISTINCT user_id,
          |  epoch_us(ts) // 86400000000 AS d FROM events),
          |days AS (SELECT DISTINCT d AS day FROM ud),
@@ -2132,17 +2074,17 @@ object FeatureQueries {
          |        AS u(day))
          |SELECT c.day, count(DISTINCT user_id) AS active
          |FROM c JOIN days USING (day)
-         |GROUP BY 1 ORDER BY day""".stripMargin,
+         |GROUP BY 1 ORDER BY day""".stripMargin)),
     // the view-maintenance correctness statement: incremental refresh must
     // equal the FULL recompute — the oracle IS the full recompute
-    "feat_agg_refresh" ->
+    "feat_agg_refresh" -> Query(aggRefresh, Some(
       """SELECT user_id, count(*) AS n_events,
         |  CAST(sum(CAST(round(value, 6) AS DECIMAL(18,6))) AS DOUBLE)
         |    AS total_value
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)),
     // same LWW window as the Spark side; a winning tombstone (op='D')
     // removes the key entirely
-    "feat_cdc_apply" ->
+    "feat_cdc_apply" -> Query(cdcApply, Some(
       """WITH l AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us,
         |    event_id,
         |    CASE WHEN event_id % 7 = 0 THEN 'D' ELSE 'U' END AS op, value,
@@ -2151,8 +2093,8 @@ object FeatureQueries {
         |  FROM events)
         |SELECT user_id, event_type, ts_us, event_id, value AS last_value
         |FROM l WHERE rn = 1 AND op <> 'D'
-        |ORDER BY user_id, event_type""".stripMargin,
-    "feat_merge_upsert" ->
+        |ORDER BY user_id, event_type""".stripMargin)),
+    "feat_merge_upsert" -> Query(mergeUpsert, Some(
       s"""WITH b AS (SELECT c_custkey AS custkey, c_acctbal AS acctbal,
          |        c_mktsegment AS segment
          |      FROM customer WHERE c_custkey % 5 <> 0),
@@ -2170,8 +2112,8 @@ object FeatureQueries {
          |       WHEN u.custkey IS NULL THEN 'carried'
          |       ELSE 'updated' END AS merge_status
          |FROM b FULL JOIN u ON b.custkey = u.custkey
-         |ORDER BY custkey""".stripMargin,
-    "feat_snapshot_diff" ->
+         |ORDER BY custkey""".stripMargin)),
+    "feat_snapshot_diff" -> Query(snapshotDiff, Some(
       s"""WITH m AS (SELECT max(epoch_us(ts)) AS mx FROM events),
          |o AS (SELECT user_id, event_type, count(*) AS n_events,
          |        sum(CAST(round(value, 6) AS DECIMAL(18,6))) AS val_sum
@@ -2192,10 +2134,10 @@ object FeatureQueries {
          |        ON o.user_id = n.user_id AND o.event_type = n.event_type)
          |SELECT status, count(*) AS n_cells,
          |  CAST(sum(user_id) AS BIGINT) AS user_checksum
-         |FROM d GROUP BY 1 ORDER BY status""".stripMargin,
+         |FROM d GROUP BY 1 ORDER BY status""".stripMargin)),
     // string_agg ignores the NULLed-out tokens past the cap; (ts, event_id)
     // is unique, so the struct sort and the ORDER BY agree
-    "feat_event_sequence" ->
+    "feat_event_sequence" -> Query(eventSequence, Some(
       s"""WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us,
          |  row_number() OVER (PARTITION BY user_id
          |    ORDER BY epoch_us(ts), event_id) AS rn
@@ -2203,10 +2145,10 @@ object FeatureQueries {
          |SELECT user_id, count(*) AS n_events,
          |  string_agg(CASE WHEN rn <= $SeqMaxTokens THEN event_type END,
          |    ' ' ORDER BY rn) AS sequence
-         |FROM e GROUP BY 1 ORDER BY user_id""".stripMargin,
+         |FROM e GROUP BY 1 ORDER BY user_id""".stripMargin)),
     // chained native ASOF LEFT JOINs — inclusive (l.ts >= f.ts), one per
     // feature group, exactly the trainingMatrix fold
-    "pit_training_matrix" ->
+    "pit_training_matrix" -> Query(pitTrainingMatrix, Some(
       """WITH l AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
         |             value AS label_value
         |           FROM events WHERE event_type = 'purchase'),
@@ -2224,10 +2166,10 @@ object FeatureQueries {
         |FROM l
         |ASOF LEFT JOIN c ON l.user_id = c.user_id AND l.ts_us >= c.c_ts_us
         |ASOF LEFT JOIN v ON l.user_id = v.user_id AND l.ts_us >= v.v_ts_us
-        |ORDER BY l.user_id, l.event_id""".stripMargin,
+        |ORDER BY l.user_id, l.event_id""".stripMargin)),
     // each step joins back to the previous step's min — strictly-after
     // semantics, exactly EventOps.funnel's fold
-    "feat_funnel_steps" ->
+    "feat_funnel_steps" -> Query(funnelSteps, Some(
       """WITH v AS (SELECT user_id, min(epoch_us(ts)) AS t_view
         |           FROM events WHERE event_type = 'view' GROUP BY 1),
         |c AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t_click
@@ -2240,11 +2182,11 @@ object FeatureQueries {
         |      GROUP BY 1)
         |SELECT v.user_id, v.t_view, c.t_click, p.t_purchase
         |FROM v LEFT JOIN c USING (user_id) LEFT JOIN p USING (user_id)
-        |ORDER BY v.user_id""".stripMargin,
+        |ORDER BY v.user_id""".stripMargin)),
     // the funnel CTEs verbatim, then DISCRETE (type-1) quantiles via the
     // integer grid predicate (q·cum ≥ p·n) — interpolation op order
     // differs between engines at micros magnitude
-    "feat_funnel_timing" ->
+    "feat_funnel_timing" -> Query(funnelTiming, Some(
       """WITH v AS (SELECT user_id, min(epoch_us(ts)) AS t_view
         |           FROM events WHERE event_type = 'view' GROUP BY 1),
         |c AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t_click
@@ -2282,8 +2224,8 @@ object FeatureQueries {
         |  count(t_purchase) AS n_purchase,
         |  vc_p50, vc_p90, cp_p50, cp_p90
         |FROM f, vcq, cpq
-        |GROUP BY vc_p50, vc_p90, cp_p50, cp_p90""".stripMargin,
-    "feat_scd2_intervals" ->
+        |GROUP BY vc_p50, vc_p90, cp_p50, cp_p90""".stripMargin)),
+    "feat_scd2_intervals" -> Query(scd2Intervals, Some(
       """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
         |             event_type FROM events),
         |l AS (SELECT user_id, event_id, ts_us, event_type,
@@ -2296,8 +2238,8 @@ object FeatureQueries {
         |    AS valid_to,
         |  lead(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
         |    IS NULL AS is_current
-        |FROM c ORDER BY user_id, valid_from""".stripMargin,
-    "feat_time_split" ->
+        |FROM c ORDER BY user_id, valid_from""".stripMargin)),
+    "feat_time_split" -> Query(timeSplit, Some(
       s"""WITH m AS (SELECT max(epoch_us(ts)) AS mx FROM events),
          |s AS (SELECT epoch_us(ts) AS ts_us,
          |        CASE WHEN epoch_us(ts) > mx - $TestHorizonUs THEN 'test'
@@ -2307,8 +2249,8 @@ object FeatureQueries {
          |      FROM events, m)
          |SELECT split, count(*) AS n_events, min(ts_us) AS min_us,
          |  max(ts_us) AS max_us
-         |FROM s GROUP BY 1 ORDER BY split""".stripMargin,
-    "feat_rolling_window" ->
+         |FROM s GROUP BY 1 ORDER BY split""".stripMargin)),
+    "feat_rolling_window" -> Query(rollingWindow, Some(
       s"""SELECT user_id, event_id,
          |  CAST(sum(CAST(round(value, 6) AS DECIMAL(18,6))) OVER w
          |       AS DOUBLE) AS roll_value,
@@ -2316,5 +2258,5 @@ object FeatureQueries {
          |FROM events
          |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
          |  RANGE BETWEEN $RollWindowMicros PRECEDING AND CURRENT ROW)
-         |ORDER BY user_id, event_id""".stripMargin)
+         |ORDER BY user_id, event_id""".stripMargin)))
 }

@@ -26,19 +26,6 @@ object ModelQueries {
   private val BtItems = 8
   private val BtIters = 8
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "model_gbm_stumps" -> gbmStumps,
-    "model_gbm_score" -> gbmScore,
-    "model_gbm_trees" -> gbmTrees,
-    "model_gbm_trees_score" -> gbmTreesScore,
-    "model_ridge_normal" -> ridgeNormal,
-    "model_knn_class" -> knnClass,
-    "model_bt_strength" -> btStrength,
-    "model_bt_pairs" -> btPairs2,
-    "model_bt_cycles" -> btCycles,
-    "model_pref_position_bias" -> prefPositionBias,
-    "model_pref_length_bias" -> prefLengthBias)
-
   /** Deterministic synthetic preference log over 8 items, planted
     * BT-consistently: contestants a ≠ b are md5-drawn per document, and
     * a wins with probability s_a/(s_a+s_b) under planted strengths
@@ -344,14 +331,14 @@ object ModelQueries {
        |SELECT n_items, n_edges, n_ties, n_cyclic_triads
        |FROM ni, ne, nt, cy""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "model_bt_strength" -> btOracleSql,
-    "model_bt_pairs" -> btPairsOracleSql,
-    "model_bt_cycles" -> btCyclesOracleSql,
+  val registry: Map[String, Query] = Map(
+    "model_bt_strength" -> Query(btStrength, Some(btOracleSql)),
+    "model_bt_pairs" -> Query(btPairs2, Some(btPairsOracleSql)),
+    "model_bt_cycles" -> Query(btCycles, Some(btCyclesOracleSql)),
     // presentation-side replay of the btPairs fixture (one extra md5
     // draw); z = (2W − N)/√N is ONE IEEE division of exact integers by
     // an IEEE sqrt — engine-bit-identical
-    "model_pref_position_bias" -> {
+    "model_pref_position_bias" -> Query(prefPositionBias, Some({
       def hb(expr: String) = s"('0x' || substr(md5($expr), 1, 12))::BIGINT"
       val I = BtItems
       s"""WITH b1 AS (SELECT doc_id, ${hb("doc_id || '|a'")} % $I AS a,
@@ -374,11 +361,11 @@ object ModelQueries {
          |  CAST(2 * wf - n AS DOUBLE) / sqrt(CAST(n AS DOUBLE))
          |    AS z_position
          |FROM ag""".stripMargin
-    },
+    })),
     // even/odd document pairing, planted length-proportional outcome,
     // ntile(8) over (signed delta, pair key) — the identical banding
     // rule on both engines — then exact counts + one division per bin
-    "model_pref_length_bias" -> {
+    "model_pref_length_bias" -> Query(prefLengthBias, Some({
       def hb(expr: String) = s"('0x' || substr(md5($expr), 1, 12))::BIGINT"
       s"""WITH e AS (SELECT doc_id // 2 AS k, n_chars AS lf
          |  FROM documents WHERE doc_id % 2 = 0),
@@ -398,11 +385,11 @@ object ModelQueries {
          |    / CAST(count(*) AS DOUBLE) AS first_win_rate,
          |  min(d) AS min_delta, max(d) AS max_delta
          |FROM bnd GROUP BY delta_bin ORDER BY delta_bin""".stripMargin
-    },
+    })),
     // exact HUGEINT moments (the Spark twin is DECIMAL(38,0)), then the
     // identical fixed-sequence double algebra: Cramer determinants,
     // SSE/SST, everything unrounded
-    "model_ridge_normal" -> {
+    "model_ridge_normal" -> Query(ridgeNormal, Some({
       val L = RidgeLambda
       val det = det3Sql("a", "b", "c", "b", "e", "f", "c", "f", "i")
       s"""WITH base AS (SELECT
@@ -447,11 +434,11 @@ object ModelQueries {
          |        + 2.0 * (b0 * b1 * b + b0 * b2 * c + b1 * b2 * f)))
          |      / (syyd - ry * ry / a) END AS r2
          |FROM sol""".stripMargin
-    },
+    })),
     // the knn-join replay (6-dp cosine, rank ties to the smaller id)
     // plus the vote: max-struct (count, label) — ties to the larger
     // label, the naiveBayes argmax convention
-    "model_knn_class" ->
+    "model_knn_class" -> Query(knnClass, Some(
       s"""WITH q AS (SELECT vec_id AS q_id, embedding AS qv, label AS ql
          |  FROM embeddings WHERE vec_id < $KnnClassBatch),
          |s AS (SELECT q_id,  vec_id,
@@ -469,8 +456,8 @@ object ModelQueries {
          |SELECT q.q_id AS vec_id, q.ql AS label, bst.b.l AS predicted,
          |  CAST(bst.b.c AS BIGINT) AS n_votes,
          |  q.ql = bst.b.l AS correct
-         |FROM q JOIN bst ON bst.q_id = q.q_id ORDER BY vec_id""".stripMargin,
-    "model_gbm_stumps" -> s"""$gbmCtes
+         |FROM q JOIN bst ON bst.q_id = q.q_id ORDER BY vec_id""".stripMargin)),
+    "model_gbm_stumps" -> Query(gbmStumps, Some(s"""$gbmCtes
        |${(1 to GbmRounds).map(r =>
             s"""SELECT $r AS round,
                |  CASE WHEN -(s.mf) = 0 THEN 'price_c'
@@ -482,12 +469,12 @@ object ModelQueries {
                |  s.gain AS gain
                |FROM best$r""".stripMargin)
           .mkString("\nUNION ALL\n")}
-       |ORDER BY round""".stripMargin,
-    "model_gbm_score" -> s"""$gbmCtes
+       |ORDER BY round""".stripMargin)),
+    "model_gbm_score" -> Query(gbmScore, Some(s"""$gbmCtes
        |SELECT id AS o_orderkey, CAST(y AS DOUBLE) AS label,
        |  round(CAST(pred AS DOUBLE), 9) AS pred
-       |FROM pr$GbmRounds WHERE id % $ScoreMod = 0 ORDER BY id""".stripMargin,
-    "model_gbm_trees" -> {
+       |FROM pr$GbmRounds WHERE id % $ScoreMod = 0 ORDER BY id""".stripMargin)),
+    "model_gbm_trees" -> Query(gbmTrees, Some({
       val featCase = "CASE WHEN -(s.mf) = 0 THEN 'price_c' " +
         "WHEN -(s.mf) = 1 THEN 'order_day' ELSE 'acctbal_c' END"
       s"""$gbmTreeCtes
@@ -507,12 +494,12 @@ object ModelQueries {
                  |FROM cbest$r""".stripMargin)
             .mkString("\nUNION ALL\n")}
          |) ORDER BY round, node""".stripMargin
-    },
-    "model_gbm_trees_score" -> s"""$gbmTreeCtes
+    })),
+    "model_gbm_trees_score" -> Query(gbmTreesScore, Some(s"""$gbmTreeCtes
        |SELECT id AS o_orderkey, CAST(y AS DOUBLE) AS label,
        |  round(CAST(pred AS DOUBLE), 9) AS pred
        |FROM pr$GbmTreeRounds WHERE id % $ScoreMod = 0
-       |ORDER BY id""".stripMargin)
+       |ORDER BY id""".stripMargin)))
 
   /** Shared replay prologue: the joined base, per-feature min/max, the
     * 9-dp base prediction and the binned pr0 relation (MATERIALIZED —

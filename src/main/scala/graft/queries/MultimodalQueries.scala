@@ -162,16 +162,6 @@ object MultimodalQueries {
       .orderBy("brand", "timescale")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "multimodal_video_profile" -> videoProfile,
-    "multimodal_meta" -> meta,
-    "multimodal_frames" -> frames,
-    "multimodal_phash" -> phash,
-    "multimodal_phash_neardup" -> phashNearDup,
-    "multimodal_dimensions" -> dimensions,
-    "multimodal_audio_profile" -> audioProfile,
-    "multimodal_byte_features" -> byteFeatures)
-
   // perceptual-hash replay from the ASCII text side: the chunk rule
   // (p·64 // n), the cross-multiply bits and the two-half bit packing are
   // all integer — byte values are ascii codes because the corpus is pure
@@ -205,7 +195,7 @@ object MultimodalQueries {
       |      ELSE 0 END)::BIGINT AS dhash_hi
       |  FROM bits GROUP BY id)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val registry: Map[String, Query] = Map(
     // INDEPENDENT ground truth: the oracle never parses bytes — it
     // re-derives each blob's dimensions from the packImageBlobs id
     // formulas (w = 1 + id%1024, h = 1 + 31·id % 1024, png/jpeg by
@@ -215,7 +205,7 @@ object MultimodalQueries {
     // video leg: brand by id parity, timescale from the 5-element grid,
     // duration units = payload byte count — all re-derived from the id,
     // never parsed, so the Spark box walk is checked against ground truth
-    "multimodal_video_profile" ->
+    "multimodal_video_profile" -> Query(videoProfile, Some(
       """WITH b AS (SELECT doc_id,
         |    CASE WHEN doc_id % 83 = 0 THEN NULL
         |      WHEN doc_id % 2 = 0 THEN 'isom' ELSE 'mp42' END AS brand,
@@ -236,11 +226,11 @@ object MultimodalQueries {
         |  sum(dur)::BIGINT AS sum_duration_ms,
         |  min(dur) AS min_duration_ms, max(dur) AS max_duration_ms
         |FROM a GROUP BY 1, 2
-        |ORDER BY brand, timescale""".stripMargin,
+        |ORDER BY brand, timescale""".stripMargin)),
     // same independent-ground-truth discipline as multimodal_dimensions:
     // the oracle re-derives the WAV format fields from the id formulas
     // (NULL when id%89 truncates), never touching the bytes
-    "multimodal_audio_profile" ->
+    "multimodal_audio_profile" -> Query(audioProfile, Some(
       """WITH b AS (SELECT doc_id,
         |    CASE WHEN doc_id % 89 = 0 THEN NULL
         |      ELSE 1 + doc_id % 2 END AS ch,
@@ -261,8 +251,8 @@ object MultimodalQueries {
         |  sum(dur)::BIGINT AS sum_duration_ms,
         |  min(dur) AS min_duration_ms, max(dur) AS max_duration_ms
         |FROM a GROUP BY 1, 2
-        |ORDER BY sample_rate, channels""".stripMargin,
-    "multimodal_dimensions" ->
+        |ORDER BY sample_rate, channels""".stripMargin)),
+    "multimodal_dimensions" -> Query(dimensions, Some(
       """WITH b AS (SELECT doc_id,
         |    CASE WHEN doc_id % 2 = 0 THEN 'png' ELSE 'jpeg' END
         |      AS img_format,
@@ -281,12 +271,12 @@ object MultimodalQueries {
         |  min(h) AS min_height, max(h) AS max_height,
         |  CAST(sum(w * h) AS BIGINT) AS sum_pixels
         |FROM a GROUP BY 1, 2
-        |ORDER BY img_format, aspect_bucket""".stripMargin,
-    "multimodal_phash" ->
+        |ORDER BY img_format, aspect_bucket""".stripMargin)),
+    "multimodal_phash" -> Query(phash, Some(
       s"""WITH $phashCteSql
          |SELECT id, n_bytes, ahash_lo, ahash_hi, dhash_lo, dhash_hi
-         |FROM h ORDER BY id""".stripMargin,
-    "multimodal_phash_neardup" ->
+         |FROM h ORDER BY id""".stripMargin)),
+    "multimodal_phash_neardup" -> Query(phashNearDup, Some(
       s"""WITH $phashCteSql,
          |pr AS (SELECT a.id AS id_a, b.id AS id_b FROM h a JOIN h b
          |    ON a.ahash_lo = b.ahash_lo AND a.id < b.id
@@ -302,8 +292,8 @@ object MultimodalQueries {
          |      AS hamming_d
          |  FROM pr JOIN h x ON x.id = pr.id_a JOIN h y ON y.id = pr.id_b)
          |SELECT * FROM hp WHERE hamming_a <= $PhashMaxHamming
-         |ORDER BY id_a, id_b""".stripMargin,
-    "multimodal_meta" ->
+         |ORDER BY id_a, id_b""".stripMargin)),
+    "multimodal_meta" -> Query(meta, Some(
       """WITH b AS (
         |  SELECT doc_id AS id,
         |    ['audio', 'image', 'video'][(doc_id % 3 + 1)::INT] AS modality,
@@ -319,8 +309,8 @@ object MultimodalQueries {
         |  sum(n_bytes)::BIGINT AS total_bytes,
         |  min(digest) AS min_digest, max(digest) AS max_digest
         |FROM f GROUP BY modality, format
-        |ORDER BY modality, format""".stripMargin,
-    "multimodal_frames" ->
+        |ORDER BY modality, format""".stripMargin)),
+    "multimodal_frames" -> Query(frames, Some(
       s"""WITH b AS (
          |  SELECT doc_id AS id, text FROM documents WHERE doc_id % 3 = 2),
          |fr AS (
@@ -332,5 +322,6 @@ object MultimodalQueries {
          |  FROM fr WHERE length(frame) > 0)
          |SELECT id, frame_idx::BIGINT AS frame_idx,
          |  length(frame)::BIGINT AS frame_bytes, md5(frame) AS frame_digest
-         |FROM keep ORDER BY id, frame_idx""".stripMargin)
+         |FROM keep ORDER BY id, frame_idx""".stripMargin)),
+    "multimodal_byte_features" -> Query(byteFeatures, None))
 }

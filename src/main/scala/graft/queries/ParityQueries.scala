@@ -28,11 +28,8 @@ object ParityQueries {
       .orderBy(col("user_id"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "flagship_user_features" -> userEventFeatures)
-
-  val oracle: Map[String, String] = Map(
-    "flagship_user_features" ->
+  val registry: Map[String, Query] = Map(
+    "flagship_user_features" -> Query(userEventFeatures, Some(
       """SELECT user_id,
         |  count(event_type) AS total_events,
         |  CAST(sum(CASE WHEN value > 0 THEN 1 ELSE 0 END) AS BIGINT) AS total_purchases,
@@ -45,5 +42,5 @@ object ParityQueries {
         |  count(event_type) * 1.0 / (CAST(floor((epoch_us(max(ts)) - epoch_us(min(ts))) / 86400000000) AS BIGINT) + 1) AS avg_events_per_day,
         |  epoch_us(max(ts)) AS last_event_time_us,
         |  epoch_us(min(ts)) AS first_event_time_us
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)))
 }

@@ -501,45 +501,6 @@ object PrepQueries {
         col("doc_id"))
       .orderBy("virtual_time", "source", "id")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "prep_mixture_schedule" -> mixtureSchedule,
-    "prep_span_corruption" -> spanCorruption,
-    "prep_temperature_mix" -> temperatureMix,
-    "prep_loss_reweight" -> lossReweightQ,
-    "prep_doremi_mix" -> doremiMix,
-    "prep_curriculum_schedule" -> curriculumSchedule,
-    "prep_doremi_sample" -> doremiSample,
-    "prep_doremi_budget" -> doremiBudget,
-    "prep_rank_normalize" -> rankNormalizeAcctbal,
-    "prep_global_shuffle" -> globalShuffleDocs,
-    "prep_dsir_weights" -> dsirWeights,
-    "prep_negative_sample" -> negativeSample,
-    "prep_key_cap" -> keyCap,
-    "prep_winsorize" -> winsorizePrice,
-    "prep_kfold" -> kfoldEvents,
-    "prep_class_balance" -> classBalance,
-    "prep_target_encode" -> targetEncode,
-    "prep_woe_encode" -> woeEncode,
-    "prep_quantile_bucket" -> quantileBucket,
-    "prep_hash_cross" -> hashCross,
-    "prep_priority_sample" -> prioritySampleOrders,
-    "prep_tfidf_top_terms" -> tfidfTopTerms,
-    "prep_normalize_acctbal" -> normalizeAcctbal,
-    "prep_feature_hash" -> featureHash,
-    "prep_group_split" -> groupSplit,
-    "prep_pack_sequences" -> packSequences,
-    "prep_mixture_sample" -> mixtureSample,
-    "prep_decontam_overlap" -> decontamOverlap,
-    "prep_decontam_survivors" -> decontamSurvivors,
-    "prep_semantic_decontam" -> semanticDecontam,
-    "prep_stratified_sample" -> stratifiedSample,
-    "prep_histogram_price" -> histogramPrice,
-    "prep_chunk_text" -> chunkText,
-    "prep_redact_pii" -> redactPii,
-    "prep_token_budget" -> tokenBudget,
-    "prep_quantile_match" -> quantileMatch,
-    "prep_sessionize" -> sessionizeEvents)
-
   // ---- oracle SQL -------------------------------------------------------------
 
   private def md5Bucket(expr: String, buckets: Int) =
@@ -569,10 +530,10 @@ object PrepQueries {
        |    CAST(CAST(q AS DECIMAL(18,9)) * 1000000000 AS BIGINT) AS wn
        |  FROM mw)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val registry: Map[String, Query] = Map(
     // stride scheduling over the temperature weights: item k of source s
     // at virtual time (k − ½)/q_s; within-source order = md5-of-id
-    "prep_mixture_schedule" ->
+    "prep_mixture_schedule" -> Query(mixtureSchedule, Some(
       """WITH s AS (SELECT lang AS source, count(*) AS n_rows
         |           FROM documents GROUP BY 1),
         |t AS (SELECT CAST(sum(n_rows) AS BIGINT) AS nn FROM s),
@@ -590,12 +551,12 @@ object PrepQueries {
         |SELECT round((r.k - 0.5) / q.q_temp, 9) AS virtual_time,
         |  r.source, r.id, CAST(r.k AS INTEGER) AS k
         |FROM r JOIN q USING (source)
-        |ORDER BY virtual_time, source, id""".stripMargin,
+        |ORDER BY virtual_time, source, id""".stripMargin)),
     // hash-deterministic span starts/lengths on the shared md5 idiom;
     // overlapping spans union their cover; runs via gap-and-island
     // (pos − row_number constant per run); both texts string_agg in
     // deterministic order; no-span docs keep original text, NULL target
-    "prep_span_corruption" -> {
+    "prep_span_corruption" -> Query(spanCorruption, Some({
       val P = SpanStartPct
       val M = SpanMax
       s"""WITH d AS (SELECT doc_id,
@@ -651,24 +612,24 @@ object PrepQueries {
          |LEFT JOIN tgt USING (doc_id)
          |WHERE len(d.toks) >= 1
          |ORDER BY doc_id""".stripMargin
-    },
+    })),
     // one EG step on the held-out hardness vector: exp is the one
     // irrational per domain (argument = difference/product of exact
     // short-decimal doubles, identical per engine), rounded 9 dp before
     // the exact DECIMAL normalization sum; mixture uses the ROUNDED
     // softmax (mirrored) and the rational 1/5 uniform smoothing
-    "prep_loss_reweight" ->
+    "prep_loss_reweight" -> Query(lossReweightQ, Some(
       s"""WITH $doremiWeightCtes
          |SELECT sw.source, sw.bits, sw.softmax_weight,
          |  round(0.8 * sw.softmax_weight + 1.0 / (5.0 * st.k), 9)
          |    AS mixture_weight
-         |FROM sw, st ORDER BY source""".stripMargin,
+         |FROM sw, st ORDER BY source""".stripMargin)),
     // the closed loop: the measured mixture weights drive the stride
     // schedule — item k of source s at virtual time (k − ½)/w_s. The
     // weight is a 9-dp RATIONAL (unlike q_temp's irrational sqrt), so
     // virtual time is the exact truncating nano division
     // (2k−1)·10¹⁸ // (2·wn), never a round() of a rational
-    "prep_doremi_mix" ->
+    "prep_doremi_mix" -> Query(doremiMix, Some(
       s"""WITH $doremiWeightCtes,
          |r AS (SELECT CAST(source AS VARCHAR) AS source, doc_id AS id,
          |        row_number() OVER (PARTITION BY source
@@ -679,12 +640,12 @@ object PrepQueries {
          |    / 1000000000.0 AS virtual_time,
          |  r.source, r.id, CAST(r.k AS INTEGER) AS k
          |FROM r JOIN wq USING (source)
-         |ORDER BY virtual_time, source, id""".stripMargin,
+         |ORDER BY virtual_time, source, id""".stripMargin)),
     // the curriculum variant: same measured weights and exact nano
     // virtual time, within-source rank by the exact integer quality key
     // (one HUGEINT truncating division — positive operands, so `//`
     // matches Spark's pmod-floor), ties to (md5, id)
-    "prep_curriculum_schedule" ->
+    "prep_curriculum_schedule" -> Query(curriculumSchedule, Some(
       s"""WITH $doremiWeightCtes,
          |qn AS (SELECT doc_id, source,
          |    CASE WHEN n > 0 THEN CAST(
@@ -711,11 +672,11 @@ object PrepQueries {
          |    / 1000000000.0 AS virtual_time,
          |  r.source, r.id, r.quality, CAST(r.k AS INTEGER) AS k
          |FROM r JOIN wq USING (source)
-         |ORDER BY virtual_time, source, id""".stripMargin,
+         |ORDER BY virtual_time, source, id""".stripMargin)),
     // provisioning sheet: budget·wn_i // Σwn per source — exact HUGEINT
     // shares of the measured nano weights (they need not sum to 1e9),
     // inventory/epochs/deficit as in prep_token_budget
-    "prep_doremi_budget" ->
+    "prep_doremi_budget" -> Query(doremiBudget, Some(
       s"""WITH $doremiWeightCtes,
          |zz AS (SELECT CAST(sum(wn) AS HUGEINT) AS zt FROM wq),
          |inv AS (SELECT CAST(source AS VARCHAR) AS source,
@@ -736,12 +697,12 @@ object PrepQueries {
          |  CASE WHEN available_tokens > 0 THEN
          |    round(CAST(target_tokens AS DOUBLE) / available_tokens, 9)
          |      > 1.0 END AS deficit
-         |FROM p ORDER BY source""".stripMargin,
+         |FROM p ORDER BY source""".stripMargin)),
     // max-retention target sampling: nano-quantized weights, per-source
     // counts, double-ratio argmax (struct max, ties to the later
     // source), then the EXACT HUGEINT cross-multiplied keep test —
     // hash·wm·n_i < 10000·wn_i·n_M mirrors Spark's DECIMAL(38,0) form
-    "prep_doremi_sample" ->
+    "prep_doremi_sample" -> Query(doremiSample, Some(
       s"""WITH $doremiWeightCtes,
          |cnts AS (SELECT CAST(source AS VARCHAR) AS source,
          |    count(*) AS n FROM documents GROUP BY 1),
@@ -757,12 +718,12 @@ object PrepQueries {
          |WHERE (('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 12))
          |    ::BIGINT % 10000)::HUGEINT * mrow.wm * r.n
          |  < 10000::HUGEINT * r.wn * mrow.nm
-         |ORDER BY d.doc_id""".stripMargin,
+         |ORDER BY d.doc_id""".stripMargin)),
     // T=2 temperature weights: sqrt is IEEE-correctly-rounded on both
     // engines; sqrt contributions round 9 dp and sum in exact DECIMAL
     // (double Σ of irrationals is order-dependent), one division each
     // for q and boost
-    "prep_temperature_mix" ->
+    "prep_temperature_mix" -> Query(temperatureMix, Some(
       """WITH s AS (SELECT lang AS source, count(*) AS n_rows
         |           FROM documents GROUP BY 1),
         |t AS (SELECT CAST(sum(n_rows) AS BIGINT) AS nn FROM s),
@@ -775,11 +736,11 @@ object PrepQueries {
         |SELECT source, n_rows, p_raw,
         |  round(CAST(w AS DOUBLE) / z, 9) AS q_temp,
         |  round(round(CAST(w AS DOUBLE) / z, 9) / p_raw, 9) AS boost
-        |FROM b CROSS JOIN z ORDER BY source""".stripMargin,
+        |FROM b CROSS JOIN z ORDER BY source""".stripMargin)),
     // type-1 inverse CDF: matched = min target value whose cum count
     // reaches ceil(cumA*nB/nA); the oracle's quadratic >= join is the
     // bounded-grid equivalent of the Spark side's forward as-of
-    "prep_quantile_match" ->
+    "prep_quantile_match" -> Query(quantileMatch, Some(
       """WITH a AS (SELECT CAST(c_acctbal AS DECIMAL(18,2)) AS v,
         |    count(*) AS c
         |  FROM customer WHERE c_mktsegment = 'BUILDING'
@@ -801,10 +762,10 @@ object PrepQueries {
         |SELECT CAST(t.v AS DOUBLE) AS value, t.pct_rank,
         |  CAST(min(bw.bv) AS DOUBLE) AS matched_value
         |FROM t JOIN bw ON bw.cum >= t.target
-        |GROUP BY t.v, t.pct_rank ORDER BY value""".stripMargin,
+        |GROUP BY t.v, t.pct_rank ORDER BY value""".stripMargin)),
     // integer target weights; budget·pct//100 stays integer-exact, epochs
     // is the single IEEE division
-    "prep_token_budget" -> {
+    "prep_token_budget" -> Query(tokenBudget, Some({
       val values = BudgetTargets
         .map { case (s, p) => s"('$s', $p)" }.mkString(", ")
       s"""WITH inv AS (SELECT lang AS source, count(*) AS n_docs,
@@ -825,9 +786,9 @@ object PrepQueries {
          |    round(CAST(target_tokens AS DOUBLE) / available_tokens, 9)
          |      > 1.0 END AS deficit
          |FROM p ORDER BY source""".stripMargin
-    },
+    })),
     // cume_dist over the distinct-value grid ≡ per-row cume_dist
-    "prep_rank_normalize" ->
+    "prep_rank_normalize" -> Query(rankNormalizeAcctbal, Some(
       """WITH g AS (
         |  SELECT CAST(c_acctbal AS DECIMAL(18,2)) AS v, count(*) AS c
         |  FROM customer WHERE c_acctbal IS NOT NULL GROUP BY 1),
@@ -838,18 +799,18 @@ object PrepQueries {
         |  FROM g)
         |SELECT c_custkey, c_acctbal, pct_rank
         |FROM customer LEFT JOIN w ON CAST(c_acctbal AS DECIMAL(18,2)) = v
-        |ORDER BY c_custkey""".stripMargin,
+        |ORDER BY c_custkey""".stripMargin)),
     // the two-phase salted ranking ≡ one global (md5(seed:key), key) sort
-    "prep_global_shuffle" ->
+    "prep_global_shuffle" -> Query(globalShuffleDocs, Some(
       s"""SELECT doc_id, lang,
          |  CAST(row_number() OVER (ORDER BY
          |    md5('$ShuffleSeed:' || CAST(doc_id AS VARCHAR)), doc_id)
          |    AS BIGINT) AS shuffle_pos
-         |FROM documents ORDER BY shuffle_pos""".stripMargin,
+         |FROM documents ORDER BY shuffle_pos""".stripMargin)),
     // hashed-unigram add-one models of the en vs non-en slices on a dense
     // 64-bucket grid; per-bucket 9dp log-ratio contributions scale by the
     // doc's bucket count in exact DECIMAL
-    "prep_dsir_weights" ->
+    "prep_dsir_weights" -> Query(dsirWeights, Some(
       s"""WITH d AS (SELECT doc_id, (lang = 'en') AS t,
          |  list_filter(string_split(text, ' '), x -> x <> '') AS toks
          |  FROM documents),
@@ -873,10 +834,10 @@ object PrepQueries {
          |FROM occ
          |JOIN (SELECT bucket, lp FROM model WHERE t) mt USING (bucket)
          |JOIN (SELECT bucket, lp FROM model WHERE NOT t) mr USING (bucket)
-         |GROUP BY 1, 2 ORDER BY doc_id""".stripMargin,
+         |GROUP BY 1, 2 ORDER BY doc_id""".stripMargin)),
     // candidate item = 1 + md5(user || '_' || draw) % max_part_id; first
     // occurrence per (user, item), then the first k surviving draws
-    "prep_negative_sample" ->
+    "prep_negative_sample" -> Query(negativeSample, Some(
       s"""WITH inter AS (SELECT DISTINCT o_custkey, l_partkey
          |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
          |  WHERE o_custkey < 10),
@@ -899,8 +860,8 @@ object PrepQueries {
          |SELECT o_custkey, CAST(neg_rank AS BIGINT) AS neg_rank, l_partkey,
          |  CAST(draw AS BIGINT) AS draw
          |FROM r WHERE neg_rank <= $NegSampleK
-         |ORDER BY o_custkey, neg_rank""".stripMargin,
-    "prep_key_cap" ->
+         |ORDER BY o_custkey, neg_rank""".stripMargin)),
+    "prep_key_cap" -> Query(keyCap, Some(
       s"""WITH r AS (SELECT doc_id, source, lang,
          |  row_number() OVER (PARTITION BY source, lang
          |    ORDER BY md5(doc_id::VARCHAR), doc_id) AS rn
@@ -908,10 +869,10 @@ object PrepQueries {
          |SELECT source, lang, count(*) AS n_kept,
          |  CAST(sum(doc_id) AS BIGINT) AS id_checksum
          |FROM r WHERE rn <= $CapN
-         |GROUP BY 1, 2 ORDER BY source, lang""".stripMargin,
+         |GROUP BY 1, 2 ORDER BY source, lang""".stripMargin)),
     // edges rounded to 6 dp and compared in DECIMAL — same engine-exactness
     // argument as prep_quantile_bucket
-    "prep_winsorize" ->
+    "prep_winsorize" -> Query(winsorizePrice, Some(
       s"""WITH e AS (SELECT
          |  CAST(round(quantile_cont(l_extendedprice, $WinsLo), 6)
          |       AS DECIMAL(18,6)) AS lo,
@@ -928,15 +889,15 @@ object PrepQueries {
          |  count(*) AS n_rows, CAST(sum(wz) AS DOUBLE) AS total,
          |  CAST(min(wz) AS DOUBLE) AS lo_edge,
          |  CAST(max(wz) AS DOUBLE) AS hi_edge
-         |FROM w""".stripMargin,
-    "prep_kfold" -> {
+         |FROM w""".stripMargin)),
+    "prep_kfold" -> Query(kfoldEvents, Some({
       val f = md5Bucket("user_id::VARCHAR", KFolds)
       s"""WITH f AS (SELECT user_id, $f AS fold FROM events)
          |SELECT fold, count(DISTINCT user_id) AS n_users,
          |  count(*) AS n_events
          |FROM f GROUP BY 1 ORDER BY fold""".stripMargin
-    },
-    "prep_class_balance" ->
+    })),
+    "prep_class_balance" -> Query(classBalance, Some(
       """WITH r AS (SELECT o_orderkey, o_orderstatus,
         |  row_number() OVER (PARTITION BY o_orderstatus
         |    ORDER BY md5(o_orderkey::VARCHAR), o_orderkey) AS rn
@@ -946,10 +907,10 @@ object PrepQueries {
         |SELECT o_orderstatus, count(*) AS n_kept,
         |  CAST(sum(o_orderkey) AS BIGINT) AS key_checksum
         |FROM r, t WHERE rn <= target
-        |GROUP BY 1 ORDER BY o_orderstatus""".stripMargin,
+        |GROUP BY 1 ORDER BY o_orderstatus""".stripMargin)),
     // shares = (count + α)/(total + α) as doubles, one ln rounded 9 dp
     // (the PMI discipline); iv multiplies the ALREADY-rounded woe
-    "prep_woe_encode" ->
+    "prep_woe_encode" -> Query(woeEncode, Some(
       s"""WITH s AS (SELECT o_orderpriority AS priority, count(*) AS n,
          |    CAST(sum(CASE WHEN o_totalprice > $WoeLabelCut THEN 1 ELSE 0
          |      END) AS BIGINT) AS n_pos
@@ -964,10 +925,10 @@ object PrepQueries {
          |    round(ln(ps / ns), 9) AS woe FROM w)
          |SELECT priority, n, n_pos, n_neg, woe,
          |  round((ps - ns) * woe, 9) AS iv
-         |FROM w2 ORDER BY priority""".stripMargin,
+         |FROM w2 ORDER BY priority""".stripMargin)),
     // double math mirrors Prep.targetEncode's expression order exactly:
     // (Σy + m·(gs/gn)) / (n + m), LOO excludes the row's own label
-    "prep_target_encode" ->
+    "prep_target_encode" -> Query(targetEncode, Some(
       s"""WITH c AS (SELECT c_custkey, c_mktsegment,
          |  CAST(c_acctbal AS DECIMAL(18,2)) AS yd FROM customer),
          |s AS (SELECT c_mktsegment, count(*) AS n, sum(yd) AS sy
@@ -981,11 +942,11 @@ object PrepQueries {
          |         + $TeSmoothing * (CAST(g.gs AS DOUBLE) / g.gn))
          |        / (s.n - 1 + $TeSmoothing), 6) AS te_loo
          |FROM c JOIN s USING (c_mktsegment), g
-         |WHERE c.c_custkey < 20 ORDER BY c.c_custkey""".stripMargin,
+         |WHERE c.c_custkey < 20 ORDER BY c.c_custkey""".stripMargin)),
     // edges rounded to 6 dp and compared in DECIMAL — interpolated
     // percentiles of 2-dp money at k/4 positions are multiples of 0.0025,
     // never at a 5e-7 rounding boundary, so both engines bin identically
-    "prep_quantile_bucket" ->
+    "prep_quantile_bucket" -> Query(quantileBucket, Some(
       s"""WITH e AS (SELECT
          |  CAST(round(quantile_cont(l_extendedprice, 0.25), 6) AS DECIMAL(18,6)) AS e1,
          |  CAST(round(quantile_cont(l_extendedprice, 0.50), 6) AS DECIMAL(18,6)) AS e2,
@@ -997,15 +958,15 @@ object PrepQueries {
          |            FROM lineitem), e)
          |SELECT CAST(bucket AS BIGINT) AS bucket, count(*) AS n,
          |  CAST(min(xd) AS DOUBLE) AS lo, CAST(max(xd) AS DOUBLE) AS hi
-         |FROM b GROUP BY 1 ORDER BY bucket""".stripMargin,
-    "prep_hash_cross" -> {
+         |FROM b GROUP BY 1 ORDER BY bucket""".stripMargin)),
+    "prep_hash_cross" -> Query(hashCross, Some({
       val joined = "c_mktsegment || chr(1) || c_nationkey::VARCHAR"
       s"""SELECT ${md5Bucket(joined, CrossBuckets)} AS cross_bucket,
          |  count(*) AS n_rows,
          |  count(DISTINCT (c_mktsegment, c_nationkey)) AS n_pairs
          |FROM customer GROUP BY 1 ORDER BY cross_bucket""".stripMargin
-    },
-    "prep_tfidf_top_terms" ->
+    })),
+    "prep_tfidf_top_terms" -> Query(tfidfTopTerms, Some(
       s"""WITH d AS (SELECT doc_id,
          |  list_filter(string_split(text, ' '), t -> t <> '') AS toks
          |  FROM documents),
@@ -1022,8 +983,8 @@ object PrepQueries {
          |      FROM s)
          |SELECT doc_id, CAST(rank AS BIGINT) AS rank, term, tf, tfidf
          |FROM r WHERE rank <= $TopK AND doc_id < 10
-         |ORDER BY doc_id, rank""".stripMargin,
-    "prep_normalize_acctbal" ->
+         |ORDER BY doc_id, rank""".stripMargin)),
+    "prep_normalize_acctbal" -> Query(normalizeAcctbal, Some(
       """WITH c AS (SELECT c_custkey, c_mktsegment,
         |  CAST(c_acctbal AS DECIMAL(18,2)) AS xd FROM customer),
         |s AS (SELECT c_mktsegment, count(*) AS n, sum(xd) AS s,
@@ -1040,8 +1001,8 @@ object PrepQueries {
         |    THEN round(CAST(c.xd - s.mn AS DOUBLE) / CAST(s.mx - s.mn AS DOUBLE), 6)
         |    END AS minmax
         |FROM c JOIN s USING (c_mktsegment)
-        |WHERE c_custkey < 20 ORDER BY c_custkey""".stripMargin,
-    "prep_feature_hash" -> {
+        |WHERE c_custkey < 20 ORDER BY c_custkey""".stripMargin)),
+    "prep_feature_hash" -> Query(featureHash, Some({
       val feat = "event_type || '=' || coalesce(props, '')"
       s"""WITH b AS (SELECT user_id,
          |  ${md5Bucket(feat, HashBuckets)} AS bucket,
@@ -1050,8 +1011,8 @@ object PrepQueries {
          |  FROM events WHERE user_id < 20)
          |SELECT user_id, bucket, CAST(sum(sign) AS BIGINT) AS value
          |FROM b GROUP BY 1, 2 ORDER BY user_id, bucket""".stripMargin
-    },
-    "prep_group_split" -> {
+    })),
+    "prep_group_split" -> Query(groupSplit, Some({
       val b = md5Bucket("user_id::VARCHAR", 100)
       s"""WITH s AS (SELECT user_id,
          |  CASE WHEN $b < 80 THEN 'train'
@@ -1061,8 +1022,8 @@ object PrepQueries {
          |SELECT split, count(DISTINCT user_id) AS n_users,
          |  count(*) AS n_events
          |FROM s GROUP BY 1 ORDER BY split""".stripMargin
-    },
-    "prep_pack_sequences" ->
+    })),
+    "prep_pack_sequences" -> Query(packSequences, Some(
       s"""WITH d AS (SELECT source, doc_id,
          |  len(list_filter(string_split(text, ' '), t -> t <> ''))::BIGINT
          |    AS n_tokens
@@ -1075,8 +1036,8 @@ object PrepQueries {
          |      FROM d)
          |SELECT source, CAST(floor(start_offset / $PackBudget) AS BIGINT) AS pack,
          |  count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS n_tokens
-         |FROM o GROUP BY 1, 2 ORDER BY source, pack""".stripMargin,
-    "prep_mixture_sample" -> {
+         |FROM o GROUP BY 1, 2 ORDER BY source, pack""".stripMargin)),
+    "prep_mixture_sample" -> Query(mixtureSample, Some({
       val b = md5Bucket("doc_id::VARCHAR", 10000)
       val thr = s"""CASE WHEN source = 'src0' THEN ${MixWeights("src0") * 10000}
                    |       WHEN source = 'src1' THEN ${MixWeights("src1") * 10000}
@@ -1087,13 +1048,13 @@ object PrepQueries {
          |t AS (SELECT source, count(*) AS n_total FROM documents GROUP BY 1)
          |SELECT t.source, t.n_total, coalesce(k.n_kept, 0) AS n_kept
          |FROM t LEFT JOIN k USING (source) ORDER BY source""".stripMargin
-    },
-    "prep_decontam_overlap" ->
+    })),
+    "prep_decontam_overlap" -> Query(decontamOverlap, Some(
       s"""$decontamCtes
          |SELECT doc_id, n_grams, n_overlap,
          |  round(n_overlap * 1.0 / n_grams, 6) AS overlap_frac
-         |FROM c ORDER BY doc_id""".stripMargin,
-    "prep_decontam_survivors" ->
+         |FROM c ORDER BY doc_id""".stripMargin)),
+    "prep_decontam_survivors" -> Query(decontamSurvivors, Some(
       s"""$decontamCtes,
          |flagged AS (
          |  SELECT doc_id FROM c
@@ -1101,11 +1062,11 @@ object PrepQueries {
          |SELECT count(*) AS n_survivors, CAST(sum(doc_id) AS BIGINT) AS id_checksum
          |FROM documents
          |WHERE source <> 'src0'
-         |  AND doc_id NOT IN (SELECT doc_id FROM flagged)""".stripMargin,
+         |  AND doc_id NOT IN (SELECT doc_id FROM flagged)""".stripMargin)),
     // semantic contamination: cross every train vector against the small
     // eval slice, 6-dp cosine, threshold BEFORE the per-train argmax
     // (row_number replay of the min-struct tie rule: cos desc, eval id)
-    "prep_semantic_decontam" ->
+    "prep_semantic_decontam" -> Query(semanticDecontam, Some(
       s"""WITH t AS (SELECT vec_id AS train_id, embedding::DOUBLE[] AS tv
          |  FROM embeddings WHERE vec_id % 20 <> 0),
          |e AS (SELECT vec_id AS eval_id, embedding::DOUBLE[] AS ev
@@ -1122,8 +1083,8 @@ object PrepQueries {
          |    count(*) OVER (PARTITION BY train_id) AS n_matches
          |  FROM f)
          |SELECT train_id, eval_id, cos AS max_cos, n_matches
-         |FROM r WHERE rn = 1 ORDER BY train_id""".stripMargin,
-    "prep_stratified_sample" ->
+         |FROM r WHERE rn = 1 ORDER BY train_id""".stripMargin)),
+    "prep_stratified_sample" -> Query(stratifiedSample, Some(
       s"""WITH r AS (SELECT o_orderkey, o_orderstatus,
          |  row_number() OVER (PARTITION BY o_orderstatus
          |    ORDER BY md5(o_orderkey::VARCHAR), o_orderkey) AS rn,
@@ -1132,8 +1093,8 @@ object PrepQueries {
          |SELECT o_orderstatus, count(*) AS n_kept,
          |  CAST(sum(o_orderkey) AS BIGINT) AS key_checksum
          |FROM r WHERE rn <= ceil(n * $StratFraction)
-         |GROUP BY 1 ORDER BY o_orderstatus""".stripMargin,
-    "prep_histogram_price" ->
+         |GROUP BY 1 ORDER BY o_orderstatus""".stripMargin)),
+    "prep_histogram_price" -> Query(histogramPrice, Some(
       s"""WITH x AS (SELECT CAST(l_extendedprice AS DECIMAL(18,2)) AS xd
          |           FROM lineitem),
          |s AS (SELECT min(xd) AS mn, max(xd) AS mx FROM x),
@@ -1148,8 +1109,8 @@ object PrepQueries {
          |  round(CAST(mn AS DOUBLE)
          |    + (bin + 1) * CAST(mx - mn AS DOUBLE) / $HistBins, 6) AS bin_hi,
          |  count(*) AS n, CAST(sum(xd) AS DOUBLE) AS total
-         |FROM b GROUP BY bin, mn, mx ORDER BY bin""".stripMargin,
-    "prep_chunk_text" ->
+         |FROM b GROUP BY bin, mn, mx ORDER BY bin""".stripMargin)),
+    "prep_chunk_text" -> Query(chunkText, Some(
       s"""WITH d AS (SELECT doc_id,
          |  list_filter(string_split(text, ' '), t -> t <> '') AS toks
          |  FROM documents),
@@ -1161,8 +1122,8 @@ object PrepQueries {
          |  CAST(s AS BIGINT) AS start_offset,
          |  CAST(len(ch) AS BIGINT) AS n_chunk_tokens,
          |  array_to_string(ch, ' ') AS chunk_text
-         |FROM c ORDER BY doc_id, chunk_idx""".stripMargin,
-    "prep_redact_pii" -> {
+         |FROM c ORDER BY doc_id, chunk_idx""".stripMargin)),
+    "prep_redact_pii" -> Query(redactPii, Some({
       val Seq(email, phone, ip) = Prep.PiiPatterns.map(_._2)
       s"""WITH p AS (SELECT doc_id,
          |  substr(text, 1, 40) || ' contact user' || doc_id
@@ -1180,8 +1141,8 @@ object PrepQueries {
          |  len(regexp_extract_all(text, '$phone'))::BIGINT AS n_phones,
          |  len(regexp_extract_all(text, '$ip'))::BIGINT AS n_ips
          |FROM p ORDER BY doc_id""".stripMargin
-    },
-    "prep_sessionize" ->
+    })),
+    "prep_sessionize" -> Query(sessionizeEvents, Some(
       s"""WITH l AS (SELECT user_id, event_id, ts,
          |  lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
          |  FROM events WHERE user_id < 20),
@@ -1198,18 +1159,18 @@ object PrepQueries {
          |SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
          |  count(*) AS n_events, min(epoch_us(ts)) AS start_us,
          |  max(epoch_us(ts)) AS end_us
-         |FROM x GROUP BY 1, 2 ORDER BY user_id, session_idx""".stripMargin,
+         |FROM x GROUP BY 1, 2 ORDER BY user_id, session_idx""".stripMargin)),
     // u = (first 48 md5 bits + 1) / 2^48 — exact in double on both engines;
     // priority = weight / u is one correctly-rounded IEEE division, so the
     // top-k SET matches bit-for-bit (round applied after the ordering)
-    "prep_priority_sample" ->
+    "prep_priority_sample" -> Query(prioritySampleOrders, Some(
       s"""WITH p AS (SELECT o_orderkey, o_totalprice,
          |  o_totalprice / ((('0x' || substr(md5(o_orderkey::VARCHAR), 1, 12))::BIGINT + 1)
          |                  / 281474976710656.0) AS pri
          |  FROM orders
          |  ORDER BY pri DESC, o_orderkey LIMIT $PriorityK)
          |SELECT o_orderkey, o_totalprice, round(pri, 4) AS priority
-         |FROM p ORDER BY o_orderkey""".stripMargin)
+         |FROM p ORDER BY o_orderkey""".stripMargin)))
 
   // 3-gram hashes per non-eval doc vs the distinct eval (src0) gram set —
   // mirrors Decontamination.overlapStats' graft_ngram_hashes construction

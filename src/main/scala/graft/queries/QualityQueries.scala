@@ -703,8 +703,9 @@ object QualityQueries {
     embedTextDriftFrom(Tables.documents(spark, dir),
       Tables.embeddings(spark, dir))
 
-  /** [[embedTextDrift]] over explicit relations — the ProbeRound16 /
-    * spec seam, mirroring [[textEmbedDriftFrom]].
+  /** [[embedTextDrift]] over explicit relations — the spec and
+    * round-16 scale-measurement (SURVEY §6.1) seam, mirroring
+    * [[textEmbedDriftFrom]].
     */
   private[graft] def embedTextDriftFrom(docs: DataFrame,
       emb: DataFrame): DataFrame = {
@@ -731,51 +732,10 @@ object QualityQueries {
       .orderBy("id_a", "id_b")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "quality_embed_text_drift" -> embedTextDrift,
-    "quality_text_embed_drift" -> textEmbedDrift,
-    "quality_dp_release" -> dpRelease,
-    "quality_k_anonymity" -> kAnonymityQ,
-    "quality_dataset_card" -> datasetCard,
-    "quality_fk_orphans" -> fkOrphans,
-    "quality_weighted_median" -> weightedMedianPrice,
-    "quality_profile_drift" -> profileDrift,
-    "quality_join_size" -> joinSize,
-    "quality_entropy_profile" -> entropyProfile,
-    "quality_corr_matrix" -> corrMatrix,
-    "quality_table_profile" -> tableProfile,
-    "quality_feature_relevance" -> featureRelevance,
-    "quality_ks_value" -> ksValue,
-    "quality_mannwhitney" -> mannWhitney,
-    "quality_welch_ttest" -> welch,
-    "quality_assoc_strength" -> assocStrength,
-    "quality_hbos_topk" -> hbosTopK,
-    "quality_label_kappa" -> labelKappa,
-    "quality_benford" -> benford,
-    "quality_bootstrap_ci" -> bootstrapCi,
-    "quality_drift_w1" -> splitW1,
-    "quality_drift_tv" -> splitTv,
-    "quality_drift_hellinger" -> splitHellinger,
-    "quality_perm_bh" -> permBh,
-    "quality_serving_skew" -> servingSkew,
-    "quality_did" -> didValue,
-    "quality_cuped" -> cupedValue,
-    "quality_eb_rates" -> ebReturnRates,
-    "quality_cov_balance" -> covBalance,
-    "quality_mad_outliers" -> madOutliers,
-    "quality_otsu_threshold" -> otsuThreshold,
-    "quality_split_drift" -> splitDrift,
-    "quality_skew_report" -> skewReport,
-    "quality_null_dup_ratio" -> nullDupRatio,
-    "quality_outlier_iqr" -> outlierIqr,
-    "quality_quantiles_lineitem" -> quantilesLineitem,
-    "quality_drift_psi" -> driftPsi,
-    "quality_dup_ratio_documents" -> dupRatioDocuments)
-
-  val oracle: Map[String, String] = Map(
+  val registry: Map[String, Query] = Map(
     // the sim_lsh_neardup_pairs edge CTE + exact token-set Jaccard per
     // candidate; tokenless docs coalesce to Jaccard 0 (maximally far)
-    "quality_embed_text_drift" ->
+    "quality_embed_text_drift" -> Query(embedTextDrift, Some(
       s"""WITH ${SimilarityQueries.nearDupEdgesCte},
          |tok AS (
          |  SELECT DISTINCT doc_id AS id, t AS token
@@ -803,11 +763,11 @@ object QualityQueries {
          |  CASE WHEN den > 0 THEN nc * 1.0 / den ELSE 0.0 END AS jaccard,
          |  (CASE WHEN den > 0 THEN nc * 1.0 / den ELSE 0.0 END)
          |    < $TextFarJaccard AS is_drift
-         |FROM jp ORDER BY id_a, id_b""".stripMargin,
+         |FROM jp ORDER BY id_a, id_b""".stripMargin)),
     // the dedup_minhash_lsh candidate/verify chain (shared CTE pieces)
     // at the 0.7 gate, then the exact per-pair cosine on the embeddings
     // join — jaccard is the unrounded int ratio, cosine the 6-dp round
-    "quality_text_embed_drift" ->
+    "quality_text_embed_drift" -> Query(textEmbedDrift, Some(
       s"""WITH ${DedupQueries.tokCte},
          |${DedupQueries.thCte},
          |${DedupQueries.hshCte},
@@ -844,11 +804,11 @@ object QualityQueries {
          |FROM jp
          |LEFT JOIN embeddings ea ON ea.vec_id = jp.id_a
          |LEFT JOIN embeddings eb ON eb.vec_id = jp.id_b
-         |ORDER BY jp.id_a, jp.id_b""".stripMargin,
+         |ORDER BY jp.id_a, jp.id_b""".stripMargin)),
     // exact-integer histogram + prefix sums; the objective's BIGINT
     // products stay below 2^53 so the double casts are exact and the
     // argmax is engine-identical; ties break to the smaller bin
-    "quality_otsu_threshold" ->
+    "quality_otsu_threshold" -> Query(otsuThreshold, Some(
       s"""WITH base AS (SELECT (CAST(value AS DECIMAL(18,2)) * 100)::BIGINT
          |    AS v FROM events WHERE value IS NOT NULL),
          |mm AS (SELECT min(v) AS mn, max(v) AS mx,
@@ -873,11 +833,11 @@ object QualityQueries {
          |  CAST(t.edge AS DOUBLE) / 100.0 AS threshold_value,
          |  t.w0 AS n_below, t.n - t.w0 AS n_above,
          |  round(t.obj, 6) AS between_var_num
-         |FROM best""".stripMargin,
+         |FROM best""".stripMargin)),
     // seeded Laplace replay: u from 52 md5 bits is an exact binary
     // rational (power-of-two scaling only), one ln on it, /0.5 is ×2 —
     // the 9-dp rounds land on irrational values, engine-safe
-    "quality_dp_release" ->
+    "quality_dp_release" -> Query(dpRelease, Some(
       s"""WITH g AS (SELECT c_nationkey, count(*) AS true_count
          |           FROM customer GROUP BY 1),
          |n AS (SELECT c_nationkey, true_count,
@@ -891,9 +851,9 @@ object QualityQueries {
          |  FROM n)
          |SELECT c_nationkey, true_count, noise,
          |  round(CAST(true_count AS DOUBLE) + noise, 9) AS noisy_count
-         |FROM x ORDER BY c_nationkey""".stripMargin,
+         |FROM x ORDER BY c_nationkey""".stripMargin)),
     // one group-by: class sizes, distinct sensitive bands, flags
-    "quality_k_anonymity" ->
+    "quality_k_anonymity" -> Query(kAnonymityQ, Some(
       s"""SELECT c_nationkey, c_mktsegment,
          |  count(*) AS class_size,
          |  count(DISTINCT floor(c_acctbal / 1000.0)) AS l_diversity,
@@ -901,10 +861,10 @@ object QualityQueries {
          |  count(DISTINCT floor(c_acctbal / 1000.0)) < $KAnonL
          |    AS violates_l
          |FROM customer GROUP BY 1, 2
-         |ORDER BY c_nationkey, c_mktsegment""".stripMargin,
+         |ORDER BY c_nationkey, c_mktsegment""".stripMargin)),
     // counts and count ratios, integer until one division each; language
     // shares key as lang_share:<code>
-    "quality_dataset_card" ->
+    "quality_dataset_card" -> Query(datasetCard, Some(
       """WITH d AS (SELECT doc_id, lang, text,
         |    list_filter(string_split(text, ' '), x -> x <> '') AS toks
         |  FROM documents),
@@ -931,9 +891,9 @@ object QualityQueries {
         |  SELECT 'lang_share:' || CAST(lang AS VARCHAR),
         |    round(CAST(count(*) AS DOUBLE) / max(b.n), 6)
         |  FROM d, b GROUP BY lang)
-        |SELECT metric, value FROM s ORDER BY metric""".stripMargin,
+        |SELECT metric, value FROM s ORDER BY metric""".stripMargin)),
     // NULL child keys count as orphan rows, never as keys
-    "quality_fk_orphans" -> {
+    "quality_fk_orphans" -> Query(fkOrphans, Some({
       def edgeSql(edge: String, childTbl: String, ck: String,
           parentSql: String, pk: String) =
         s"""SELECT '$edge' AS edge, count(*) AS n_rows,
@@ -955,10 +915,10 @@ object QualityQueries {
           "SELECT c_custkey FROM customer WHERE c_custkey % 5 <> 0",
           "c_custkey") +
         "\nORDER BY edge"
-    },
+    })),
     // lower weighted median: min value with 2·cumweight ≥ total, all
     // integer arithmetic over the distinct-value grid
-    "quality_weighted_median" ->
+    "quality_weighted_median" -> Query(weightedMedianPrice, Some(
       """WITH g AS (SELECT l_returnflag,
         |    CAST(l_extendedprice AS DECIMAL(18,2)) AS v,
         |    CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS w
@@ -971,11 +931,11 @@ object QualityQueries {
         |SELECT l_returnflag, CAST(tw AS BIGINT) AS total_weight,
         |  CAST(min(v) AS DOUBLE) AS w_median
         |FROM c WHERE cw * 2 >= tw
-        |GROUP BY l_returnflag, tw ORDER BY l_returnflag""".stripMargin,
+        |GROUP BY l_returnflag, tw ORDER BY l_returnflag""".stripMargin)),
     // first digit from INTEGER-cents string formatting (never
     // floor(log10)); expected shares are the library's 9-dp DECIMAL
     // literals; χ² = DECIMAL diff → one fixed IEEE sequence
-    "quality_benford" -> {
+    "quality_benford" -> Query(benford, Some({
       val arms = (1 to 9).map { d =>
         val p = graft.quality.DataQualityValidator.benfordShare(d)
         s"WHEN $d THEN CAST($p AS DECIMAL(10,9))"
@@ -998,9 +958,9 @@ object QualityQueries {
          |  round(CAST(diff AS DOUBLE) * CAST(diff AS DOUBLE)
          |    / CAST(exp_n AS DOUBLE), 9) AS chi2
          |FROM x ORDER BY digit""".stripMargin
-    },
+    })),
     // Σ ca·cb over shared keys ≡ |A ⋈ B| without executing the join
-    "quality_join_size" ->
+    "quality_join_size" -> Query(joinSize, Some(
       """WITH la AS (SELECT o_orderkey AS k, count(*) AS ca FROM orders
         |            GROUP BY 1),
         |ra AS (SELECT l_orderkey AS k, count(*) AS cb FROM lineitem
@@ -1015,10 +975,10 @@ object QualityQueries {
         |    count(*) AS n_keys_right FROM ra)
         |SELECT n_left, n_right, n_keys_left, n_keys_right, n_keys_both,
         |  join_rows, max_key_rows
-        |FROM lt CROSS JOIN rt CROSS JOIN j ORDER BY n_left""".stripMargin,
+        |FROM lt CROSS JOIN rt CROSS JOIN j ORDER BY n_left""".stripMargin)),
     // entropy contributions −(c/n)·log2(c/n) rounded 9dp + DECIMAL-summed;
     // gini integer until one division; values hashed as strings
-    "quality_entropy_profile" -> {
+    "quality_entropy_profile" -> Query(entropyProfile, Some({
       val branches = EntropyCols.map { c =>
         s"""SELECT '$c' AS col_name, CAST($c AS VARCHAR) AS v
            |FROM lineitem WHERE $c IS NOT NULL""".stripMargin
@@ -1035,10 +995,10 @@ object QualityQueries {
          |  round(CAST(max(n) * max(n) - sum(c * c) AS DOUBLE)
          |    / (max(n) * max(n)), 9) AS gini
          |FROM t GROUP BY col_name ORDER BY col_name""".stripMargin
-    },
+    })),
     // same wide-aggregate + fixed IEEE sequence as pearsonMatrix: exact
     // DECIMAL sums, (n·Σxy − ΣxΣy)/(√dx·√dy) over doubles cast from them
-    "quality_corr_matrix" -> {
+    "quality_corr_matrix" -> Query(corrMatrix, Some({
       val cols = ProfileCols
       val pairs = for {
         i <- cols.indices; j <- (i + 1) until cols.size
@@ -1069,13 +1029,13 @@ object QualityQueries {
          |w AS (SELECT count(*) AS n, ${sums.mkString(", ")} FROM c)
          |${branches.mkString("\n", "\nUNION ALL\n", "\n")}
          |ORDER BY col_a, col_b""".stripMargin
-    },
+    })),
     // one UNION ALL branch per profiled column; means through exact
     // DECIMAL (the avgMoney spelling)
     // each side re-derives the same exact-profile statistics the
     // quality_table_profile oracle uses; deltas are the identical
     // fixed-sequence subtractions rounded 9 dp
-    "quality_profile_drift" -> {
+    "quality_profile_drift" -> Query(profileDrift, Some({
       def sideSql(c: String, rel: String) =
         s"""(SELECT count(*) AS n, count($c) AS np,
            |  count(DISTINCT $c) AS nd,
@@ -1110,8 +1070,8 @@ object QualityQueries {
          |b AS (SELECT d.* FROM d, m WHERE day >= mid)
          |$branches
          |ORDER BY col_name""".stripMargin
-    },
-    "quality_table_profile" -> {
+    })),
+    "quality_table_profile" -> Query(tableProfile, Some({
       val branches = ProfileCols.map { c =>
         s"""SELECT '$c' AS col_name, n_rows,
            |  n_rows - count($c) AS n_nulls,
@@ -1125,10 +1085,10 @@ object QualityQueries {
       s"""WITH t AS (SELECT count(*) AS n_rows FROM lineitem)
          |$branches
          |ORDER BY col_name""".stripMargin
-    },
+    })),
     // e = ra·cb/n appears verbatim (the same IEEE op sequence as the Spark
     // expression); contributions round to 9 dp and sum in exact DECIMAL
-    "quality_feature_relevance" -> {
+    "quality_feature_relevance" -> Query(featureRelevance, Some({
       val e = "CAST(ra * cb AS DOUBLE) / n"
       s"""WITH base AS (SELECT event_type, value,
          |    CAST(value AS DECIMAL(18,2)) AS xd
@@ -1156,12 +1116,12 @@ object QualityQueries {
          |      * ln(CAST(o * n AS DOUBLE) / (ra * cb)), 9)
          |    AS DECIMAL(28,9))) AS DOUBLE) AS mi_nats
          |FROM m, d GROUP BY n, n_a, n_b ORDER BY n""".stripMargin
-    },
+    })),
     // D stays the integer cross-multiply max|cumA·nB − cumB·nA| until the
     // one final division
     // membership = the shared md5 idiom on (id, resample); means are exact
     // DECIMAL sums + one division; CI = discrete permille grid quantiles
-    "quality_bootstrap_ci" ->
+    "quality_bootstrap_ci" -> Query(bootstrapCi, Some(
       s"""WITH base AS (SELECT CAST(event_id AS VARCHAR) AS id,
          |    CAST(value AS DECIMAL(18,2)) AS v
          |  FROM events WHERE event_type = 'purchase' AND value IS NOT NULL),
@@ -1183,10 +1143,10 @@ object QualityQueries {
          |      AS ci_lo,
          |    min(CASE WHEN cum * 1000 >= nb * $BootHiPermille THEN m END)
          |      AS ci_hi FROM cc)
-         |SELECT n, mean, n_resamples, ci_lo, ci_hi FROM fl, ci""".stripMargin,
+         |SELECT n, mean, n_resamples, ci_lo, ci_hi FROM fl, ci""".stripMargin)),
     // per-category integer cross-products; tv = window-summed integers,
     // one division per displayed ratio
-    "quality_drift_tv" ->
+    "quality_drift_tv" -> Query(splitTv, Some(
       s"""WITH m AS (SELECT max(epoch_us(ts)) AS mx FROM events),
          |s AS (SELECT event_type AS category,
          |    CASE WHEN epoch_us(ts) > mx - $SplitTestUs THEN 'test'
@@ -1209,10 +1169,10 @@ object QualityQueries {
          |  round(CAST(cb AS DOUBLE) / nb, 9) AS p_b,
          |  round(CAST(dn AS DOUBLE) / (na * nb), 9) AS abs_diff,
          |  round(CAST(sum(dn) OVER () AS DOUBLE) / (na * nb * 2), 9) AS tv
-         |FROM d ORDER BY category""".stripMargin,
+         |FROM d ORDER BY category""".stripMargin)),
     // exact integer moments per (covariate, arm); SMD rides its sqrt to
     // the 9-dp round; arm via the hashBucket hex-parse mirror
-    "quality_cov_balance" ->
+    "quality_cov_balance" -> Query(covBalance, Some(
       """WITH pu AS (SELECT CAST(user_id AS VARCHAR) AS uu,
         |    CAST(coalesce(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100
         |      AS BIGINT)), 0) AS BIGINT) AS spend_cents,
@@ -1255,10 +1215,10 @@ object QualityQueries {
         |  CASE WHEN n0 >= 2 AND n1 >= 2 AND pooled > 0 THEN
         |    abs(round((mean1 - mean0) / sqrt(pooled), 9)) < 0.1
         |  END AS balanced_0p1
-        |FROM f ORDER BY covariate""".stripMargin,
+        |FROM f ORDER BY covariate""".stripMargin)),
     // truncating nano rates, exact DECIMAL prior moments, fixed-sequence
     // alpha/beta and posterior means, all unrounded
-    "quality_eb_rates" ->
+    "quality_eb_rates" -> Query(ebReturnRates, Some(
       """WITH k AS (SELECT l_suppkey, count(*) AS n,
         |    CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
         |      AS BIGINT) AS x
@@ -1285,10 +1245,10 @@ object QualityQueries {
         |  alpha, beta,
         |  (CAST(x AS DOUBLE) + alpha) /
         |    (CAST(n AS DOUBLE) + alpha + beta) AS smoothed_rate
-        |FROM kp, ab ORDER BY l_suppkey""".stripMargin,
+        |FROM kp, ab ORDER BY l_suppkey""".stripMargin)),
     // n-scaled exact moments (theta/corr-squared from DECIMAL integers);
     // arm via the hashBucket hex-parse mirror; everything unrounded
-    "quality_cuped" ->
+    "quality_cuped" -> Query(cupedValue, Some(
       s"""WITH mx AS (SELECT max(epoch_us(ts)) AS mx FROM events),
          |u AS (SELECT CAST(user_id AS VARCHAR) AS uu,
          |    CAST(coalesce(sum(CASE WHEN epoch_us(ts) <= mx - $SplitTestUs
@@ -1352,10 +1312,10 @@ object QualityQueries {
          |    CAST(a AS DOUBLE) * CAST(a AS DOUBLE) /
          |      (CAST(b AS DOUBLE) * CAST(c AS DOUBLE))
          |  END AS var_reduction
-         |FROM f""".stripMargin,
+         |FROM f""".stripMargin)),
     // 4 exact cent cells, one division per mean, DiD = fixed IEEE
     // sequence emitted unrounded; arm = the hashBucket md5 mirror
-    "quality_did" ->
+    "quality_did" -> Query(didValue, Some(
       s"""WITH mx AS (SELECT max(epoch_us(ts)) AS mx FROM events),
          |c AS (SELECT
          |    ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 12))
@@ -1393,11 +1353,11 @@ object QualityQueries {
          |     - (CAST(s01 AS DOUBLE) / CAST(n01 AS DOUBLE)
          |      - CAST(s00 AS DOUBLE) / CAST(n00 AS DOUBLE))) / 100.0
          |  END AS did
-         |FROM o""".stripMargin,
+         |FROM o""".stripMargin)),
     // online serve path (latest-click window, total view count) vs the
     // offline ASOF training-matrix fold at global now — independent
     // constructions, null-safe compares
-    "quality_serving_skew" ->
+    "quality_serving_skew" -> Query(servingSkew, Some(
       """WITH u AS (SELECT DISTINCT user_id FROM events
         |  WHERE ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 12))
         |    ::BIGINT % 4 = 0),
@@ -1434,13 +1394,13 @@ object QualityQueries {
         |    off.offline_views) AS views_match
         |FROM u LEFT JOIN onc USING (user_id) LEFT JOIN onv USING (user_id)
         |JOIN off USING (user_id)
-        |ORDER BY user_id""".stripMargin,
+        |ORDER BY user_id""".stripMargin)),
     // all-integer randomization test: resample bits read from TWO
     // per-row md5 digests (bit (r-1)%128 of digest (r-1)//128 — hash
     // once per row, not per row×resample); HUGEINT cross-product
     // comparisons; shared p denominator B+1 makes BH the integer
     // condition k·m·20 <= rank·(B+1)
-    "quality_perm_bh" -> {
+    "quality_perm_bh" -> Query(permBh, Some({
       val b = PermResamples
       s"""WITH mx AS (SELECT max(epoch_us(ts)) AS mx FROM events),
          |s AS (SELECT event_type AS cat, CAST(event_id AS VARCHAR) AS id,
@@ -1509,11 +1469,11 @@ object QualityQueries {
          |  CAST(bh_rank AS BIGINT) AS bh_rank,
          |  coalesce(bh_rank <= istar, FALSE) AS rejected
          |FROM rk, st ORDER BY category""".stripMargin
-    },
+    })),
     // √(ca·cb/(na·nb)) can be a RATIONAL perfect square, so contributions
     // quantize by TRUNCATION (floor(√·10⁹) — exact function of the shared
     // double), never a 9-dp round; bc/hellinger emit unrounded
-    "quality_drift_hellinger" ->
+    "quality_drift_hellinger" -> Query(splitHellinger, Some(
       s"""WITH m AS (SELECT max(epoch_us(ts)) AS mx FROM events),
          |s AS (SELECT event_type AS category,
          |    CASE WHEN epoch_us(ts) > mx - $SplitTestUs THEN 'test'
@@ -1539,10 +1499,10 @@ object QualityQueries {
          |  CAST(bcn AS DOUBLE) / 1000000000.0 AS bc,
          |  sqrt(greatest(1.0 - CAST(bcn AS DOUBLE) / 1000000000.0, 0.0))
          |    AS hellinger
-         |FROM a ORDER BY n_a""".stripMargin,
+         |FROM a ORDER BY n_a""".stripMargin)),
     // the KS grid + integer cross-products; contributions are exact
     // DECIMAL (|cum_a·n_b − cum_b·n_a| · grid gap); ONE division at the end
-    "quality_drift_w1" ->
+    "quality_drift_w1" -> Query(splitW1, Some(
       s"""WITH m AS (SELECT max(epoch_us(ts)) AS mx FROM events),
          |s AS (SELECT CAST(value AS DECIMAL(18,2)) AS v,
          |    CASE WHEN epoch_us(ts) > mx - $SplitTestUs THEN 'test'
@@ -1567,8 +1527,8 @@ object QualityQueries {
          |  FROM c)
          |SELECT na AS n_a, nb AS n_b,
          |  round(CAST(sum(c) AS DOUBLE) / (na * nb), 9) AS w1
-         |FROM x GROUP BY na, nb ORDER BY n_a""".stripMargin,
-    "quality_ks_value" ->
+         |FROM x GROUP BY na, nb ORDER BY n_a""".stripMargin)),
+    "quality_ks_value" -> Query(ksValue, Some(
       """WITH perv AS (SELECT CAST(value AS DECIMAL(18,2)) AS v,
         |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS ca,
         |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS cb
@@ -1584,10 +1544,10 @@ object QualityQueries {
         |  CAST(max(abs(cuma * nb - cumb * na)) AS BIGINT) AS d_num,
         |  round(CAST(max(abs(cuma * nb - cumb * na)) AS DOUBLE) / (na * nb), 9)
         |    AS d
-        |FROM c GROUP BY na, nb ORDER BY n_a""".stripMargin,
+        |FROM c GROUP BY na, nb ORDER BY n_a""".stripMargin)),
     // doubled-rank integers (2R_a = Σ ca·(2C+t+1)) + tie term in HUGEINT;
     // z spends one sqrt on exact integer ratios → 9-dp round engine-safe
-    "quality_mannwhitney" ->
+    "quality_mannwhitney" -> Query(mannWhitney, Some(
       """WITH perv AS (SELECT CAST(value AS DECIMAL(18,2)) AS v,
         |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS ca,
         |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS cb
@@ -1628,11 +1588,11 @@ object QualityQueries {
         |  CAST(ties AS DOUBLE) AS tie_term, z,
         |  CASE WHEN z IS NOT NULL THEN abs(z) > 1.959963985
         |  END AS significant_5pct
-        |FROM f ORDER BY n_a""".stripMargin,
+        |FROM f ORDER BY n_a""".stripMargin)),
     // the layout-proven exact-DECIMAL binning per feature; each −ln(c/n)
     // rides its ln to a 9-dp round; per-row sum is the same fixed-order
     // left-assoc double chain as the Spark plan
-    "quality_hbos_topk" -> {
+    "quality_hbos_topk" -> Query(hbosTopK, Some({
       val bins = 16
       def bin(d: String, mn: String, mx: String) =
         s"""CASE WHEN CAST($mx - $mn AS DOUBLE) > 0
@@ -1663,12 +1623,12 @@ object QualityQueries {
          |FROM b JOIN h0 USING (b0) JOIN h1 USING (b1) JOIN h2 USING (b2)
          |ORDER BY hbos DESC, l_orderkey, l_linenumber
          |LIMIT 100""".stripMargin
-    },
+    })),
     // full-table chi2 from observed cells via Σ o²n/(ra·cb) − n (zero
     // cells enter through the −n identity); V rides its sqrt to a 9-dp
     // round; U = MI/H(A) emitted UNROUNDED (rational ratio of two exact
     // decimals — the Welch-dof argument)
-    "quality_assoc_strength" -> {
+    "quality_assoc_strength" -> Query(assocStrength, Some({
       s"""WITH cont AS (SELECT lang AS a, source AS b, count(*) AS o
          |  FROM documents GROUP BY 1, 2),
          |m AS (SELECT a, b, o,
@@ -1696,11 +1656,11 @@ object QualityQueries {
          |  END AS cramers_v,
          |  CASE WHEN h_a > 0 THEN mi_nats / h_a END AS theils_u
          |FROM s, hh ORDER BY n""".stripMargin
-    },
+    })),
     // cent-unit exact (n, Σx, Σx²) per group; t = fixed IEEE sequence on
     // exact integers, 9-dp round rides the sqrt; dof emitted UNROUNDED
     // (rational — a 9-dp round could land on a half-ulp tie)
-    "quality_welch_ttest" ->
+    "quality_welch_ttest" -> Query(welch, Some(
       """WITH x AS (SELECT
         |    CASE WHEN event_type = 'purchase' THEN 0 ELSE 1 END AS g,
         |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
@@ -1742,10 +1702,10 @@ object QualityQueries {
         |  t, dof,
         |  CASE WHEN t IS NOT NULL THEN abs(t) > 1.959963985 END
         |    AS significant_5pct_normal
-        |FROM f ORDER BY n_a""".stripMargin,
+        |FROM f ORDER BY n_a""".stripMargin)),
     // κ as the all-integer (agree·n − Σ ra·cb)/(n² − Σ ra·cb): one IEEE
     // division total; prediction CTEs shared with text_lang_id
-    "quality_label_kappa" ->
+    "quality_label_kappa" -> Query(labelKappa, Some(
       s"""WITH ${TextQueries.toksCte},
          |p AS (SELECT doc_id, lang, ${TextQueries.maxScoreSql} AS __m, toks
          |  FROM d),
@@ -1761,11 +1721,11 @@ object QualityQueries {
          |SELECT n, agree, pe_num,
          |  round(CAST(agree * n - pe_num AS DOUBLE) / (n * n - pe_num), 9)
          |    AS kappa
-         |FROM c, pe ORDER BY n""".stripMargin,
+         |FROM c, pe ORDER BY n""".stripMargin)),
     // median/MAD in 6dp DECIMAL, |x − med| exact (2dp values), threshold
     // mad · 4.4478 as an exact DECIMAL product — the outlier comparison
     // can never flip on a last-ulp double
-    "quality_mad_outliers" ->
+    "quality_mad_outliers" -> Query(madOutliers, Some(
       """WITH m AS (SELECT event_type,
         |  CAST(round(quantile_cont(value, 0.5), 6) AS DECIMAL(18,6)) AS med
         |  FROM events GROUP BY 1),
@@ -1783,17 +1743,17 @@ object QualityQueries {
         |  CAST(sum(CASE WHEN d.adev > md.mad * 4.4478 THEN 1 ELSE 0 END)
         |       AS BIGINT) AS n_outliers
         |FROM d JOIN md USING (event_type)
-        |GROUP BY 1 ORDER BY event_type""".stripMargin,
+        |GROUP BY 1 ORDER BY event_type""".stripMargin)),
     // skew factor = max/mean = max·keys/total — one IEEE multiply+divide on
     // exact integers, identical on both engines
-    "quality_skew_report" ->
+    "quality_skew_report" -> Query(skewReport, Some(
       s"""WITH c AS (SELECT user_id, count(*) AS n FROM events GROUP BY 1),
          |g AS (SELECT sum(n) AS total, count(*) AS keys, max(n) AS mx FROM c)
          |SELECT user_id, n,
          |  round(n * 1.0 / total, 6) AS share,
          |  round(mx * 1.0 * keys / total, 6) AS skew_factor
-         |FROM c, g ORDER BY n DESC, user_id LIMIT $SkewTopK""".stripMargin,
-    "quality_null_dup_ratio" ->
+         |FROM c, g ORDER BY n DESC, user_id LIMIT $SkewTopK""".stripMargin)),
+    "quality_null_dup_ratio" -> Query(nullDupRatio, Some(
       """SELECT c.n_rows, c.null_cells,
         |  c.null_cells * 1.0 / (c.n_rows * 6) AS null_ratio,
         |  c.n_rows - d.n_distinct AS dup_rows,
@@ -1809,8 +1769,8 @@ object QualityQueries {
         |   FROM events) c,
         |  (SELECT count(*) AS n_distinct FROM
         |     (SELECT DISTINCT event_id, user_id, event_type, value, props,
-        |        epoch_us(ts) FROM events)) d""".stripMargin,
-    "quality_outlier_iqr" ->
+        |        epoch_us(ts) FROM events)) d""".stripMargin)),
+    "quality_outlier_iqr" -> Query(outlierIqr, Some(
       """WITH q AS (SELECT quantile_cont(value, 0.25) AS q1,
         |                  quantile_cont(value, 0.75) AS q3 FROM events)
         |SELECT round(q.q1, 6) AS q1, round(q.q3, 6) AS q3,
@@ -1818,8 +1778,8 @@ object QualityQueries {
         |                  OR e.value > q.q3 + (q.q3 - q.q1) * 1.5
         |           THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
         |  count(e.value) AS n_values
-        |FROM events e, q GROUP BY q.q1, q.q3""".stripMargin,
-    "quality_quantiles_lineitem" ->
+        |FROM events e, q GROUP BY q.q1, q.q3""".stripMargin)),
+    "quality_quantiles_lineitem" -> Query(quantilesLineitem, Some(
       """SELECT
         |  round(quantile_cont(l_quantity, 0.25), 6) AS qty_q1,
         |  round(quantile_cont(l_quantity, 0.5), 6) AS qty_q2,
@@ -1827,20 +1787,20 @@ object QualityQueries {
         |  round(quantile_cont(l_extendedprice, 0.25), 6) AS price_q1,
         |  round(quantile_cont(l_extendedprice, 0.5), 6) AS price_q2,
         |  round(quantile_cont(l_extendedprice, 0.75), 6) AS price_q3
-        |FROM lineitem""".stripMargin,
-    "quality_drift_psi" -> psiOracle(
+        |FROM lineitem""".stripMargin)),
+    "quality_drift_psi" -> Query(driftPsi, Some(psiOracle(
       "SELECT value FROM events WHERE event_id % 2 = 0",
-      "SELECT value FROM events WHERE event_id % 2 = 1"),
+      "SELECT value FROM events WHERE event_id % 2 = 1"))),
     // train = before the embargo'd horizon, test = the trailing horizon —
     // the identical cutoffs EventOps.timeSplitEmbargo computes
-    "quality_split_drift" -> psiOracle(
+    "quality_split_drift" -> Query(splitDrift, Some(psiOracle(
       s"""SELECT value FROM events, (SELECT max(epoch_us(ts)) AS mx FROM events)
          |      WHERE epoch_us(ts) <= mx - ${SplitTestUs + SplitEmbargoUs}""".stripMargin,
       s"""SELECT value FROM events, (SELECT max(epoch_us(ts)) AS mx FROM events)
-         |      WHERE epoch_us(ts) > mx - $SplitTestUs""".stripMargin),
-    "quality_dup_ratio_documents" ->
+         |      WHERE epoch_us(ts) > mx - $SplitTestUs""".stripMargin))),
+    "quality_dup_ratio_documents" -> Query(dupRatioDocuments, Some(
       """SELECT count(*) AS n_docs,
         |  count(DISTINCT text) AS n_distinct_texts,
         |  (count(*) - count(DISTINCT text)) * 1.0 / count(*) AS dup_ratio
-        |FROM documents""".stripMargin)
+        |FROM documents""".stripMargin)))
 }

@@ -349,56 +349,29 @@ object RelationalQueries {
       countDistinct(col("user_id")).as("n_users"),
       countDistinct(col("user_id"), col("event_type")).as("n_user_type_pairs"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "filter_project" -> filterProject,
-    "filter_in_users" -> filterInUsers,
-    "point_lookup" -> pointLookup,
-    "semi_join_purchasers" -> semiJoinPurchasers,
-    "anti_join_inactive" -> antiJoinInactive,
-    "asof_latest_click" -> asofLatestClick,
-    "asof_native_latest_click" -> asofNativeLatestClick,
-    "asof_forward_next_click" -> asofForwardNextClick,
-    "join_nation_revenue" -> joinNationRevenue,
-    "window_latest_event" -> windowLatestEvent,
-    "window_topn_per_user" -> windowTopNPerUser,
-    "window_running_total" -> windowRunningTotal,
-    "topk_orders" -> topkOrders,
-    "set_except_non_purchasers" -> setExceptNonPurchasers,
-    "set_union_click_error" -> setUnionClickError,
-    "set_intersect_click_error" -> setIntersectClickError,
-    "time_buckets" -> timeBuckets,
-    "json_extract_props" -> jsonExtractProps,
-    "fingerprint_digest" -> fingerprintDigest,
-    "rollup_type_day" -> rollupTypeDay,
-    "cube_type_segment" -> cubeTypeSegment,
-    "pivot_event_counts" -> pivotEventCounts,
-    "window_lag_delta" -> windowLagDelta,
-    "window_ntile" -> windowNtile,
-    "distinct_counts" -> distinctCounts)
-
-  val oracle: Map[String, String] = Map(
-    "filter_project" ->
+  val registry: Map[String, Query] = Map(
+    "filter_project" -> Query(filterProject, Some(
       """SELECT event_id, user_id, value FROM events
         |WHERE event_type = 'purchase' AND value > 50
-        |ORDER BY event_id""".stripMargin,
-    "filter_in_users" ->
+        |ORDER BY event_id""".stripMargin)),
+    "filter_in_users" -> Query(filterInUsers, Some(
       s"""SELECT user_id, count(*) AS n_events,
          |  ${Exact.sumMoneySql("value")} AS total_value
          |FROM events WHERE user_id IN (1,2,3,5,8,13,21,34,55,89)
-         |GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "point_lookup" ->
+         |GROUP BY user_id ORDER BY user_id""".stripMargin)),
+    "point_lookup" -> Query(pointLookup, Some(
       """SELECT event_id, user_id, event_type, value, epoch_us(ts) AS ts_us
         |FROM events WHERE user_id = 1
-        |ORDER BY ts DESC, event_id DESC LIMIT 1""".stripMargin,
-    "semi_join_purchasers" ->
+        |ORDER BY ts DESC, event_id DESC LIMIT 1""".stripMargin)),
+    "semi_join_purchasers" -> Query(semiJoinPurchasers, Some(
       """SELECT c_custkey, c_name, c_mktsegment FROM customer
         |WHERE c_custkey IN (SELECT user_id FROM events WHERE event_type = 'purchase')
-        |ORDER BY c_custkey""".stripMargin,
-    "anti_join_inactive" ->
+        |ORDER BY c_custkey""".stripMargin)),
+    "anti_join_inactive" -> Query(antiJoinInactive, Some(
       """SELECT c_mktsegment, count(*) AS n_inactive FROM customer
         |WHERE c_custkey NOT IN (SELECT user_id FROM events)
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "asof_latest_click" ->
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
+    "asof_latest_click" -> Query(asofLatestClick, Some(
       """WITH p AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
         |           FROM events WHERE event_type = 'purchase'),
         |c AS (SELECT user_id, epoch_us(ts) AS click_ts_us,
@@ -410,8 +383,8 @@ object RelationalQueries {
         |       c.click_ts_us, c.click_event_id, c.click_value
         |FROM p ASOF LEFT JOIN c
         |  ON p.user_id = c.user_id AND p.ts_us >= c.click_ts_us
-        |ORDER BY p.event_id""".stripMargin,
-    "asof_native_latest_click" ->
+        |ORDER BY p.event_id""".stripMargin)),
+    "asof_native_latest_click" -> Query(asofNativeLatestClick, Some(
       """WITH p AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
         |           FROM events WHERE event_type = 'purchase'),
         |c AS (SELECT user_id, epoch_us(ts) AS click_ts_us,
@@ -423,8 +396,8 @@ object RelationalQueries {
         |       c.click_ts_us, c.click_event_id, c.click_value
         |FROM p ASOF LEFT JOIN c
         |  ON p.user_id = c.user_id AND p.ts_us >= c.click_ts_us
-        |ORDER BY p.event_id""".stripMargin,
-    "asof_forward_next_click" ->
+        |ORDER BY p.event_id""".stripMargin)),
+    "asof_forward_next_click" -> Query(asofForwardNextClick, Some(
       """WITH p AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
         |           FROM events WHERE event_type = 'purchase'),
         |c AS (SELECT user_id, epoch_us(ts) AS click_ts_us,
@@ -435,88 +408,88 @@ object RelationalQueries {
         |       c.click_ts_us, c.click_event_id
         |FROM p ASOF LEFT JOIN c
         |  ON p.user_id = c.user_id AND p.ts_us <= c.click_ts_us
-        |ORDER BY p.event_id""".stripMargin,
-    "join_nation_revenue" ->
+        |ORDER BY p.event_id""".stripMargin)),
+    "join_nation_revenue" -> Query(joinNationRevenue, Some(
       s"""SELECT n_name, count(*) AS n_orders,
          |  ${Exact.sumMoneySql("o_totalprice")} AS revenue
          |FROM orders
          |JOIN customer ON o_custkey = c_custkey
          |JOIN nation ON c_nationkey = n_nationkey
-         |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    "window_latest_event" ->
+         |GROUP BY n_name ORDER BY n_name""".stripMargin)),
+    "window_latest_event" -> Query(windowLatestEvent, Some(
       """SELECT user_id, event_id, event_type, value FROM (
         |  SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM events) WHERE rn = 1 ORDER BY user_id""".stripMargin,
-    "window_topn_per_user" ->
+        |  FROM events) WHERE rn = 1 ORDER BY user_id""".stripMargin)),
+    "window_topn_per_user" -> Query(windowTopNPerUser, Some(
       """SELECT user_id, rn, event_id, value FROM (
         |  SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM events) WHERE rn <= 3 ORDER BY user_id, rn""".stripMargin,
-    "window_running_total" ->
+        |  FROM events) WHERE rn <= 3 ORDER BY user_id, rn""".stripMargin)),
+    "window_running_total" -> Query(windowRunningTotal, Some(
       """SELECT user_id, event_id,
         |  CAST(sum(CAST(value AS DECIMAL(18,2)))
         |    OVER (PARTITION BY user_id ORDER BY ts, event_id
         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
         |    AS running_value
-        |FROM events WHERE user_id < 10 ORDER BY user_id, event_id""".stripMargin,
-    "topk_orders" ->
+        |FROM events WHERE user_id < 10 ORDER BY user_id, event_id""".stripMargin)),
+    "topk_orders" -> Query(topkOrders, Some(
       """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin,
-    "set_except_non_purchasers" ->
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin)),
+    "set_except_non_purchasers" -> Query(setExceptNonPurchasers, Some(
       """SELECT DISTINCT user_id FROM events
         |EXCEPT
         |SELECT DISTINCT user_id FROM events
         |WHERE event_type = 'purchase' AND value > 450
-        |ORDER BY user_id""".stripMargin,
-    "set_intersect_click_error" ->
+        |ORDER BY user_id""".stripMargin)),
+    "set_intersect_click_error" -> Query(setIntersectClickError, Some(
       """SELECT user_id FROM events WHERE event_type = 'click'
         |INTERSECT
         |SELECT user_id FROM events WHERE event_type = 'error'
-        |ORDER BY user_id""".stripMargin,
-    "set_union_click_error" ->
+        |ORDER BY user_id""".stripMargin)),
+    "set_union_click_error" -> Query(setUnionClickError, Some(
       """SELECT DISTINCT user_id FROM (
         |  SELECT user_id FROM events WHERE event_type = 'click'
         |  UNION ALL
         |  SELECT user_id FROM events WHERE event_type = 'error')
-        |ORDER BY user_id""".stripMargin,
-    "time_buckets" ->
+        |ORDER BY user_id""".stripMargin)),
+    "time_buckets" -> Query(timeBuckets, Some(
       s"""SELECT dayofweek(ts)::BIGINT AS dow, count(*) AS n,
          |  count(DISTINCT epoch_us(date_trunc('hour', ts))) AS n_hours,
          |  ${Exact.sumMoneySql("value")} AS total_value
-         |FROM events GROUP BY dow ORDER BY dow""".stripMargin,
-    "json_extract_props" ->
+         |FROM events GROUP BY dow ORDER BY dow""".stripMargin)),
+    "json_extract_props" -> Query(jsonExtractProps, Some(
       s"""SELECT CAST(regexp_extract(props, '"k":\\s*(\\d+)', 1) AS BIGINT) % 10 AS k_bucket,
          |  count(*) AS n, ${Exact.sumMoneySql("value")} AS total_value
-         |FROM events GROUP BY k_bucket ORDER BY k_bucket""".stripMargin,
-    "fingerprint_digest" ->
+         |FROM events GROUP BY k_bucket ORDER BY k_bucket""".stripMargin)),
+    "fingerprint_digest" -> Query(fingerprintDigest, Some(
       """SELECT count(*) AS n_rows,
         |  min(md5(concat_ws('|', event_id, user_id, event_type))) AS min_md5,
         |  max(md5(concat_ws('|', event_id, user_id, event_type))) AS max_md5
-        |FROM events""".stripMargin,
-    "rollup_type_day" ->
+        |FROM events""".stripMargin)),
+    "rollup_type_day" -> Query(rollupTypeDay, Some(
       s"""SELECT event_type, strftime(ts, '%Y-%m-%d') AS day, count(*) AS n,
          |  ${Exact.sumMoneySql("value")} AS total_value
          |FROM events GROUP BY ROLLUP(event_type, day)
-         |ORDER BY event_type ASC NULLS FIRST, day ASC NULLS FIRST""".stripMargin,
-    "cube_type_segment" ->
+         |ORDER BY event_type ASC NULLS FIRST, day ASC NULLS FIRST""".stripMargin)),
+    "cube_type_segment" -> Query(cubeTypeSegment, Some(
       s"""SELECT event_type, c_mktsegment, count(*) AS n,
          |  ${Exact.sumMoneySql("value")} AS total_value
          |FROM events JOIN customer ON user_id = c_custkey
          |GROUP BY CUBE(event_type, c_mktsegment)
-         |ORDER BY event_type ASC NULLS FIRST, c_mktsegment ASC NULLS FIRST""".stripMargin,
-    "pivot_event_counts" ->
+         |ORDER BY event_type ASC NULLS FIRST, c_mktsegment ASC NULLS FIRST""".stripMargin)),
+    "pivot_event_counts" -> Query(pivotEventCounts, Some(
       """SELECT user_id,
         |  count(*) FILTER (event_type = 'click') AS "click",
         |  count(*) FILTER (event_type = 'view') AS "view",
         |  count(*) FILTER (event_type = 'purchase') AS "purchase",
         |  count(*) FILTER (event_type = 'error') AS "error"
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "window_lag_delta" ->
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)),
+    "window_lag_delta" -> Query(windowLagDelta, Some(
       """SELECT user_id, event_id, value,
         |  round(value - coalesce(
         |    lag(value, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id),
         |    0), 6) AS value_delta
-        |FROM events WHERE user_id < 20 ORDER BY user_id, event_id""".stripMargin,
-    "window_ntile" ->
+        |FROM events WHERE user_id < 20 ORDER BY user_id, event_id""".stripMargin)),
+    "window_ntile" -> Query(windowNtile, Some(
       s"""SELECT o_orderpriority, quartile, count(*) AS n,
          |  ${Exact.sumMoneySql("o_totalprice")} AS bucket_value
          |FROM (SELECT o_orderpriority, o_totalprice, ntile(4)
@@ -524,10 +497,10 @@ object RelationalQueries {
          |              ORDER BY o_totalprice DESC, o_orderkey) AS quartile
          |      FROM orders)
          |GROUP BY o_orderpriority, quartile
-         |ORDER BY o_orderpriority, quartile""".stripMargin,
-    "distinct_counts" ->
+         |ORDER BY o_orderpriority, quartile""".stripMargin)),
+    "distinct_counts" -> Query(distinctCounts, Some(
       """SELECT count(DISTINCT event_type) AS n_event_types,
         |  count(DISTINCT user_id) AS n_users,
         |  count(DISTINCT (user_id, event_type)) AS n_user_type_pairs
-        |FROM events""".stripMargin)
+        |FROM events""".stripMargin)))
 }

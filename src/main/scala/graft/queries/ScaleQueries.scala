@@ -397,25 +397,6 @@ object ScaleQueries {
       .orderBy("bucket")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "scale_psi_sketch" -> psiSketch,
-    "scale_psi_history" -> psiHistory,
-    "scale_winsorize_sketch" -> winsorizeSketch,
-    "scale_qbucket_sketch" -> qbucketSketch,
-    "scale_quantile_sketch" -> quantileSketch,
-    "scale_bloom" -> bloom,
-    "scale_countmin" -> countMin,
-    "skew_salted_agg" -> skewSaltedAgg,
-    "skew_salted_join" -> skewSaltedJoin,
-    "sample_hash_bucket" -> sampleHashBucket,
-    "layout_zorder" -> layoutZorder,
-    "layout_pruning_stats" -> layoutPruningStats,
-    "layout_hilbert" -> layoutHilbert,
-    "layout_hilbert_pruning" -> layoutHilbertPruning,
-    "scale_hll_rolling" -> hllRolling,
-    "scale_approx_distinct" -> approxDistinct,
-    "scale_approx_quantiles" -> approxQuantiles)
-
   // shared knot-for-knot sketch replay: the keep rule, delta/merge
   // windows and target ranks are ALL integer arithmetic on the shared
   // DECIMAL(18,2) value grid; `extraWhere` restricts the sketched
@@ -451,21 +432,21 @@ object ScaleQueries {
       .stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
+  val registry: Map[String, Query] = Map(
     // banded assertions: the oracle STATES the approximation invariant
     // (exact values + `true` flags); the Spark relation computes the
     // flags from est vs exact, so a band violation hash-fails the gate
-    "scale_approx_distinct" ->
+    "scale_approx_distinct" -> Query(approxDistinct, Some(
       """SELECT count(DISTINCT user_id) AS exact_users,
         |  true AS users_within_band,
         |  count(DISTINCT event_type) AS exact_event_types,
         |  true AS types_within_band
-        |FROM events""".stripMargin,
-    "scale_approx_quantiles" ->
+        |FROM events""".stripMargin)),
+    "scale_approx_quantiles" -> Query(approxQuantiles, Some(
       """SELECT count(*) AS n, true AS p25_within_band,
         |  true AS p50_within_band, true AS p75_within_band
-        |FROM lineitem""".stripMargin,
-    "scale_hll_rolling" ->
+        |FROM lineitem""".stripMargin)),
+    "scale_hll_rolling" -> Query(hllRolling, Some(
       """WITH ud AS (SELECT DISTINCT user_id,
         |  epoch_us(ts) // 86400000000 AS d FROM events),
         |days AS (SELECT DISTINCT d AS day FROM ud),
@@ -474,12 +455,12 @@ object ScaleQueries {
         |SELECT c.day, count(DISTINCT user_id) AS exact_active,
         |  true AS within_band
         |FROM c JOIN days USING (day)
-        |GROUP BY 1 ORDER BY day""".stripMargin,
+        |GROUP BY 1 ORDER BY day""".stripMargin)),
     // sketch-derived decile edges + the quality_drift_psi tail — the
     // monitor replays end to end (edges, buckets, probabilities)
     // baseline masses from the knots' own rank estimates (bcum deltas +
     // the N − top-edge remainder), current counted exactly, shared tail
-    "scale_psi_history" -> {
+    "scale_psi_history" -> Query(psiHistory, Some({
       val pcts = (1 until PsiSketchBuckets).map(_ * (100 / PsiSketchBuckets))
       s"""WITH ${qsketchCtes("event_id % 2 = 0", pcts)},
          |el AS (SELECT list_sort(list(est_value)) AS breaks FROM a),
@@ -510,9 +491,9 @@ object ScaleQueries {
          |    * ln(greatest(n_cur * 1.0 / tc, 1e-6)
          |      / greatest(n_base * 1.0 / tb, 1e-6)), 9) AS contribution
          |FROM j, tt ORDER BY bucket""".stripMargin
-    },
+    })),
     // 5/95 fences from the shared sketch replay + the winsor clip tail
-    "scale_winsorize_sketch" -> {
+    "scale_winsorize_sketch" -> Query(winsorizeSketch, Some({
       s"""WITH ${qsketchCtes("TRUE", Seq(5, 95))},
          |el AS (SELECT min(CASE WHEN q = 5 THEN est_value END) AS lo,
          |    min(CASE WHEN q = 95 THEN est_value END) AS hi FROM a),
@@ -528,9 +509,9 @@ object ScaleQueries {
          |  CAST(min(wv) AS DOUBLE) AS lo_edge,
          |  CAST(max(wv) AS DOUBLE) AS hi_edge
          |FROM w ORDER BY n_rows""".stripMargin
-    },
+    })),
     // decile edges from the shared sketch replay + per-bucket stats
-    "scale_qbucket_sketch" -> {
+    "scale_qbucket_sketch" -> Query(qbucketSketch, Some({
       val pcts = (1 until QbSketchBuckets).map(_ * (100 / QbSketchBuckets))
       s"""WITH ${qsketchCtes("TRUE", pcts)},
          |el AS (SELECT list_sort(list(est_value)) AS breaks FROM a),
@@ -541,8 +522,8 @@ object ScaleQueries {
          |SELECT CAST(bucket AS BIGINT) AS bucket, count(*) AS n,
          |  CAST(min(v) AS DOUBLE) AS lo, CAST(max(v) AS DOUBLE) AS hi
          |FROM b1 GROUP BY 1 ORDER BY bucket""".stripMargin
-    },
-    "scale_psi_sketch" -> {
+    })),
+    "scale_psi_sketch" -> Query(psiSketch, Some({
       val pcts = (1 until PsiSketchBuckets).map(_ * (100 / PsiSketchBuckets))
       s"""WITH ${qsketchCtes("event_id % 2 = 0", pcts)},
          |el AS (SELECT list_sort(list(est_value)) AS breaks FROM a),
@@ -567,9 +548,9 @@ object ScaleQueries {
          |    * ln(greatest(n_cur * 1.0 / tc, 1e-6)
          |      / greatest(n_base * 1.0 / tb, 1e-6)), 9) AS contribution
          |FROM j, tt ORDER BY bucket""".stripMargin
-    },
+    })),
     // the guarantee-audit query over the same shared replay
-    "scale_quantile_sketch" -> {
+    "scale_quantile_sketch" -> Query(quantileSketch, Some({
       s"""WITH ${qsketchCtes("TRUE", QsPercents)},
          |x AS (SELECT a.q, a.n_total, a.target_rank, a.est_value,
          |    sum(CASE WHEN e.v <= a.est_value THEN 1 ELSE 0 END)
@@ -585,11 +566,11 @@ object ScaleQueries {
          |  exact_rank >= target_rank AS valid_ge,
          |  (exact_below - target_rank) * $QsKnots < n_total AS within_eps
          |FROM x ORDER BY q""".stripMargin
-    },
+    })),
     // bit-for-bit filter replay on the shared md5 hash idiom; probe bits
     // deliberately NOT deduped per value (two seeds landing on one set
     // bit still count as hashes bits set — Bloom semantics)
-    "scale_bloom" -> {
+    "scale_bloom" -> Query(bloom, Some({
       val seeds = (0 until BloomHashes).mkString("[", ", ", "]")
       def bit(v: String) =
         s"('0x' || substr(md5(CAST(s.seed AS VARCHAR) || '|' || $v), 1, 12))::BIGINT % $BloomBits"
@@ -613,10 +594,10 @@ object ScaleQueries {
          |  (pr.n_bits_set = $BloomHashes AND act.value IS NULL)
          |    AS false_positive
          |FROM pr LEFT JOIN act USING (value) ORDER BY value""".stripMargin
-    },
+    })),
     // cell-for-cell sketch replay on the shared md5 hash idiom; est =
     // min over the depth seeds' buckets, always ≥ exact (one-sided)
-    "scale_countmin" -> {
+    "scale_countmin" -> Query(countMin, Some({
       val seeds = (0 until CmDepth).mkString("[", ", ", "]")
       def bucket(v: String) =
         s"('0x' || substr(md5(CAST(s.seed AS VARCHAR) || '|' || $v), 1, 12))::BIGINT % $CmWidth"
@@ -636,26 +617,26 @@ object ScaleQueries {
          |SELECT e.value, e.est, x.exact_cnt,
          |  e.est - x.exact_cnt AS overcount
          |FROM est e JOIN ex x USING (value) ORDER BY value""".stripMargin
-    },
-    "skew_salted_agg" ->
+    })),
+    "skew_salted_agg" -> Query(skewSaltedAgg, Some(
       """SELECT user_id, count(*) AS n_events,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)),
     // the whole point of salting: identical to the PLAIN equi-join
-    "skew_salted_join" ->
+    "skew_salted_join" -> Query(skewSaltedJoin, Some(
       s"""SELECT p_brand, count(*) AS n_items,
          |  ${graft.functions.Exact.sumMoneySql("l_extendedprice")} AS revenue
          |FROM lineitem JOIN part ON l_partkey = p_partkey
-         |GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-    "sample_hash_bucket" ->
+         |GROUP BY p_brand ORDER BY p_brand""".stripMargin)),
+    "sample_hash_bucket" -> Query(sampleHashBucket, Some(
       """SELECT event_type, count(*) AS n_sampled,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sampled_value
         |FROM events
         |WHERE ('0x' || substr(md5(event_id::VARCHAR), 1, 12))::BIGINT % 100 < 10
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |GROUP BY event_type ORDER BY event_type""".stripMargin)),
     // same z construction as layout_zorder, then per-16-bucket min/max
     // widths as exact DECIMAL differences over one global broadcast
-    "layout_pruning_stats" -> {
+    "layout_pruning_stats" -> Query(layoutPruningStats, Some({
       val bins = 1 << ZBits
       def bin(d: String, mn: String, mx: String) =
         s"""CASE WHEN CAST($mx - $mn AS DOUBLE) > 0
@@ -686,11 +667,11 @@ object ScaleQueries {
          |  round(CAST(p1 - p0 AS DOUBLE) / CAST(gp1 - gp0 AS DOUBLE), 9)
          |    AS price_frac
          |FROM pb, gk ORDER BY bucket""".stripMargin
-    },
+    })),
     // Hilbert replay: same binning CTEs as layout_zorder, then the
     // xy2d walk as a CTE chain emitted by the SAME level loop as the
     // Spark plan (Layout.hilbertStepsSql) — the two cannot drift
-    "layout_hilbert" -> {
+    "layout_hilbert" -> Query(layoutHilbert, Some({
       val bins = 1 << ZBits
       def bin(d: String, mn: String, mx: String) =
         s"""CASE WHEN CAST($mx - $mn AS DOUBLE) > 0
@@ -712,8 +693,8 @@ object ScaleQueries {
          |SELECT l_orderkey, l_linenumber, hd AS h_value
          |FROM hil$ZBits
          |ORDER BY h_value, l_orderkey, l_linenumber""".stripMargin
-    },
-    "layout_hilbert_pruning" -> {
+    })),
+    "layout_hilbert_pruning" -> Query(layoutHilbertPruning, Some({
       val bins = 1 << ZBits
       def bin(d: String, mn: String, mx: String) =
         s"""CASE WHEN CAST($mx - $mn AS DOUBLE) > 0
@@ -742,11 +723,11 @@ object ScaleQueries {
          |  round(CAST(p1 - p0 AS DOUBLE) / CAST(gp1 - gp0 AS DOUBLE), 9)
          |    AS price_frac
          |FROM pb, gk ORDER BY bucket""".stripMargin
-    },
+    })),
     // same exact-DECIMAL binning as prep_histogram_price per dimension,
     // then the interleave generated by the SAME index loop as the Spark
     // expression (Layout.interleaveBitsSql) — the two cannot drift
-    "layout_zorder" -> {
+    "layout_zorder" -> Query(layoutZorder, Some({
       val bins = 1 << ZBits
       def bin(d: String, mn: String, mx: String) =
         s"""CASE WHEN CAST($mx - $mn AS DOUBLE) > 0
@@ -767,5 +748,5 @@ object ScaleQueries {
          |  CAST(${graft.sources.Layout.interleaveBitsSql(Seq("b0", "b1"), ZBits)}
          |    AS BIGINT) AS z_value
          |FROM b ORDER BY z_value, l_orderkey, l_linenumber""".stripMargin
-    })
+    })))
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.ops.{Eval, Ivf, Similarity}
+import graft.ops.{Eval, Ivf, IvfIndex, Similarity}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -324,17 +324,27 @@ object SimilarityQueries {
     */
   def ivfTopK(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    // path keyed on the index fingerprint (input files + params), so a
-    // regenerated dataset or different knobs land in a DIFFERENT directory
-    // — /tmp can never serve stale or foreign centroids. buildCached
-    // additionally validates the fingerprint stored beside the centroids.
+    Ivf.probe(fittedIvf(emb, dir), emb.filter(col("vec_id") === 0L), K,
+      nProbe = 4)
+  }
+
+  /** Disk location of an IVF index over `dir`'s embeddings, keyed on the
+    * index fingerprint (input files + params): a regenerated or rewritten
+    * dataset, or different knobs, lands in a DIFFERENT directory, so /tmp
+    * can never serve stale or foreign centroids. The build additionally
+    * validates the fingerprint stored beside the centroids.
+    */
+  private def ivfIndexPath(dir: String, tag: String, fp: String): String =
+    "/tmp/graft_ivf/" + dir.replaceAll("[^A-Za-z0-9._-]", "_") + tag +
+      fp.take(16)
+
+  /** The 16-cell fitted index shared by [[ivfTopK]], [[ivfExact]] and
+    * [[ivfKnn]] — built at most once per dataset. */
+  private def fittedIvf(emb: DataFrame, dir: String): IvfIndex = {
     val fp = Ivf.indexFingerprint(emb, "vec_id", "embedding",
       nClusters = 16, sampleCap = 4096, seed = 42L)
-    val indexPath = "/tmp/graft_ivf/" +
-      dir.replaceAll("[^A-Za-z0-9._-]", "_") + "_" + fp.take(16)
-    val index = Ivf.buildCached(emb, "vec_id", "embedding",
-      nClusters = 16, path = indexPath)
-    Ivf.probe(index, emb.filter(col("vec_id") === 0L), K, nProbe = 4)
+    Ivf.buildCached(emb, "vec_id", "embedding", nClusters = 16,
+      path = ivfIndexPath(dir, "_", fp))
   }
 
   /** IVF probing EVERY cell — degenerates to exact brute-force top-k by
@@ -345,12 +355,7 @@ object SimilarityQueries {
     */
   def ivfExact(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val fp = Ivf.indexFingerprint(emb, "vec_id", "embedding",
-      nClusters = 16, sampleCap = 4096, seed = 42L)
-    val indexPath = "/tmp/graft_ivf/" +
-      dir.replaceAll("[^A-Za-z0-9._-]", "_") + "_" + fp.take(16)
-    val index = Ivf.buildCached(emb, "vec_id", "embedding",
-      nClusters = 16, path = indexPath)
+    val index = fittedIvf(emb, dir)
     Ivf.probe(index, emb.filter(col("vec_id") === 0L), K,
       nProbe = index.centroids.length)
   }
@@ -364,12 +369,7 @@ object SimilarityQueries {
     */
   def ivfKnn(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val fp = Ivf.indexFingerprint(emb, "vec_id", "embedding",
-      nClusters = 16, sampleCap = 4096, seed = 42L)
-    val indexPath = "/tmp/graft_ivf/" +
-      dir.replaceAll("[^A-Za-z0-9._-]", "_") + "_" + fp.take(16)
-    val index = Ivf.buildCached(emb, "vec_id", "embedding",
-      nClusters = 16, path = indexPath)
+    val index = fittedIvf(emb, dir)
     Ivf.probeBatch(index, emb.filter(col("vec_id") < KnnQueries), "vec_id",
         KnnK, nProbe = index.centroids.length)
       .orderBy("q_id", "rank")
@@ -397,10 +397,8 @@ object SimilarityQueries {
     val emb = Tables.embeddings(spark, dir)
     val cents = ivfAnchors.map(_.map(_.toDouble))
     val fp = Ivf.fixedFingerprint(emb, "vec_id", "embedding", cents)
-    val indexPath = "/tmp/graft_ivf/" +
-      dir.replaceAll("[^A-Za-z0-9._-]", "_") + "_fx_" + fp.take(16)
     val index = Ivf.buildCachedFixed(emb, "vec_id", "embedding", cents,
-      indexPath)
+      ivfIndexPath(dir, "_fx_", fp))
     val qs = emb.filter(col("vec_id") < KnnQueries)
     val truth = Similarity.knnJoin(emb, qs, "vec_id", "embedding", K)
       .select(col("q_id"), col("vec_id"))
@@ -546,8 +544,8 @@ object SimilarityQueries {
     * cells, which degenerates to the exact cross BY CONSTRUCTION (the
     * `sim_ivf_exact` witness pattern), so the funnel machinery itself is
     * hash-checked against the exact-replay oracle; partial-probe
-    * candidate volume and recall are pinned in SimilaritySpec +
-    * ProbeRound12 (SURVEY §6.1).
+    * candidate volume and recall are pinned in SimilaritySpec and
+    * measured in SURVEY §6.1 (round-12 operators).
     */
   def bitextMargin(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
@@ -656,44 +654,6 @@ object SimilarityQueries {
         "vec_id", "embedding", MrlK, MrlPrefix)
       .orderBy("q_id")
   }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_mrl_fidelity" -> mrlFidelityQ,
-    "sim_pq_topk" -> pqTopK,
-    "sim_ivfpq_topk" -> ivfPqTopK,
-    "sim_ivfpq_recall" -> ivfPqRecall,
-    "sim_bitext_margin" -> bitextMargin,
-    "sim_pq_recall" -> pqRecall,
-    "sim_rbo_rankings" -> rboRankings,
-    "sim_kmeans" -> kmeans,
-    "sim_binary_topk" -> binaryTopK,
-    "sim_prefix_rerank" -> prefixRerank,
-    "sim_top_eigvec" -> topEigvec,
-    "sim_pca_project" -> pcaProject,
-    "sim_hard_negatives" -> hardNegatives,
-    "sim_random_projection" -> randomProjection,
-    "sim_mmr_rerank" -> mmrRerank,
-    "sim_label_propagation" -> labelProp,
-    "sim_int8_quant" -> int8Quant,
-    "sim_brute_topk" -> bruteTopK,
-    "sim_semantic_dedup" -> semanticDedup,
-    "sim_dbscan" -> dbscanClusters,
-    "sim_dbscan_recall" -> dbscanRecall,
-    "sim_dbscan_fitted" -> dbscanFittedQ,
-    "sim_lsh_neardup_pairs" -> lshNearDupPairs,
-    "sim_neardup_triangles" -> neardupTriangles,
-    "sim_lsh_topk" -> lshTopK,
-    "sim_ann_recall" -> annRecall,
-    "sim_rrf_fusion" -> rrfFusion,
-    "sim_embedding_cov" -> embeddingCov,
-    "sim_lsh_multiprobe" -> lshTopKMultiprobe,
-    "sim_knn_join" -> knnJoin,
-    "sim_lsh_knn" -> lshKnn,
-    "sim_centroids" -> centroids,
-    "sim_ivf_topk" -> ivfTopK,
-    "sim_ivf_exact" -> ivfExact,
-    "sim_ivf_knn" -> ivfKnn,
-    "sim_ivf_recall" -> ivfRecall)
 
   // ---- oracle SQL -------------------------------------------------------------
 
@@ -1004,10 +964,10 @@ object SimilarityQueries {
     s"list_indexof($scores, list_max($scores))"
   }
 
-  val oracle: Map[String, String] = Map(
+  val registry: Map[String, Query] = Map(
     // pair products round to 9dp and sum in exact DECIMAL; cov is the same
     // fixed IEEE sequence as embeddingCovariance
-    "sim_embedding_cov" ->
+    "sim_embedding_cov" -> Query(embeddingCov, Some(
       s"""WITH p AS (
          |  SELECT i, j, embedding[i]::DOUBLE AS xi, embedding[j]::DOUBLE AS xj
          |  FROM embeddings,
@@ -1026,14 +986,14 @@ object SimilarityQueries {
          |    - (CAST(mi.s AS DOUBLE) / n) * (CAST(mj.s AS DOUBLE) / n), 9)
          |    AS cov
          |FROM pairs p JOIN means mi ON p.i = mi.i JOIN means mj ON p.j = mj.i
-         |ORDER BY p.i, p.j""".stripMargin,
+         |ORDER BY p.i, p.j""".stripMargin)),
     // both rank lists re-derive from their own oracle definitions (BM25
     // SQL shared verbatim with text_bm25_topk); contributions 1/(60+rank)
     // round to 9dp and sum in exact DECIMAL
     // k-bounded rankings; per-depth contribution = exact-literal RBO
     // weight (CAST to DOUBLE) × co-entry count ÷ depth, rounded 9 dp and
     // DECIMAL-summed — the DCG-literal discipline applied to p-powers
-    "sim_rbo_rankings" -> {
+    "sim_rbo_rankings" -> Query(rboRankings, Some({
       val wCase = (1 to RboK).map(d =>
         s"WHEN $d THEN CAST(${Eval.rboWeight(d)} AS DOUBLE)")
         .mkString("CASE d ", " ", " END")
@@ -1057,8 +1017,8 @@ object SimilarityQueries {
          |  CAST(max(CASE WHEN d = $RboK THEN x END) AS BIGINT) AS n_common,
          |  round(CAST(sum(c) AS DOUBLE), 6) AS rbo
          |FROM c""".stripMargin
-    },
-    "sim_rrf_fusion" ->
+    })),
+    "sim_rrf_fusion" -> Query(rrfFusion, Some(
       s"""WITH bmq AS (${TextQueries.bm25Sql}),
          |bm AS (SELECT id, row_number() OVER (ORDER BY bm25 DESC, id)
          |         AS rank FROM bmq),
@@ -1070,10 +1030,10 @@ object SimilarityQueries {
          |        AS DECIMAL(18,9)) AS w FROM u)
          |SELECT id, count(*) AS n_lists, CAST(sum(w) AS DOUBLE)
          |  AS rrf_score
-         |FROM w GROUP BY 1 ORDER BY rrf_score DESC, id""".stripMargin,
+         |FROM w GROUP BY 1 ORDER BY rrf_score DESC, id""".stripMargin)),
     // label filter is null-safe (IS DISTINCT FROM) and the semi-hard cos
     // cap applies AFTER the 6-dp round, mirroring Similarity.hardNegatives
-    "sim_hard_negatives" ->
+    "sim_hard_negatives" -> Query(hardNegatives, Some(
       s"""WITH q AS (SELECT vec_id AS q_id, embedding AS qv, label AS ql
          |           FROM embeddings WHERE vec_id < $KnnQueries),
          |s AS (SELECT q_id, vec_id, label,
@@ -1084,11 +1044,11 @@ object SimilarityQueries {
          |        OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rank
          |      FROM s WHERE cos <= $NegMaxCos)
          |SELECT q_id, CAST(rank AS BIGINT) AS rank, vec_id, label, cos
-         |FROM r WHERE rank <= $NegK ORDER BY q_id, rank""".stripMargin,
+         |FROM r WHERE rank <= $NegK ORDER BY q_id, rank""".stripMargin)),
     // majority vote among same-cell labeled neighbors; ties break to the
     // smallest label, unlabeled rows with no qualifying neighbor keep a
     // null label and 0 votes
-    "sim_label_propagation" ->
+    "sim_label_propagation" -> Query(labelProp, Some(
       s"""WITH a AS (SELECT vec_id, embedding,
          |  CASE WHEN vec_id % 10 = 0 THEN NULL ELSE label END AS l,
          |  ${semCellSql("embedding")} AS cell FROM embeddings),
@@ -1104,12 +1064,12 @@ object SimilarityQueries {
          |SELECT u.vec_id, w.l AS prop_label,
          |  coalesce(w.n, 0) AS n_votes
          |FROM u LEFT JOIN (SELECT * FROM w WHERE rk = 1) w USING (vec_id)
-         |ORDER BY u.vec_id""".stripMargin,
+         |ORDER BY u.vec_id""".stripMargin)),
     // the greedy MMR selection replayed as chained argmax CTEs: s1 is the
     // relevance argmax, s_i excludes all prior picks and penalizes by the
     // max pairwise sim to them — literal λ and (1−λ) constants print with
     // round-trip precision, so both engines run the same three IEEE ops
-    "sim_mmr_rerank" -> {
+    "sim_mmr_rerank" -> Query(mmrRerank, Some({
       val l = MmrLambda
       val mu = 1.0 - MmrLambda
       val steps = (2 to MmrK).map { i =>
@@ -1138,24 +1098,24 @@ object SimilarityQueries {
          |SELECT CAST(rank AS BIGINT) AS rank, vec_id, rel,
          |  score AS mmr_score
          |FROM ($union) ORDER BY rank""".stripMargin
-    },
+    })),
     // the identical seeded ±1 rows inline here and in the Spark plan; both
     // engines run the same sequential double dot product
-    "sim_random_projection" -> {
+    "sim_random_projection" -> Query(randomProjection, Some({
       val cols = projSigns.zipWithIndex.map { case (row, j) =>
         val arr = row.map(v => s"$v.0").mkString("[", ",", "]")
         s"round(${dotSql("embedding", arr)}, 6) AS p$j"
       }.mkString(", ")
       s"""SELECT vec_id, $cols
          |FROM embeddings ORDER BY vec_id""".stripMargin
-    },
+    })),
     // dup = shares a cell with a LOWER-id doc at cos >= threshold; the
     // within-cell self-join enumerates exactly the candidate pairs the
     // Spark side's cell-keyed join produces
     // cells, ε-edges, degrees, the min-label reachability walk over the
     // core subgraph and the border min replay the Spark side verbatim;
     // every comparison is integer or 6-dp-rounded
-    "sim_dbscan" ->
+    "sim_dbscan" -> Query(dbscanClusters, Some(
       s"""WITH RECURSIVE a AS (SELECT vec_id, embedding,
          |  ${semCellSql("embedding")} AS cell FROM embeddings),
          |e AS MATERIALIZED (
@@ -1183,12 +1143,12 @@ object SimilarityQueries {
          |  CAST(coalesce(comp.cluster, bord.cluster, -1) AS BIGINT) AS cluster
          |FROM a LEFT JOIN comp ON comp.id = a.vec_id
          |LEFT JOIN bord ON bord.id = a.vec_id
-         |ORDER BY vec_id""".stripMargin,
+         |ORDER BY vec_id""".stripMargin)),
     // the SAME Lloyd replay as sim_kmeans, one more exact-DECIMAL
     // assignment pass against the final centroids (min-struct ties to
     // the smallest cid — the plan's argmin), then the sim_dbscan walk
     // over the fitted cells
-    "sim_dbscan_fitted" ->
+    "sim_dbscan_fitted" -> Query(dbscanFittedQ, Some(
       s"""WITH RECURSIVE ${kmeansCtesSql(KmeansK, KmeansRounds)},
          |dF AS (SELECT x.id, c.cid,
          |    sum(CAST((x.x9 - c.c) AS DECIMAL(14,9)) *
@@ -1225,12 +1185,12 @@ object SimilarityQueries {
          |  CAST(coalesce(comp.cluster, bord.cluster, -1) AS BIGINT) AS cluster
          |FROM a LEFT JOIN comp ON comp.id = a.vec_id
          |LEFT JOIN bord ON bord.id = a.vec_id
-         |ORDER BY vec_id""".stripMargin,
+         |ORDER BY vec_id""".stripMargin)),
     // top-2 anchor cells via the masked second argmax PLUS the fitted
     // k-means cells (the SAME Lloyd replay + assignment pass as
     // sim_dbscan_fitted); true edges from the exact quadratic pair scan
     // (audit-scale); recall = one division of exact integers per arm
-    "sim_dbscan_recall" ->
+    "sim_dbscan_recall" -> Query(dbscanRecall, Some(
       s"""WITH ${kmeansCtesSql(KmeansK, KmeansRounds)},
          |dF AS (SELECT x.id, c.cid,
          |    sum(CAST((x.x9 - c.c) AS DECIMAL(14,9)) *
@@ -1274,8 +1234,8 @@ object SimilarityQueries {
          |SELECT 'fitted', CAST(1 AS INT), n_true, CAST(ff AS BIGINT),
          |  CASE WHEN n_true > 0
          |    THEN CAST(ff AS DOUBLE) / CAST(n_true AS DOUBLE) END
-         |FROM st ORDER BY method, n_probe""".stripMargin,
-    "sim_semantic_dedup" ->
+         |FROM st ORDER BY method, n_probe""".stripMargin)),
+    "sim_semantic_dedup" -> Query(semanticDedup, Some(
       s"""WITH a AS (SELECT vec_id, embedding,
          |  ${semCellSql("embedding")} AS cell FROM embeddings),
          |dup AS (SELECT DISTINCT y.vec_id
@@ -1284,18 +1244,18 @@ object SimilarityQueries {
          |              >= $NearDupThreshold)
          |SELECT vec_id, CAST(cell AS INT) AS cell FROM a
          |WHERE vec_id NOT IN (SELECT vec_id FROM dup)
-         |ORDER BY vec_id""".stripMargin,
-    "sim_brute_topk" -> bruteTopKSql,
+         |ORDER BY vec_id""".stripMargin)),
+    "sim_brute_topk" -> Query(bruteTopK, Some(bruteTopKSql)),
     // probing all cells IS brute force — identical oracle by construction
-    "sim_ivf_exact" -> bruteTopKSql,
-    "sim_ivf_recall" -> ivfRecallSql,
+    "sim_ivf_exact" -> Query(ivfExact, Some(bruteTopKSql)),
+    "sim_ivf_recall" -> Query(ivfRecall, Some(ivfRecallSql)),
     // candidate = shares a bucket in ANY band; each candidate pair verified
     // by exact cosine — the OR-join enumerates the identical pair set the
     // Spark side's banded explode + first-collision residual produces once
     // two knn replays (6-dp cosine, (cos desc, id) rank ties), the
     // prefix arm on embedding[1:32]; LEFT join keeps zero-overlap
     // queries; overlap = one IEEE division of exact integers
-    "sim_mrl_fidelity" ->
+    "sim_mrl_fidelity" -> Query(mrlFidelityQ, Some(
       s"""WITH q AS (SELECT vec_id AS q_id, embedding AS qv
          |  FROM embeddings WHERE vec_id < $MrlBatch),
          |sf AS (SELECT q_id, vec_id,
@@ -1321,15 +1281,15 @@ object SimilarityQueries {
          |  GROUP BY 1)
          |SELECT q_id, CAST($MrlK AS BIGINT) AS k, n_common,
          |  CAST(n_common AS DOUBLE) / $MrlK AS overlap_at_k
-         |FROM ov ORDER BY q_id""".stripMargin,
-    "sim_lsh_neardup_pairs" ->
+         |FROM ov ORDER BY q_id""".stripMargin)),
+    "sim_lsh_neardup_pairs" -> Query(lshNearDupPairs, Some(
       s"""WITH $nearDupEdgesCte
          |SELECT id_a, id_b, cos FROM ndedges
-         |ORDER BY id_a, id_b""".stripMargin,
+         |ORDER BY id_a, id_b""".stripMargin)),
     // Schank degree-ordered orientation mirrored in SQL over the same
     // edge CTE: orient from the (degree, id)-smaller endpoint, wedge on
     // shared source, close against the canonical (min,max) edge list
-    "sim_neardup_triangles" ->
+    "sim_neardup_triangles" -> Query(neardupTriangles, Some(
       s"""WITH $nearDupEdgesCte,
          |und AS (SELECT DISTINCT id_a AS u, id_b AS v FROM ndedges),
          |deg AS (SELECT n, count(*) AS d FROM
@@ -1349,16 +1309,16 @@ object SimilarityQueries {
          |  FROM w LEFT JOIN und c ON w.w1 = c.u AND w.w2 = c.v)
          |SELECT (SELECT count(*) FROM deg) AS n_nodes,
          |  (SELECT count(*) FROM und) AS n_edges, n_wedges, n_triangles
-         |FROM cw ORDER BY n_nodes""".stripMargin,
-    "sim_lsh_topk" ->
+         |FROM cw ORDER BY n_nodes""".stripMargin)),
+    "sim_lsh_topk" -> Query(lshTopK, Some(
       s"""WITH b AS (SELECT vec_id, embedding, ${bucketSql("embedding")} AS bucket
          |           FROM embeddings),
          |q AS (SELECT embedding AS qv, bucket AS qb FROM b WHERE vec_id = 0)
          |SELECT b.vec_id, CAST(b.bucket AS BIGINT) AS bucket,
          |  ${cosineSql("b.embedding", "qv")} AS cos
          |FROM b, q WHERE b.bucket = q.qb
-         |ORDER BY cos DESC, vec_id LIMIT $K""".stripMargin,
-    "sim_lsh_multiprobe" -> {
+         |ORDER BY cos DESC, vec_id LIMIT $K""".stripMargin)),
+    "sim_lsh_multiprobe" -> Query(lshTopKMultiprobe, Some({
       val probes = ("qb" +: planes.indices.map(p => s"xor(qb, ${1L << p})"))
         .mkString("[", ", ", "]")
       s"""WITH b AS (SELECT vec_id, embedding, ${bucketSql("embedding")} AS bucket
@@ -1369,10 +1329,10 @@ object SimilarityQueries {
          |  ${cosineSql("b.embedding", "qv")} AS cos
          |FROM b JOIN p ON b.bucket = p.pb
          |ORDER BY cos DESC, vec_id LIMIT $K""".stripMargin
-    },
+    })),
     // truth / single / multi are the verbatim topk CTEs; recall joins
     // K-bounded id sets, denominator is the fixed K
-    "sim_ann_recall" -> {
+    "sim_ann_recall" -> Query(annRecall, Some({
       val probes = ("qb" +: planes.indices.map(p => s"xor(qb, ${1L << p})"))
         .mkString("[", ", ", "]")
       s"""WITH b AS (SELECT vec_id, embedding, ${bucketSql("embedding")} AS bucket
@@ -1396,27 +1356,27 @@ object SimilarityQueries {
          |SELECT method, n_retrieved, n_hits,
          |  round(CAST(n_hits AS DOUBLE) / $K, 9) AS recall
          |FROM s ORDER BY method""".stripMargin
-    },
+    })),
     // the kmeans Lloyd replay generalized with a subspace key, plus the
     // encode-vs-final-codebook assignment and the broadcast ADC table —
     // fit, encode and serve all replay bit-identically
-    "sim_pq_topk" ->
+    "sim_pq_topk" -> Query(pqTopK, Some(
       s"""WITH $pqCteSql
          |SELECT id AS vec_id, CAST(adc AS DOUBLE) / 1e18 AS adc_dist
-         |FROM s ORDER BY adc_dist, id LIMIT $PqTopK""".stripMargin,
+         |FROM s ORDER BY adc_dist, id LIMIT $PqTopK""".stripMargin)),
     // fixed-anchor cells + residual Lloyd + per-probed-cell ADC — the
     // full IVFADC funnel replays knot for knot
-    "sim_ivfpq_topk" ->
+    "sim_ivfpq_topk" -> Query(ivfPqTopK, Some(
       s"""WITH $ivfPqBaseCtes,
          |$ivfPqServeCtes
          |SELECT s.id AS vec_id, CAST(s.cell AS INTEGER) AS cell,
          |  CAST(adc AS DOUBLE) / 1e18 AS adc_dist
          |FROM s JOIN qc ON qc.cell = s.cell AND qc.crk <= $IvfPqProbe
-         |ORDER BY adc_dist, vec_id LIMIT $PqTopK""".stripMargin,
+         |ORDER BY adc_dist, vec_id LIMIT $PqTopK""".stripMargin)),
     // ratio-margin mining replay: 6-dp cosines, exact DECIMAL top-k
     // sums with counts carried (no decimal division), one 9-dp double
     // division; x-best candidates, mutual flag from the y-side argmax
-    "sim_bitext_margin" ->
+    "sim_bitext_margin" -> Query(bitextMargin, Some(
       s"""WITH xe AS (SELECT d.doc_id AS x_id, e.embedding AS v
          |  FROM documents d JOIN embeddings e ON e.vec_id = d.doc_id
          |  WHERE d.lang = 'en'),
@@ -1445,12 +1405,12 @@ object SimilarityQueries {
          |    JOIN yb USING (y_id))
          |SELECT x_id, y_id, CAST(cos AS DOUBLE) AS cos, margin, mutual
          |FROM m WHERE margin >= $BitextThreshold
-         |ORDER BY x_id""".stripMargin,
+         |ORDER BY x_id""".stripMargin)),
     // the nProbe sweep over the same fit: candidates = vectors in the
     // query's top-n cells, ranked by ADC; truth = exact raw-coordinate
     // L2 top-k. The all-cells row isolates pure PQ-residual error;
     // partial rows add cell-miss error on top.
-    "sim_ivfpq_recall" ->
+    "sim_ivfpq_recall" -> Query(ivfPqRecall, Some(
       s"""WITH $ivfPqBaseCtes,
          |$ivfPqServeCtes,
          |$exactL2Ctes,
@@ -1466,10 +1426,10 @@ object SimilarityQueries {
          |  count(*) AS n_retrieved, count(ext.id) AS n_hits,
          |  round(CAST(count(ext.id) AS DOUBLE) / $PqTopK, 9) AS recall
          |FROM ret LEFT JOIN ext ON ext.id = ret.id
-         |GROUP BY 1 ORDER BY n_probe""".stripMargin,
+         |GROUP BY 1 ORDER BY n_probe""".stripMargin)),
     // ADC top-10 and ADC-shortlist-50→exact-rerank top-10, each against
     // the exact L2 top-10 under the same 9-dp rounding
-    "sim_pq_recall" ->
+    "sim_pq_recall" -> Query(pqRecall, Some(
       s"""WITH $pqCteSql,
          |pqtop AS (SELECT id, CAST(adc AS DOUBLE) / 1e18 AS adc_dist
          |  FROM s ORDER BY adc_dist, id LIMIT $PqTopK),
@@ -1497,21 +1457,21 @@ object SimilarityQueries {
          |    (SELECT count(*) FROM rr JOIN ext USING (id)),
          |    round(CAST((SELECT count(*) FROM rr JOIN ext USING (id))
          |      AS DOUBLE) / $PqTopK, 9)
-         |) ORDER BY method""".stripMargin,
+         |) ORDER BY method""".stripMargin)),
     // relational Lloyd replay: per-round CTEs recompute exact-DECIMAL
     // distances (diff re-bounded to DECIMAL(14,9) before squaring, the
     // plan's precision-38 guard), argmin by min-struct (d, cid), and
     // centroid means as exact sums + ONE double division rounded 9 dp —
     // iteration state is bit-identical to the plan's
-    "sim_kmeans" ->
+    "sim_kmeans" -> Query(kmeans, Some(
       s"""WITH ${kmeansCtesSql(KmeansK, KmeansRounds)},
          |sz AS (SELECT cid, count(*) AS n_members
          |       FROM a$KmeansRounds GROUP BY 1)
          |SELECT c.cid, c.dim, CAST(c.c AS DOUBLE) AS centroid,
          |  coalesce(sz.n_members, 0) AS n_members
          |FROM c$KmeansRounds c LEFT JOIN sz USING (cid)
-         |ORDER BY cid, dim""".stripMargin,
-    "sim_centroids" ->
+         |ORDER BY cid, dim""".stripMargin)),
+    "sim_centroids" -> Query(centroids, Some(
       s"""WITH pe AS (
          |  SELECT label, i AS pos,
          |    CAST(round(embedding[i]::DOUBLE, 9) AS DECIMAL(12,9)) AS xd
@@ -1529,13 +1489,13 @@ object SimilarityQueries {
          |      FROM j GROUP BY label)
          |SELECT label, n_vecs, round(sqrt(norm2), 6) AS centroid_norm,
          |  round(dotg / (sqrt(norm2) * sqrt(gnorm2)), 6) AS cos_to_global
-         |FROM a ORDER BY label""".stripMargin,
-    "sim_knn_join" -> knnJoinSql,
+         |FROM a ORDER BY label""".stripMargin)),
+    "sim_knn_join" -> Query(knnJoin, Some(knnJoinSql)),
     // probing all cells degenerates the batch probe to the exact k-NN join
-    "sim_ivf_knn" -> knnJoinSql,
+    "sim_ivf_knn" -> Query(ivfKnn, Some(knnJoinSql)),
     // a corpus row has ONE bucket and a query's probe buckets are distinct,
     // so the probe join yields each (query, corpus) pair at most once
-    "sim_lsh_knn" -> {
+    "sim_lsh_knn" -> Query(lshKnn, Some({
       val probes = ("qb" +: planes.indices.map(p => s"xor(qb, ${1L << p})"))
         .mkString("[", ", ", "]")
       s"""WITH b AS (SELECT vec_id, embedding, ${bucketSql("embedding")} AS bucket
@@ -1552,18 +1512,18 @@ object SimilarityQueries {
          |SELECT q_id, CAST(rank AS BIGINT) AS rank, vec_id,
          |  CAST(bucket AS BIGINT) AS bucket, cos
          |FROM r WHERE rank <= $KnnK ORDER BY q_id, rank""".stripMargin
-    },
+    })),
     // the pageRank replay discipline: per-round DECIMAL(18,9) state,
     // contributions rounded 12dp into exact sums, norm = sqrt of an exact
     // sum (irrational — never on a rounding boundary)
-    "sim_top_eigvec" ->
+    "sim_top_eigvec" -> Query(topEigvec, Some(
       s"""WITH $eigCteSql
          |SELECT vv.j AS pos, CAST(vv.v AS DOUBLE) AS loading,
          |  round(nrm, 9) AS eigenvalue
-         |FROM v$EigIters vv, n$EigIters ORDER BY pos""".stripMargin,
+         |FROM v$EigIters vv, n$EigIters ORDER BY pos""".stripMargin)),
     // fit + transform: the SAME eigvec CTEs, then one projection join —
     // contributions round 12dp into exact sums, score rounds 6dp
-    "sim_pca_project" ->
+    "sim_pca_project" -> Query(pcaProject, Some(
       s"""WITH $eigCteSql,
          |px AS (SELECT vec_id AS id, i AS pos, embedding[i]::DOUBLE AS x
          |       FROM embeddings,
@@ -1572,10 +1532,10 @@ object SimilarityQueries {
          |  round(CAST(sum(CAST(round(x * CAST(vv.v AS DOUBLE), 12)
          |    AS DECIMAL(38,12))) AS DOUBLE), 6) AS score
          |FROM px JOIN v$EigIters vv ON px.pos = vv.j
-         |GROUP BY id ORDER BY id""".stripMargin,
+         |GROUP BY id ORDER BY id""".stripMargin)),
     // the same 1-based prefix slice on both engines; both stages round 6dp
     // with id tie-breaks
-    "sim_prefix_rerank" -> {
+    "sim_prefix_rerank" -> Query(prefixRerank, Some({
       val p = s"[1:$PrefixDims]"
       s"""WITH q AS (SELECT embedding AS qe FROM embeddings
          |           WHERE vec_id = 0),
@@ -1590,10 +1550,10 @@ object SimilarityQueries {
          |SELECT id, cos_prefix, cos,
          |  CAST(row_number() OVER (ORDER BY cos DESC, id) AS BIGINT) AS rank
          |FROM r ORDER BY rank LIMIT $BinaryK""".stripMargin
-    },
+    })),
     // same exact-DECIMAL per-dim means, the same strict v > m bit rule and
     // 32-bit half packing, two xor+bit_count Hamming, cosine re-rank
-    "sim_binary_topk" ->
+    "sim_binary_topk" -> Query(binaryTopK, Some(
       s"""WITH pe AS (
          |  SELECT vec_id, i - 1 AS dim, embedding[i]::DOUBLE AS v
          |  FROM embeddings, UNNEST(generate_series(1, $Dim)) u(i)),
@@ -1621,8 +1581,8 @@ object SimilarityQueries {
          |      FROM cand JOIN embeddings USING (vec_id), qv)
          |SELECT id, hamming, cos,
          |  CAST(row_number() OVER (ORDER BY cos DESC, id) AS BIGINT) AS rank
-         |FROM r ORDER BY rank LIMIT $BinaryK""".stripMargin,
-    "sim_int8_quant" ->
+         |FROM r ORDER BY rank LIMIT $BinaryK""".stripMargin)),
+    "sim_int8_quant" -> Query(int8Quant, Some(
       s"""WITH pe AS (
          |  SELECT i - 1 AS dim, embedding[i]::DOUBLE AS v
          |  FROM embeddings, UNNEST(generate_series(1, $Dim)) u(i)),
@@ -1637,5 +1597,6 @@ object SimilarityQueries {
          |  round(min(mn), 6) AS mn, round(max(mx), 6) AS mx,
          |  CAST(sum(code) AS BIGINT) AS code_sum,
          |  min(code) AS code_min, max(code) AS code_max
-         |FROM c GROUP BY dim ORDER BY dim""".stripMargin)
+         |FROM c GROUP BY dim ORDER BY dim""".stripMargin)),
+    "sim_ivf_topk" -> Query(ivfTopK, None))
 }

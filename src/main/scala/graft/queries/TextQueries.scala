@@ -965,59 +965,6 @@ object TextQueries {
         UnigramMaxWordLen)
       .orderBy("piece")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_unigram_lm" -> unigramLm,
-    "text_bpe_learn" -> bpeLearn,
-    "text_bpe_encode" -> bpeEncode,
-    "text_posting_lists" -> postingLists,
-    "text_normalize" -> normalizeText,
-    "text_lang_overlap" -> langOverlap,
-    "text_script_profile" -> scriptProfile,
-    "text_vocab" -> vocab,
-    "text_vocab_encode" -> vocabEncode,
-    "text_token_fertility" -> tokenFertility,
-    "text_gopher_filter" -> gopherFilter,
-    "text_heavy_hitters" -> heavyHitters,
-    "text_nb_classifier" -> nbLangId,
-    "text_nb_crossval" -> nbCrossVal,
-    "text_label_noise" -> labelNoise,
-    "text_nb_learning_curve" -> nbLearningCurve,
-    "text_sgd_classifier" -> sgdClassifier,
-    "text_sgd_calibrated" -> sgdCalibrated,
-    "text_sgd_attribution" -> sgdAttributionQ,
-    "text_sgd_learning_curve" -> sgdLearningCurveQ,
-    "text_dup_ngram_coverage" -> dupCoverage,
-    "text_bigram_lm" -> bigramLm,
-    "text_domain_hardness" -> domainHardnessQ,
-    "text_domain_hardness_cv" -> domainHardnessCvQ,
-    "text_domain_hardness_cvp" -> domainHardnessCvPooledQ,
-    "text_kn_bigram" -> knBigram,
-    "text_ccnet_buckets" -> ccnetBuckets,
-    "text_compression_ratio" -> compressionRatioQ,
-    "text_wordpiece_encode" -> wordpieceEncodeQ,
-    "text_js_divergence" -> jsDivergence,
-    "text_subword_buckets" -> subwordBuckets,
-    "text_lang_mixing" -> langMixing,
-    "text_lm_generate" -> lmGenerate,
-    "text_novelty" -> novelty,
-    "text_repetition" -> repetition,
-    "text_token_stats" -> tokenStats,
-    "text_ngram_loop" -> ngramLoopQ,
-    "text_regex_tokens" -> regexTokens,
-    "text_quality_score" -> qualityScore,
-    "text_readability" -> readability,
-    "text_zipf_fit" -> zipf,
-    "text_vocab_growth" -> vocabGrowth,
-    "text_heaps_fit" -> heaps,
-    "text_textrank" -> textrank,
-    "text_bool_retrieval" -> boolRetrieval,
-    "text_blocklist_filter" -> blocklist,
-    "text_lang_id" -> langId,
-    "text_token_frequencies" -> tokenFrequencies,
-    "text_edit_distance" -> editDistance,
-    "text_fingerprint" -> fingerprint,
-    "text_bm25_topk" -> bm25)
-
   // ---- oracle SQL -------------------------------------------------------------
 
   // unrolled BPE merge rounds s0→s4, each replaying one
@@ -1216,9 +1163,9 @@ object TextQueries {
          |  FROM sc GROUP BY 1, 2)""".stripMargin
 
 
-  val oracle: Map[String, String] = Map(
+  val registry: Map[String, Query] = Map(
     // ordered pairs a < b over the distinct (lang, token) relation
-    "text_lang_overlap" ->
+    "text_lang_overlap" -> Query(langOverlap, Some(
       s"""WITH $toksCte,
          |gt AS (SELECT DISTINCT lang AS g, unnest(toks) AS term FROM d),
          |sz AS (SELECT g, count(*) AS n FROM gt GROUP BY g),
@@ -1229,9 +1176,9 @@ object TextQueries {
          |  round(CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common), 9)
          |    AS jaccard
          |FROM it JOIN sz sa ON group_a = sa.g JOIN sz sb ON group_b = sb.g
-         |ORDER BY group_a, group_b""".stripMargin,
+         |ORDER BY group_a, group_b""".stripMargin)),
     // same augmentation + RE2 character classes verbatim ('g' for global)
-    "text_normalize" ->
+    "text_normalize" -> Query(normalizeText, Some(
       """WITH a AS (SELECT doc_id,
         |    upper(substr(text, 1, 30)) || ' -- ' || text || ' !!END??' AS t
         |  FROM documents),
@@ -1242,9 +1189,9 @@ object TextQueries {
         |  FROM a)
         |SELECT doc_id, CAST(length(norm) AS BIGINT) AS norm_len,
         |  norm <> t AS changed, md5(norm) AS norm_digest
-        |FROM n ORDER BY doc_id""".stripMargin,
+        |FROM n ORDER BY doc_id""".stripMargin)),
     // per-doc DISTINCT terms before the explode; postings = sorted slice
-    "text_posting_lists" ->
+    "text_posting_lists" -> Query(postingLists, Some(
       s"""WITH $toksCte,
          |pd AS (SELECT DISTINCT doc_id, unnest(toks) AS term FROM d),
          |tf AS (SELECT term, count(*) AS total_tf
@@ -1255,11 +1202,11 @@ object TextQueries {
          |SELECT pl.term, doc_freq, CAST(total_tf AS BIGINT) AS total_tf,
          |  array_to_string(list_transform(postings, x -> x::VARCHAR), ',')
          |    AS postings_csv
-         |FROM pl JOIN tf USING (term) ORDER BY pl.term""".stripMargin,
+         |FROM pl JOIN tf USING (term) ORDER BY pl.term""".stripMargin)),
     // character classes shared verbatim with the Spark expressions;
     // counts are length-diffs after global regexp_replace ('g' flag —
     // DuckDB replaces only the first match without it)
-    "text_script_profile" ->
+    "text_script_profile" -> Query(scriptProfile, Some(
       """WITH c AS (SELECT lang, length(text) AS nc,
         |    length(text) - length(regexp_replace(text, '[A-Za-z]', '',
         |      'g')) AS nl,
@@ -1292,10 +1239,10 @@ object TextQueries {
         |  CASE WHEN sum(nc) > 0
         |    THEN round(CAST(sum(na) AS DOUBLE) / sum(nc), 9) END
         |    AS nonascii_ratio
-        |FROM c GROUP BY lang ORDER BY lang""".stripMargin,
+        |FROM c GROUP BY lang ORDER BY lang""".stripMargin)),
     // the two-phase (count, term-prefix) ranking ≡ one global
     // row_number over (count desc, term)
-    "text_vocab" ->
+    "text_vocab" -> Query(vocab, Some(
       s"""WITH $toksCte,
          |t AS (SELECT unnest(toks) AS term FROM d),
          |c AS (SELECT term, count(*) AS term_count FROM t GROUP BY 1
@@ -1303,8 +1250,8 @@ object TextQueries {
          |SELECT term, term_count,
          |  CAST(row_number() OVER (ORDER BY term_count DESC, term)
          |    AS BIGINT) AS term_id
-         |FROM c ORDER BY term_id""".stripMargin,
-    "text_vocab_encode" ->
+         |FROM c ORDER BY term_id""".stripMargin)),
+    "text_vocab_encode" -> Query(vocabEncode, Some(
       s"""WITH $toksCte,
          |t AS (SELECT unnest(toks) AS term FROM d),
          |c AS (SELECT term, count(*) AS term_count FROM t GROUP BY 1
@@ -1319,10 +1266,10 @@ object TextQueries {
          |  WHERE doc_id < 20)
          |SELECT id, pos, e.term, coalesce(v.term_id, 0) AS term_id
          |FROM e LEFT JOIN v ON e.term = v.term
-         |ORDER BY id, pos""".stripMargin,
+         |ORDER BY id, pos""".stripMargin)),
     // strlen = bytes in DuckDB (Spark's octet_length); sums exact longs,
     // ratios one rounded IEEE division each
-    "text_token_fertility" ->
+    "text_token_fertility" -> Query(tokenFertility, Some(
       s"""WITH $toksCte,
          |m AS (SELECT lang,
          |  CAST(len(toks) AS BIGINT) AS nt,
@@ -1338,11 +1285,11 @@ object TextQueries {
          |  round(CAST(sum(nb) AS DOUBLE)
          |    / greatest(CAST(sum(nt) AS BIGINT), 1), 9) AS bytes_per_token,
          |  round(CAST(sum(nt) AS DOUBLE) / count(*), 9) AS tokens_per_doc
-         |FROM m GROUP BY lang ORDER BY lang""".stripMargin,
+         |FROM m GROUP BY lang ORDER BY lang""".stripMargin)),
     // mirrors gopherRules' per-row expressions: single-space tokenizer,
     // Σ token length ≡ non-space chars, alpha tokens via ONE
     // regexp_extract_all, thresholds inlined identically
-    "text_gopher_filter" -> {
+    "text_gopher_filter" -> Query(gopherFilter, Some({
       val stops = Profiles.toMap.apply("en").map(w => s"'$w'")
         .mkString("[", ",", "]")
       s"""WITH $toksCte,
@@ -1370,12 +1317,12 @@ object TextQueries {
          |  stop_hits, CAST(mask AS BIGINT) AS drop_mask,
          |  mask = 0 AS keep
          |FROM f ORDER BY doc_id""".stripMargin
-    },
+    })),
     // fold models by count subtraction (total − fold), add-one smoothing
     // on the subtracted counts, priors over training docs only (a class
     // with zero training docs for a fold is dropped — it cannot be
     // predicted); accuracy = ONE division of two exact integers
-    "text_nb_crossval" ->
+    "text_nb_crossval" -> Query(nbCrossVal, Some(
       s"""$nbCvCtes
          |SELECT best.fold AS fold, count(*) AS n_test,
          |  CAST(sum(CASE WHEN best.b.y = d.lang THEN 1 ELSE 0 END)
@@ -1383,12 +1330,12 @@ object TextQueries {
          |  CAST(sum(CASE WHEN best.b.y = d.lang THEN 1 ELSE 0 END)
          |      AS DOUBLE) / CAST(count(*) AS DOUBLE) AS accuracy
          |FROM best JOIN d USING (doc_id)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+         |GROUP BY 1 ORDER BY 1""".stripMargin)),
     // same held-out scores, per-doc view: suspects are docs whose
     // fold-held-out argmax disagrees with the label; the margin is an
     // exact DECIMAL difference of the two scores. A label class with no
     // training docs in the fold leaves label/margin bits NULL
-    "text_label_noise" ->
+    "text_label_noise" -> Query(labelNoise, Some(
       s"""$nbCvCtes,
          |own AS (SELECT sc.doc_id, sc.score AS os
          |  FROM sc JOIN d USING (doc_id) WHERE sc.lang = d.lang)
@@ -1399,12 +1346,12 @@ object TextQueries {
          |  round(CAST(best.b.s - own.os AS DOUBLE), 6) AS margin_bits
          |FROM best JOIN d USING (doc_id)
          |LEFT JOIN own ON own.doc_id = best.doc_id
-         |WHERE best.b.y <> d.lang ORDER BY doc_id""".stripMargin,
+         |WHERE best.b.y <> d.lang ORDER BY doc_id""".stripMargin)),
     // nested-training learning curve: ONE (stratum, class, bucket) count
     // cube; level models are sums over the level→stratum map; test docs
     // (the last stratum) score against every level's broadcast grid;
     // accuracy = ONE division of two exact integers
-    "text_nb_learning_curve" -> {
+    "text_nb_learning_curve" -> Query(nbLearningCurve, Some({
       val lmValues = LcLevels
         .flatMap(l => (0 until l).map(s => s"($l, $s)")).mkString(", ")
       s"""WITH d AS (SELECT doc_id, lang,
@@ -1466,22 +1413,23 @@ object TextQueries {
          |FROM best JOIN d USING (doc_id)
          |JOIN ldt ON ldt.level = best.level
          |GROUP BY 1 ORDER BY 1""".stripMargin
-    },
+    })),
     // the GD loop unrolled: every iteration is exact HUGEINT arithmetic
     // (nano-unit weights, sign-explicit truncating divisions), so the
     // replay is bit-identical — no rounding surface anywhere
-    "text_sgd_classifier" -> sgdOracleSql,
-    "text_sgd_calibrated" -> sgdCalibratedOracleSql,
+    "text_sgd_classifier" -> Query(sgdClassifier, Some(sgdOracleSql)),
+    "text_sgd_calibrated" -> Query(sgdCalibrated, Some(sgdCalibratedOracleSql)),
     // the same exact-HUGEINT GD replay with the level key riding every
     // iteration CTE; held-out accuracy per nested training level
-    "text_sgd_learning_curve" -> sgdLcOracleSql,
+    "text_sgd_learning_curve" -> Query(sgdLearningCurveQ, Some(sgdLcOracleSql)),
     // same unrolled training replay + one attribution join; every value
     // is an exact integer, argmax by (|contribution|, -bucket) struct
-    "text_sgd_attribution" -> sgdAttributionOracleSql,
+    "text_sgd_attribution" -> Query(sgdAttributionQ,
+      Some(sgdAttributionOracleSql)),
     // add-one NB over a dense (lang × 64-bucket) grid; scores are exact
     // DECIMAL sums of 9dp contributions + a 9dp log-prior; argmax ties to
     // the lexicographically last class via max-struct
-    "text_nb_classifier" ->
+    "text_nb_classifier" -> Query(nbLangId, Some(
       s"""WITH d AS (SELECT doc_id, lang,
          |  list_filter(string_split(text, ' '), x -> x <> '') AS toks
          |  FROM documents),
@@ -1515,11 +1463,11 @@ object TextQueries {
          |         FROM sc GROUP BY 1)
          |SELECT doc_id, b.y AS predicted,
          |  round(CAST(b.s AS DOUBLE), 6) AS best_bits
-         |FROM best ORDER BY doc_id""".stripMargin,
+         |FROM best ORDER BY doc_id""".stripMargin)),
     // positioned trigrams as strings (engine-internal hashes never cross
     // the oracle boundary — only counts do); docs with < 3 tokens have no
     // positions and produce no row on either side
-    "text_dup_ngram_coverage" ->
+    "text_dup_ngram_coverage" -> Query(dupCoverage, Some(
       s"""WITH $toksCte,
          |g AS (SELECT doc_id,
          |  CASE WHEN len(toks) >= 3
@@ -1536,37 +1484,37 @@ object TextQueries {
          |  round(sum(CASE WHEN df >= 2 THEN c ELSE 0 END)::DOUBLE / sum(c), 6)
          |    AS dup_coverage
          |FROM c JOIN dfr USING (gram)
-         |GROUP BY 1 ORDER BY doc_id""".stripMargin,
+         |GROUP BY 1 ORDER BY doc_id""".stripMargin)),
     // add-one-smoothed bigram LM fitted on the corpus itself; per-position
     // bit contributions round to 9 dp, scale by the doc's (w1,w2) count
     // (exact decimal), and sum exactly — the mean is order-independent
     // held-out per-domain hardness: train-fold model, fold-3 scoring,
     // LEFT joins carry unseen contexts on the smoothing floor
-    "text_domain_hardness" ->
+    "text_domain_hardness" -> Query(domainHardnessQ, Some(
       s"""WITH $domainHardnessCtes
          |SELECT source, n_docs, n_bigrams, bits_per_token
-         |FROM h ORDER BY source""".stripMargin,
+         |FROM h ORDER BY source""".stripMargin)),
     // full-rotation CV: fold f's train model = total − fold-f counts
     // (leave-one-fold-out by arithmetic — INNER joins, the row itself
     // always contributes to both aggregates); V_f = V_all − tokens
     // exclusive to f via the (token → min/max fold) aggregate
-    "text_domain_hardness_cv" ->
+    "text_domain_hardness_cv" -> Query(domainHardnessCvQ, Some(
       s"""WITH $domainHardnessCvCtes
          |SELECT source, fold, count(DISTINCT doc_id) AS n_docs,
          |  CAST(sum(c) AS BIGINT) AS n_bigrams,
          |  round(CAST(sum(bits * c) AS DOUBLE) / sum(c), 6)
          |    AS bits_per_token
-         |FROM cvct GROUP BY 1, 2 ORDER BY source, fold""".stripMargin,
+         |FROM cvct GROUP BY 1, 2 ORDER BY source, fold""".stripMargin)),
     // the rotation POOLED per domain — 4× the held-out mass, the
     // tighter DoReMi input
-    "text_domain_hardness_cvp" ->
+    "text_domain_hardness_cvp" -> Query(domainHardnessCvPooledQ, Some(
       s"""WITH $domainHardnessCvCtes
          |SELECT source, count(DISTINCT doc_id) AS n_docs,
          |  CAST(sum(c) AS BIGINT) AS n_bigrams,
          |  round(CAST(sum(bits * c) AS DOUBLE) / sum(c), 6)
          |    AS bits_per_token
-         |FROM cvct GROUP BY 1 ORDER BY source""".stripMargin,
-    "text_bigram_lm" ->
+         |FROM cvct GROUP BY 1 ORDER BY source""".stripMargin)),
+    "text_bigram_lm" -> Query(bigramLm, Some(
       s"""WITH $toksCte,
          |g AS (SELECT doc_id,
          |  CASE WHEN len(toks) >= 2
@@ -1587,11 +1535,11 @@ object TextQueries {
          |      FROM occ JOIN bc USING (w1, w2) JOIN uc USING (w1), v)
          |SELECT doc_id, sum(c)::BIGINT AS n_bigrams,
          |  round(CAST(sum(bits * c) AS DOUBLE) / sum(c), 6) AS bits_per_token
-         |FROM ct GROUP BY 1 ORDER BY doc_id""".stripMargin,
+         |FROM ct GROUP BY 1 ORDER BY doc_id""".stripMargin)),
     // exact categorical sampling replay: cumulative-count ranges per
     // context, md5(seed|r) mod tot lands in ONE range per step; dead
     // ends carry via the per-round anti-join union
-    "text_lm_generate" -> {
+    "text_lm_generate" -> Query(lmGenerate, Some({
       val steps = (1 to GenLength).map { r =>
         s"""s$r AS (SELECT f.seed, m.w2 AS cur,
            |    f.generated || ' ' || m.w2 AS generated,
@@ -1622,11 +1570,11 @@ object TextQueries {
          |$steps
          |SELECT seed, generated, steps FROM f$GenLength
          |ORDER BY seed""".stripMargin
-    },
+    })),
     // chunk by token count (the dedup_chunks cut), per-chunk argmax via
     // the shared maxScore/predicted CASE machinery, majority by
     // max-struct (count, lang) — ties to the later language code
-    "text_lang_mixing" -> {
+    "text_lang_mixing" -> Query(langMixing, Some({
       val N = MixChunkTokens
       s"""WITH $toksCte,
          |c AS (SELECT doc_id, list_slice(toks, i + 1, i + $N) AS toks
@@ -1646,10 +1594,10 @@ object TextQueries {
          |    AS majority_ratio,
          |  n_langs > 1 AS mixed
          |FROM m ORDER BY doc_id""".stripMargin
-    },
+    })),
     // boundary-marked char n-grams by substr over the bracketed term;
     // bucket on the shared md5 idiom
-    "text_subword_buckets" ->
+    "text_subword_buckets" -> Query(subwordBuckets, Some(
       s"""WITH tk AS (SELECT DISTINCT
          |    unnest(list_filter(string_split(text, ' '), x -> x <> ''))
          |      AS term
@@ -1662,11 +1610,11 @@ object TextQueries {
          |SELECT term, pos, ngram,
          |  ('0x' || substr(md5(ngram), 1, 12))::BIGINT % $SubwordBuckets
          |    AS bucket
-         |FROM g ORDER BY term, pos""".stripMargin,
+         |FROM g ORDER BY term, pos""".stripMargin)),
     // add-one-smoothed hashed-bucket distributions on the dense grid;
     // per-bucket JS contributions spend the plan's exact IEEE sequence
     // (m inlined as (p+q)/2), round 9 dp, exact-DECIMAL sum, 6 dp out
-    "text_js_divergence" -> {
+    "text_js_divergence" -> Query(jsDivergence, Some({
       val B = JsBuckets
       val ln2 = math.log(2.0)
       s"""WITH tk AS (SELECT lang AS slice,
@@ -1701,7 +1649,7 @@ object TextQueries {
          |  max(tb) AS n_tokens_b,
          |  round(CAST(sum(cb) AS DOUBLE), 6) AS js_bits
          |FROM c GROUP BY 1, 2 ORDER BY slice_a, slice_b""".stripMargin
-    },
+    })),
     // KN probability as ONE exact integer rational (d = 3/4):
     // p = ((4c12−3)B + 3·n1p·nc) / (4·c1·B); only the final ln is IEEE,
     // ln2 inlined as the same Scala double literal as the plan's
@@ -1709,7 +1657,7 @@ object TextQueries {
     // against the vocab VALUES, per-position best by max L, then a
     // recursive walk accumulating the piece string; a word whose walk
     // never reaches its length is the single [UNK]
-    "text_wordpiece_encode" -> {
+    "text_wordpiece_encode" -> Query(wordpieceEncodeQ, Some({
       val vocabVals = WpVocab.map(p => s"'$p'").mkString("[", ", ", "]")
       s"""WITH RECURSIVE vocab AS (SELECT unnest($vocabVals) AS p),
          |w AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+')
@@ -1752,10 +1700,10 @@ object TextQueries {
          |  md5(string_agg(pieces, ' ' ORDER BY wd.word_id)) AS enc_digest
          |FROM wd JOIN enc USING (word)
          |GROUP BY 1 ORDER BY doc_id""".stripMargin
-    },
+    })),
     // the kn replay with lang threaded through every model key, then the
     // per-language ntile(3) cut — fit, score and bucket all replay
-    "text_ccnet_buckets" ->
+    "text_ccnet_buckets" -> Query(ccnetBuckets, Some(
       s"""WITH $toksCte,
          |g AS (SELECT doc_id, lang,
          |  CASE WHEN len(toks) >= 2
@@ -1792,8 +1740,8 @@ object TextQueries {
          |      ORDER BY bits_per_token, doc_id)
          |    WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END
          |    AS bucket
-         |FROM bt ORDER BY slice, bits_per_token, doc_id""".stripMargin,
-    "text_kn_bigram" ->
+         |FROM bt ORDER BY slice, bits_per_token, doc_id""".stripMargin)),
+    "text_kn_bigram" -> Query(knBigram, Some(
       s"""WITH $toksCte,
          |g AS (SELECT doc_id,
          |  CASE WHEN len(toks) >= 2
@@ -1822,10 +1770,10 @@ object TextQueries {
          |SELECT doc_id, sum(c)::BIGINT AS n_bigrams,
          |  round(CAST(sum(bits * c) AS DOUBLE) / sum(c), 6)
          |    AS bits_per_token
-         |FROM ct GROUP BY 1 ORDER BY doc_id""".stripMargin,
+         |FROM ct GROUP BY 1 ORDER BY doc_id""".stripMargin)),
     // per-token bit contributions round to 9 dp and sum in exact DECIMAL —
     // the mean is order-independent; ln2 prints with round-trip precision
-    "text_novelty" ->
+    "text_novelty" -> Query(novelty, Some(
       s"""WITH $toksCte,
          |tok AS (SELECT DISTINCT doc_id, unnest(list_distinct(toks)) AS token
          |        FROM d),
@@ -1838,8 +1786,8 @@ object TextQueries {
          |SELECT doc_id, count(*) AS n_grams,
          |  round(CAST(sum(bits) AS DOUBLE) / count(*), 6) AS novelty_bits
          |FROM c WHERE doc_id < 50
-         |GROUP BY 1 ORDER BY doc_id""".stripMargin,
-    "text_repetition" ->
+         |GROUP BY 1 ORDER BY doc_id""".stripMargin)),
+    "text_repetition" -> Query(repetition, Some(
       s"""WITH $toksCte,
          |g AS (SELECT doc_id,
          |  CASE WHEN len(toks) >= 2
@@ -1855,10 +1803,10 @@ object TextQueries {
          |  round(CASE WHEN len(grams) > 0 THEN
          |    (len(grams) - len(list_distinct(grams)))::DOUBLE / len(grams)
          |    ELSE 0.0 END, 6) AS dup_ngram_frac
-         |FROM g ORDER BY doc_id""".stripMargin,
+         |FROM g ORDER BY doc_id""".stripMargin)),
     // the naive doc-containment join IS the truth the kernel's
     // merge-intersect must reproduce
-    "text_bool_retrieval" -> {
+    "text_bool_retrieval" -> Query(boolRetrieval, Some({
       val vals = BoolPairs.map { case (a, b) => s"('$a', '$b')" }
         .mkString(", ")
       s"""WITH $toksCte,
@@ -1880,11 +1828,11 @@ object TextQueries {
          |       LEFT JOIN nb ON nb.term_a = q.term_a
          |         AND nb.term_b = q.term_b
          |ORDER BY q.term_a, q.term_b""".stripMargin
-    },
+    })),
     // the SAME unrolled-pageRank CTE chain as feat_pagerank, over the
     // window-2 word co-occurrence edges; ties at equal 9-dp rank break
     // by word
-    "text_textrank" -> {
+    "text_textrank" -> Query(textrank, Some({
       val e = """e AS (SELECT DISTINCT a AS src, b AS dst FROM (
                 |  SELECT x.w AS a, y.w AS b
                 |  FROM tp x JOIN tp y ON x.doc_id = y.doc_id
@@ -1900,9 +1848,9 @@ object TextQueries {
          |${graft.queries.FeatureQueries.pageRankUnrolledCtes(e)}
          |SELECT node, CAST(r AS DOUBLE) AS rank
          |FROM r3 ORDER BY rank DESC, node LIMIT 20""".stripMargin
-    },
+    })),
     // explode-once + lexicon join; hit ratio unrounded (one division)
-    "text_blocklist_filter" -> {
+    "text_blocklist_filter" -> Query(blocklist, Some({
       val lex = Blocklist.map(w => s"('$w')").mkString(", ")
       s"""WITH $toksCte,
          |lex(term) AS (VALUES $lex),
@@ -1918,12 +1866,12 @@ object TextQueries {
          |  coalesce(nh, 0) = 0 AS keep
          |FROM d LEFT JOIN h USING (doc_id)
          |ORDER BY id""".stripMargin
-    },
+    })),
     // ln values round 9 dp (irrational) then widen to nano integers;
     // every moment combination exact in HUGEINT; slope/r2/intercept are
     // fixed-sequence double arithmetic, emitted unrounded (the shared
     // logLogOlsSql tail — TextAnalysis.logLogOls's verbatim twin)
-    "text_zipf_fit" ->
+    "text_zipf_fit" -> Query(zipf, Some(
       s"""WITH $toksCte,
          |t AS (SELECT unnest(toks) AS term FROM d),
          |c AS (SELECT term, count(*) AS cnt FROM t GROUP BY 1),
@@ -1932,28 +1880,28 @@ object TextQueries {
          |    cnt AS y FROM c),
          |${logLogOlsSql("pts")}
          |SELECT n_points AS n_terms, slope, intercept, r2
-         |FROM ols""".stripMargin,
+         |FROM ols""".stripMargin)),
     // exact-order-statistic boundaries (rank = (g·n) div G), first-doc
     // vocabulary counts, G-row fan-out joins
-    "text_vocab_growth" ->
+    "text_vocab_growth" -> Query(vocabGrowth, Some(
       s"""WITH $toksCte,
          |${vocabGrowthCtes(HeapsCheckpoints)}
          |SELECT CAST(g AS BIGINT) AS g, bound AS boundary_id,
          |  CAST(n_docs AS BIGINT) AS n_docs, n_tokens,
          |  coalesce(vocab, 0)::BIGINT AS vocab
-         |FROM perg LEFT JOIN vg USING (g) ORDER BY g""".stripMargin,
-    "text_heaps_fit" ->
+         |FROM perg LEFT JOIN vg USING (g) ORDER BY g""".stripMargin)),
+    "text_heaps_fit" -> Query(heaps, Some(
       s"""WITH $toksCte,
          |${vocabGrowthCtes(HeapsCheckpoints)},
          |pts AS (SELECT n_tokens AS x, coalesce(vocab, 0) AS y
          |  FROM perg LEFT JOIN vg USING (g)),
          |${logLogOlsSql("pts")}
          |SELECT n_points, slope AS beta, intercept AS ln_k, r2
-         |FROM ols""".stripMargin,
+         |FROM ols""".stripMargin)),
     // pure character-class counting (terminator chars, collapsed vowel
     // runs, vowel-less words); the affine scores are emitted UNROUNDED
     // — fixed IEEE sequence on exact integers and shared literals
-    "text_readability" ->
+    "text_readability" -> Query(readability, Some(
       """WITH x AS (SELECT doc_id,
         |    greatest(len(list_filter(string_split(text, ' '),
         |      t -> t <> '')), 1)::BIGINT AS nw1,
@@ -1974,11 +1922,11 @@ object TextQueries {
         |  sy AS n_syllables,
         |  206.835 - 1.015 * wps - 84.6 * spw AS flesch,
         |  0.39 * wps + 11.8 * spw - 15.59 AS fk_grade
-        |FROM y ORDER BY id""".stripMargin,
+        |FROM y ORDER BY id""".stripMargin)),
     // positioned 3-grams via window leads (full grams only), counts per
     // (doc, gram), per-doc max-struct argmax (ties to the larger gram —
     // binary string compare both engines), integer cross-multiplied flag
-    "text_ngram_loop" ->
+    "text_ngram_loop" -> Query(ngramLoopQ, Some(
       s"""WITH d AS (SELECT doc_id,
          |    list_filter(string_split(text, ' '), t -> t <> '') AS toks
          |  FROM documents),
@@ -1997,15 +1945,15 @@ object TextQueries {
          |SELECT doc_id AS id, n_grams, CAST(top.c AS BIGINT) AS max_count,
          |  top.g AS top_gram, CAST(top.c AS DOUBLE) / n_grams AS loop_ratio,
          |  top.c * 100 >= n_grams * 50 AS is_loop
-         |FROM pd ORDER BY id""".stripMargin,
-"text_token_stats" ->
+         |FROM pd ORDER BY id""".stripMargin)),
+"text_token_stats" -> Query(tokenStats, Some(
       s"""WITH $toksCte
          |SELECT doc_id, len(toks)::BIGINT AS n_tokens,
          |  len(list_distinct(toks))::BIGINT AS n_distinct_tokens,
          |  CAST(coalesce(list_sum(list_transform(toks, t -> length(t))), 0) AS DOUBLE)
          |    / greatest(len(toks), 1) AS avg_token_len
-         |FROM d ORDER BY doc_id""".stripMargin,
-    "text_quality_score" ->
+         |FROM d ORDER BY doc_id""".stripMargin)),
+    "text_quality_score" -> Query(qualityScore, Some(
       s"""WITH $toksCte,
          |c AS (SELECT doc_id, len(toks)::BIGINT AS n_tokens,
          |  least(len(toks) / 20.0, 1.0) AS ls,
@@ -2017,8 +1965,8 @@ object TextQueries {
          |SELECT doc_id, n_tokens, round(ls, 6) AS length_score,
          |  round(dv, 6) AS diversity, round(nw, 6) AS non_word_ratio,
          |  round(ls * dv * (1.0 - nw), 6) AS quality_score
-         |FROM c ORDER BY doc_id""".stripMargin,
-    "text_lang_id" ->
+         |FROM c ORDER BY doc_id""".stripMargin)),
+    "text_lang_id" -> Query(langId, Some(
       s"""WITH $toksCte,
          |p AS (SELECT doc_id, lang, $maxScoreSql AS __m,
          |             round($maxScoreSql, 6) AS lang_score, toks FROM d),
@@ -2026,10 +1974,10 @@ object TextQueries {
          |SELECT lang, predicted_lang, count(*) AS n_docs,
          |  min(lang_score) AS min_score, max(lang_score) AS max_score
          |FROM x GROUP BY lang, predicted_lang
-         |ORDER BY lang, predicted_lang""".stripMargin,
+         |ORDER BY lang, predicted_lang""".stripMargin)),
     // exact heavy hitters; threshold is the integer cross-multiply
     // freq*k > n_total, never a double division
-    "text_heavy_hitters" ->
+    "text_heavy_hitters" -> Query(heavyHitters, Some(
       s"""WITH tok AS (
          |  SELECT t AS term
          |  FROM (SELECT unnest(string_split(text, ' ')) AS t FROM documents)
@@ -2038,16 +1986,16 @@ object TextQueries {
          |SELECT term, count(*) AS freq, n_total
          |FROM tok, tot GROUP BY term, n_total
          |HAVING count(*) * $HhK > n_total
-         |ORDER BY freq DESC, term""".stripMargin,
-    "text_token_frequencies" ->
+         |ORDER BY freq DESC, term""".stripMargin)),
+    "text_token_frequencies" -> Query(tokenFrequencies, Some(
       """WITH tok AS (
         |  SELECT doc_id AS id, t AS token
         |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents)
         |  WHERE t <> '')
         |SELECT token, count(*) AS freq, count(DISTINCT id) AS n_docs
         |FROM tok GROUP BY token
-        |ORDER BY freq DESC, token LIMIT 100""".stripMargin,
-    "text_regex_tokens" ->
+        |ORDER BY freq DESC, token LIMIT 100""".stripMargin)),
+    "text_regex_tokens" -> Query(regexTokens, Some(
       """WITH r AS (SELECT doc_id,
         |  regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]') AS t
         |  FROM documents)
@@ -2057,14 +2005,14 @@ object TextQueries {
         |    AS n_number_tokens,
         |  len(list_filter(t, x -> regexp_matches(x, '^[^a-z0-9]$')))::BIGINT
         |    AS n_punct_tokens
-        |FROM r ORDER BY doc_id""".stripMargin,
-    "text_edit_distance" ->
+        |FROM r ORDER BY doc_id""".stripMargin)),
+    "text_edit_distance" -> Query(editDistance, Some(
       """SELECT a.doc_id,
         |  levenshtein(substr(a.text, 1, 80), substr(b.text, 1, 80))::BIGINT
         |    AS edit_distance
         |FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1
-        |ORDER BY a.doc_id""".stripMargin,
-    "text_fingerprint" ->
+        |ORDER BY a.doc_id""".stripMargin)),
+    "text_fingerprint" -> Query(fingerprint, Some(
       s"""WITH $toksCte,
          |h AS (SELECT doc_id, list_transform(toks,
          |  t -> ('0x' || substr(md5(t), 1, 12))::BIGINT % ${TextAnalysis.FpMod}) AS hs
@@ -2073,16 +2021,16 @@ object TextQueries {
          |  CAST(list_reduce(list_prepend(0::BIGINT, hs),
          |    (h, x) -> (h * 31 + x) % ${TextAnalysis.FpMod}) AS BIGINT)
          |    AS doc_fingerprint
-         |FROM h ORDER BY doc_id""".stripMargin,
-    "text_bm25_topk" -> bm25Sql,
-    "text_bpe_encode" -> bpeSql,
-    "text_bpe_learn" -> bpeLearnSql,
+         |FROM h ORDER BY doc_id""".stripMargin)),
+    "text_bm25_topk" -> Query(bm25, Some(bm25Sql)),
+    "text_bpe_encode" -> Query(bpeEncode, Some(bpeSql)),
+    "text_bpe_learn" -> Query(bpeLearn, Some(bpeLearnSql)),
     // full fit replay: candidate inventory, top-`maxVocab` + single
     // chars, then per EM round a bounded recursion enumerating EVERY
     // segmentation of each ≤10-char word — the global (cost, path)
     // minimum equals the kernel's DP by the composable-tie-break
     // argument (separator chr(1) sorts below every letter)
-    "text_unigram_lm" -> {
+    "text_unigram_lm" -> Query(unigramLm, Some({
       val ln2 = math.log(2.0)
       val roundCtes = (1 to UnigramRounds).map { r =>
         s"""seg$r AS (
@@ -2138,7 +2086,8 @@ object TextQueries {
          |SELECT piece, CAST(length(piece) AS BIGINT) AS piece_len,
          |  used AS used_count, CAST(cost AS DOUBLE) AS cost_bits
          |FROM v$UnigramRounds ORDER BY piece""".stripMargin
-    })
+    })),
+    "text_compression_ratio" -> Query(compressionRatioQ, None))
 
   /** BPE LEARNING oracle: each round recounts adjacent pairs from the
     * previous state, takes the argmax (count DESC, then lexicographic
@@ -2205,7 +2154,7 @@ object TextQueries {
     * ([[SimilarityQueries]]) so both engines' lexical ranking comes from
     * one definition.
     */
-  // lazy: referenced by the `oracle` map declared above it (and by
+  // lazy: referenced by the `registry` map declared above it (and by
   // SimilarityQueries) — a strict val would still be null at that point
   private[queries] lazy val bm25Sql: String = {
       val in = Bm25Terms.map(t => s"'$t'").mkString(", ")

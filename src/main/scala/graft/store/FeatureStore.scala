@@ -227,7 +227,7 @@ final class FeatureStore(
     val all = listFeatureVersions().map(_.featureVersion)
     val doomed = all.drop(keepN)
     if (doomed.nonEmpty) {
-      val fs = new Path(basePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = hadoopFs()
       doomed.foreach { v =>
         fs.delete(new Path(s"$featuresPath/feature_version=$v"), true)
       }
@@ -291,11 +291,7 @@ final class FeatureStore(
     */
   def sketchQuantiles(percents: Seq[Int], columns: Seq[String] = Nil)
       : DataFrame = {
-    val fs = new Path(basePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new Path(sketchesPath)),
-      s"no persisted sketches under $sketchesPath — writeBatchSketches first")
-    val sk = spark.read.parquet(sketchesPath)
+    val sk = readSketches()
     val cols =
       if (columns.nonEmpty) columns
       else sk.select("column").distinct().collect()
@@ -347,8 +343,7 @@ final class FeatureStore(
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("feature_version")
           .parquet(featuresPath)
-      val fs = new Path(basePath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = hadoopFs()
       (touched.toSet -- stillThere).foreach { v =>
         fs.delete(new Path(s"$featuresPath/feature_version=$v"), true)
       }
@@ -366,19 +361,20 @@ final class FeatureStore(
     */
   def sketchDrift(current: DataFrame, column: String, buckets: Int = 10)
       : DataFrame = {
-    val fs = new Path(basePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new Path(sketchesPath)),
-      s"no persisted sketches under $sketchesPath — writeBatchSketches first")
-    val sk = spark.read.parquet(sketchesPath)
+    val sk = readSketches()
       .filter(col("column") === column).select("batch", "v", "cum")
     graft.ops.Drift.psiAgainstSketch(sk, current, column, buckets)
   }
 
+  /** The persisted sketch relation; fails fast when none was written. */
+  private def readSketches(): DataFrame = {
+    require(hadoopFs().exists(new Path(sketchesPath)),
+      s"no persisted sketches under $sketchesPath — writeBatchSketches first")
+    spark.read.parquet(sketchesPath)
+  }
+
   private def readSketchBatchIds(): Map[String, Long] = {
-    val fs = new Path(basePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(sketchesPath))) Map.empty
+    if (!hadoopFs().exists(new Path(sketchesPath))) Map.empty
     else spark.read.parquet(sketchesPath)
       .select("feature_version", "batch").distinct().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap

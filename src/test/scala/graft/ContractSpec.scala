@@ -2,11 +2,14 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
 /** Driver-contract meta-invariants: the correctness gate compares
   * `SparkEntry.queries` and `SparkEntry.oracleSql` BY NAME, so a key that
-  * drifts between the two maps silently downgrades a hash-checked query to
-  * rows-only (or orphans an oracle). Pinned here so registration mistakes
-  * fail in CI, not in the driver's artifact.
+  * drifts between the two derived maps silently downgrades a hash-checked
+  * query to rows-only (or orphans an oracle). Pinned here so registration
+  * mistakes fail in CI, not in a correctness run's artifact.
   */
 class ContractSpec extends AnyFunSuite {
 
@@ -25,23 +28,26 @@ class ContractSpec extends AnyFunSuite {
   }
 
   test("no duplicate names across query families (last-wins would shadow)") {
-    val families = Seq(
-      "parity" -> graft.queries.ParityQueries.queries.keySet,
-      "quality" -> graft.queries.QualityQueries.queries.keySet,
-      "relational" -> graft.queries.RelationalQueries.queries.keySet,
-      "dedup" -> graft.queries.DedupQueries.queries.keySet,
-      "similarity" -> graft.queries.SimilarityQueries.queries.keySet,
-      "text" -> graft.queries.TextQueries.queries.keySet,
-      "multimodal" -> graft.queries.MultimodalQueries.queries.keySet,
-      "scale" -> graft.queries.ScaleQueries.queries.keySet,
-      "prep" -> graft.queries.PrepQueries.queries.keySet,
-      "feature" -> graft.queries.FeatureQueries.queries.keySet,
-      "eval" -> graft.queries.EvalQueries.queries.keySet,
-      "model" -> graft.queries.ModelQueries.queries.keySet)
-    val dupes = families.flatMap { case (f, ks) => ks.map(_ -> f) }
+    val dupes = SparkEntry.families
+      .flatMap { case (f, registry) => registry.keys.map(_ -> f) }
       .groupBy(_._1).filter(_._2.size > 1)
     assert(dupes.isEmpty, s"query name registered by multiple families: " +
       dupes.map { case (k, v) => s"$k -> ${v.map(_._2)}" }.mkString(", "))
-    assert(SparkEntry.queries.size == families.map(_._2.size).sum)
+    assert(SparkEntry.queries.size == SparkEntry.families.map(_._2.size).sum)
+  }
+
+  test("the only main entry points in product code are the five tools " +
+      "(one-off probes live outside src/main)") {
+    val tools = Set("Verify", "Bench", "Demo", "PlanDump", "CountQueries")
+    val entryPoint = """\bdef main\s*\(|\bextends App\b""".r
+    val topObject = """(?m)^object (\w+)""".r
+    val mains = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(Files.readString(_))
+      .filter(entryPoint.findFirstIn(_).isDefined)
+      .flatMap(topObject.findAllMatchIn(_).map(_.group(1)))
+      .toSet
+    assert(mains == tools, s"unexpected: ${mains -- tools}, " +
+      s"missing: ${tools -- mains}")
   }
 }

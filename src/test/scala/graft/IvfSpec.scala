@@ -69,6 +69,36 @@ class IvfSpec extends AnyFunSuite {
     assert(a.centroids.length == 4 && b.centroids.length == 8)
   }
 
+  test("an input rewritten under the same file name changes the " +
+      "fingerprint and rebuilds the index over the new rows") {
+    import java.nio.file.{Files, StandardCopyOption}
+    val base = Files.createTempDirectory("graft_ivf_spec_rewrite")
+    val input = Files.createDirectories(base.resolve("emb"))
+    // each version lands as the SAME file name, input/part-0.parquet
+    def writeRows(n: Long): org.apache.spark.sql.DataFrame = {
+      val tmp = base.resolve(s"tmp_$n").toString
+      Tables.embeddings(spark, dir).filter($"vec_id" < n).coalesce(1)
+        .write.parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head.toPath
+      Files.copy(part, input.resolve("part-0.parquet"),
+        StandardCopyOption.REPLACE_EXISTING)
+      spark.read.parquet(input.toString)
+    }
+    val path = base.resolve("index").toString
+    Ivf.invalidateCache()
+    val before = writeRows(40)
+    val fpBefore = Ivf.indexFingerprint(before, "vec_id", "embedding", 4,
+      4096, 42L)
+    Ivf.buildCached(before, "vec_id", "embedding", 4, path)
+    val after = writeRows(60)
+    assert(after.inputFiles.toSeq == before.inputFiles.toSeq)
+    assert(Ivf.indexFingerprint(after, "vec_id", "embedding", 4, 4096,
+      42L) != fpBefore)
+    val index = Ivf.buildCached(after, "vec_id", "embedding", 4, path)
+    assert(spark.read.parquet(index.path).count() == 60L)
+  }
+
   test("corrupt or foreign disk artifact triggers a clean rebuild") {
     val emb = Tables.embeddings(spark, dir)
     val path = s"/tmp/graft_ivf_spec_corrupt_${System.nanoTime()}"

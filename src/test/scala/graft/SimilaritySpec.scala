@@ -472,6 +472,35 @@ class SimilaritySpec extends AnyFunSuite {
       r(1).getAs[Double]("centroid") == 0.0)
   }
 
+  test("kmeansFit: k above the distinct-id count fits one cluster per " +
+      "id; fittedCells and dbscanFitted assign only to those cells") {
+    val spark2 = spark
+    import spark2.implicits._
+    // 3 ids, k = 5: only 3 seeds exist, so only cids 0..2 may receive
+    // points — a centroid-less cid must never win the argmin
+    val pts = Seq((0L, Seq(1.0f, 0.0f)), (1L, Seq(0.0f, 2.0f)),
+      (2L, Seq(-3.0f, 0.5f)))
+    val emb = pts.toDF("vec_id", "embedding")
+    val fit = Similarity.kmeansFit(emb, "vec_id", "embedding", 5, 3)
+      .collect().map(r => (r.getAs[Long]("cid"), r.getAs[Long]("dim"),
+        r.getAs[Double]("centroid"), r.getAs[Long]("n_members")))
+    assert(fit.map(_._1).toSet == Set(0L, 1L, 2L))
+    assert(fit.forall(_._4 == 1L))
+    // each centroid is its own point
+    val centroid = fit.groupBy(_._1).map { case (c, rs) =>
+      c -> rs.sortBy(_._2).map(_._3.toFloat).toSeq }
+    assert(centroid.values.toSet == pts.map(_._2).toSet)
+    val cells = Similarity.fittedCells(emb, "vec_id", "embedding", 5, 3)
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(cells.keySet == Set(0L, 1L, 2L))
+    assert(cells.values.toSet == Set(0, 1, 2))
+    pts.foreach { case (id, v) => assert(centroid(cells(id).toLong) == v) }
+    val db = Similarity.dbscanFitted(emb, "vec_id", "embedding",
+        tau = 0.5, minPts = 1, k = 5, rounds = 3)
+      .collect().map(_.getAs[Long]("vec_id")).toSet
+    assert(db == Set(0L, 1L, 2L))
+  }
+
   test("kmeansFit: result is invariant to input partitioning") {
     val spark2 = spark
     import spark2.implicits._
