@@ -29,8 +29,4 @@ object Exact {
   /** DuckDB SQL spelling of [[sumMoney]] — keep in sync. */
   def sumMoneySql(expr: String): String =
     s"CAST(SUM(CAST($expr AS DECIMAL(18,2))) AS DOUBLE)"
-
-  /** DuckDB SQL spelling of [[avgMoney]] — keep in sync. */
-  def avgMoneySql(expr: String): String =
-    s"CAST(SUM(CAST($expr AS DECIMAL(18,2))) AS DOUBLE) / COUNT($expr)"
 }

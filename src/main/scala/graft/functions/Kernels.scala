@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * The kernels register through [[graft.GraftExtensions]]
   * (`spark.sql.extensions=graft.GraftExtensions`), but library operators
   * must not REQUIRE that: a caller composing [[graft.ops.Prep.hashBucket]]
-  * or [[graft.ops.Dedup.tokenHash48]] on a vanilla session worked before
+  * or the 48-bit token hash [[md5hash48]] on a vanilla session worked before
   * the kernels landed and must keep working. These helpers check the
   * ACTIVE session's function registry at Column-construction time (plan
   * building runs on the driver, where the active session is the one the

@@ -1,10 +1,8 @@
 package graft.model
 
-import org.apache.spark.sql.types._
-
 /** Feature schema objects mirroring the reference's Pydantic models
   * (`ML Feature Store Pipeline.py:27-48`), re-expressed as Scala case
-  * classes with Spark `StructType` derivation.
+  * classes.
   */
 final case class FeatureConfig(
     name: String,
@@ -14,15 +12,6 @@ final case class FeatureConfig(
     owner: String = "") {
   require(FeatureConfig.AllowedDtypes.contains(dtype),
     s"dtype must be one of ${FeatureConfig.AllowedDtypes.mkString(", ")}: got '$dtype'")
-
-  /** Spark type for this declared dtype (SURVEY.md §1.2). */
-  def sparkType: DataType = dtype match {
-    case "int64"          => LongType
-    case "float64"        => DoubleType
-    case "object"         => StringType
-    case "datetime64[ns]" => TimestampType
-    case "bool"           => BooleanType
-  }
 }
 
 object FeatureConfig {
@@ -31,10 +20,6 @@ object FeatureConfig {
     */
   val AllowedDtypes: Set[String] =
     Set("int64", "float64", "object", "datetime64[ns]", "bool")
-
-  /** Derive the feature-table schema from declared configs. */
-  def toStructType(configs: Seq[FeatureConfig]): StructType =
-    StructType(configs.map(c => StructField(c.name, c.sparkType, nullable = true)))
 }
 
 /** Quality metrics record (`ML Feature Store Pipeline.py:50-56`). Ratios are

@@ -170,20 +170,10 @@ object Dedup {
     }
   }
 
-  /** 48-bit Long from the first 12 md5 hex digits of a string column — the
-    * canonical token hash of the set-similarity path (expressible in both
-    * Spark and DuckDB). Runs on the codegen'd
-    * [[graft.functions.Md5Hash48]] kernel — bit-identical to the
-    * hex/conv spelling the oracles keep (VectorExprsSpec), without the
-    * per-row 32-char hex round-trip.
-    */
-  def tokenHash48(c: Column): Column =
-    graft.functions.Kernels.md5hash48(c)
-
   /** (id, ha, hb): per-document-distinct n-gram md5 halves via the fused
     * codegen kernel `graft_ngram_hashes` ([[graft.functions.NgramHashes]]).
     * Replaces explode + distinct + hex-string hashing for every
-    * set-similarity operator: `ha` ≡ [[tokenHash48]] of the gram, (ha, hb)
+    * set-similarity operator: `ha` ≡ [[graft.functions.Kernels.md5hash48]] of the gram, (ha, hb)
     * are the double-hashing base of the MinHash permutations. Per-document
     * dedup inside the expression IS the (id, gram) distinct — id is fixed
     * within a row — so no distinct shuffle remains.
@@ -321,14 +311,6 @@ object Dedup {
         maxDf), sets, threshold, broadcastSets)
       .select("id_a", "id_b", "n_common", "jaccard")
   }
-
-  /** Candidate (id_a, id_b) pairs of [[jaccardPairs]] before verification —
-    * exposed for probing/pruning-ratio analysis.
-    */
-  def jaccardCandidates(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, n: Int = 1, maxDf: Long = 0L): DataFrame =
-    jaccardCandidatesFrom(tokenSets(df, idCol, textCol, n), df, idCol,
-      textCol, threshold, n, maxDf)
 
   private def jaccardCandidatesFrom(
       sets: DataFrame,

@@ -935,7 +935,7 @@ object Prep {
     val spark = docs.sparkSession
     import spark.implicits._
     val want = targets.toDF("source", "weight_pct")
-    broadcast(want).join(inv, Seq("source"), "left_outer")
+    want.join(inv, Seq("source"), "left_outer")
       .select(col("source"), col("n_docs"), col("available_tokens"),
         col("weight_pct").cast("long").as("weight_pct"),
         expr(s"CAST((${totalBudget}L * weight_pct) div 100 AS BIGINT)")
@@ -959,8 +959,8 @@ object Prep {
     * corpus reports NULL inventory (the [[tokenBudgetPlan]]
     * conventions). Epochs/deficit as in [[tokenBudgetPlan]].
     *
-    * One partial-aggregable inventory groupBy + a ≤|sources|-row
-    * broadcast; everything after is arithmetic on the bounded relation.
+    * One partial-aggregable inventory groupBy + a 1-row broadcast of the
+    * weight sum; everything after is arithmetic on the bounded relation.
     * Returns (source, n_docs, available_tokens, weight_nano,
     * target_tokens, epochs, deficit).
     */
@@ -978,7 +978,7 @@ object Prep {
     val inv = docs.groupBy(col(sourceCol).cast("string").as("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(size(toks(col(textCol))).cast("long")).as("available_tokens"))
-    broadcast(w).join(inv, Seq("source"), "left_outer")
+    w.join(inv, Seq("source"), "left_outer")
       .crossJoin(broadcast(z))
       .select(col("source"), col("n_docs"), col("available_tokens"),
         col("weight_nano"),

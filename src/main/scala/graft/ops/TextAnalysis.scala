@@ -13,11 +13,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object TextAnalysis {
 
-  /** English-ish stopword profile (public top stopwords). */
-  val StopwordsEn: Seq[String] = Seq(
-    "the", "of", "and", "a", "to", "in", "is", "it", "that", "for",
-    "on", "with", "as", "at", "by", "from", "or", "an", "be", "this")
-
   private def toks(textCol: Column): Column =
     filter(split(textCol, " "), t => t =!= "")
 
@@ -118,23 +113,6 @@ object TextAnalysis {
       round(diversity, 6).as("diversity"),
       round(nonWord, 6).as("non_word_ratio"),
       round(lengthScore * diversity * (lit(1.0) - nonWord), 6).as("quality_score"))
-  }
-
-  /** Stopword hit ratio against a profile; the 2-class heuristic language
-    * ID (profile language vs other). N-gram char profiles slot in the same
-    * shape; token-set intersection is the cheap first pass.
-    */
-  def stopwordRatio(df: DataFrame, idCol: String, textCol: String,
-      profile: Seq[String] = StopwordsEn): DataFrame = {
-    val t = toks(col(textCol))
-    val profileLit = array(profile.map(lit): _*)
-    val hits = size(array_intersect(array_distinct(t), profileLit))
-    val nDistinct = size(array_distinct(t))
-    df.select(
-      col(idCol),
-      hits.cast("long").as("stopword_hits"),
-      when(nDistinct > 0, hits.cast("double") / nDistinct).otherwise(0.0)
-        .as("stopword_ratio"))
   }
 
   /** Corpus-level token frequencies (one explode + one shuffle). */

@@ -408,7 +408,7 @@ object DedupQueries {
       |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents)
       |  WHERE t <> '')""".stripMargin
 
-  // 48-bit md5-derived token hashes — mirrors Dedup.tokenHash48; the
+  // 48-bit md5-derived token hashes — mirrors Kernels.md5hash48; the
   // set-similarity path intersects hash sets, not raw strings
   private[queries] val thCte =
     """th AS (

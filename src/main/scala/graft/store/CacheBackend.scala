@@ -5,7 +5,7 @@ package graft.store
   * `ML Feature Store Pipeline.py:70-84`, `README.md:142`). The store
   * depends only on this trait; [[TtlCache]] is the bundled in-memory
   * implementation, and an external-cache adapter plugs in by implementing
-  * these five methods. Values are whatever the store serves (collected
+  * its six members. Values are whatever the store serves (collected
   * driver-side slices), never distributed data.
   */
 trait CacheBackend[K, V] {

@@ -43,21 +43,16 @@ import java.security.MessageDigest
   * materialized blocks instead of each recomputing its lineage.
   *
   * Scale posture: feature data only ever moves through distributed
-  * scans/writes; the only `collect` is the serving tail (single user slice),
-  * mirroring the reference's point-lookup semantics. The TTL cache holds
-  * those collected slices, like the reference's `InMemoryCache` of query
-  * results (`:86-111`) — SIZE-GATED: a slice only collects to the driver
-  * when its row count (measured on the same scan that materializes it)
-  * is at most `cacheMaxRows`; above the cap the slice is cached as a
-  * `persist(MEMORY_AND_DISK)` DataFrame under the same TTL discipline
-  * (unpersisted on expiry/eviction), so a bare
-  * `getFeatures(useCache = true)` of a 100 TB version can never be a
-  * driver OOM. The reference contract — TTL expiry, hit/miss
-  * monitoring, pluggable backend — survives unchanged: the pluggable
-  * backend still sees exactly the collected-slice traffic it did before
-  * (an external Redis-style backend cannot hold a distributed
-  * DataFrame), and over-cap slices live in a store-internal persist
-  * cache whose counters surface as separate dashboard keys.
+  * scans/writes; the only `collect`s are the serving tail (single user
+  * slice) and the cache fill, mirroring the reference's point-lookup
+  * semantics. One TTL cache holds collected slices, like the reference's
+  * `InMemoryCache` of query results (`:86-111`). Its fill is SIZE-GATED
+  * by one bounded collect: `limit(cacheMaxRows + 1)` brings at most
+  * `cacheMaxRows + 1` rows to the driver, a slice that fits is cached
+  * and served from them, and a larger one is served straight from
+  * parquet and not cached — so a bare `getFeatures(useCache = true)` of
+  * a 100 TB version can never be a driver OOM. The reference contract —
+  * TTL expiry, hit/miss monitoring, pluggable backend — is unchanged.
   */
 final class FeatureStore(
     spark: SparkSession,
@@ -70,6 +65,10 @@ final class FeatureStore(
 
   import FeatureStore.MetadataRow
 
+  // the fill collects `limit(cacheMaxRows + 1)`, and `limit` takes an Int
+  require(cacheMaxRows >= 0 && cacheMaxRows < Int.MaxValue,
+    s"cacheMaxRows must be in [0, ${Int.MaxValue}): $cacheMaxRows")
+
   val validator = new DataQualityValidator
   val monitor = new FeatureMonitor(qualityThreshold)
   // pluggable backend seam (reference CacheBackend ABC, `:70-84`); the
@@ -77,11 +76,6 @@ final class FeatureStore(
   private val cache: CacheBackend[String, (StructType, Array[Row])] =
     cacheBackend.getOrElse(
       new TtlCache[String, (StructType, Array[Row])](cacheTtlSeconds))
-  // over-cap slices: cached as persisted (executor-memory/disk) DataFrames,
-  // never collected — same TTL, unpersist on eviction/expiry/clear
-  private val persistCache: TtlCache[String, DataFrame] =
-    new TtlCache[String, DataFrame](cacheTtlSeconds,
-      onEvict = (df: DataFrame) => { df.unpersist(); () })
 
   private val featuresPath = s"$basePath/features"
   private val metadataPath = s"$basePath/metadata"
@@ -153,18 +147,11 @@ final class FeatureStore(
     val v = version.getOrElse(latestVersion()
       .getOrElse(throw new NoSuchElementException("no feature versions registered")))
     val key = cacheKey(v, userIds)
-    // over-cap slices first (their keys never enter the collected-slice
-    // backend, so its hit/miss counters keep the reference semantics)
-    val fromPersist = if (useCache) persistCache.get(key) else None
-    val result = fromPersist.getOrElse {
-      val fromCache = if (useCache) cache.get(key) else None
-      fromCache match {
-        case Some((schema, rows)) =>
-          spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-        case None =>
-          val df = getFeaturesUncached(v, userIds)
-          if (useCache) cacheFill(key, df) else df
-      }
+    val result = (if (useCache) cache.get(key) else None) match {
+      case Some((schema, rows)) => localFrame(schema, rows)
+      case None =>
+        val df = getFeaturesUncached(v, userIds)
+        if (useCache) cacheFill(key, df) else df
     }
     monitor.logFeatureAccess(v)
     result
@@ -237,16 +224,13 @@ final class FeatureStore(
       commitMetadata(rows =>
         rows.filterNot(r => doomedSet.contains(r.feature_version)))
       cache.clear()
-      persistCache.clear()
     }
     doomed
   }
 
   def monitoringDashboard: Map[String, Any] =
     monitor.dashboard ++ Map(
-      "cache_hits" -> cache.hits, "cache_misses" -> cache.misses,
-      "persist_cache_hits" -> persistCache.hits,
-      "persist_cache_misses" -> persistCache.misses)
+      "cache_hits" -> cache.hits, "cache_misses" -> cache.misses)
 
   /** Persist per-ingest-batch quantile-knot sketches
     * ([[graft.ops.Sketches.quantileSketchBuild]]) for the given numeric
@@ -348,7 +332,6 @@ final class FeatureStore(
         fs.delete(new Path(s"$featuresPath/feature_version=$v"), true)
       }
       cache.clear()
-      persistCache.clear()
     }
     audit
   }
@@ -385,26 +368,22 @@ final class FeatureStore(
   private def cacheKey(version: String, userIds: Seq[Long]): String =
     s"features_${version}_${userIds.sorted.mkString("_")}"
 
-  /** Size-gated fill: one persisted source scan measures the slice; at or
-    * under `cacheMaxRows` it collects into the pluggable backend exactly
-    * as before (the collect reads the already-materialized blocks, not
-    * the source), above it the persisted DataFrame ITSELF is the cache
-    * entry — zero driver collect on the over-cap path, ever. Returns the
-    * DataFrame to serve for this call.
+  /** Size-gated fill: one bounded collect of at most `cacheMaxRows + 1`
+    * rows. A slice that fits is put in the backend and served from the
+    * collected rows; a larger one is served as `df`, uncached, so the
+    * driver never holds more than the cap plus one row.
     */
   private def cacheFill(key: String, df: DataFrame): DataFrame = {
-    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    val n = p.count()
-    if (n <= cacheMaxRows) {
-      val slice = (p.schema, p.collect())
-      cache.put(key, slice)
-      p.unpersist()
-      spark.createDataFrame(java.util.Arrays.asList(slice._2: _*), slice._1)
-    } else {
-      persistCache.put(key, p)
-      p
+    val rows = df.limit(cacheMaxRows.toInt + 1).collect()
+    if (rows.length > cacheMaxRows) df
+    else {
+      cache.put(key, (df.schema, rows))
+      localFrame(df.schema, rows)
     }
   }
+
+  private def localFrame(schema: StructType, rows: Array[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   private def latestVersion(): Option[String] =
     listFeatureVersions().headOption.map(_.featureVersion)

@@ -9,15 +9,9 @@ import scala.collection.mutable
   * *collected* driver-side results (small per-version slices), never
   * distributed data — the distributed analogue is `DataFrame.persist`,
   * used separately by callers that re-scan.
-  *
-  * `onEvict` runs whenever an entry leaves the cache (TTL expiry on get,
-  * replacement by a put of a different object, delete, clear) — the
-  * release hook the store's persist-backed over-cap cache needs to
-  * `unpersist` evicted DataFrames.
   */
 final class TtlCache[K, V](ttlSeconds: Long,
-    clock: () => Long = () => System.currentTimeMillis(),
-    onEvict: V => Unit = (_: V) => ())
+    clock: () => Long = () => System.currentTimeMillis())
     extends CacheBackend[K, V] {
   private val entries = mutable.HashMap[K, (Long, V)]()
   private var hitCount = 0L
@@ -27,32 +21,22 @@ final class TtlCache[K, V](ttlSeconds: Long,
     entries.get(key) match {
       case Some((deadline, v)) if clock() < deadline =>
         hitCount += 1; Some(v)
-      case Some((_, v)) =>
-        entries.remove(key); onEvict(v); missCount += 1; None
+      case Some(_) =>
+        entries.remove(key); missCount += 1; None
       case None =>
         missCount += 1; None
     }
   }
 
-  /** A value already under `key` is evicted, unless `value` is that same
-    * object: two racing misses of one key each put their own value, and
-    * the loser's must still be released.
-    */
   def put(key: K, value: V): Unit = synchronized {
-    entries.put(key, (clock() + ttlSeconds * 1000L, value)).foreach {
-      case (_, old) =>
-        if (old.asInstanceOf[AnyRef] ne value.asInstanceOf[AnyRef]) onEvict(old)
-    }
+    entries.put(key, (clock() + ttlSeconds * 1000L, value))
   }
 
   def delete(key: K): Unit = synchronized {
-    entries.remove(key).foreach { case (_, v) => onEvict(v) }
+    entries.remove(key)
   }
 
-  def clear(): Unit = synchronized {
-    entries.values.foreach { case (_, v) => onEvict(v) }
-    entries.clear()
-  }
+  def clear(): Unit = synchronized(entries.clear())
 
   def hits: Long = synchronized(hitCount)
   def misses: Long = synchronized(missCount)

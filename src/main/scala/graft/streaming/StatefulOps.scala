@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Custom keyed state via `mapGroupsWithState` — the Structured Streaming
@@ -43,14 +43,6 @@ object StatefulOps {
           state.update(next)
           next
       }
-  }
-
-  /** Convenience: DataFrame-in, DataFrame-out wrapper. */
-  def runningUserProfilesDf(events: DataFrame): DataFrame = {
-    import events.sparkSession.implicits._
-    runningUserProfiles(
-      events.selectExpr("CAST(user_id AS LONG)", "CAST(value AS DOUBLE)")
-        .as[(Long, Double)]).toDF()
   }
 
   /** The output mode this operator requires downstream. */

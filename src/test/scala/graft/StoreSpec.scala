@@ -130,34 +130,15 @@ class StoreSpec extends AnyFunSuite {
     assert(c.hits == 2 && c.misses == 1)
   }
 
-  test("TTL cache: a replaced value is evicted once, a re-put of the same " +
-      "object is not, and delete/clear evict the rest") {
-    val evicted = scala.collection.mutable.ArrayBuffer.empty[String]
-    val c = new TtlCache[String, String](ttlSeconds = 10,
-      onEvict = (v: String) => { evicted += v; () })
-    val a = new String("a")
-    val b = new String("b")
-    c.put("k", a)
-    c.put("k", b)
-    assert(evicted == Seq("a"))
-    c.put("k", b)
-    assert(evicted == Seq("a"))
-    assert(c.get("k").contains("b"))
-    c.delete("k")
-    assert(evicted == Seq("a", "b"))
-    c.put("x", a)
-    c.clear()
-    assert(evicted == Seq("a", "b", "a") && c.size == 0)
-    assert(c.hits == 1 && c.misses == 0)
-  }
-
   test("a cache hit on the latest version launches no Spark job") {
     val store = freshStore()
     store.registerFeatures(feats(1L -> 10.0, 2L -> 20.0), meta)
     // a single-user slice is not cached yet: the miss reads the partition
+    // in two jobs: the parquet schema inference and the fill's bounded
+    // collect
     val (first, missJobs) = jobsIn(store.serveFeatures(2L))
     assert(first.get("total_amount") == 20.0)
-    assert(missJobs > 0)
+    assert(missJobs > 0 && missJobs <= 2)
     val (again, hitJobs) = jobsIn(store.serveFeatures(2L))
     assert(again == first)
     assert(hitJobs == 0)
@@ -266,8 +247,8 @@ class StoreSpec extends AnyFunSuite {
     import graft.store.CacheBackend
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.StructType
-    // collect-counting backend: every put IS a driver collect of a slice,
-    // so puts == 0 proves the over-cap path never collected
+    // put-counting backend: every put is a slice collected into the
+    // cache, so puts == 0 proves the over-cap path cached nothing
     class CountingBackend extends CacheBackend[String, (StructType, Array[Row])] {
       val m = scala.collection.mutable.Map[String, (StructType, Array[Row])]()
       var h = 0L; var ms = 0L; var puts = 0
@@ -289,18 +270,21 @@ class StoreSpec extends AnyFunSuite {
       cacheMaxRows = 4)
     val v = store.registerFeatures(
       feats((1 to 10).map(i => i.toLong -> i.toDouble): _*), meta)
-    assert(backend.puts == 0) // 10 rows > cap 4: never collected
-    val got = store.getFeatures(Some(v)) // serves from the persist cache
-    assert(got.count() == 10)
-    assert(got.storageLevel.useMemory || got.storageLevel.useDisk)
-    assert(store.monitoringDashboard("persist_cache_hits")
-      .asInstanceOf[Long] >= 1L)
+    assert(backend.puts == 0) // 10 rows > cap 4: never cached
+    assert(store.getFeatures(Some(v)).count() == 10)
+    // the over-cap slice was not cached: a second read misses the backend
+    // and still serves every row from parquet
+    val misses = backend.misses
+    assert(store.getFeatures(Some(v)).count() == 10)
+    assert(backend.misses == misses + 1 && backend.puts == 0)
     // an under-cap slice (single-user serve) still collects via the seam
     assert(store.serveFeatures(3L, Some(v)).get("total_amount") == 3.0)
     assert(backend.puts == 1)
-    // invalidation unpersists the over-cap entry (onEvict routed)
-    store.cleanupOldVersions(keepN = 0)
-    assert(got.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    // the fill's limit takes an Int: a cap it cannot express is refused
+    Seq(-1L, Int.MaxValue.toLong).foreach { cap =>
+      intercept[IllegalArgumentException](
+        new FeatureStore(spark, dir, cacheMaxRows = cap))
+    }
   }
 
   test("online/offline consistency: serveFeatures agrees with the " +
