@@ -178,18 +178,16 @@ object DedupQueries {
     * disk — the production semantics the operator claims (re-deriving the
     * state per query would re-hash the old corpus every run, exactly what
     * incremental dedup exists to avoid). Same discipline as the IVF index
-    * cache: the path is keyed by [[graft.ops.Ivf.inputFingerprint]] of the
-    * input files (name, length, mtime) + build knobs (regenerated or
-    * rewritten data ⇒ different path ⇒ rebuild; stale `/tmp` artifacts
-    * are never served), and the write lands via an atomic rename so a
-    * crashed build can't leave a half-readable index.
+    * cache: the path is keyed by [[stateKey]] (regenerated or rewritten
+    * data or a changed operator or kernel ⇒ different path ⇒ rebuild;
+    * stale `/tmp` artifacts are never served), and the write lands via an
+    * atomic rename so a crashed build can't leave a half-readable index.
     */
   private def cachedState(spark: SparkSession, dir: String,
       oldDocs: DataFrame): DataFrame = {
-    val fp = Ivf.inputFingerprint(oldDocs,
-      s"$NumHashes|$Bands|0.9|mod4ne3|v1").take(16)
     val path = "/tmp/graft_incstate/" +
-      dir.replaceAll("[^A-Za-z0-9._-]", "_") + "_" + fp
+      dir.replaceAll("[^A-Za-z0-9._-]", "_") + "_" +
+      stateKey(oldDocs, StateClasses.map(classBytes))
     val loaded =
       try { val df = spark.read.parquet(path); df.head(1); Some(df) }
       catch { case scala.util.control.NonFatal(_) => None }
@@ -205,6 +203,41 @@ object DedupQueries {
       }
       spark.read.parquet(path)
     }
+  }
+
+  /** The compiled classes whose code builds the incremental-dedup state:
+    * the operator, and the `graft_ngram_hashes` and
+    * `graft_sorted_intersect` kernels it calls. Spark's own functions are
+    * not digested; a Spark upgrade that changes them needs a cleared
+    * `/tmp/graft_incstate`.
+    */
+  private[graft] val StateClasses = Seq(
+    "graft/ops/Dedup$.class",
+    "graft/functions/NgramHashes.class",
+    "graft/functions/TextHash$.class",
+    "graft/functions/SortedIntersectCount.class")
+
+  /** Cache key of the incremental-dedup state: the
+    * [[graft.ops.Ivf.inputFingerprint]] of the old corpus' input files
+    * (name, length, mtime), the build knobs, and a digest of `code`, the
+    * compiled bytes of [[StateClasses]] in order. An edit to any of those
+    * classes changes its bytes and so rebuilds the state; an edit that
+    * leaves the result unchanged only costs one rebuild.
+    */
+  private[graft] def stateKey(oldDocs: DataFrame,
+      code: Seq[Array[Byte]]): String = {
+    def md5(b: Array[Byte]) = java.security.MessageDigest.getInstance("MD5").digest(b)
+    // fixed-length digests, so no two class sequences share the input
+    val digest = md5(code.map(md5).reduce(_ ++ _)).map("%02x".format(_)).mkString
+    Ivf.inputFingerprint(oldDocs,
+      s"$NumHashes|$Bands|0.9|mod4ne3|$digest").take(16)
+  }
+
+  /** The bytes of a classpath resource, e.g. a compiled class. */
+  private[graft] def classBytes(resource: String): Array[Byte] = {
+    val in = getClass.getClassLoader.getResourceAsStream(resource)
+    require(in != null, s"no classpath resource $resource")
+    try in.readAllBytes() finally in.close()
   }
 
   /** Directed 3-gram containment pairs at C(A→B) ≥ 0.8 — the asymmetric

@@ -3,22 +3,23 @@ package graft.store
 import graft.model.{DataQualityMetrics, FeatureConfig, FeatureMetadata}
 import graft.quality.DataQualityValidator
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import java.security.MessageDigest
+import java.util.concurrent.ConcurrentHashMap
 
 /** Parquet-backed versioned feature store with the same API surface as the
   * reference `AdvancedFeatureStore` (`ML Feature Store Pipeline.py:228-541`).
   *
   * Storage layout (replaces SQLite):
-  *  - `basePath/features/feature_version=<v>/…` — feature rows, partitioned
-  *    by version so version reads are pure partition pruning (the working
-  *    replacement for the reference's intended-but-broken
-  *    `INDEX(feature_version)`, `:277-278`); parquet min/max stats give
-  *    row-group skipping on `user_id`.
+  *  - `basePath/features/feature_version=<v>/…` — feature rows, one
+  *    directory per version in the hive layout (the working replacement
+  *    for the reference's intended-but-broken `INDEX(feature_version)`,
+  *    `:277-278`); parquet min/max stats give row-group skipping on
+  *    `user_id`.
   *  - `basePath/metadata/manifest-<gen>.json` — the version manifest as a
   *    CAS'd generation chain (the public commit-log idea Delta/Iceberg
   *    use, S4 in SURVEY §2.1): every mutation reads the highest
@@ -36,7 +37,37 @@ import java.security.MessageDigest
   * modification time). Every read still lists `metadata/`, so commits by
   * other instances or processes are visible at once and in-flight claims
   * are still skipped; only the parse of an unchanged generation is
-  * saved. A serve that hits the cache therefore runs no Spark job.
+  * saved.
+  *
+  * Read path. A version is read from its own directory only, with that
+  * directory's own schema, and `feature_version` is appended as the last
+  * column. Versions may therefore differ in their columns, and each reads
+  * back with its own. Registration infers the schema of the files it
+  * wrote, once, and records it in the version's manifest row
+  * (`data_schema`); every later read, by any instance or process, passes
+  * it, so a parquet read runs no inference job and lists no other
+  * version's files: with the manifest parsed, a miss of a small version is
+  * the fill's one collect job. A directory that is gone reads as zero
+  * rows (see [[getFeatures]]). Lookups are answered in this order:
+  *  1. a cached slice: `getFeatures` wraps its rows in a local frame, and
+  *     `serveFeatures` builds its map straight from the first row — no
+  *     query plan, no Spark job;
+  *  2. a user slice filtered on the driver from the version's cached
+  *     whole slice, which registration fills whenever the version fits
+  *     the cap, and then cached under its own key — no Spark job. The
+  *     whole slice is used only while the version directory's listing is
+  *     the one this instance's fill read (one listing call), so a version
+  *     rewritten by another instance, e.g. by [[eraseUser]], falls back
+  *     to parquet and drops this instance's entries of that version;
+  *  3. the parquet read, through the size-gated fill below.
+  *
+  * Invalidation. [[cleanupOldVersions]] drops only the doomed versions'
+  * entries (the whole-slice key, and every key this instance put for
+  * them), so the surviving versions' slices, and with them step 2, outlive
+  * a cleanup. [[eraseUser]] clears the whole cache. A slice that is
+  * already cached is not checked against the directory: a change made by
+  * another instance shows in it once its TTL runs out, as in the
+  * reference's cache.
   *
   * `registerFeatures` persists the registered relation once, so the
   * quality scan, the fingerprint and the partition write read its
@@ -63,7 +94,10 @@ final class FeatureStore(
     cacheBackend: Option[CacheBackend[String, (StructType, Array[Row])]] = None,
     cacheMaxRows: Long = 1000000L) {
 
-  import FeatureStore.MetadataRow
+  import FeatureStore.{MetaColumns, MetadataRow}
+
+  /** A collected slice: its schema and rows. */
+  private type Slice = (StructType, Array[Row])
 
   // the fill collects `limit(cacheMaxRows + 1)`, and `limit` takes an Int
   require(cacheMaxRows >= 0 && cacheMaxRows < Int.MaxValue,
@@ -86,6 +120,17 @@ final class FeatureStore(
     */
   @volatile private var manifestMemo: Option[FeatureStore.Manifest] = None
 
+  /** Per version, the cache keys this instance put, so that
+    * [[cleanupOldVersions]] can drop a doomed version's entries and keep
+    * every other version's.
+    */
+  private val cachedKeys = new ConcurrentHashMap[String, java.util.Set[String]]()
+
+  /** Per version, the listing of its directory read by this instance's
+    * last whole-slice fill; see [[derivedSlice]].
+    */
+  private val fillListings = new ConcurrentHashMap[String, Seq[(String, Long, Long)]]()
+
   /** Register a feature relation: quality scan → content fingerprint →
     * stamped append (partitioned by version) → metadata upsert → monitor +
     * cache hooks. Returns the version hash.
@@ -101,7 +146,7 @@ final class FeatureStore(
       val version = FeatureStore.fingerprint(df)
       val createdAt = clock()
       // Write DIRECTLY into this version's partition directory (standard
-      // hive layout, so readers still partition-discover feature_version):
+      // hive layout; the store reads each version's directory on its own):
       // re-registering identical content replaces its own partition
       // instead of appending duplicates (divergence from the reference,
       // which would double-insert; documented in SURVEY §7.4), and —
@@ -115,10 +160,12 @@ final class FeatureStore(
       // (one file for a small version, not one per shuffle partition).
       df.withColumn("created_at", lit(createdAt)).hint("rebalance")
         .write.mode("overwrite")
-        .parquet(s"$featuresPath/feature_version=$version")
+        .parquet(versionDir(version))
       (metrics, version, createdAt)
     } finally if (owned) df.unpersist()
 
+    // the version's one schema inference; every later read passes it
+    val schema = spark.read.parquet(versionDir(version)).schema
     upsertMetadata(MetadataRow(
       feature_version = version,
       description = meta.description,
@@ -130,49 +177,147 @@ final class FeatureStore(
       schema_violations = metrics.schemaViolations,
       overall_score = metrics.overallScore,
       lineage = meta.lineage,
-      tags = meta.tags))
+      tags = meta.tags,
+      data_schema = Some(schema.json)))
 
     monitor.logFeatureCreation(version, metrics)
-    val _ = cacheFill(cacheKey(version, Nil), getFeaturesUncached(version, Nil))
+    val _ = fill(version, Nil)
     version
   }
 
   /** Read features by version (latest when None) with optional user-id
-    * filter; TTL-cached. (`get_features`, `:363-425`.)
+    * filter; TTL-cached. (`get_features`, `:363-425`.) A version with no
+    * directory (deleted by cleanup or erasure, or never registered) reads
+    * as zero rows with the two columns `user_id` (bigint) and
+    * `feature_version` (string).
     */
   def getFeatures(
       version: Option[String] = None,
       userIds: Seq[Long] = Nil,
       useCache: Boolean = true): DataFrame = {
-    val v = version.getOrElse(latestVersion()
-      .getOrElse(throw new NoSuchElementException("no feature versions registered")))
-    val key = cacheKey(v, userIds)
-    val result = (if (useCache) cache.get(key) else None) match {
-      case Some((schema, rows)) => localFrame(schema, rows)
-      case None =>
-        val df = getFeaturesUncached(v, userIds)
-        if (useCache) cacheFill(key, df) else df
-    }
+    val (v, s) = readSlice(version, userIds, useCache)
     monitor.logFeatureAccess(v)
-    result
-  }
-
-  private def getFeaturesUncached(version: String, userIds: Seq[Long]): DataFrame = {
-    // Partition pruning on version; pushdown / row-group skip on user_id.
-    val base = spark.read.parquet(featuresPath)
-      .filter(col("feature_version") === version)
-    if (userIds.isEmpty) base else base.filter(col("user_id").isin(userIds: _*))
+    s match {
+      case Right((schema, rows)) => localFrame(schema, rows)
+      case Left(df) => df
+    }
   }
 
   /** Point lookup for one user, metadata columns dropped, as a column→value
-    * map. (`serve_features`, `:427-446`.)
+    * map. (`serve_features`, `:427-446`.) A cached slice is served from
+    * its rows, with no query plan; an over-cap one from its first row.
     */
   def serveFeatures(userId: Long, version: Option[String] = None): Option[Map[String, Any]] = {
-    val df = getFeatures(version, Seq(userId))
-      .drop("feature_version", "created_at")
-    df.limit(1).collect().headOption
-      .map(r => r.getValuesMap[Any](r.schema.fieldNames.toIndexedSeq))
+    val (v, s) = readSlice(version, Seq(userId), useCache = true)
+    monitor.logFeatureAccess(v)
+    val (schema, rows) = s match {
+      case Right(slice) => slice
+      case Left(df) => val first = df.limit(1); (first.schema, first.collect())
+    }
+    rows.headOption.map { r =>
+      schema.fieldNames.iterator.zipWithIndex.collect {
+        case (name, i) if !MetaColumns(name) => name -> r.get(i)
+      }.toMap
+    }
   }
+
+  /** The version read (latest when None) and its `userIds` slice: the
+    * cached rows, or the parquet read when `useCache` is off or the slice
+    * is over the cap. A missed user slice is answered from the version's
+    * cached whole slice ([[derivedSlice]]) when there is one, and else
+    * from parquet through the bounded fill.
+    */
+  private def readSlice(version: Option[String], userIds: Seq[Long],
+      useCache: Boolean): (String, Either[DataFrame, Slice]) = {
+    val v = version.getOrElse(latestVersion()
+      .getOrElse(throw new NoSuchElementException("no feature versions registered")))
+    if (!useCache) (v, Left(getFeaturesUncached(v, userIds)))
+    else {
+      val key = cacheKey(v, userIds)
+      (v, cache.get(key).orElse(derivedSlice(v, key, userIds)) match {
+        case Some(hit) => Right(hit)
+        case None => fill(v, userIds)
+      })
+    }
+  }
+
+  /** The `userIds` slice of `version`, filtered on the driver from the
+    * version's cached whole slice and put under `key`; its rows are the
+    * whole slice's own. The filter is `isin`'s: rows whose non-null
+    * `user_id` is one of `userIds`. The whole slice is looked up only when
+    * this instance filled it from the directory listing that is there
+    * now; when the listing changed, the version was rewritten or deleted
+    * since, and this instance's entries of it are dropped. None then,
+    * when no whole slice is cached, or when `user_id` is not an integral
+    * column.
+    */
+  private def derivedSlice(version: String, key: String,
+      userIds: Seq[Long]): Option[Slice] =
+    if (userIds.isEmpty) None
+    else Option(fillListings.get(version)).flatMap { filled =>
+      if (dirListing(version).contains(filled)) cache.get(cacheKey(version, Nil))
+      else { forget(version); None }
+    }.flatMap { case (schema, rows) =>
+      Some(schema.fieldNames.indexOf("user_id"))
+        .filter(i => i >= 0 && (schema(i).dataType match {
+          case ByteType | ShortType | IntegerType | LongType => true
+          case _ => false
+        }))
+        .map { i =>
+          val wanted = userIds.toSet
+          val s = (schema, rows.filter(r =>
+            !r.isNullAt(i) && wanted(r.getAs[Number](i).longValue)))
+          put(version, key, s)
+          s
+        }
+    }
+
+  /** One version's rows with `feature_version` appended last, optionally
+    * filtered to `userIds`; zero rows of [[FeatureStore.EmptySchema]] when
+    * the version has no readable directory.
+    */
+  private def getFeaturesUncached(version: String, userIds: Seq[Long]): DataFrame = {
+    val base = versionData(version) match {
+      case Some(df) => df.select(col("*"), lit(version).as("feature_version"))
+      case None => localFrame(FeatureStore.EmptySchema, Array.empty)
+    }
+    // parquet row-group skipping on user_id
+    if (userIds.isEmpty) base else base.filter(col("user_id").isin(userIds: _*))
+  }
+
+  /** The files of one version's directory, read with the schema its
+    * manifest row records, so the read lists only this directory and runs
+    * no inference job. A version with no recorded schema (not in the
+    * manifest, or registered before schemas were recorded) is read with
+    * an inferred one. None when the directory is absent or holds no data
+    * (the exception also covers a directory deleted after the check).
+    */
+  private def versionData(version: String): Option[DataFrame] = {
+    val dir = versionDir(version)
+    if (!hadoopFs().exists(new Path(dir))) None
+    else try Some(recordedSchema(version) match {
+      case Some(schema) => spark.read.schema(schema).parquet(dir)
+      case None => spark.read.parquet(dir)
+    }) catch {
+      case e: AnalysisException if FeatureStore.NoData(e.getCondition) => None
+    }
+  }
+
+  private def recordedSchema(version: String): Option[StructType] =
+    readMetadata().find(_.feature_version == version).flatMap(_.data_schema)
+      .map(json => DataType.fromJson(json).asInstanceOf[StructType])
+
+  /** The (name, length, modification time) of each entry of a version's
+    * directory, or None when it is gone. A rewrite of the version writes
+    * new file names, so the listing changes with it on any filesystem.
+    */
+  private def dirListing(version: String): Option[Seq[(String, Long, Long)]] =
+    try Some(hadoopFs().listStatus(new Path(versionDir(version))).toSeq
+      .map(st => (st.getPath.getName, st.getLen, st.getModificationTime)).sorted)
+    catch { case _: java.io.FileNotFoundException => None }
+
+  private def versionDir(version: String): String =
+    s"$featuresPath/feature_version=$version"
 
   /** (`get_feature_metadata`, `:456-479`.) */
   def getFeatureMetadata(version: String): Option[FeatureMetadata] =
@@ -207,7 +352,8 @@ final class FeatureStore(
       Ordering.String.reverse, Ordering.String.reverse)).map(_.toMetadata)
 
   /** Keep the newest `keepN` versions, drop the rest (partition-dir deletes +
-    * metadata rewrite + cache invalidation). Returns deleted versions.
+    * metadata rewrite + the doomed versions' cache entries; the kept
+    * versions' entries stay). Returns deleted versions.
     * (`cleanup_old_versions`, `:503-532`.)
     */
   def cleanupOldVersions(keepN: Int = 5): Seq[String] = {
@@ -215,15 +361,13 @@ final class FeatureStore(
     val doomed = all.drop(keepN)
     if (doomed.nonEmpty) {
       val fs = hadoopFs()
-      doomed.foreach { v =>
-        fs.delete(new Path(s"$featuresPath/feature_version=$v"), true)
-      }
+      doomed.foreach(v => fs.delete(new Path(versionDir(v)), true))
       // CAS commit: the mutation re-applies against whatever state wins
       // the race, so a concurrent register's row survives this cleanup
       val doomedSet = doomed.toSet
       commitMetadata(rows =>
         rows.filterNot(r => doomedSet.contains(r.feature_version)))
-      cache.clear()
+      doomed.foreach(forget)
     }
     doomed
   }
@@ -293,45 +437,45 @@ final class FeatureStore(
   /** Right-to-be-forgotten erasure (the GDPR Art. 17 deletion path a
     * feature store needs operationally, beyond [[cleanupOldVersions]]'
     * whole-version retention): remove EVERY row of `userId` from every
-    * stored version, preserving version partitions, ids and metadata
-    * (version hashes are registration-time identifiers of what was
-    * ingested, not content digests of the erased state — rewriting them
-    * would corrupt lineage and AS-OF reads). Only partitions that
-    * actually contain the user rewrite (dynamic partition overwrite); a
-    * version left EMPTY by the erasure has its partition directory
-    * deleted outright (dynamic overwrite cannot replace a partition
-    * with zero output rows — it would silently keep the old files). The
-    * serve cache is cleared, so no erased row survives in a cached
-    * slice. Returns the audit the request needs: (feature_version,
-    * n_erased), one row per touched version.
+    * stored version directory, preserving version directories, ids and
+    * metadata (version hashes are registration-time identifiers of what
+    * was ingested, not content digests of the erased state — rewriting
+    * them would corrupt lineage and AS-OF reads). One job counts the
+    * user's rows per version; only the versions that hold some are
+    * rewritten, each from its own directory with its own columns. A
+    * version left EMPTY by the erasure has its directory deleted
+    * outright, so it reads as a deleted version. The serve cache is
+    * cleared, so no erased row survives in a cached slice. Returns the
+    * audit the request needs: (feature_version, n_erased), one row per
+    * touched version.
     */
   def eraseUser(userId: Long): Seq[(String, Long)] = {
-    val feats = spark.read.parquet(featuresPath)
-    val audit = feats.filter(col("user_id") === userId)
-      .groupBy("feature_version").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq.sorted
-    if (audit.nonEmpty) {
-      val touched = audit.map(_._1)
-      // materialize BEFORE the overwrite — the rewrite reads the same
-      // path it replaces (touched-version-bounded; a production store
-      // would stage to a sibling dir and swap, same cost class)
-      val remaining = feats
-        .filter(col("feature_version").isInCollection(touched))
-        .filter(!(col("user_id") <=> userId))
-        .localCheckpoint()
-      val stillThere = remaining.select("feature_version").distinct()
-        .collect().map(_.getString(0)).toSet
-      if (stillThere.nonEmpty)
-        remaining.filter(col("feature_version").isInCollection(stillThere))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("feature_version")
-          .parquet(featuresPath)
-      val fs = hadoopFs()
-      (touched.toSet -- stillThere).foreach { v =>
-        fs.delete(new Path(s"$featuresPath/feature_version=$v"), true)
+    val fs = hadoopFs()
+    val root = new Path(featuresPath)
+    val stored = if (!fs.exists(root)) Nil
+      else fs.listStatus(root).toSeq.map(_.getPath.getName).collect {
+        case FeatureStore.VersionDir(v) => v
       }
+    val held = stored.flatMap(v => versionData(v).map(
+      _.filter(col("user_id") === userId).select(lit(v).as("feature_version"))))
+    val audit = if (held.isEmpty) Nil
+      else held.reduce(_ union _)
+        .groupBy("feature_version").agg(count(lit(1)).as("n"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq.sorted
+    audit.foreach { case (v, _) =>
+      versionData(v).foreach { df =>
+        // materialize BEFORE the overwrite — the rewrite reads the
+        // directory it replaces (a production store would stage to a
+        // sibling dir and swap, same cost class)
+        val remaining = df.filter(!(col("user_id") <=> userId)).localCheckpoint()
+        if (remaining.isEmpty) fs.delete(new Path(versionDir(v)), true)
+        else remaining.write.mode("overwrite").parquet(versionDir(v))
+      }
+    }
+    if (audit.nonEmpty) {
       cache.clear()
+      cachedKeys.clear()
+      fillListings.clear()
     }
     audit
   }
@@ -368,18 +512,41 @@ final class FeatureStore(
   private def cacheKey(version: String, userIds: Seq[Long]): String =
     s"features_${version}_${userIds.sorted.mkString("_")}"
 
-  /** Size-gated fill: one bounded collect of at most `cacheMaxRows + 1`
-    * rows. A slice that fits is put in the backend and served from the
-    * collected rows; a larger one is served as `df`, uncached, so the
-    * driver never holds more than the cap plus one row.
+  /** Size-gated fill of the `userIds` slice of `version`: one bounded
+    * collect of at most `cacheMaxRows + 1` rows of the parquet read. A
+    * slice that fits is put in the backend and served from the collected
+    * rows; a larger one is served as the read, uncached, so the driver
+    * never holds more than the cap plus one row. A whole-slice fill also
+    * records the directory listing it read, taken before the read: a
+    * rewrite after it changes the listing, so [[derivedSlice]] can fall
+    * back needlessly but never derive from stale rows.
     */
-  private def cacheFill(key: String, df: DataFrame): DataFrame = {
+  private def fill(version: String, userIds: Seq[Long]): Either[DataFrame, Slice] = {
+    val listing = if (userIds.isEmpty) dirListing(version) else None
+    val df = getFeaturesUncached(version, userIds)
     val rows = df.limit(cacheMaxRows.toInt + 1).collect()
-    if (rows.length > cacheMaxRows) df
+    if (rows.length > cacheMaxRows) Left(df)
     else {
-      cache.put(key, (df.schema, rows))
-      localFrame(df.schema, rows)
+      val s = (df.schema, rows)
+      put(version, cacheKey(version, userIds), s)
+      listing.foreach(fillListings.put(version, _))
+      Right(s)
     }
+  }
+
+  private def put(version: String, key: String, s: Slice): Unit = {
+    cachedKeys.computeIfAbsent(version, _ => ConcurrentHashMap.newKeySet[String]())
+      .add(key)
+    cache.put(key, s)
+  }
+
+  /** Drop every entry of `version` that this instance put, and its whole
+    * slice whoever put it.
+    */
+  private def forget(version: String): Unit = {
+    fillListings.remove(version)
+    Option(cachedKeys.remove(version)).foreach(_.forEach(k => cache.delete(k)))
+    cache.delete(cacheKey(version, Nil))
   }
 
   private def localFrame(schema: StructType, rows: Array[Row]): DataFrame =
@@ -533,6 +700,21 @@ final class FeatureStore(
 object FeatureStore {
 
   private val ManifestName = """manifest-(\d{1,18})\.json""".r
+  private val VersionDir = "feature_version=(.+)".r
+
+  /** The store's own columns, dropped from a served map. */
+  private val MetaColumns = Set("feature_version", "created_at")
+
+  /** The error conditions of reading a version directory that is absent
+    * or holds no data file.
+    */
+  private val NoData = Set("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+  /** The schema of a version with no data: the serving key and the
+    * version.
+    */
+  private val EmptySchema = StructType(Seq(
+    StructField("user_id", LongType), StructField("feature_version", StringType)))
 
   /** Parsed rows of one complete manifest generation, keyed by
     * (generation, file length, modification time).
@@ -541,7 +723,9 @@ object FeatureStore {
       rows: Seq[MetadataRow])
 
   /** Metadata table row (reference DDL `:282-292`); nested values are native
-    * Spark types rather than JSON strings.
+    * Spark types rather than JSON strings. `data_schema` is the schema of
+    * the version's files as Spark inferred it at registration, in Spark's
+    * JSON form; it is None in a manifest written before it was recorded.
     */
   final case class MetadataRow(
       feature_version: String,
@@ -554,7 +738,8 @@ object FeatureStore {
       schema_violations: Long,
       overall_score: Double,
       lineage: Map[String, String],
-      tags: Seq[String]) {
+      tags: Seq[String],
+      data_schema: Option[String] = None) {
     def toMetadata: FeatureMetadata = FeatureMetadata(
       feature_version, description, created_at, features_config,
       Some(DataQualityMetrics(null_percentage, duplicate_percentage,

@@ -200,6 +200,32 @@ class DedupSpec extends AnyFunSuite {
     assert(inc == fullSurvivors(docs, 0.9))
   }
 
+  test("incremental-dedup state key: derived from the compiled bytes of " +
+      "the operator and its kernels, so a change to any of them gets a new key") {
+    import graft.queries.DedupQueries
+    val dir = java.nio.file.Files.createTempDirectory("graft-statekey").toString
+    docs.write.mode("overwrite").parquet(dir)
+    val old = spark.read.parquet(dir)
+    val classes = DedupQueries.StateClasses
+    assert(classes.contains("graft/ops/Dedup$.class") &&
+      classes.contains("graft/functions/NgramHashes.class"))
+    val code = classes.map(DedupQueries.classBytes)
+    assert(code.forall(_.nonEmpty))
+    val key = DedupQueries.stateKey(old, code)
+    // the same bytes give the same key
+    assert(DedupQueries.stateKey(old, code.map(_.clone())) == key)
+    // one changed byte in any one class, a new key
+    code.indices.foreach { c =>
+      val edited = code.map(_.clone())
+      val b = edited(c)
+      b(b.length / 2) = (b(b.length / 2) ^ 1).toByte
+      assert(DedupQueries.stateKey(old, edited) != key, classes(c))
+    }
+    // so does another compiled class standing in for an edited Dedup
+    assert(DedupQueries.stateKey(old,
+      DedupQueries.classBytes("graft/ops/Ivf$.class") +: code.tail) != key)
+  }
+
   test("containmentPairs: fragment-in-superset is directed (a→b only); " +
       "output equals the brute-force quadratic join on the corpus") {
     val frag = Seq(

@@ -131,17 +131,84 @@ class StoreSpec extends AnyFunSuite {
   }
 
   test("a cache hit on the latest version launches no Spark job") {
-    val store = freshStore()
-    store.registerFeatures(feats(1L -> 10.0, 2L -> 20.0), meta)
-    // a single-user slice is not cached yet: the miss reads the partition
-    // in two jobs: the parquet schema inference and the fill's bounded
-    // collect
-    val (first, missJobs) = jobsIn(store.serveFeatures(2L))
+    val dir = Files.createTempDirectory("graft-store-jobs").toString
+    val store = new FeatureStore(spark, dir)
+    val v = store.registerFeatures(feats(1L -> 10.0, 2L -> 20.0), meta)
+    def counter(k: String) = store.monitoringDashboard(k).asInstanceOf[Long]
+    val (h0, m0) = (counter("cache_hits"), counter("cache_misses"))
+    // the first lookup of a user is filtered from the version slice that
+    // registration cached: a miss on its own key, a hit on the version's
+    val (first, derivedJobs) = jobsIn(store.serveFeatures(2L))
     assert(first.get("total_amount") == 20.0)
-    assert(missJobs > 0 && missJobs <= 2)
-    val (again, hitJobs) = jobsIn(store.serveFeatures(2L))
-    assert(again == first)
-    assert(hitJobs == 0)
+    assert(derivedJobs == 0)
+    assert(counter("cache_hits") == h0 + 1 && counter("cache_misses") == m0 + 1)
+    // a fresh instance has an empty cache: once it has parsed the manifest
+    // (once per generation, not per lookup), its lookup reads the
+    // version's directory with the schema the manifest records, in the
+    // fill's one collect
+    val fresh = new FeatureStore(spark, dir)
+    fresh.listFeatureVersions()
+    val (cold, missJobs) = jobsIn(fresh.serveFeatures(2L, Some(v)))
+    assert(cold == first)
+    assert(missJobs == 1)
+    Seq(store, fresh).foreach { s =>
+      val (again, hitJobs) = jobsIn(s.serveFeatures(2L, Some(v)))
+      assert(again == first)
+      assert(hitJobs == 0)
+    }
+  }
+
+  test("a store whose versions have different columns reads and serves " +
+      "each version with its own columns") {
+    val store = freshStore()
+    val vAmount = store.registerFeatures(feats(1L -> 10.0, 2L -> 20.0), meta)
+    val vClicks = store.registerFeatures(
+      Seq(1L -> 7L, 2L -> 8L).toDF("user_id", "clicks"), meta)
+    val amount = store.getFeatures(Some(vAmount), useCache = false)
+    assert(amount.columns.toSeq ==
+      Seq("user_id", "total_amount", "created_at", "feature_version"))
+    assert(amount.select("user_id", "total_amount").as[(Long, Double)]
+      .collect().sorted.toSeq == Seq(1L -> 10.0, 2L -> 20.0))
+    val clicks = store.getFeatures(Some(vClicks), useCache = false)
+    assert(clicks.columns.toSeq ==
+      Seq("user_id", "clicks", "created_at", "feature_version"))
+    assert(clicks.select("user_id", "clicks").as[(Long, Long)]
+      .collect().sorted.toSeq == Seq(1L -> 7L, 2L -> 8L))
+    assert(store.serveFeatures(2L, Some(vAmount)) ==
+      Some(Map("user_id" -> 2L, "total_amount" -> 20.0)))
+    assert(store.serveFeatures(2L, Some(vClicks)) ==
+      Some(Map("user_id" -> 2L, "clicks" -> 8L)))
+  }
+
+  test("cleanup drops only the doomed versions' cache entries: a user's " +
+      "first lookup of a kept version is still derived with no Spark job, " +
+      "and a deleted version reads as zero rows") {
+    val store = freshStore()
+    val vs = (1 to 3).map(i =>
+      store.registerFeatures(feats(1L -> i.toDouble, 2L -> (i * 10.0)), meta))
+    assert(store.serveFeatures(2L, Some(vs.head)).get("total_amount") == 10.0)
+    assert(store.cleanupOldVersions(keepN = 2) == Seq(vs.head))
+    val (served, jobs) = jobsIn(store.serveFeatures(2L))
+    assert(served.get("total_amount") == 30.0)
+    assert(jobs == 0)
+    assert(store.serveFeatures(2L, Some(vs.head)).isEmpty)
+    assert(store.getFeatures(Some(vs.head)).count() == 0)
+    assert(store.getFeatures(Some(vs(1))).count() == 2)
+  }
+
+  test("a user erased by another instance is not derived from this " +
+      "instance's cached version slice") {
+    val dir = Files.createTempDirectory("graft-store-erase2").toString
+    val a = new FeatureStore(spark, dir)
+    val v = a.registerFeatures(feats(1L -> 10.0, 2L -> 20.0, 3L -> 30.0), meta)
+    val b = new FeatureStore(spark, dir)
+    assert(b.eraseUser(2L) == Seq(v -> 1L))
+    // a's whole slice of v predates the erasure: the rewritten directory
+    // makes a's first lookup of user 2 read parquet, and drops a's slices
+    assert(a.serveFeatures(2L).isEmpty)
+    assert(a.serveFeatures(3L).get("total_amount") == 30.0)
+    assert(a.getFeatures(Some(v)).select("user_id").as[Long].collect()
+      .sorted.toSeq == Seq(1L, 3L))
   }
 
   test("one instance sees another instance's commits at once: a new " +
@@ -191,7 +258,14 @@ class StoreSpec extends AnyFunSuite {
       """"description":"","tags":[],"owner":""}],"null_percentage":0.0,""" +
       """"duplicate_percentage":0.0,"outlier_percentage":0.0,""" +
       """"schema_violations":0,"overall_score":1.0,""" +
-      """"lineage":{"source":"unit-test"},"tags":["test"]}""" + "\n#commit"
+      """"lineage":{"source":"unit-test"},"tags":["test"],""" +
+      """"data_schema":"{\"type\":\"struct\",\"fields\":[""" +
+      """{\"name\":\"user_id\",\"type\":\"long\",""" +
+      """\"nullable\":true,\"metadata\":{}},""" +
+      """{\"name\":\"total_amount\",\"type\":\"double\",""" +
+      """\"nullable\":true,\"metadata\":{}},""" +
+      """{\"name\":\"created_at\",\"type\":\"string\",""" +
+      """\"nullable\":true,\"metadata\":{}}]}"}""" + "\n#commit"
     assert(text == expected)
     // the same bytes, laid down by hand, read back by a fresh instance
     val copy = Files.createTempDirectory("graft-store-fmt2")
@@ -201,6 +275,15 @@ class StoreSpec extends AnyFunSuite {
     val listed = new FeatureStore(spark, copy.toString).listFeatureVersions()
     assert(listed == store.listFeatureVersions())
     assert(listed.map(_.featureVersion) == Seq(v))
+    // a row written before the schema was recorded still reads back, and
+    // its version reads with an inferred schema
+    Files.writeString(Paths.get(dir, "metadata", "manifest-000000000001.json"),
+      expected.replaceFirst(",\"data_schema\":.*\\}", "}"))
+    val old = new FeatureStore(spark, dir)
+    assert(old.listFeatureVersions() == listed)
+    assert(old.getFeatures(Some(v), useCache = false)
+      .select("user_id", "total_amount").as[(Long, Double)].collect().sorted
+      .toSeq == Seq(1L -> 1.0, 2L -> 2.0))
   }
 
   test("get_features caching is observable via dashboard counters") {
@@ -239,7 +322,9 @@ class StoreSpec extends AnyFunSuite {
     assert(backend.hits >= 1L)
     assert(store.monitoringDashboard("cache_hits") == backend.hits)
     store.cleanupOldVersions(keepN = 0)
-    assert(backend.cleared == 1 && backend.m.isEmpty) // invalidation routed
+    // invalidation routed: the doomed version's keys are deleted, nothing
+    // else is cleared
+    assert(backend.cleared == 0 && backend.m.isEmpty)
   }
 
   test("size-gated cache: an over-cap version serves correctly with zero " +
@@ -436,6 +521,40 @@ class StoreSpec extends AnyFunSuite {
     assert(store.listFeatureVersions().size == 3)
     // erasing an absent user is a no-op with an empty audit
     assert(store.eraseUser(777L).isEmpty)
+  }
+
+  test("eraseUser on a store whose versions have different columns " +
+      "rewrites each touched version with its own columns") {
+    val dir = Files.createTempDirectory("graft-store-erase").toString
+    var i = 0
+    val store = new FeatureStore(spark, dir,
+      clock = () => { i += 1; f"2024-01-01T00:00:$i%02dZ" })
+    val vAmount = store.registerFeatures(
+      feats(1L -> 10.0, 2L -> 20.0, 3L -> 30.0), meta)
+    val vClicks = store.registerFeatures(
+      Seq(1L -> 7L, 2L -> 8L).toDF("user_id", "clicks"), meta)
+    val vOnly = store.registerFeatures(Seq(2L -> 9L).toDF("user_id", "clicks"), meta)
+    val created = store.listFeatureVersions()
+      .map(m => m.featureVersion -> m.createdAt).toMap
+    assert(store.eraseUser(2L).toMap == Map(vAmount -> 1L, vClicks -> 1L, vOnly -> 1L))
+    val amount = store.getFeatures(Some(vAmount), useCache = false)
+    assert(amount.columns.toSeq ==
+      Seq("user_id", "total_amount", "created_at", "feature_version"))
+    assert(amount.select("user_id", "total_amount", "created_at")
+      .as[(Long, Double, String)].collect().sorted.toSeq ==
+      Seq((1L, 10.0, created(vAmount)), (3L, 30.0, created(vAmount))))
+    val clicks = store.getFeatures(Some(vClicks), useCache = false)
+    assert(clicks.columns.toSeq ==
+      Seq("user_id", "clicks", "created_at", "feature_version"))
+    assert(clicks.select("user_id", "clicks", "created_at")
+      .as[(Long, Long, String)].collect().toSeq ==
+      Seq((1L, 7L, created(vClicks))))
+    // the version that held only user 2 is gone from disk and reads empty
+    assert(!Files.exists(Paths.get(dir, "features", s"feature_version=$vOnly")))
+    assert(store.getFeatures(Some(vOnly)).count() == 0)
+    assert(store.serveFeatures(1L, Some(vClicks)) ==
+      Some(Map("user_id" -> 1L, "clicks" -> 7L)))
+    assert(store.serveFeatures(2L, Some(vAmount)).isEmpty)
   }
 
   test("optimistic concurrency: racing writers on one store path never " +
