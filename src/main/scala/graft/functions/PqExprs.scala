@@ -28,6 +28,11 @@ import org.apache.spark.sql.types._
   * subspace sum can exceed a signed long), ties break to the smaller
   * cid. Registered as `graft_pq_assign(vec, codebook, m, k)` via
   * [[graft.GraftExtensions]] (codebook = comma-joined longs, a literal).
+  *
+  * With m = 1 the single code is the whole-vector nearest centroid:
+  * [[graft.ops.Similarity.kmeansFit]] assigns every Lloyd round this way,
+  * and `fittedCells` its final cells. The integer distances equal
+  * the exact DECIMAL sums of (x9 − c)² its oracle replays.
   */
 case class PqAssignCodes(child: Expression, codebook: Array[Long],
     m: Int, k: Int)
@@ -83,8 +88,10 @@ object PqKernel {
   def assignCodes(vec: ArrayData, cb: Array[Long], m: Int, k: Int)
       : ArrayData = {
     val dims = vec.numElements()
-    require(dims * k == cb.length && dims % m == 0,
-      s"vector dims=$dims inconsistent with codebook ${cb.length}/k=$k/m=$m")
+    require(dims * k == cb.length,
+      s"vector length $dims differs from the codebook's ${cb.length / k} " +
+        s"(k=$k, m=$m)")
+    require(dims % m == 0, s"vector length $dims not divisible by m=$m")
     val subDim = dims / m
     val xs = new Array[Long](dims)
     var i = 0

@@ -57,13 +57,12 @@ object Graph {
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
     val outDeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    // degree-carrying edges: ONE join, reused every round — CLUSTERED BY
-    // src before the checkpoint (localCheckpoint preserves
-    // outputPartitioning), so each round's ranks ⋈ ew join is
-    // exchange-free on the EDGE side; without this the full edge
-    // relation re-shuffled every iteration (guide §2.4)
-    val ew = e.join(outDeg, Seq("src")).repartition(col("src"))
-      .localCheckpoint()
+    // degree-carrying edges: ONE join, checkpointed and reused every
+    // round. The checkpoint does not keep a hash layout (a checkpointed
+    // relation reports UnknownPartitioning), so each round's ranks ⋈ ew
+    // join still exchanges the edge side; a repartition(src) before the
+    // checkpoint would only add a set-up shuffle (PlanSpec pins this)
+    val ew = e.join(outDeg, Seq("src")).localCheckpoint()
     val danglingNodes = nodes
       .join(outDeg, col("node") === col("src"), "left_anti")
       .select("node").localCheckpoint()
@@ -125,10 +124,8 @@ object Graph {
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
     val outDeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    // clustered by src once — every round's ranks ⋈ ew join is then
-    // exchange-free on the edge side (the pageRank discipline)
-    val ew = e.join(outDeg, Seq("src")).repartition(col("src"))
-      .localCheckpoint()
+    // degree-carrying edges joined once (the pageRank discipline)
+    val ew = e.join(outDeg, Seq("src")).localCheckpoint()
     val danglingNodes = nodes
       .join(outDeg, col("node") === col("src"), "left_anti")
       .select("node").localCheckpoint()

@@ -9,18 +9,20 @@ import org.apache.spark.sql.types.DecimalType
   * ANN quantization ladder between int8 scalar codes
   * ([[Similarity.int8QuantStats]]) and 1-bit binary codes
   * ([[Similarity.binaryCodes]]): split each d-dim vector into `m`
-  * subvectors, fit an independent k-centroid codebook per subspace (the
-  * relational Lloyd shape of [[Similarity.kmeansFit]], keyed by
-  * subspace), and store each vector as `m` small integer codes. A query
+  * subvectors, fit an independent k-centroid codebook per subspace
+  * (kernel Lloyd rounds, keyed by subspace; [[Similarity.kmeansFit]] runs
+  * the same round shape with m = 1), and store each vector as `m` small
+  * integer codes. A query
   * is answered by ASYMMETRIC DISTANCE COMPUTATION: one tiny
   * (m × k)-row table of exact query-subvector→centroid distances is
   * broadcast, and a vector's approximate distance is the SUM of its m
   * table lookups — the corpus is never read as floats at serve time.
   *
   * Scale shape: fitting is sample-friendly Lloyd (fit on a hash-bucket
-  * sample, encode corpus-wide — the [[TokenModels.bpeLearn]] discipline);
-  * encoding is one broadcast join + two partial-aggregable shuffles per
-  * round; serving joins the (id, sub, code) relation against the
+  * sample, encode corpus-wide — the [[TokenModels.bpeLearn]] discipline)
+  * whose rounds are one zero-shuffle kernel map plus one partial-
+  * aggregable (sub, cid, dim) exchange each; encoding is one zero-shuffle
+  * kernel map; serving joins the (id, sub, code) relation against the
   * broadcast ADC table and folds with ONE partial-aggregable groupBy —
   * memory per vector is m·log₂k bits instead of d doubles.
   *
@@ -90,10 +92,29 @@ object Pq {
     * 4.5 s encode at sf0.1 — pure plan overhead on 2 000 vectors, and
     * the non-scalable term at a corpus-wide 100 TB encode).
     */
-  private def assignCodes(vec: Column, cb: Array[Long], m: Int, k: Int)
+  private[ops] def assignCodes(vec: Column, cb: Array[Long], m: Int, k: Int)
       : Column =
     call_function("graft_pq_assign", vec.cast("array<double>"),
       lit(cb.mkString(",")), lit(m), lit(k))
+
+  /** The library's Lloyd seed rule, shared by [[pqFit]] and
+    * [[Similarity.kmeansFit]]: the k distinct ids smallest by md5(id)
+    * (ties by id), in rank order (cid = rank), each with its vector.
+    * `vecs` is (id long, __v array<double>); fewer than k distinct ids
+    * give that many seeds. Two bounded collects: `orderBy` + `limit` for
+    * the ids, `isInCollection` for their vectors.
+    */
+  private[ops] def md5Seeds(vecs: DataFrame, k: Int)
+      : Array[(Long, Seq[Double])] = {
+    val ids = vecs.select("id").distinct()
+      .withColumn("__h", md5(col("id").cast("string")))
+      .orderBy(col("__h"), col("id")).limit(k)
+      .select("id").collect().map(_.getLong(0))
+    val byId = vecs.filter(col("id").isInCollection(ids))
+      .select("id", "__v").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    ids.map(id => id -> byId(id))
+  }
 
   /** Per-subspace Lloyd fit: `k` centroids per subspace, seeded by the
     * md5-smallest ids' subvectors (the same seed rows in every subspace),
@@ -116,18 +137,11 @@ object Pq {
     val subDim = dims / m
     val vecs = emb.select(col(idCol).cast("long").as("id"),
       col(vecCol).cast("array<double>").as("__v")).localCheckpoint()
-    // seed order: md5-smallest ids, cid = rank — same rule as the
-    // original window formulation (orderBy + limit preserves order)
-    val seedIds = vecs.select("id").distinct()
-      .withColumn("__h", md5(col("id").cast("string")))
-      .orderBy(col("__h"), col("id")).limit(k)
-      .select("id").collect().map(_.getLong(0))
-    val seedVecs = vecs.filter(col("id").isInCollection(seedIds))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    val seeds = md5Seeds(vecs, k)
     var cb = new Array[Long](m * k * subDim)
-    for (c <- seedIds.indices; s <- 0 until m; d <- 0 until subDim)
+    for (c <- seeds.indices; s <- 0 until m; d <- 0 until subDim)
       cb((s * k + c) * subDim + d) =
-        graft.functions.PqKernel.quantize(seedVecs(seedIds(c))(s * subDim + d))
+        graft.functions.PqKernel.quantize(seeds(c)._2(s * subDim + d))
     for (_ <- 1 to rounds) {
       // assigned code for coordinate i = codes[i div subDim]; the means
       // collapse is partial-aggregable and the ONLY exchange per round.

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.PqKernel
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import scala.util.Random
@@ -1099,85 +1100,56 @@ object Similarity {
     * split weakly-clustered corpora across cell boundaries; cells that
     * FOLLOW the data's density keep ε-neighbors together). Same
     * self-excluded `minPts` convention as [[dbscan]] (pass
-    * `min_samples − 1` to match sklearn/ELKI). The
-    * quantizer is [[kmeansFit]]'s exact-DECIMAL Lloyd (md5-smallest
-    * seeds, bit-replayable rounds) and the assignment REPLAYS its
-    * per-round argmin exactly — exact DECIMAL(14,9)² distance sums over
-    * the broadcast k·d centroid relation, min-struct ties to the
-    * smallest cid — so there is no new rounding surface anywhere: an
-    * oracle replays fit + assignment + clustering bit-identically.
+    * `min_samples − 1` to match sklearn/ELKI). The cells are
+    * [[fittedCells]]: [[kmeansFit]]'s exact Lloyd (md5-smallest seeds,
+    * bit-replayable rounds) and one more pass of its exact argmin, so
+    * there is no new rounding surface anywhere: an oracle replays fit +
+    * assignment + clustering bit-identically.
     *
-    * Shape: Lloyd is Σ N·k·d work (never N²); assignment is one
-    * broadcast join + two partial-aggregable aggregations; the
-    * clustering core is [[dbscan]]'s (pair work Σ cell², CC on the core
-    * subgraph only). Returns (idCol, role, cluster).
+    * Shape: each Lloyd round is one zero-shuffle kernel map plus one
+    * (cid, dim) exchange (Σ N·k·d work, never N²); the assignment is one
+    * more kernel map, with no join; the clustering core is [[dbscan]]'s
+    * (pair work Σ cell², CC on the core subgraph only). Null and empty
+    * vectors are left out. Returns (idCol, role, cluster).
     */
   def dbscanFitted(emb: DataFrame, idCol: String, vecCol: String,
       tau: Double, minPts: Int, k: Int, rounds: Int): DataFrame = {
-    val assigned = emb.select(col(idCol).as("__id"),
-        col(vecCol).cast("array<double>").as("__v"),
-        norm(col(vecCol).cast("array<double>")).as("__nm"))
-      .join(fittedCells(emb, idCol, vecCol, k, rounds), Seq("__id"))
+    val assigned = fittedCells(emb, idCol, vecCol, k, rounds)
+      .select(col("__id"), col("__v"), norm(col("__v")).as("__nm"),
+        col("__cell"))
       .localCheckpoint()
     dbscanCore(assigned, idCol, tau, minPts)
   }
 
+  /** (__id, __v) of the vectors that have a nearest centroid: `__v` is
+    * `vecCol` as array<double>, and null and empty vectors are dropped.
+    */
+  private def nonEmptyVecs(emb: DataFrame, idCol: String, vecCol: String)
+      : DataFrame =
+    emb.select(col(idCol).as("__id"),
+        col(vecCol).cast("array<double>").as("__v"))
+      .filter(size(col("__v")) > 0)
+
   /** The FITTED cell assignment shared by [[dbscanFitted]] and the
-    * fitted arm of [[dbscanEdgeRecall]]: [[kmeansFit]]'s exact-DECIMAL
-    * Lloyd, then one more assignment pass replaying its per-round argmin
-    * exactly (exact DECIMAL(14,9)² distance sums over the broadcast k·d
-    * centroid relation, min-struct ties to the smallest cid). Returns
-    * (__id, __cell).
+    * fitted arm of [[dbscanEdgeRecall]]: [[kmeansFit]]'s final centroids,
+    * quantized from its output doubles (round(centroid, 9)), then ONE
+    * zero-shuffle kernel map over the non-empty vectors — the fit's own
+    * exact argmin, ties to the smallest cid. Returns (__id, __cell, __v).
     */
   private[graft] def fittedCells(emb: DataFrame, idCol: String,
       vecCol: String, k: Int, rounds: Int): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val X9 = DecimalType(12, 9)
-    val Dif = DecimalType(14, 9)
-    // kmeansFit returns a driver-local k·d relation; pivot it to one row
-    // per dim with k centroid columns (the kmeansFit round discipline):
-    // the assignment aggregate reads N·d rows instead of N·d·k and the
-    // argmin is a codegen'd least() over the k per-id sums — identical
-    // addends, identical decimal sum type, bit-identical assignment.
-    val spark = emb.sparkSession
-    val cents = kmeansFit(emb, idCol, vecCol, k, rounds)
-      .select(col("cid"), col("dim"),
-        round(col("centroid"), 9).cast(X9).as("__c9"))
-      .collect().toSeq
-    // one column per FITTED cid: with fewer than k ids kmeansFit has
-    // fewer cids, and a missing column's NULL distance would win least()
-    val nc = cents.map(_.getLong(0)).distinct.size
-    val wide = cents.groupBy(_.getLong(1)).toSeq.sortBy(_._1).map {
-      case (dim, rs) =>
-        val cs = new Array[Any](nc)
-        rs.foreach(r => cs(r.getLong(0).toInt) = r.getDecimal(2))
-        org.apache.spark.sql.Row.fromSeq(dim.toInt +: cs.toSeq)
-    }
-    val centsWide = spark.createDataFrame(
-      java.util.Arrays.asList(wide: _*),
-      org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.types.StructField("dim",
-          org.apache.spark.sql.types.IntegerType, nullable = false) +:
-        (0 until nc).map(i => org.apache.spark.sql.types.StructField(
-          s"__c$i", X9))))
-    val x = emb.select(col(idCol).as("__id"),
-        posexplode(col(vecCol).cast("array<double>"))
-          .as(Seq("dim", "__xd")))
-      .select(col("__id"), col("dim"),
-        round(col("__xd"), 9).cast(X9).as("__x9"))
-    def sq(i: Int) = {
-      val d = (col("__x9") - col(s"__c$i")).cast(Dif)
-      sum(d * d).as(s"__s$i")
-    }
-    val argmin =
-      if (nc == 1) lit(0)
-      else least((0 until nc).map(i =>
-        struct(col(s"__s$i").as("__dist"), lit(i.toLong).as("cid"))): _*)
-        .getField("cid")
-    x.join(broadcast(centsWide), Seq("dim"))
-      .groupBy("__id")
-      .agg(sq(0), (1 until nc).map(sq): _*)
-      .select(col("__id"), argmin.cast("int").as("__cell"))
+    val fit = kmeansFit(emb, idCol, vecCol, k, rounds)
+      .select("cid", "dim", "centroid").collect()
+    // with fewer than k ids the fit has fewer cids
+    val nc = fit.map(_.getLong(0)).distinct.length
+    val d = fit.length / nc
+    val cb = new Array[Long](fit.length)
+    fit.foreach(r => cb((r.getLong(0) * d + r.getLong(1)).toInt) =
+      PqKernel.quantize(r.getDouble(2)))
+    nonEmptyVecs(emb, idCol, vecCol)
+      .select(col("__id"),
+        element_at(Pq.assignCodes(col("__v"), cb, 1, nc), 1).as("__cell"),
+        col("__v"))
   }
 
   /** The clustering core shared by [[dbscan]] and [[dbscanFitted]]:
@@ -1272,15 +1244,15 @@ object Similarity {
       tau: Double, anchors: Array[Array[Int]],
       fittedK: Int = 0, fittedRounds: Int = 0): DataFrame = {
     val withFitted = fittedK > 0
-    val (c1, c2) = anchorCell2Expr(col(vecCol), anchors)
-    val base = emb.select(col(idCol).as("__id"),
-      col(vecCol).cast("array<double>").as("__v"),
-      norm(col(vecCol).cast("array<double>")).as("__nm"),
-      c1.as("__c1"), c2.as("__c2"))
-    val assigned = (if (withFitted)
-        base.join(fittedCells(emb, idCol, vecCol, fittedK, fittedRounds)
-          .select(col("__id"), col("__cell").as("__fc")), Seq("__id"))
-      else base.withColumn("__fc", lit(0)))
+    val vecs =
+      if (withFitted) fittedCells(emb, idCol, vecCol, fittedK, fittedRounds)
+        .withColumnRenamed("__cell", "__fc")
+      else emb.select(col(idCol).as("__id"),
+        col(vecCol).cast("array<double>").as("__v"), lit(0).as("__fc"))
+    val (c1, c2) = anchorCell2Expr(col("__v"), anchors)
+    val assigned = vecs.select(col("__id"), col("__v"),
+        norm(col("__v")).as("__nm"), c1.as("__c1"), c2.as("__c2"),
+        col("__fc"))
       .localCheckpoint()
     // true edges: all pairs, exact rounded cosine — audit-scale
     val x = assigned.select(col("__id").as("__ia"), col("__v").as("__va"),
@@ -1510,32 +1482,34 @@ object Similarity {
             (col("__sj").cast("double") / col("n")), 9).as("cov"))
   }
 
-  /** Fully-relational fixed-round Lloyd's k-means over the embedding
-    * corpus (Lloyd 1982) — the cluster-structure read on the WHOLE corpus
-    * that [[graft.ops.Ivf.fitCentroids]]'s bounded-sample driver fit
-    * deliberately is not: every assignment and every centroid update is a
-    * DataFrame op, so the result is engine-replayable and the pass scales
-    * with the cluster, not the driver. Semantic-clustering curation
-    * (cluster-balanced sampling, SemDeDup cell structure, topic buckets)
-    * wants exactly this corpus-wide pass.
+  /** Fixed-round Lloyd's k-means over the WHOLE embedding corpus (Lloyd
+    * 1982) — the cluster-structure read that
+    * [[graft.ops.Ivf.fitCentroids]]'s bounded-sample driver fit
+    * deliberately is not: assignment and centroid update run on the
+    * cluster, so the pass scales with the corpus, not the driver.
+    * Semantic-clustering curation (cluster-balanced sampling, SemDeDup
+    * cell structure, topic buckets) wants exactly this corpus-wide pass.
     *
     * Determinism discipline (the [[graft.ops.Graph.pageRank]] replay
-    * rules): elements round to 9 dp DECIMAL(12,9) once; distances are
-    * EXACT DECIMAL sums of squared diffs (diff re-bounded to
-    * DECIMAL(14,9) so the square stays inside precision 38 instead of
-    * silently losing scale); per-point argmin ties break to the smallest
-    * cluster id via min-struct (partial-aggregable, map-side combined);
-    * centroid update = exact DECIMAL sum, ONE IEEE division, round 9 —
-    * so a DuckDB oracle replays every round bit-identically. Seeds are
-    * the k ids smallest by md5(id) (hash-random yet engine-stable — the
-    * library-wide sampling rule). Empty clusters keep their previous
-    * centroid. With fewer than k distinct ids there are only that many
-    * seeds, so the fit has one cluster per id (cids 0 until #ids, each
-    * centroid its own point) — never a centroid-less cid.
+    * rules): elements round to 9 dp once; distances are EXACT — the
+    * [[graft.functions.PqAssignCodes]] kernel with m = 1 sums squared
+    * nano-unit differences in 128-bit integers, the same values as a
+    * DECIMAL sum of (x9 − c)² — and per-point argmin ties break to the
+    * smallest cluster id; centroid update = exact DECIMAL sum, ONE IEEE
+    * division, round 9 — so a DuckDB oracle replays every round
+    * bit-identically. Seeds are the k ids smallest by md5(id)
+    * ([[Pq.md5Seeds]], the library-wide sampling rule). Empty clusters
+    * keep their previous centroid. With fewer than k distinct ids there
+    * are only that many seeds, so the fit has one cluster per id (cids 0
+    * until #ids, each centroid its own point) — never a centroid-less
+    * cid. Null and empty vectors take no part; a corpus whose vectors
+    * differ in length raises, naming both lengths.
     *
-    * Per round: one broadcast join of the (id, dim, x) relation against
-    * the k·d centroid relation + two partial-aggregable shuffles
-    * ((id, cid) distance collapse, (cid, dim) mean). Σ work = N·k·d —
+    * Per round: one zero-shuffle kernel map (the nc·d centroids ride as
+    * a literal codebook) + ONE partial-aggregable (cid, dim) exchange
+    * whose k·d-row result is collected — 2 Spark jobs. The vectors are
+    * spread over `spark.sql.shuffle.partitions` partitions and
+    * checkpointed once, so the map runs on every core. Σ work = N·k·d —
     * the canonical Lloyd cost, never quadratic in N.
     *
     * Returns (cid, dim, centroid, n_members): the final centroid relation
@@ -1546,118 +1520,55 @@ object Similarity {
       rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
-    import org.apache.spark.sql.types.DecimalType
-    val D9 = DecimalType(18, 9)
-    val X9 = DecimalType(12, 9)
-    val Dif = DecimalType(14, 9)
+    import org.apache.spark.sql.types._
     val spark = emb.sparkSession
-    val x = emb.select(col(idCol).cast("long").as("id"),
-        posexplode(col(vecCol).cast("array<double>")).as(Seq("dim", "__xd")))
-      .select(col("id"), col("dim"),
-        round(col("__xd"), 9).cast(X9).as("x9"))
+    // an explicit count: AQE coalesces a count-less repartition of a
+    // small corpus back to one partition
+    val vecs = nonEmptyVecs(emb, idCol, vecCol)
+      .select(col("__id").cast("long").as("id"), col("__v"))
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt)
       .localCheckpoint()
-    // k hash-smallest ids seed the centroids (row_number over k rows)
-    val seeds = x.select("id").distinct()
-      .withColumn("__h", md5(col("id").cast("string")))
-      .orderBy(col("__h"), col("id")).limit(k)
-      .withColumn("cid", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("__h"), col("id"))) - 1)
-      .select("id", "cid")
-    // centroids are a k·d relation by construction — they live on the
-    // DRIVER between rounds (LocalRelation), so each Lloyd round below
-    // is ONE fused job: assign → fresh-centroid aggregate → k·d-row
-    // collect. The former spelling localCheckpointed BOTH the N-row
-    // assignment AND the centroid iterate every round (2 materialization
-    // jobs + an RDD-backed broadcast rebuild per round; at corpus scale
-    // a full N-row write per round). Arithmetic is unchanged — exact
-    // DECIMAL distance sums, round(mean, 9) — so the fit replays
-    // bit-identically (SimilaritySpec pins).
-    def localCents(df: DataFrame): Seq[org.apache.spark.sql.Row] =
-      df.collect().toSeq
-    var cents: Seq[org.apache.spark.sql.Row] = localCents(
-      seeds.join(x, Seq("id"))
-        .select(col("cid").cast("int").as("cid"),
-          col("dim").cast("int").as("dim"), col("x9").cast(D9).as("c")))
-    // the seeds number min(k, #ids): cids are 0 until nc. Pivot columns
-    // and argmin arms exist only for those — a centroid-less cid would
-    // sum to a NULL distance, which sorts FIRST in least(struct) and
-    // captures every point
-    val nc = cents.map(_.getInt(0)).distinct.size
-    // per-(cid, dim=0) member count of the LAST round's aggregate = the
-    // per-cid assignment size (posexplode emits dim 0 for every
-    // non-empty vector, and empty vectors never enter x at all)
-    var lastFresh: Seq[org.apache.spark.sql.Row] = Seq.empty
-    // centroids PIVOTED to one row per dim with k decimal columns: the
-    // per-round assignment aggregate then reads N·d rows (one per vector
-    // element) instead of N·d·k join-expanded rows, and the argmin is a
-    // codegen'd least() over the k per-id sums instead of a second
-    // groupBy. Arithmetic is addend-for-addend identical — same
-    // (x9 − c)·cast(Dif) squares, same decimal sum type, and decimal
-    // sums are order-insensitive — so the fit still replays
-    // bit-identically (SimilaritySpec pins).
-    def centsWideRel(rows: Seq[org.apache.spark.sql.Row]): DataFrame = {
-      val wide = rows.groupBy(_.getInt(1)).toSeq.sortBy(_._1).map {
-        case (dim, rs) =>
-          val cs = new Array[Any](nc)
-          rs.foreach(r => cs(r.getInt(0)) = r.getDecimal(2))
-          org.apache.spark.sql.Row.fromSeq(dim +: cs.toSeq)
-      }
-      spark.createDataFrame(
-        java.util.Arrays.asList(wide: _*),
-        org.apache.spark.sql.types.StructType(
-          org.apache.spark.sql.types.StructField("dim",
-            org.apache.spark.sql.types.IntegerType, nullable = false) +:
-          (0 until nc).map(i => org.apache.spark.sql.types.StructField(
-            s"__c$i", D9))))
+    val seeds = Pq.md5Seeds(vecs, k)
+    require(seeds.nonEmpty, "kmeansFit: no non-empty vector to fit")
+    val nc = seeds.length
+    val d = seeds.head._2.length
+    seeds.foreach { case (id, v) =>
+      require(v.length == d,
+        s"kmeansFit: vector $id has length ${v.length}, the seeds have $d")
     }
-    def argminCid(k: Int): Column =
-      if (k == 1) lit(0)
-      else least((0 until k).map(i =>
-        struct(col(s"__s$i").as("__dist"), lit(i).as("cid"))): _*)
-        .getField("cid")
+    // centroid state on the driver: cents(cid·d + dim), 9-dp decimals
+    var cents: Array[java.math.BigDecimal] = seeds.flatMap(_._2.map(x =>
+      java.math.BigDecimal.valueOf(x)
+        .setScale(9, java.math.RoundingMode.HALF_UP)))
+    // per-cid member count of the LAST round (its dim-0 rows: every
+    // non-empty vector has a dim 0)
+    var sizes = Map.empty[Int, Long]
     for (_ <- 1 to rounds) {
-      def sq(i: Int) = {
-        val d = (col("x9") - col(s"__c$i")).cast(Dif)
-        sum(d * d).as(s"__s$i")
-      }
-      val assign = x.join(broadcast(centsWideRel(cents)), Seq("dim"))
-        .groupBy("id")
-        .agg(sq(0), (1 until nc).map(sq): _*)
-        .select(col("id"), argminCid(nc).as("cid"))
-      lastFresh = localCents(assign.join(x, Seq("id"))
+      val cb = cents.map(_.unscaledValue.longValueExact + PqKernel.Shift)
+      // the kernel binds in its own projection BEFORE the explode, else
+      // it re-evaluates per generated row (see Pq.pqFit)
+      val fresh = vecs
+        .select(col("__v"), element_at(Pq.assignCodes(col("__v"), cb, 1, nc),
+          1).as("cid"))
+        .select(col("cid"), posexplode(col("__v")).as(Seq("dim", "__xd")))
         .groupBy("cid", "dim")
-        .agg(round(sum(col("x9")).cast("double") / count(lit(1)), 9)
-            .cast(D9).as("__cn"),
+        .agg(round(sum(round(col("__xd"), 9).cast(DecimalType(12, 9)))
+            .cast("double") / count(lit(1)), 9)
+            .cast(DecimalType(18, 9)).as("__cn"),
           count(lit(1)).as("__cnt"))
-        .select(col("cid").cast("int").as("cid"),
-          col("dim").cast("int").as("dim"), col("__cn"), col("__cnt")))
-      // coalesce(fresh, previous) merge on the driver — pure
-      // bookkeeping over ≤ k·d rows, no arithmetic
-      val freshMap = lastFresh.map(r =>
-        (r.getInt(0), r.getInt(1)) -> r.getDecimal(2)).toMap
-      cents = cents.map { r =>
-        val key = (r.getInt(0), r.getInt(1))
-        org.apache.spark.sql.Row(key._1, key._2,
-          freshMap.getOrElse(key, r.getDecimal(2)))
-      }
+        .collect()
+      val next = cents.clone() // a centroid nobody picked keeps its value
+      fresh.foreach(r => next(r.getInt(0) * d + r.getInt(1)) = r.getDecimal(2))
+      cents = next
+      sizes = fresh.filter(_.getInt(1) == 0)
+        .map(r => r.getInt(0) -> r.getLong(3)).toMap
     }
-    val sizeMap = lastFresh.filter(_.getInt(1) == 0)
-      .map(r => r.getInt(0) -> r.getLong(3)).toMap
-    val out = cents.map { r =>
-      org.apache.spark.sql.Row(r.getInt(0).toLong, r.getInt(1).toLong,
-        r.getDecimal(2).doubleValue(),
-        sizeMap.getOrElse(r.getInt(0), 0L))
-    }
+    val out = for (c <- 0 until nc; j <- 0 until d) yield Row(c.toLong,
+      j.toLong, cents(c * d + j).doubleValue(), sizes.getOrElse(c, 0L))
     spark.createDataFrame(java.util.Arrays.asList(out: _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cid",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("dim",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("centroid",
-          org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("n_members",
-          org.apache.spark.sql.types.LongType, nullable = false))))
+      StructType(Seq(StructField("cid", LongType, nullable = false),
+        StructField("dim", LongType, nullable = false),
+        StructField("centroid", DoubleType),
+        StructField("n_members", LongType, nullable = false))))
   }
 }

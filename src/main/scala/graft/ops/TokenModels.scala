@@ -129,9 +129,9 @@ object TokenModels {
     * Shape at scale: the (doc, bucket) counts come from the fused
     * zero-shuffle [[graft.functions.BucketCounts]] kernel (no
     * token-scale exchange anywhere), are id-partitioned once (one
-    * count-row-scale shuffle) and checkpointed (localCheckpoint
-    * preserves outputPartitioning), then reused exchange-free by every
-    * iteration; each
+    * count-row-scale shuffle) and checkpointed, then reused by every
+    * iteration (the checkpoint does not keep the hash layout, so the
+    * rounds still exchange on id); each
     * iteration broadcasts the (buckets+1)-row weight relation onto the
     * counts and runs two map-side-combinable aggregations (per-doc
     * margin, per-bucket gradient) — no windows, no driver-side data,
@@ -202,13 +202,12 @@ object TokenModels {
   private val NanoDec = lit(1000000000L).cast(Dec38)
 
   /** The (id, __t, bucket, c) count relation [[sgdLinear]] trains on —
-    * hash-partitioned by id BEFORE the checkpoint (localCheckpoint
-    * preserves outputPartitioning): the per-round margin groupBy and the
-    * occ ⋈ residual gradient join then both reuse this ONE layout —
-    * without it every round re-shuffles the full count relation on id
-    * (measured 11.3 → 8.7 s/round at 1M docs before the per-doc
-    * quantization; SURVEY §6.1 round-11 operators). Bias rides as
-    * bucket `buckets` with count `biasCount`.
+    * hash-partitioned by id before the checkpoint. The checkpoint does
+    * not keep that layout (a checkpointed relation reports
+    * UnknownPartitioning; PlanSpec pins it), so the per-round margin
+    * groupBy and the occ ⋈ residual gradient join still exchange on id;
+    * the repartition spreads the rows over the shuffle partitions. Bias
+    * rides as bucket `buckets` with count `biasCount`.
     */
   private[graft] def sgdCounts(docs: DataFrame, idCol: String,
       textCol: String, targetPred: Column, buckets: Int,

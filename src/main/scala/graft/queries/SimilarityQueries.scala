@@ -611,7 +611,7 @@ object SimilarityQueries {
       .orderBy("method")
   }
 
-  /** Corpus-wide relational k-means ([[graft.ops.Similarity.kmeansFit]],
+  /** Corpus-wide k-means ([[graft.ops.Similarity.kmeansFit]],
     * 4 clusters, 3 Lloyd rounds, md5-smallest seeds): final centroid
     * relation in long form + final member counts.
     */

@@ -747,23 +747,30 @@ object FeatureStore {
       lineage, tags)
   }
 
-  /** Whole-relation content fingerprint (reference `_generate_version_hash`,
+  /** Whole-relation fingerprint (reference `_generate_version_hash`,
     * `:307-309`, which md5s *order-dependent* per-row hashes). We make the
     * digest order- AND partitioning-independent — sum, xor and count of
-    * per-row `xxhash64` over all columns — then md5 the three numbers.
-    * Intentional divergence documented in SURVEY §7.4: pandas row order is
+    * per-row `xxhash64` over all columns — then md5 the three numbers
+    * together with the sorted column names and types. Two intentional
+    * divergences, documented in SURVEY A20 and §7.4: pandas row order is
     * itself nondeterministic under parallel execution, so order-dependence
-    * is a bug to not replicate. One distributed agg pass, no collect.
+    * is a bug to not replicate; and a row hash sees values only, so
+    * without the schema two relations with equal values under different
+    * columns would share one version id and the second registration would
+    * overwrite the first. One distributed agg pass, no collect.
     */
   def fingerprint(df: DataFrame): String = {
-    val h = xxhash64(struct(df.columns.sorted.map(col).toIndexedSeq: _*))
+    val fields = df.schema.fields.sortBy(_.name)
+    val h = xxhash64(struct(fields.map(f => col(f.name)).toIndexedSeq: _*))
     // Long sum of 2^63-scale hashes overflows (ANSI mode throws); sum in
     // DECIMAL(38,0) — exact and overflow-free below ~10^19 rows.
     val r = df.select(h.as("h"))
       .agg(sum(col("h").cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("s"),
         expr("bit_xor(h)").as("x"), count(lit(1)).as("c"))
       .head()
-    val payload = s"${r.get(0)}:${r.get(1)}:${r.get(2)}"
+    val schema = fields.map(f => s"${f.name} ${f.dataType.catalogString}")
+      .mkString(",")
+    val payload = s"$schema:${r.get(0)}:${r.get(1)}:${r.get(2)}"
     MessageDigest.getInstance("MD5").digest(payload.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
   }

@@ -309,6 +309,18 @@ class PlanSpec extends AnyFunSuite {
     assert(!s.contains("CartesianProduct"), s)
   }
 
+  test("localCheckpoint keeps no hash layout: a groupBy on the " +
+      "repartition key still plans its own exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
+    import org.apache.spark.sql.functions.col
+    val cp = spark.range(100).select((col("id") % 7).as("k"), col("id"))
+      .repartition(4, col("k")).localCheckpoint()
+    val p = cp.queryExecution.sparkPlan.outputPartitioning
+    assert(p.isInstanceOf[UnknownPartitioning], p)
+    val s = planString(cp.groupBy("k").count())
+    assert("Exchange hashpartitioning\\(k#".r.findFirstIn(s).isDefined, s)
+  }
+
   test("count-min / bloom probes: the sketch side broadcasts; the probe " +
       "path never shuffles the raw stream a second time") {
     val cm = planString(graft.queries.ScaleQueries.countMin(spark, dir))

@@ -515,6 +515,66 @@ class SimilaritySpec extends AnyFunSuite {
     assert(run(emb.repartition(13)) == run(emb.coalesce(1)))
   }
 
+  private def kmeansRows(df: org.apache.spark.sql.DataFrame, k: Int,
+      rounds: Int) =
+    Similarity.kmeansFit(df, "vec_id", "embedding", k, rounds)
+      .orderBy("cid", "dim").collect()
+      .map(x => (x.getAs[Long]("cid"), x.getAs[Long]("dim"),
+        x.getAs[Double]("centroid"), x.getAs[Long]("n_members"))).toSeq
+
+  test("kmeansFit: each extra Lloyd round launches exactly 2 Spark jobs " +
+      "(one kernel map + one (cid, dim) exchange, collected)") {
+    val spark2 = spark
+    import spark2.implicits._
+    val emb = (0L until 40L).map(i =>
+      (i, Seq(((i % 7).toFloat - 3f) / 3f, (i % 5).toFloat / 5f)))
+      .toDF("vec_id", "embedding")
+    def jobs(rounds: Int) = TestSpark.jobsIn(
+      Similarity.kmeansFit(emb, "vec_id", "embedding", 3, rounds))._2
+    val one = jobs(1)
+    val three = jobs(3)
+    assert(three - one == 4, s"rounds=1: $one jobs, rounds=3: $three jobs")
+  }
+
+  test("kmeansFit: ragged vector lengths raise, naming both lengths") {
+    val spark2 = spark
+    import spark2.implicits._
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+    // md5("1") < md5("2") < md5("0") < md5("3"): with k = 1 the seed is
+    // id 1, so id 3's longer vector meets the 2-long codebook in the map
+    val emb = Seq((0L, Seq(0.0f, 1.0f)), (1L, Seq(1.0f, 0.0f)),
+      (2L, Seq(10.0f, 1.0f)), (3L, Seq(11.0f, 0.0f, 2.0f)))
+      .toDF("vec_id", "embedding")
+    val inMap = intercept[Exception](
+      Similarity.kmeansFit(emb, "vec_id", "embedding", 1, 2))
+    assert(messages(inMap).contains(
+      "vector length 3 differs from the codebook's 2"), messages(inMap))
+    // with k = 4 the ragged vector is a seed: the driver names both
+    val inSeeds = intercept[Exception](
+      Similarity.kmeansFit(emb, "vec_id", "embedding", 4, 2))
+    assert(messages(inSeeds).contains("vector 3 has length 3, the seeds " +
+      "have 2"), messages(inSeeds))
+  }
+
+  test("kmeansFit: null and empty vectors are skipped — the fit equals " +
+      "the fit without them") {
+    val spark2 = spark
+    import spark2.implicits._
+    val pts = (0L until 30L).map(i =>
+      (i, Seq((i % 4).toFloat, (i % 3).toFloat / 2f)))
+    val holes = (100L until 110L).map(i =>
+      (i, if (i % 2 == 0) null else Seq.empty[Float]))
+    val clean = pts.toDF("vec_id", "embedding")
+    val withHoles = (pts ++ holes).toDF("vec_id", "embedding")
+    assert(kmeansRows(withHoles, 3, 3) == kmeansRows(clean, 3, 3))
+    val cells = Similarity.fittedCells(withHoles, "vec_id", "embedding", 3,
+      3).collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(cells == Similarity.fittedCells(clean, "vec_id", "embedding", 3,
+      3).collect().map(r => r.getLong(0) -> r.getInt(1)).toMap)
+  }
+
   test("bitextMargin: hand-computed ratio margins, mutual-best flags, " +
       "threshold filters") {
     val spark2 = spark

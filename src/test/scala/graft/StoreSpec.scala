@@ -2,13 +2,12 @@ package graft
 
 import graft.model.{FeatureConfig, FeatureMetadata}
 import graft.store.{FeatureStore, TtlCache}
-import org.apache.spark.TestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Paths}
 
 class StoreSpec extends AnyFunSuite {
+  import TestSpark.jobsIn
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -20,32 +19,6 @@ class StoreSpec extends AnyFunSuite {
 
   private def feats(rows: (Long, Double)*) =
     rows.toSeq.toDF("user_id", "total_amount")
-
-  /** `body`'s result and the number of Spark jobs it launched. Only jobs
-    * of this thread's job group count, so work from other threads never
-    * shows up.
-    */
-  private def jobsIn[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val group = s"counted-${java.util.UUID.randomUUID}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "counted")
-    try {
-      val a = body
-      TestBus.drain(sc)
-      (a, jobs.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   private val meta = FeatureMetadata("", "test features", "",
     Seq(FeatureConfig("user_id", "int64"), FeatureConfig("total_amount", "float64")),
@@ -76,6 +49,27 @@ class StoreSpec extends AnyFunSuite {
     assert(v1 == v2)
     assert(v1 != v3)
     assert(store.registerFeatures(df, meta) == v1)
+  }
+
+  test("fingerprint reads column names: equal values under different " +
+      "columns register as two versions, each reading back its own") {
+    val store = freshStore()
+    val amounts = feats(1L -> 1.0, 2L -> 2.0)
+    val clicks = Seq(1L -> 1.0, 2L -> 2.0).toDF("user_id", "clicks")
+    val vA = store.registerFeatures(amounts, meta)
+    val vC = store.registerFeatures(clicks, meta)
+    assert(vA != vC)
+    assert(store.listFeatureVersions().map(_.featureVersion).toSet ==
+      Set(vA, vC))
+    def back(v: String) = store.getFeatures(Some(v), useCache = false)
+    assert(back(vA).columns.contains("total_amount") &&
+      !back(vA).columns.contains("clicks"))
+    assert(back(vC).columns.contains("clicks") &&
+      !back(vC).columns.contains("total_amount"))
+    assert(back(vA).orderBy("user_id").select("total_amount").as[Double]
+      .collect().toSeq == Seq(1.0, 2.0))
+    assert(back(vC).orderBy("user_id").select("clicks").as[Double]
+      .collect().toSeq == Seq(1.0, 2.0))
   }
 
   test("latest-version resolution and list ordering") {
