@@ -29,15 +29,22 @@ import java.util.concurrent.ConcurrentHashMap
   *    throw, and the loser re-reads the NEW state and re-applies its
   *    mutation (no lost update, both commits visible). Readers load the
   *    max generation; superseded generations are garbage-collected a safe
-  *    distance behind.
+  *    distance behind, oldest first (see [[commitMetadata]]).
   *
   * A committed generation is immutable (exclusive create, sealed by the
   * commit marker), so each instance memoizes the rows of the newest
-  * complete generation it has parsed, keyed on (generation, file length,
-  * modification time). Every read still lists `metadata/`, so commits by
-  * other instances or processes are visible at once and in-flight claims
-  * are still skipped; only the parse of an unchanged generation is
-  * saved.
+  * complete generation `g` it has parsed, keyed on (generation, file
+  * length, modification time). A read uses the memo after two point
+  * probes, in this order: `manifest-(g+1)` does not exist, and then
+  * `manifest-g` still exists with the memo's length and modification
+  * time. Generations are created one after another with no gap, and GC
+  * never deletes a generation while its predecessor is still there, so
+  * the probes prove that `g` was the newest generation at the first
+  * probe: commits by other instances or processes are visible at once,
+  * with no listing. When a probe fails (a newer generation or an
+  * in-flight claim exists, `g` was collected, or the store was rebuilt
+  * under this instance), the read lists `metadata/`, skips in-flight
+  * claims and parses the newest complete generation, as commits do.
   *
   * Read path. A version is read from its own directory only, with that
   * directory's own schema, and `feature_version` is appended as the last
@@ -562,14 +569,17 @@ final class FeatureStore(
     new Path(metadataPath, f"manifest-$gen%012d.json")
 
   /** Manifest generations present, newest first. Other names in
-    * `metadata/` (a stray `manifest-old.json`, a backup) are ignored.
+    * `metadata/` (a stray `manifest-old.json`, a backup, a number not in
+    * [[manifestPath]]'s zero-padded form, which the probes would not find)
+    * are ignored.
     */
   private def manifests(fs: FileSystem): Seq[(Long, FileStatus)] = {
     val dir = new Path(metadataPath)
     if (!fs.exists(dir)) Nil
     else fs.listStatus(dir).toSeq.flatMap { st =>
       st.getPath.getName match {
-        case FeatureStore.ManifestName(g) => Some(g.toLong -> st)
+        case name @ FeatureStore.ManifestName(g)
+          if name == manifestPath(g.toLong).getName => Some(g.toLong -> st)
         case _ => None
       }
     }.sortBy(-_._1)
@@ -643,26 +653,48 @@ final class FeatureStore(
               .schema(implicitly[org.apache.spark.sql.Encoder[MetadataRow]]
                 .schema)
               .json(json.toDS()).as[MetadataRow].collect().toSeq
-          manifestMemo = Some(FeatureStore.Manifest(key, rows))
+          memoize(gen, st, rows)
           Some(rows)
         }
       }
     }.collectFirst { case Some(rows) => rows }.getOrElse(Nil)
   }
 
+  /** The newest complete manifest's rows: the memo's, when the two point
+    * probes of the class doc pass, and else those of a listing.
+    */
   private def readMetadata(): Seq[MetadataRow] = {
     val fs = hadoopFs()
-    readCommitted(fs, manifests(fs))
+    manifestMemo.filter { m =>
+      !fs.exists(m.next) &&
+        (try {
+          val st = fs.getFileStatus(m.path)
+          (m.key._2, m.key._3) == (st.getLen, st.getModificationTime)
+        } catch { case _: java.io.FileNotFoundException => false })
+    }.fold(readCommitted(fs, manifests(fs)))(_.rows)
   }
+
+  /** Memoizes `rows`, the rows of complete generation `gen` whose file
+    * status is `st`, with the two paths [[readMetadata]] probes.
+    */
+  private def memoize(gen: Long, st: FileStatus, rows: Seq[MetadataRow]): Unit =
+    manifestMemo = Some(FeatureStore.Manifest(
+      (gen, st.getLen, st.getModificationTime), rows, st.getPath,
+      manifestPath(gen + 1)))
 
   /** Optimistic CAS commit: read the newest complete manifest, apply
     * `mutate`, exclusive-create the next generation (JSON lines via the
     * Spark encoder, so nested configs/lineage round-trip exactly, sealed
     * by the commit marker). Losing the race means the winner's state is
     * re-read and the mutation re-applied — the standard commit-log
-    * retry, so no update is ever lost. Superseded generations GC a safe
-    * distance (8) behind the head: a racing reader reads at-or-below the
-    * head, which GC never approaches.
+    * retry, so no update is ever lost. After a commit to head `h`, GC
+    * deletes every generation at or below `h - 9` in this committer's own
+    * listing, in ascending order: a racing reader reads at-or-below the
+    * head, which GC never approaches, and no generation is deleted while
+    * its predecessor is still there. Two committers' GCs may interleave,
+    * but each deletes a generation only after every older one it listed,
+    * and a generation missing from its listing was already gone. The
+    * readers' probes rely on that order (see the class doc).
     */
   private def commitMetadata(
       mutate: Seq[MetadataRow] => Seq[MetadataRow]): Unit = {
@@ -684,10 +716,9 @@ final class FeatureStore(
         done = true
         // our own commit needs no re-parse
         val st = fs.getFileStatus(path)
-        manifestMemo = Some(FeatureStore.Manifest(
-          (gen + 1, st.getLen, st.getModificationTime), next))
-        val gc = gen - 8
-        if (gc >= 0) fs.delete(manifestPath(gc), false)
+        memoize(gen + 1, st, next)
+        listed.reverseIterator.takeWhile(_._1 <= gen - 8)
+          .foreach { case (_, old) => fs.delete(old.getPath, false) }
       }
     }
   }
@@ -717,10 +748,11 @@ object FeatureStore {
     StructField("user_id", LongType), StructField("feature_version", StringType)))
 
   /** Parsed rows of one complete manifest generation, keyed by
-    * (generation, file length, modification time).
+    * (generation, file length, modification time), with the generation's
+    * file and the file its successor would have.
     */
   private final case class Manifest(key: (Long, Long, Long),
-      rows: Seq[MetadataRow])
+      rows: Seq[MetadataRow], path: Path, next: Path)
 
   /** Metadata table row (reference DDL `:282-292`); nested values are native
     * Spark types rather than JSON strings. `data_schema` is the schema of

@@ -4,7 +4,38 @@ import graft.model.{FeatureConfig, FeatureMetadata}
 import graft.store.{FeatureStore, TtlCache}
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
+
+import java.net.URI
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+
+/** The local filesystem under the scheme `countfs`, counting the
+  * directory listings and the point probes (`exists`, `getFileStatus`)
+  * made through it.
+  */
+class CountingFs extends RawLocalFileSystem {
+  override def getUri: URI = CountingFs.Uri
+  override def getScheme: String = CountingFs.Uri.getScheme
+  override def listStatus(f: Path): Array[FileStatus] = {
+    CountingFs.lists.incrementAndGet()
+    super.listStatus(f)
+  }
+  override def exists(f: Path): Boolean = {
+    CountingFs.probes.incrementAndGet()
+    super.exists(f)
+  }
+  override def getFileStatus(f: Path): FileStatus = {
+    CountingFs.probes.incrementAndGet()
+    super.getFileStatus(f)
+  }
+}
+
+object CountingFs {
+  val Uri: URI = URI.create("countfs:///")
+  val lists = new AtomicInteger
+  val probes = new AtomicInteger
+}
 
 class StoreSpec extends AnyFunSuite {
   import TestSpark.jobsIn
@@ -23,6 +54,33 @@ class StoreSpec extends AnyFunSuite {
   private val meta = FeatureMetadata("", "test features", "",
     Seq(FeatureConfig("user_id", "int64"), FeatureConfig("total_amount", "float64")),
     lineage = Map("source" -> "unit-test"), tags = Seq("test"))
+
+  /** `n` instances over `dir` sharing one clock, so that versions order
+    * by registration whichever instance registers them.
+    */
+  private def instances(dir: String, n: Int): Seq[FeatureStore] = {
+    var i = 0
+    val clock = () => { i += 1; f"2024-01-01T00:00:$i%02dZ" }
+    Seq.fill(n)(new FeatureStore(spark, dir, clock = clock))
+  }
+
+  /** Registers the one-row versions `(1, k)` for `k` in `ks`: one
+    * manifest commit each, and user 1 serves `k` from the last.
+    */
+  private def registerEach(store: FeatureStore, ks: Range): Seq[String] =
+    ks.map(k => store.registerFeatures(feats(1L -> k.toDouble), meta))
+
+  private val Generation = "manifest-(\\d+)\\.json".r
+
+  /** The manifest generations in `dir`'s `metadata/`, ascending. */
+  private def generations(dir: String): Seq[Long] =
+    Paths.get(dir, "metadata").toFile.list().toSeq
+      .collect { case Generation(g) => g.toLong }.sorted
+
+  /** A claim of generation `gen` whose writer crashed: no commit marker. */
+  private def crashedClaim(dir: String, gen: Long): Unit =
+    Files.writeString(Paths.get(dir, "metadata", f"manifest-$gen%012d.json"),
+      "{\"feature_version\":\"half-writ")
 
   test("register → get → serve round-trip") {
     val store = freshStore()
@@ -222,6 +280,79 @@ class StoreSpec extends AnyFunSuite {
     assert(a.listFeatureVersions() == b.listFeatureVersions())
     assert(b.cleanupOldVersions(keepN = 1) == Seq(v1))
     assert(a.listFeatureVersions().map(_.featureVersion) == Seq(v2))
+  }
+
+  test("an instance whose memoized generation and its successor were " +
+      "collected sees another instance's newest version") {
+    val dir = Files.createTempDirectory("graft-store-gc").toString
+    val Seq(a, b) = instances(dir, 2)
+    registerEach(a, 0 to 0) // generation 0, a's memo
+    val vs = registerEach(b, 1 to 10) // generations 1-10
+    assert(generations(dir) == (2L to 10L))
+    assert(a.listFeatureVersions().head.featureVersion == vs.last)
+    assert(a.serveFeatures(1L).get("total_amount") == 10.0)
+  }
+
+  test("a crashed claim: a reader still serves the generation below it " +
+      "and sees the next commit at once, and a reader parked nine " +
+      "generations below the claim sees the head") {
+    val dir = Files.createTempDirectory("graft-store-claim").toString
+    val Seq(a, b, c) = instances(dir, 3)
+    registerEach(b, 0 to 0)
+    c.listFeatureVersions() // c's memo: generation 0
+    registerEach(b, 1 to 8)
+    assert(a.serveFeatures(1L).get("total_amount") == 8.0) // a's memo: 8
+    crashedClaim(dir, 9)
+    assert(a.serveFeatures(1L).get("total_amount") == 8.0)
+    assert(a.listFeatureVersions().size == 9)
+    val Seq(v) = registerEach(b, 9 to 9) // generation 10, over the claim
+    assert(a.serveFeatures(1L).get("total_amount") == 9.0)
+    assert(a.listFeatureVersions().head.featureVersion == v)
+    // no commit made generation 9, so generation 0 goes only with the GC
+    // that deletes everything at or below the head minus 9
+    assert(c.listFeatureVersions().head.featureVersion == v)
+  }
+
+  test("a store deleted and rebuilt under a live instance, up to the same " +
+      "generation, is read afresh") {
+    val dir = Files.createTempDirectory("graft-store-rebuilt").toString
+    val Seq(a, b) = instances(dir, 2)
+    registerEach(a, 0 to 1) // generations 0-1, a's memo: 1
+    assert(a.serveFeatures(1L).get("total_amount") == 1.0)
+    val all = Files.walk(Paths.get(dir))
+    try all.sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => Files.delete(p))
+    finally all.close()
+    registerEach(b, 5 to 6) // generations 0-1 again, other versions
+    assert(generations(dir) == Seq(0L, 1L))
+    assert(a.listFeatureVersions() == b.listFeatureVersions())
+    assert(a.serveFeatures(1L).get("total_amount") == 6.0)
+  }
+
+  test("after 12 commits around a crashed claim, metadata/ holds one " +
+      "unbroken run of generations ending at the head") {
+    val dir = Files.createTempDirectory("graft-store-run").toString
+    val Seq(store) = instances(dir, 1)
+    registerEach(store, 0 to 8) // generations 0-8
+    crashedClaim(dir, 9)
+    registerEach(store, 9 to 11) // generations 10-12
+    assert(generations(dir) == (4L to 12L))
+  }
+
+  test("a cache hit on the latest version lists no directory and makes " +
+      "at most two point probes") {
+    val dir = Files.createTempDirectory("graft-store-calls").toString
+    new FeatureStore(spark, dir)
+      .registerFeatures(feats(1L -> 10.0, 2L -> 20.0), meta)
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countfs.impl", classOf[CountingFs].getName)
+    val store = new FeatureStore(spark, s"countfs://$dir")
+    assert(store.serveFeatures(2L).get("total_amount") == 20.0) // the fill
+    CountingFs.lists.set(0)
+    CountingFs.probes.set(0)
+    assert(store.serveFeatures(2L).get("total_amount") == 20.0)
+    assert(CountingFs.lists.get == 0)
+    assert(CountingFs.probes.get <= 2)
   }
 
   test("stray manifest-*.json names in metadata/ are ignored") {
