@@ -690,17 +690,15 @@ object EventOps {
     // materialized once: the incidence relation feeds the cap probe,
     // both pair-join sides and the item counts — without this every
     // consumer replays the upstream (and the probe would pay it twice).
-    // Re-partitioned by BASKET before the checkpoint: the pair self-join
-    // clusters on __b, so both sides arrive co-partitioned and
-    // exchange-free. (eval_map_at_k's residual 9–17 s run-to-run spread
-    // survives every plan pinning tried — broadcast hint, this
-    // co-partition — across identical fresh JVMs, so it is JVM-level
-    // JIT/GC variance on the decimal-heavy scoring aggregate, not a
-    // join-strategy flip; the co-partition stays for the deleted
-    // exchange.)
+    // The checkpoint keeps no hash layout, so the pair self-join still
+    // exchanges on __b. (eval_map_at_k's residual 9–17 s run-to-run
+    // spread survives every plan pinning tried — a broadcast hint, a
+    // repartition by basket — across identical fresh JVMs, so it is
+    // JVM-level JIT/GC variance on the decimal-heavy scoring aggregate,
+    // not a join-strategy flip.)
     val present0 = df
       .select(col(basketCol).as("__b"), col(itemCol).as("__i"))
-      .distinct().repartition(col("__b")).localCheckpoint()
+      .distinct().localCheckpoint()
     // pay-per-use cap: oversized baskets are found by one partial-
     // aggregable count probe over the materialized blocks (their id set
     // is tiny by construction — at most N/maxBasket). The common

@@ -392,10 +392,8 @@ object Graph {
       .select(least(col(aCol), col(bCol)).as("u"),
         greatest(col(aCol), col(bCol)).as("v"))
       .filter(col("u") =!= col("v")).distinct()
-    // clustered by u up front, and the v-side semi-join runs FIRST each
-    // round so the u-side semi-join restores hash(u) partitioning on the
-    // round's output — the next round's degree count and u-side semi are
-    // then exchange-free (2 exchanges/round, down from 3; guide §2.4)
+    // the repartition only spreads the union's rows over the shuffle
+    // partitions: the checkpoint keeps no hash layout for the rounds
     var und = sym
       .union(sym.select(col("v").as("u"), col("u").as("v")))
       .repartition(col("u"))
@@ -467,12 +465,6 @@ object Graph {
     val e = edges.select(col(srcCol).cast("string").as("src"),
         col(dstCol).cast("string").as("dst"))
       .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
-    // each round joins the edges on src (hub → authority mass) AND on
-    // dst (authority → hub mass): one clustered copy per key, built
-    // once, so neither half-step re-shuffles the edge relation
-    // (guide §2.4 — the pageRank `ew` discipline, twice)
-    val eBySrc = e.repartition(col("src")).localCheckpoint()
-    val eByDst = e.repartition(col("dst")).localCheckpoint()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
 
@@ -493,14 +485,14 @@ object Graph {
     var hubs = nodes.select(col("node"), lit(1).cast(D9).as("h"))
     var auths = nodes.select(col("node"), lit(0).cast(D9).as("a"))
     for (_ <- 1 to iterations) {
-      val aSum = hubs.join(eBySrc, col("node") === col("src"))
+      val aSum = hubs.join(e, col("node") === col("src"))
         .groupBy(col("dst")).agg(sum(col("h")).as("__m"))
       auths = l2normalize(
         nodes.join(aSum, col("node") === col("dst"), "left")
           .select(col("node"),
             coalesce(col("__m"), lit(0).cast(d28)).as("a")),
         "a").localCheckpoint()
-      val hSum = auths.join(eByDst, col("node") === col("dst"))
+      val hSum = auths.join(e, col("node") === col("dst"))
         .groupBy(col("src")).agg(sum(col("a")).as("__m"))
       hubs = l2normalize(
         nodes.join(hSum, col("node") === col("src"), "left")
@@ -623,13 +615,11 @@ object Graph {
     val e0 = edges.select(col(aCol).cast("string").as("u"),
         col(bCol).cast("string").as("v"))
       .filter(col("u") =!= col("v")).distinct()
-    // clustered by u once: each round's labels ⋈ sym join is then
-    // exchange-free on the edge side (labels checkpoint hash(node)-
-    // partitioned), and the single repartition(v) below covers BOTH
-    // grouped aggregations — one exchange per round total, down from
-    // three (edges + (v, community) + (node))
+    // the symmetric edges are checkpointed once (the distinct already
+    // spread them); each round's single repartition(v) below covers
+    // BOTH grouped aggregations
     val sym = e0.union(e0.select(col("v").as("u"), col("u").as("v")))
-      .distinct().repartition(col("u")).localCheckpoint()
+      .distinct().localCheckpoint()
     var labels = sym.select(col("u").as("node")).distinct()
       .withColumn("community", col("node")).localCheckpoint()
     for (_ <- 1 to rounds) {

@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, IntegerType, StructType}
 
 /** Hashed-unigram token models — the bounded-vocabulary probabilistic
   * workhorses of corpus curation. Both operators here hash tokens into a
@@ -21,6 +21,13 @@ import org.apache.spark.sql.types.DecimalType
   * a LONG would overflow precision 38 and Spark silently rounds the
   * product scale down), and sum exactly — scores are bit-identical on any
   * engine and partitioning.
+  *
+  * The gradient-descent classifiers ([[sgdLinear]], [[sgdAttribution]],
+  * [[sgdOneVsRest]], [[sgdLearningCurve]], [[fitOrLoadSgd]] and
+  * [[graft.streaming.StreamingFeatures.sgdOnlineRound]]) all train
+  * through ONE keyed trainer, [[sgdFit]]: the key columns of its weight
+  * grid pick the fit, and its round body (margins, per-doc residual,
+  * gradient sum, update) is written once.
   */
 object TokenModels {
 
@@ -126,16 +133,14 @@ object TokenModels {
     * oracle's unrolled MATERIALIZED CTEs, and the final per-doc
     * score_nano is an exact integer (no rounding surface at all).
     *
-    * Shape at scale: the (doc, bucket) counts come from the fused
+    * Shape at scale: the unkeyed case of [[sgdFit]], which every GD fit
+    * here shares. The (doc, bucket) counts come from the fused
     * zero-shuffle [[graft.functions.BucketCounts]] kernel (no
-    * token-scale exchange anywhere), are id-partitioned once (one
-    * count-row-scale shuffle) and checkpointed, then reused by every
-    * iteration (the checkpoint does not keep the hash layout, so the
-    * rounds still exchange on id); each
-    * iteration broadcasts the (buckets+1)-row weight relation onto the
-    * counts and runs two map-side-combinable aggregations (per-doc
-    * margin, per-bucket gradient) — no windows, no driver-side data,
-    * and the model stays few-KB at any corpus size. Quantizing the
+    * token-scale exchange anywhere) and are checkpointed once
+    * ([[sgdCounts]]); each round broadcasts the (buckets+1)-row weight
+    * relation onto them and runs two map-side-combinable aggregations
+    * (per-doc margin, per-bucket gradient) — no windows, and the model
+    * stays few-KB at any corpus size. Quantizing the
     * residual per DOC keeps all BigDecimal-boxed division work on the
     * doc-count relation; the wide (doc, bucket) relation only ever sees
     * compact long products (measured 8.7 → 1.2 s/round at 1M docs on
@@ -149,7 +154,7 @@ object TokenModels {
     * bias 32 reached 0.95 in 12 rounds).
     *
     * Returns per-doc (idCol, is_target, score_nano, predicted) under the
-    * final weights, predicted = score_nano ≥ 0.
+    * final weights, predicted = score_nano ≥ 0. An empty corpus raises.
     */
   def sgdLinear(docs: DataFrame, idCol: String, textCol: String,
       targetPred: Column, buckets: Int = 16, iters: Int = 12,
@@ -179,120 +184,175 @@ object TokenModels {
     df.sparkSession.createDataFrame(rows, df.schema)
   }
 
-  /** The [[sgdLinear]] training loop, packaged so every round is ONE
-    * job: the doc count n is loop-invariant and hoisted (the old
-    * per-round `occ.agg(count_distinct(id))` re-scanned the count
-    * relation through a distinct shuffle 12×), and the (buckets+1)-row
-    * weight iterate stays on the driver between rounds ([[localized]])
-    * instead of being localCheckpointed and re-broadcast from an RDD.
-    * Arithmetic is EXACTLY [[sgdRound]]'s ([[sgdRoundN]] is the shared
-    * body), so margins under the returned weights are bit-identical to
-    * the checkpointed loop's — pinned by TokenModelsSpec.
-    */
-  private[graft] def sgdTrainWeights(occ: DataFrame, buckets: Int,
-      iters: Int, etaShift: Int): DataFrame = {
-    val n = occ.agg(count_distinct(col("id"))).collect()(0).getLong(0)
-    var w = sgdInitWeights(occ.sparkSession, buckets)
-    for (_ <- 1 to iters)
-      w = localized(sgdRoundN(occ, w, etaShift, lit(n).cast(Dec38)))
-    w
-  }
-
   private val Dec38 = DecimalType(38, 0)
   private val NanoDec = lit(1000000000L).cast(Dec38)
 
-  /** The (id, __t, bucket, c) count relation [[sgdLinear]] trains on —
-    * hash-partitioned by id before the checkpoint. The checkpoint does
-    * not keep that layout (a checkpointed relation reports
-    * UnknownPartitioning; PlanSpec pins it), so the per-round margin
-    * groupBy and the occ ⋈ residual gradient join still exchange on id;
-    * the repartition spreads the rows over the shuffle partitions. Bias
-    * rides as bucket `buckets` with count `biasCount`.
+  /** The key columns of a weight relation: all but `bucket` and
+    * `w_nano` — none for a binary fit.
     */
-  private[graft] def sgdCounts(docs: DataFrame, idCol: String,
-      textCol: String, targetPred: Column, buckets: Int,
-      biasCount: Int): DataFrame = {
-    val labeled = docs.select(col(idCol).as("id"),
-      targetPred.cast("boolean").as("__t"), col(textCol).as("__text"))
-    bucketCounts(labeled, "id", "__text", buckets)
-      .unionByName(labeled.select(col("id"), lit(buckets).as("bucket"),
+  private def keysOf(w: DataFrame): Seq[String] =
+    w.columns.toSeq.filterNot(Set("bucket", "w_nano"))
+
+  /** THE GD trainer: `iters` rounds of margins → per-doc quantized
+    * residual → per-(key, bucket) gradient → averaged update, from the
+    * weight grid `w` (key columns, bucket, w_nano). The key columns pick
+    * the fit — none for a binary fit, the class for [[sgdOneVsRest]], the
+    * level for [[sgdLearningCurve]] — and every key's model trains
+    * SIMULTANEOUSLY at summed row volume, never in a per-key driver loop.
+    * A key column `occ` also carries (the level) restricts each model to
+    * its own rows and doc count; one `occ` lacks (the class) spreads
+    * every row over all its models. `target` is the per-row label read on
+    * the margin row (`__t`, or `__y === __cls`). Each key's arithmetic is
+    * exactly the binary fit's on its rows, which the specs pin
+    * bit-for-bit.
+    *
+    * The residual quantizes ONCE PER DOC (rq = tdiv((a ∓ B)·10⁹, 2B), the
+    * only BigDecimal-heavy work, on the doc-count relation); the
+    * per-(doc, bucket) gradient is then the cheap integer product rq·c
+    * (rq ≤ 10⁹, c ≤ 10⁶ — fits a LONG), cast compact for the exact
+    * decimal sum. The per-key doc count n is loop-invariant and counted
+    * once; it and the weight iterate stay on the driver between rounds
+    * ([[localized]]), so a round is one action — 7 Spark jobs under AQE,
+    * pinned by TokenModelsSpec — and a fit with no doc for some key
+    * raises instead of dividing by zero (or silently dropping the key).
+    * Returns the final weights and the (occ-side key columns, __n) doc
+    * counts.
+    */
+  private def sgdFit(occ: DataFrame, w: DataFrame, target: Column,
+      iters: Int, etaShift: Int): (DataFrame, DataFrame) = {
+    val keys = keysOf(w)
+    val occKeys = keys.filter(occ.columns.contains)
+    val n = localized(occ.groupBy(occKeys.map(col): _*)
+      .agg(count_distinct(col("id")).cast(Dec38).as("__n")))
+    val counted = n.collect()
+      .map(r => r.toSeq.init -> r.getDecimal(occKeys.size))
+      .filter(_._2.signum > 0).toMap
+    val wanted =
+      if (occKeys.isEmpty) Seq(Seq.empty)
+      else w.select(occKeys.map(col): _*).collect().toSeq.map(_.toSeq)
+        .distinct
+    for (k <- wanted) require(counted.contains(k), "sgd fit" +
+      occKeys.zip(k).map { case (c, v) => s" at $c=$v" }.mkString +
+      " has no training doc")
+    // n rides into the update as a literal (CASE over the keys): a join
+    // with the doc-count relation cost the binary fit an 8th job a round
+    val nCol = counted.foldLeft(lit(null).cast(Dec38)) {
+      case (other, (k, v)) => when(occKeys.zip(k)
+        .foldLeft(lit(true)) { case (hit, (c, x)) => hit && col(c) === x },
+        lit(v)).otherwise(other)
+    }.cast(Dec38)
+    val b = NanoDec + abs(col("__a"))
+    val residual = tdiv(
+      when(target, col("__a") - b).otherwise(col("__a") + b) * NanoDec,
+      b * lit(2).cast(Dec38))
+    val w1 = (1 to iters).foldLeft(w) { (w, _) =>
+      val rq = sgdMargins(occ, w)
+        .select(col("id") +: keys.map(col) :+ residual.as("__rq"): _*)
+      val grads = occ.join(rq, "id" +: occKeys)
+        .groupBy((keys :+ "bucket").map(col): _*)
+        .agg(sum((col("__rq") * col("c")).cast(Dec38)).cast(Dec38)
+          .as("__gs"))
+      localized(w.join(grads, keys :+ "bucket", "left")
+        .select(keys.map(col) :+ col("bucket") :+
+          (col("w_nano") - tdiv(coalesce(col("__gs"), lit(0L).cast(Dec38)),
+            nCol * lit(1L << etaShift).cast(Dec38))).cast(Dec38)
+            .as("w_nano"): _*))
+    }
+    (w1, n)
+  }
+
+  /** The binary [[sgdFit]] from zero weights — [[sgdLinear]]'s loop. */
+  private def sgdTrainWeights(occ: DataFrame, buckets: Int, iters: Int,
+      etaShift: Int): DataFrame =
+    sgdFit(occ, sgdInitWeights(occ.sparkSession, buckets), col("__t"),
+      iters, etaShift)._1
+
+  /** Each doc's (id, bucket, c) counts: its token buckets plus the bias
+    * as bucket `buckets` with count `biasCount`.
+    */
+  private def docCounts(docs: DataFrame, buckets: Int, biasCount: Int)
+      : DataFrame =
+    bucketCounts(docs, "id", "__text", buckets)
+      .unionByName(docs.select(col("id"), lit(buckets).as("bucket"),
         lit(biasCount.toLong).as("c")))
-      .join(labeled.select(col("id"), col("__t")), Seq("id"))
-      .select(col("id"), col("__t"), col("bucket"), col("c"))
+
+  /** The count relation a fit trains on: [[docCounts]] joined to the
+    * label columns (every column of `labeled` but `__text`), spread over
+    * the shuffle partitions by id and checkpointed once. The checkpoint
+    * keeps no hash layout (a checkpointed relation reports
+    * UnknownPartitioning; PlanSpec pins it), so the rounds still
+    * exchange on id; the repartition only spreads the rows.
+    */
+  private def trainCounts(labeled: DataFrame, buckets: Int,
+      biasCount: Int): DataFrame = {
+    val labels = labeled.drop("__text")
+    docCounts(labeled, buckets, biasCount).join(labels, Seq("id"))
+      .select(labels.columns.map(col) :+ col("bucket") :+ col("c"): _*)
       .repartition(col("id"))
       .localCheckpoint()
   }
 
-  /** Zero weights on the dense bucket grid (bias = bucket `buckets`) —
-    * a LocalRelation (driver rows), not a checkpointed range: the grid
-    * is buckets+1 rows by construction and every consumer broadcasts it.
+  /** The (id, __t, bucket, c) count relation of a binary fit. */
+  private[graft] def sgdCounts(docs: DataFrame, idCol: String,
+      textCol: String, targetPred: Column, buckets: Int,
+      biasCount: Int): DataFrame =
+    trainCounts(docs.select(col(idCol).as("id"),
+      targetPred.cast("boolean").as("__t"), col(textCol).as("__text")),
+      buckets, biasCount)
+
+  /** Zero weights on the (key × bucket) grid, bias = bucket `buckets`:
+    * one row per row of `keys` and bucket, built on the driver as a
+    * LocalRelation (the grid is keys × (buckets+1) rows by construction
+    * and every consumer broadcasts it).
+    */
+  private def sgdGrid(keys: DataFrame, buckets: Int): DataFrame = {
+    val rows = for (k <- keys.collect().toSeq; b <- 0 to buckets)
+      yield Row.fromSeq(k.toSeq :+ b :+ java.math.BigDecimal.ZERO)
+    keys.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      keys.schema.add("bucket", IntegerType).add("w_nano", Dec38))
+  }
+
+  /** The binary fit's (bucket, w_nano) zero grid: one key row with no
+    * columns.
     */
   private[graft] def sgdInitWeights(
       spark: org.apache.spark.sql.SparkSession, buckets: Int): DataFrame =
-    localized(spark.range(buckets + 1)
-      .select(col("id").cast("int").as("bucket"),
-        lit(0L).cast(Dec38).as("w_nano")))
+    sgdGrid(spark.createDataFrame(java.util.Arrays.asList(Row.empty),
+      new StructType()), buckets)
 
-  /** Per-doc exact margins a = Σ_b w_nano(b)·c(d,b) under `wRel`. */
+  /** Per-doc exact margins a = Σ_b w_nano(b)·c(d,b) under `wRel`, one
+    * row per doc column of `occ` (all but bucket and c) and key of
+    * `wRel` — (id, __t, __a) for a binary fit.
+    */
   private[graft] def sgdMargins(occ: DataFrame, wRel: DataFrame)
-      : DataFrame = occ
-    .join(broadcast(wRel), Seq("bucket"))
-    .groupBy("id", "__t")
-    .agg(sum((col("c").cast(Dec38) * col("w_nano")).cast(Dec38)).cast(Dec38)
-      .as("__a"))
+      : DataFrame = {
+    val keys = keysOf(wRel)
+    val docCols = occ.columns.toSeq.filterNot(Set("bucket", "c")) ++
+      keys.filterNot(occ.columns.contains)
+    occ.join(broadcast(wRel), keys.filter(occ.columns.contains) :+ "bucket")
+      .groupBy(docCols.map(col): _*)
+      .agg(sum((col("c").cast(Dec38) * col("w_nano")).cast(Dec38))
+        .cast(Dec38).as("__a"))
+  }
 
-  /** ONE batch-GD round: margins → per-doc quantized residual →
-    * per-bucket gradient → averaged update. The residual quantizes ONCE
-    * PER DOC — rq = tdiv((a ∓ B)·10⁹, 2B) is the only BigDecimal-heavy
-    * work and runs on the doc-count relation; the per-(doc, bucket)
-    * gradient is then the cheap integer product rq·c (rq ≤ 10⁹,
-    * c ≤ 10⁶ — fits a LONG), cast compact for the exact decimal sum.
-    * η averages over the docs in THIS `occ` — the same function serves
-    * full-corpus iteration ([[sgdLinear]]) and per-micro-batch online
-    * learning ([[graft.streaming.StreamingFeatures.sgdOnlineRound]]).
+  /** ONE batch-GD round of the binary fit ([[sgdFit]] with one
+    * iteration). η averages over the docs in THIS `occ` — the same
+    * function serves per-micro-batch online learning
+    * ([[graft.streaming.StreamingFeatures.sgdOnlineRound]]); an empty
+    * batch raises.
     */
   private[graft] def sgdRound(occ: DataFrame, w: DataFrame,
-      etaShift: Int): DataFrame = {
-    val nRel = occ.agg(count_distinct(col("id")).cast(Dec38).as("__n"))
-    sgdRoundN(occ, w, etaShift, col("__n"), Some(nRel))
-  }
+      etaShift: Int): DataFrame =
+    sgdFit(occ, w, col("__t"), 1, etaShift)._1
 
-  /** [[sgdRound]]'s body with the doc count supplied by the caller —
-    * the loop-hoisted form [[sgdTrainWeights]] iterates (n is constant
-    * across full-corpus rounds; only streaming micro-batches need the
-    * per-call count relation).
-    */
-  private[graft] def sgdRoundN(occ: DataFrame, w: DataFrame,
-      etaShift: Int, nCol: Column, nRel: Option[DataFrame] = None)
-      : DataFrame = {
-    val m = sgdMargins(occ, w)
-      .select(col("id"),
-        tdiv(when(col("__t"), col("__a") - (NanoDec + abs(col("__a"))))
-            .otherwise(col("__a") + (NanoDec + abs(col("__a")))) * NanoDec,
-          (NanoDec + abs(col("__a"))) * lit(2).cast(Dec38)).as("__rq"))
-    val grads = occ.join(m, Seq("id"))
-      .groupBy("bucket")
-      .agg(sum((col("__rq") * col("c")).cast(Dec38)).cast(Dec38).as("__gs"))
-    val joined = nRel.foldLeft(w.join(grads, Seq("bucket"), "left")) {
-      (d, rel) => d.crossJoin(broadcast(rel))
-    }
-    joined.select(col("bucket"),
-      (col("w_nano") - tdiv(coalesce(col("__gs"), lit(0L).cast(Dec38)),
-        nCol * lit(1L << etaShift).cast(Dec38))).cast(Dec38)
-        .as("w_nano"))
-  }
-
-  /** One-vs-rest MULTI-CLASS [[sgdLinear]] — every class's binary model
-    * trained SIMULTANEOUSLY by adding the class as a key dimension
-    * (weights live on a (class, bucket) grid; margins, residuals and
-    * gradients carry the class key through the same aggregations), so k
-    * classes cost k× the row volume of one binary fit and ZERO extra
-    * passes — never a per-class driver loop. The arithmetic per class
-    * is EXACTLY [[sgdLinear]]'s (nano-integer weights, per-doc rational
-    * residual, sign-explicit truncating divisions), pinned by the spec's
-    * equivalence property: each class's margins are bit-identical to an
+  /** One-vs-rest MULTI-CLASS [[sgdLinear]] — [[sgdFit]] keyed by the
+    * class: weights live on a (class, bucket) grid and every class's
+    * binary model trains SIMULTANEOUSLY with target `label === class`,
+    * so k classes cost k× the row volume of one binary fit and ZERO
+    * extra passes. Each class's margins are bit-identical to an
     * independent binary [[sgdLinear]] run with target `label === c` —
-    * which is what ties this to the oracle-verified binary trainer.
+    * the spec's equivalence property, which ties this to the
+    * oracle-verified binary trainer.
     *
     * Prediction = argmax margin over classes, ties to the
     * lexicographically LAST class via max-struct ([[naiveBayes]]'s
@@ -302,54 +362,13 @@ object TokenModels {
   def sgdOneVsRest(docs: DataFrame, idCol: String, textCol: String,
       labelCol: String, buckets: Int = 16, iters: Int = 12,
       etaShift: Int = 8, biasCount: Int = 32): DataFrame = {
-    val labeled = docs.select(col(idCol).as("id"),
-      col(labelCol).cast("string").as("__y"), col(textCol).as("__text"))
-    val occ = bucketCounts(labeled, "id", "__text", buckets)
-      .unionByName(labeled.select(col("id"), lit(buckets).as("bucket"),
-        lit(biasCount.toLong).as("c")))
-      .join(labeled.select(col("id"), col("__y")), Seq("id"))
-      .select(col("id"), col("__y"), col("bucket"), col("c"))
-      .repartition(col("id"))
-      .localCheckpoint()
-    val spark = docs.sparkSession
-    // class list, doc count and the (class × bucket) weight grid are all
-    // driver-bounded relations — LocalRelations ([[localized]]) instead
-    // of localCheckpoints, so each training round below is ONE job with
-    // no checkpoint materialization or RDD-backed broadcast rebuild
-    val classes = localized(occ.select(col("__y").as("__cls")).distinct())
-    val nRel = localized(
-      occ.agg(count_distinct(col("id")).cast(Dec38).as("__n")))
-    var w = localized(spark.range(buckets + 1)
-      .select(col("id").cast("int").as("bucket"))
-      .crossJoin(classes)
-      .select(col("__cls"), col("bucket"), lit(0L).cast(Dec38).as("w_nano")))
-
-    def margins(wRel: DataFrame): DataFrame = occ
-      .join(broadcast(wRel), Seq("bucket"))
-      .groupBy("id", "__y", "__cls")
-      .agg(sum((col("c").cast(Dec38) * col("w_nano")).cast(Dec38))
-        .cast(Dec38).as("__a"))
-
-    for (_ <- 1 to iters) {
-      val m = margins(w)
-        .select(col("id"), col("__cls"),
-          tdiv(when(col("__y") === col("__cls"),
-              col("__a") - (NanoDec + abs(col("__a"))))
-              .otherwise(col("__a") + (NanoDec + abs(col("__a"))))
-              * NanoDec,
-            (NanoDec + abs(col("__a"))) * lit(2).cast(Dec38)).as("__rq"))
-      val grads = occ.join(m, Seq("id"))
-        .groupBy("__cls", "bucket")
-        .agg(sum((col("__rq") * col("c")).cast(Dec38)).cast(Dec38)
-          .as("__gs"))
-      w = localized(w.join(grads, Seq("__cls", "bucket"), "left")
-        .crossJoin(broadcast(nRel))
-        .select(col("__cls"), col("bucket"),
-          (col("w_nano") - tdiv(coalesce(col("__gs"), lit(0L).cast(Dec38)),
-            col("__n") * lit(1L << etaShift).cast(Dec38))).cast(Dec38)
-            .as("w_nano")))
-    }
-    margins(w)
+    val occ = trainCounts(docs.select(col(idCol).as("id"),
+      col(labelCol).cast("string").as("__y"), col(textCol).as("__text")),
+      buckets, biasCount)
+    val classes = occ.select(col("__y").as("__cls")).distinct()
+    val (w, _) = sgdFit(occ, sgdGrid(classes, buckets),
+      col("__y") === col("__cls"), iters, etaShift)
+    sgdMargins(occ, w)
       .groupBy("id", "__y")
       .agg(max(struct(col("__a"), col("__cls"))).as("__best"))
       .select(col("id").as(idCol), col("__y").as("label"),
@@ -362,17 +381,15 @@ object TokenModels {
     * training-set size): NESTED training subsets from the md5 stratum of
     * the doc id, test = the LAST stratum, level L trains on strata
     * 0..L−1. Unlike NB there is no count-cube shortcut (GD weights are
-    * not sums over strata), so the LEVEL RIDES AS A KEY DIMENSION — the
-    * [[sgdOneVsRest]] discipline: weights live on a (level, bucket)
-    * grid; margins, residuals and gradients carry the level key through
-    * the same aggregations, so all levels train SIMULTANEOUSLY in the
-    * same fixed iteration count at Σ_L |strata<L|/|strata| ≈ 2× the row
-    * volume of one binary fit — never a per-level driver loop, never a
-    * per-level corpus pass. Each level's arithmetic is EXACTLY
-    * [[sgdLinear]]'s on its subset (nano-integer weights, per-doc
-    * rational residual, sign-explicit truncating divisions) — the
-    * spec's equivalence property ties every level to the
-    * oracle-verified binary trainer bit-for-bit.
+    * not sums over strata), so the LEVEL RIDES AS A KEY of [[sgdFit]]:
+    * each count row is copied once per level that trains on its stratum,
+    * and all levels train SIMULTANEOUSLY in the same fixed iteration
+    * count at Σ_L |strata<L|/|strata| ≈ 2× the row volume of one binary
+    * fit — never a per-level driver loop, never a per-level corpus pass.
+    * Each level's arithmetic is exactly [[sgdLinear]]'s on its subset —
+    * the spec's equivalence property ties every level to the
+    * oracle-verified binary trainer bit-for-bit. A level whose strata
+    * hold no doc raises.
     *
     * Test docs score once against every level's broadcast final weights
     * (levels × (buckets+1) rows, few KB). Accuracy is ONE IEEE division
@@ -386,67 +403,22 @@ object TokenModels {
     require(levels.nonEmpty && levels.forall(l => l >= 1 && l < strata),
       "levels must train on strata strictly below the held-out stratum")
     val spark = docs.sparkSession
-    val labeled = docs.select(col(idCol).as("id"),
+    val occ = trainCounts(docs.select(col(idCol).as("id"),
         targetPred.cast("boolean").as("__t"), col(textCol).as("__text"))
-      .withColumn("stratum", Prep.hashBucket(col("id"), strata))
-    val occ = bucketCounts(labeled, "id", "__text", buckets)
-      .unionByName(labeled.select(col("id"), lit(buckets).as("bucket"),
-        lit(biasCount.toLong).as("c")))
-      .join(labeled.select(col("id"), col("__t"), col("stratum")),
-        Seq("id"))
-      .select(col("id"), col("__t"), col("stratum"), col("bucket"),
-        col("c"))
-      .repartition(col("id"))
-      .localCheckpoint()
+      .withColumn("stratum", Prep.hashBucket(col("id"), strata)),
+      buckets, biasCount)
     import spark.implicits._
     val levelMap = levels.flatMap(l => (0 until l).map(s => (l, s)))
       .toDF("level", "stratum")
-    // id-partitioned like occ (hash(id) co-locates the (level, id)
-    // margin groupBy and the gradient join — HashPartitioning on a
-    // subset of the clustering keys satisfies both)
+    // a broadcast join: the copies keep occ's spread
     val occT = occ.join(broadcast(levelMap), Seq("stratum"))
       .select(col("level"), col("id"), col("__t"), col("bucket"),
         col("c"))
-      .repartition(col("id"))
       .localCheckpoint()
-    // per-level doc counts and the (level × bucket) weight grid are
-    // driver-bounded — LocalRelations ([[localized]]), not checkpoints:
-    // every round below becomes one job (see [[sgdTrainWeights]])
-    val nRel = localized(occT.groupBy("level")
-      .agg(count_distinct(col("id")).cast(Dec38).as("__n")))
-    var w = localized(spark.range(buckets + 1)
-      .select(col("id").cast("int").as("bucket"))
-      .crossJoin(levels.toDF("level"))
-      .select(col("level"), col("bucket"), lit(0L).cast(Dec38)
-        .as("w_nano")))
-    for (_ <- 1 to iters) {
-      val m = occT.join(broadcast(w), Seq("level", "bucket"))
-        .groupBy("level", "id", "__t")
-        .agg(sum((col("c").cast(Dec38) * col("w_nano")).cast(Dec38))
-          .cast(Dec38).as("__a"))
-        .select(col("level"), col("id"),
-          tdiv(when(col("__t"), col("__a") - (NanoDec + abs(col("__a"))))
-              .otherwise(col("__a") + (NanoDec + abs(col("__a"))))
-              * NanoDec,
-            (NanoDec + abs(col("__a"))) * lit(2).cast(Dec38)).as("__rq"))
-      val grads = occT.join(m, Seq("level", "id"))
-        .groupBy("level", "bucket")
-        .agg(sum((col("__rq") * col("c")).cast(Dec38)).cast(Dec38)
-          .as("__gs"))
-      w = localized(w.join(grads, Seq("level", "bucket"), "left")
-        .join(broadcast(nRel), Seq("level"))
-        .select(col("level"), col("bucket"),
-          (col("w_nano") - tdiv(coalesce(col("__gs"),
-            lit(0L).cast(Dec38)),
-            col("__n") * lit(1L << etaShift).cast(Dec38))).cast(Dec38)
-            .as("w_nano")))
-    }
-    val scored = occ.filter(col("stratum") === strata - 1)
-      .join(broadcast(w), Seq("bucket"))
-      .groupBy("id", "__t", "level")
-      .agg(sum((col("c").cast(Dec38) * col("w_nano")).cast(Dec38))
-        .cast(Dec38).as("__a"))
-    scored.groupBy("level")
+    val (w, nRel) = sgdFit(occT, sgdGrid(levels.toDF("level"), buckets),
+      col("__t"), iters, etaShift)
+    sgdMargins(occ.filter(col("stratum") === strata - 1).drop("stratum"), w)
+      .groupBy("level")
       .agg(count(lit(1)).as("n_test"),
         sum(((col("__a") >= 0) === col("__t")).cast("long"))
           .as("n_correct"))
@@ -542,19 +514,12 @@ object TokenModels {
     */
   def sgdScore(docs: DataFrame, idCol: String, textCol: String,
       weights: DataFrame, buckets: Int = 16, biasCount: Int = 32)
-      : DataFrame = {
-    val named = docs.select(col(idCol).as("id"), col(textCol).as("__text"))
-    val occ = bucketCounts(named, "id", "__text", buckets)
-      .unionByName(named.select(col("id"), lit(buckets).as("bucket"),
-        lit(biasCount.toLong).as("c")))
-    occ.join(broadcast(weights.select(col("bucket"), col("w_nano"))),
-        Seq("bucket"))
-      .groupBy("id")
-      .agg(sum((col("c").cast(Dec38) * col("w_nano")).cast(Dec38))
-        .cast(Dec38).as("__a"))
+      : DataFrame =
+    sgdMargins(docCounts(docs.select(col(idCol).as("id"),
+        col(textCol).as("__text")), buckets, biasCount),
+      weights.select(col("bucket"), col("w_nano")))
       .select(col("id").as(idCol), col("__a").cast("long").as("score_nano"),
         (col("__a") >= 0).as("predicted"))
-  }
 
   /** Multinomial Naive Bayes over hashed-unigram buckets — the GPT-3-style
     * quality/domain classifier (Brown et al. 2020 filtered CommonCrawl

@@ -14,7 +14,7 @@ import scala.collection.mutable.ListBuffer
   * `:147-149`), and the composite score
   * `max(0, 1 − (null% + dup% + outlier% + 0.1·violations))` (`:152`).
   *
-  * Execution shape (scale-aware): the whole scan is three distributed jobs
+  * Execution shape (scale-aware): the whole scan is three Spark actions
   * regardless of column count —
   *   1. one multi-aggregate pass computing row count, per-column null
   *      counts, and per-numeric-column Q1/Q3 + non-null counts together;
@@ -22,10 +22,16 @@ import scala.collection.mutable.ListBuffer
   *      duplicate ratio;
   *   3. one pass counting IQR outliers with the quantile bounds inlined as
   *      literals.
-  * Nothing is collected except the aggregate rows. The default checks
-  * are answered from job 1's row count and null counts, so they add no
-  * jobs. Checks added with [[addCheck]] are arbitrary
-  * `DataFrame => Boolean` and may run their own actions.
+  * AQE runs every shuffle map stage of an action as a job of its own, so
+  * on an input with no exchange of its own the actions are 2 + 3 + 2 =
+  * 7 jobs (QualitySpec pins this). Each action re-reads the input, so
+  * an input whose own plan shuffles adds jobs for its stages on top: a
+  * one-groupBy input measured 9, and a traced perfbench `store_serve`
+  * run, validating an unpersisted feature extract, reads 11. Nothing is
+  * collected except the aggregate rows. The
+  * default checks are answered from action 1's row count and null
+  * counts, so they add no jobs. Checks added with [[addCheck]] are
+  * arbitrary `DataFrame => Boolean` and may run their own actions.
   */
 final class DataQualityValidator {
   import DataQualityValidator.{ScanStats, defaultChecks}
@@ -46,7 +52,7 @@ final class DataQualityValidator {
     val numericCols = df.schema.fields
       .filter(_.dataType.isInstanceOf[NumericType]).map(_.name).toSeq
 
-    // Job 1: count + null counts + quantiles + numeric non-null counts.
+    // Action 1: count + null counts + quantiles + numeric non-null counts.
     val nullAggs = cols.map(c =>
       sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"__null_$c"))
     val quantAggs = numericCols.flatMap { c =>
@@ -64,13 +70,13 @@ final class DataQualityValidator {
       if (rows == 0 || cols.isEmpty) 0.0
       else nullCells.toDouble / (rows * cols.length)
 
-    // Job 2: duplicate-row ratio — pandas `duplicated()` marks all-but-first,
+    // Action 2: duplicate-row ratio — pandas `duplicated()` marks all-but-first,
     // so dup% = (n − n_distinct) / n (`:123`, SURVEY A15).
     val dupPct =
       if (rows == 0) 0.0
       else (rows - df.dropDuplicates().count()).toDouble / rows
 
-    // Job 3: IQR outliers with bounds inlined as literals (`:130-138`).
+    // Action 3: IQR outliers with bounds inlined as literals (`:130-138`).
     val (outliers, numericValues) =
       if (numericCols.isEmpty || rows == 0) (0L, 0L)
       else {

@@ -106,7 +106,8 @@ object StreamingFeatures {
     * ([[graft.ops.TokenModels.sgdLinear]]'s round applied to a single
     * micro-batch): build the batch's (doc, bucket) counts, take one
     * gradient step from `weights` with η averaged over THIS batch's
-    * docs, return the updated (bucket, w_nano) relation. Drive it from
+    * docs, return the updated (bucket, w_nano) relation (an empty batch
+    * raises: skip it). Drive it from
     * `foreachBatch`, carrying the returned weights (localCheckpoint'd)
     * as the running model — mini-batch gradient descent where the
     * stream defines the batches. Deterministic: the step is the same

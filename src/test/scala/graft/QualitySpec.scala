@@ -99,6 +99,17 @@ class QualitySpec extends AnyFunSuite {
       Seq("non_empty", "no_all_null_columns", "has_user_id", "non_empty"))
   }
 
+  test("validate: its three actions run as 7 Spark jobs under AQE") {
+    // one shuffle stage per aggregate action runs as its own job before
+    // the action's result job: the stats aggregate (1 exchange) and the
+    // outlier count (1) take 2 jobs each, the distinct count (2) takes 3
+    val df = Seq((1L, 10.0), (2L, 11.0), (2L, 11.0), (3L, 1000.0))
+      .toDF("user_id", "value")
+    val (m, jobs) = TestSpark.jobsIn(new DataQualityValidator().validate(df))
+    assert(m.duplicatePercentage == 1.0 / 4)
+    assert(jobs == 7, s"$jobs jobs")
+  }
+
   test("madOutliers: the far point is the only outlier; a shifted-scale " +
       "group keeps its own fences") {
     // group A: nine values near 10 plus one at 1000; median 10, MAD small

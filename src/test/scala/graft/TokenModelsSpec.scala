@@ -582,4 +582,48 @@ class TokenModelsSpec extends AnyFunSuite {
         s"level $level replay mismatch")
     }
   }
+
+  test("sgd trainer: each extra round launches exactly 7 Spark jobs, " +
+      "for the unkeyed fit and for the level-keyed learning curve") {
+    val fix = Seq(
+      (1L, "good good", true), (2L, "good", true),
+      (3L, "good good good", true), (4L, "bad bad", false),
+      (5L, "bad", false), (6L, "bad bad bad", false)
+    ).toDF("doc_id", "text", "lab")
+    // training runs eagerly inside the call: the jobs counted are the
+    // count step, the doc count and the rounds, not the returned scoring
+    def fit(iters: Int) = TestSpark.jobsIn(TokenModels.sgdLinear(fix,
+      "doc_id", "text", col("lab"), buckets = 4, iters = iters,
+      etaShift = 2, biasCount = 1))._2
+    def curve(iters: Int) = TestSpark.jobsIn(TokenModels.sgdLearningCurve(
+      fix, "doc_id", "text", col("lab"), buckets = 4, iters = iters,
+      etaShift = 2, biasCount = 1, strata = 2, levels = Seq(1)))._2
+    val (f1, f3, c1, c3) = (fit(1), fit(3), curve(1), curve(3))
+    assert((f3 - f1, c3 - c1) == (2 * 7, 2 * 7),
+      s"fit: $f1 jobs at iters=1, $f3 at 3; curve: $c1 and $c3")
+  }
+
+  test("sgd trainer: an empty corpus and a learning-curve level with no " +
+      "training doc raise, naming the empty fit") {
+    val empty = Seq.empty[(Long, String, Boolean)]
+      .toDF("doc_id", "text", "lab")
+    val noDocs = intercept[IllegalArgumentException](
+      TokenModels.sgdLinear(empty, "doc_id", "text", col("lab"),
+        buckets = 4, iters = 2, etaShift = 2, biasCount = 1))
+    assert(noDocs.getMessage.contains("sgd fit has no training doc"),
+      noDocs.getMessage)
+    // the learning-curve fixture's md5 strata (n=4) without stratum 0
+    // (ids 2, 3, 6): level 1 trains on strata < 1, which hold no doc
+    val docs = Seq(
+      (1L, "bad bad", "B"), (9L, "bad", "B"), (12L, "bad", "B"),
+      (5L, "good", "A"), (7L, "bad", "B"), (11L, "bad", "B"),
+      (4L, "good", "A"), (25L, "good good", "A"), (26L, "bad", "B")
+    ).toDF("doc_id", "text", "lang")
+    val noLevel = intercept[IllegalArgumentException](
+      TokenModels.sgdLearningCurve(docs, "doc_id", "text",
+        col("lang") === "B", buckets = 8, iters = 2, etaShift = 2,
+        biasCount = 1, strata = 4, levels = Seq(1, 2, 3)))
+    assert(noLevel.getMessage.contains(
+      "sgd fit at level=1 has no training doc"), noLevel.getMessage)
+  }
 }
