@@ -14,7 +14,8 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * model on its own training matrix pushes that cost to every consumer,
   * so the trainer rides here as a first-class operator.
   *
-  * Squared-error boosting, depth-1 trees, learning rate 1/2:
+  * Squared-error boosting, depth-1 trees (stumps; [[gbmTree2]] adds a
+  * second level), learning rate 1/2:
   *
   *   1. BIN once: each feature maps to `bins` fixed-width buckets via
   *      exact integer arithmetic on the feature's global [min, max] —
@@ -37,9 +38,10 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * Shape at scale: the row-scale work per round is one map (residual +
   * stack) and one bounded aggregation — the classic distributed-GBM
   * layout where only histograms cross the wire, never rows. The chosen
-  * split is a 1-row broadcast back onto the data. With T rounds the
-  * total is T bounded shuffles over an id-partitioned checkpoint; no
-  * driver collect anywhere.
+  * split is a 1-row broadcast back onto the data, and each round's
+  * prediction update is checkpointed — under AQE a stump round is 6
+  * Spark jobs and a depth-2 round 12 (BoostSpec pins both); no driver
+  * collect anywhere.
   */
 object Boost {
 
@@ -53,7 +55,7 @@ object Boost {
   private def floorDiv(n: Column, d: Column): Column =
     ((n - pmod(n, d)) / d).cast("long")
 
-  /** Fitted state: the binned base with its final prediction, plus the
+  /** Fitted state: the scored base (idCol, label, pred), plus the
     * per-round model rows.
     */
   private[graft] case class Fit(scored: DataFrame, model: DataFrame)
@@ -82,56 +84,6 @@ object Boost {
       .localCheckpoint()
   }
 
-  /** Fit `rounds` stumps over BIGINT features `featCols` of `base`
-    * (columns `idCol`, `labelCol` ∈ {0,1} or any small numeric, and the
-    * features). A round with NO valid split (every feature constant on
-    * the residuals' support) is SKIPPED — zero leaf contribution and no
-    * model row — instead of propagating the empty-argmax NULL struct
-    * into every prediction. Returns the scored base (`id`, `y`, `pred`)
-    * and the model (one row per non-degenerate round).
-    */
-  private[graft] def fit(base: DataFrame, idCol: String, labelCol: String,
-      featCols: Seq[String], bins: Int = 16, rounds: Int = 3): Fit = {
-    require(featCols.nonEmpty && bins >= 2 && rounds >= 1,
-      "gbm needs >=1 feature, >=2 bins, >=1 round")
-    val nf = featCols.length
-    var cur = binnedBase(base, idCol, labelCol, featCols, bins)
-    val models = (1 to rounds).map { t =>
-      // ONE bounded shuffle: stacked (feature, bin, residual) histogram,
-      // prefix sums, 6-dp gains, struct argmax — see [[bestSplits]]
-      val best = bestSplits(cur, Seq.empty, nf, bins)
-        .select(lit(t).as("round"), col("__nf"), col("__nb"),
-          col("__vl"), col("__vr"), col("__gain"))
-        .localCheckpoint()
-      // degenerate-round guard: an empty candidate set argmaxes to a
-      // NULL struct — coalesce the contribution to 0 so the round is a
-      // no-op rather than NULLing every prediction
-      val leaf = coalesce(when((0 until nf).map(i =>
-            col("__nf") === -i && col(s"__b$i") <= -col("__nb"))
-          .reduce(_ || _), col("__vl")).otherwise(col("__vr")),
-        lit(0).cast(P))
-      cur = cur.crossJoin(broadcast(best))
-        .select(Seq(col("__id"), col("__y"),
-          (col("__pred") + leaf).cast(P).as("__pred")) ++
-          (0 until nf).map(i => col(s"__b$i")): _*)
-        .localCheckpoint()
-      best
-    }
-    val model = models.reduce(_ union _)
-      .filter(col("__nf").isNotNull)
-      .select(col("round"),
-        element_at(array(featCols.map(lit): _*), -col("__nf") + 1)
-          .as("feature"),
-        (-col("__nb")).cast("int").as("split_bin"),
-        // re-round post-cast: the decimal value sits ON the 1e-9 grid, so
-        // rounding the double normalizes any 1-ulp cast asymmetry between
-        // engines (mirrored in the oracle's round(CAST(...), 9))
-        round(col("__vl").cast(DoubleType), 9).as("left_value"),
-        round(col("__vr").cast(DoubleType), 9).as("right_value"),
-        col("__gain").as("gain"))
-    Fit(cur.select(col("__id"), col("__y"), col("__pred")), model)
-  }
-
   /** Best split per `keys` group over the current residuals: ONE stacked
     * (keys…, feature, bin) histogram shuffle, bin prefix sums over the
     * bounded (keys × features × bins) relation, 6-dp double gains from
@@ -157,7 +109,7 @@ object Boost {
     val part = keys :+ "__f"
     val w = Window.partitionBy(part.map(col): _*).orderBy("__b")
     // right-side residual mass as its own following-frame window sum —
-    // NOT total − left (the DECIMAL(38,9) rescale trap, see [[fit]])
+    // NOT total − left (DECIMAL(38,9) − DECIMAL(38,9) rescales to 8 dp)
     val wAfter = Window.partitionBy(part.map(col): _*).orderBy("__b")
       .rowsBetween(1, Window.unboundedFollowing)
     val tot = Window.partitionBy(part.map(col): _*)
@@ -185,68 +137,83 @@ object Boost {
         col("__s.__vr").as("__vr"), col("__s.__gain").as("__gain")): _*)
   }
 
-  /** Fit `rounds` DEPTH-2 trees (root split, then the best split of EACH
-    * root leaf — 4 terminal regions per round): the LightGBM level-wise
-    * layout where level 2 costs ONE extra keyed histogram shuffle — the
-    * leaf id rides the (feature, bin) groupBy — never a per-leaf pass.
-    * A leaf with no valid split stays TERMINAL and contributes its own
-    * stump value η·G/n (the root's left/right value); a fully degenerate
-    * round (no root split) is skipped with zero contribution — the
-    * [[fit]] guard. Determinism disciplines are [[fit]]'s verbatim.
+  /** Fit `rounds` boosted trees of `depth` 1 (stumps) or 2 over BIGINT
+    * features `featCols` of `base` (columns `idCol`, `labelCol` ∈ {0,1}
+    * or any small numeric, and the features).
+    *
+    * Each round splits the root on the current residuals. At depth 2 it
+    * then splits each root leaf — the LightGBM level-wise layout where
+    * level 2 costs ONE extra keyed histogram shuffle (the leaf id rides
+    * the (feature, bin) groupBy), never a per-leaf pass; a leaf with no
+    * valid split stays TERMINAL and contributes its own stump value
+    * η·G/n (the root's left/right value). A round with NO valid root
+    * split (every feature constant on the residuals' support) is
+    * SKIPPED — zero contribution and no model row — instead of
+    * propagating the empty-argmax NULL struct into every prediction.
+    * Returns the scored base (idCol, label, pred) and the model: per
+    * round the root split and, at depth 2, each splitting leaf's
+    * (round, node ∈ root|left|right, feature, split_bin, left_value,
+    * right_value, gain).
     */
-  private[graft] def fitTree2(base: DataFrame, idCol: String,
-      labelCol: String, featCols: Seq[String], bins: Int = 16,
-      rounds: Int = 3): Fit = {
+  private[graft] def fit(base: DataFrame, idCol: String, labelCol: String,
+      featCols: Seq[String], bins: Int, rounds: Int, depth: Int): Fit = {
     require(featCols.nonEmpty && bins >= 2 && rounds >= 1,
       "gbm needs >=1 feature, >=2 bins, >=1 round")
     val nf = featCols.length
-    val featArr = array(featCols.map(lit): _*)
+    val binCols = (0 until nf).map(i => col(s"__b$i"))
+    // a row goes left of split (feature −nfc, bin −nbc); NULL when the
+    // split is the empty argmax
+    def goesLeft(nfc: String, nbc: String): Column = (0 until nf).map(i =>
+      col(nfc) === -i && col(s"__b$i") <= -col(nbc)).reduce(_ || _)
+    def modelRows(t: Int, split: DataFrame, node: Column) = split
+      .filter(col("__nf").isNotNull)
+      .select(lit(t).as("round"), node.as("node"),
+        element_at(array(featCols.map(lit): _*), -col("__nf") + 1)
+          .as("feature"),
+        (-col("__nb")).cast("int").as("split_bin"),
+        // re-round post-cast: the decimal value sits ON the 1e-9 grid, so
+        // rounding the double normalizes any 1-ulp cast asymmetry between
+        // engines (mirrored in the oracle's round(CAST(...), 9))
+        round(col("__vl").cast(DoubleType), 9).as("left_value"),
+        round(col("__vr").cast(DoubleType), 9).as("right_value"),
+        col("__gain").as("gain"))
     var cur = binnedBase(base, idCol, labelCol, featCols, bins)
     val models = (1 to rounds).map { t =>
+      // ONE bounded shuffle: stacked (feature, bin, residual) histogram,
+      // prefix sums, 6-dp gains, struct argmax — see [[bestSplits]]
       val root = bestSplits(cur, Seq.empty, nf, bins).localCheckpoint()
-      val rootCond = (0 until nf).map(i =>
-        col("__nf") === -i && col(s"__b$i") <= -col("__nb")).reduce(_ || _)
-      // leaf assignment: 0 = left of the root split, 1 = right; a
-      // degenerate root NULLs the condition → everyone lands in leaf 1
-      // and the contribution coalesces to 0 below
+      // leaf 0 = left of the root split, 1 = right; a degenerate root
+      // NULLs the condition → everyone lands in leaf 1, whose NULL value
+      // coalesces to a zero contribution below
       val assigned = cur.crossJoin(broadcast(root))
-        .withColumn("__leaf", when(rootCond, 0).otherwise(1))
-      val child = bestSplits(
-          assigned.select(Seq(col("__leaf"), col("__y"), col("__pred")) ++
-            (0 until nf).map(i => col(s"__b$i")): _*),
-          Seq("__leaf"), nf, bins)
-        .localCheckpoint() // ≤ 2 rows
-      val childR = child.select(col("__leaf"), col("__nf").as("__cnf"),
-        col("__nb").as("__cnb"), col("__vl").as("__cvl"),
-        col("__vr").as("__cvr"))
-      val childCond = (0 until nf).map(i =>
-        col("__cnf") === -i && col(s"__b$i") <= -col("__cnb"))
-        .reduce(_ || _)
-      val rootVal = when(col("__leaf") === 0, col("__vl"))
+        .withColumn("__leaf", when(goesLeft("__nf", "__nb"), 0).otherwise(1))
+      val stump = when(col("__leaf") === 0, col("__vl"))
         .otherwise(col("__vr"))
-      val contrib = coalesce(
-        when(col("__cnf").isNotNull,
-          when(childCond, col("__cvl")).otherwise(col("__cvr")))
-          .otherwise(rootVal),
-        lit(0).cast(P))
-      cur = assigned.join(broadcast(childR), Seq("__leaf"), "left")
-        .select(Seq(col("__id"), col("__y"),
-          (col("__pred") + contrib).cast(P).as("__pred")) ++
-          (0 until nf).map(i => col(s"__b$i")): _*)
+      val (routed, contrib, model) =
+        if (depth == 1) (assigned, stump, modelRows(t, root, lit("root")))
+        else {
+          val child = bestSplits(
+              assigned.select(Seq(col("__leaf"), col("__y"), col("__pred")) ++
+                binCols: _*),
+              Seq("__leaf"), nf, bins)
+            .localCheckpoint() // ≤ 2 rows
+          val childR = child.select(col("__leaf"), col("__nf").as("__cnf"),
+            col("__nb").as("__cnb"), col("__vl").as("__cvl"),
+            col("__vr").as("__cvr"))
+          (assigned.join(broadcast(childR), Seq("__leaf"), "left"),
+            when(col("__cnf").isNotNull, when(goesLeft("__cnf", "__cnb"),
+              col("__cvl")).otherwise(col("__cvr"))).otherwise(stump),
+            modelRows(t, root, lit("root")).unionByName(modelRows(t, child,
+              when(col("__leaf") === 0, "left").otherwise("right"))))
+        }
+      cur = routed.select(Seq(col("__id"), col("__y"),
+          (col("__pred") + coalesce(contrib, lit(0).cast(P))).cast(P)
+            .as("__pred")) ++ binCols: _*)
         .localCheckpoint()
-      def modelRow(src: DataFrame, node: Column) = src
-        .filter(col("__nf").isNotNull)
-        .select(lit(t).as("round"), node.as("node"),
-          element_at(featArr, -col("__nf") + 1).as("feature"),
-          (-col("__nb")).cast("int").as("split_bin"),
-          round(col("__vl").cast(DoubleType), 9).as("left_value"),
-          round(col("__vr").cast(DoubleType), 9).as("right_value"),
-          col("__gain").as("gain"))
-      modelRow(root, lit("root")).unionByName(
-        modelRow(child, when(col("__leaf") === 0, "left")
-          .otherwise("right")))
+      model
     }
-    Fit(cur.select(col("__id"), col("__y"), col("__pred")),
+    Fit(cur.select(col("__id").as(idCol), col("__y").cast(DoubleType)
+        .as("label"), round(col("__pred").cast(DoubleType), 9).as("pred")),
       models.reduce(_ unionByName _))
   }
 
@@ -257,28 +224,25 @@ object Boost {
     */
   def gbmTree2(base: DataFrame, idCol: String, labelCol: String,
       featCols: Seq[String], bins: Int = 16, rounds: Int = 3): DataFrame =
-    fitTree2(base, idCol, labelCol, featCols, bins, rounds).model
+    fit(base, idCol, labelCol, featCols, bins, rounds, depth = 2).model
 
   /** Final depth-2 boosted predictions, shaped like [[gbmScore]]. */
   def gbmTree2Score(base: DataFrame, idCol: String, labelCol: String,
       featCols: Seq[String], bins: Int = 16, rounds: Int = 3): DataFrame =
-    fitTree2(base, idCol, labelCol, featCols, bins, rounds).scored
-      .select(col("__id").as(idCol), col("__y").cast(DoubleType)
-        .as("label"), round(col("__pred").cast(DoubleType), 9).as("pred"))
+    fit(base, idCol, labelCol, featCols, bins, rounds, depth = 2).scored
 
   /** The fitted model, one row per boosting round:
     * (round, feature, split_bin, left_value, right_value, gain).
     */
   def gbmStumps(base: DataFrame, idCol: String, labelCol: String,
       featCols: Seq[String], bins: Int = 16, rounds: Int = 3): DataFrame =
-    fit(base, idCol, labelCol, featCols, bins, rounds).model
+    fit(base, idCol, labelCol, featCols, bins, rounds, depth = 1).model
+      .drop("node")
 
   /** Final boosted predictions: (idCol, label, pred). `pred` is the exact
     * DECIMAL accumulation of p₀ + the chosen leaf values, cast to double.
     */
   def gbmScore(base: DataFrame, idCol: String, labelCol: String,
       featCols: Seq[String], bins: Int = 16, rounds: Int = 3): DataFrame =
-    fit(base, idCol, labelCol, featCols, bins, rounds).scored
-      .select(col("__id").as(idCol), col("__y").cast(DoubleType)
-        .as("label"), round(col("__pred").cast(DoubleType), 9).as("pred"))
+    fit(base, idCol, labelCol, featCols, bins, rounds, depth = 1).scored
 }

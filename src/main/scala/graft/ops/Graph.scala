@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** Graph operators on an edge relation — the link-analysis half of web
   * corpus curation (harvest-quality signals like PageRank feed document
@@ -14,13 +14,76 @@ import org.apache.spark.sql.types.DecimalType
   * [[Dedup.connectedComponents]] discipline: a Scala loop of join +
   * aggregate rounds with `localCheckpoint` per round so plan lineage
   * stays flat; each round is ONE shuffle join on the edge source plus one
-  * aggregate on the destination. At cluster scale both relations bucket
-  * on the node id, which co-locates every round's join and deletes the
-  * per-iteration exchange.
+  * aggregate on the destination. A checkpoint keeps no hash layout
+  * (PlanSpec pins it), so every round exchanges its join inputs again:
+  * under AQE a PageRank round is 7 Spark jobs (8 when some node has no
+  * out-edge) and a HITS round 14 (GraphSpec pins both).
   */
 object Graph {
 
   private val D9 = DecimalType(18, 9)
+
+  /** The distinct string edges (src, dst) that satisfy `keep`, and their
+    * node set (node) — both checkpointed once, before a loop's rounds.
+    */
+  private def edgeSetup(edges: DataFrame, srcCol: String, dstCol: String,
+      keep: Column): (DataFrame, DataFrame) = {
+    val e = edges.select(col(srcCol).cast("string").as("src"),
+        col(dstCol).cast("string").as("dst"))
+      .filter(keep).distinct().localCheckpoint()
+    val nodes = e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
+    (e, nodes)
+  }
+
+  /** One propagation step: the per-edge value `w` over `state` ⋈ `edges`
+    * (state.node = the edge's `from` end) summed per `to` end, left-joined
+    * onto `base`'s nodes as `__m` — NULL where nothing arrives.
+    */
+  private def propagate(state: DataFrame, edges: DataFrame, from: String,
+      to: String, w: Column, base: DataFrame): DataFrame =
+    base.join(state.join(edges, col("node") === col(from))
+        .groupBy(col(to).as("__to")).agg(sum(w).as("__m")),
+      col("node") === col("__to"), "left")
+
+  /** The random-walk graph of [[pageRank]] and [[personalizedPageRank]]
+    * (self-loops are walk edges and stay): the node set, the
+    * degree-carrying edges `ew` (src, dst, deg) and the dangling nodes
+    * (no out-edge), each checkpointed once. Joining out-degrees inside
+    * the round re-shuffled the full edge relation every iteration
+    * (SURVEY §6.1 iterative graph family: 134 s → 18 s for 3 rounds at
+    * 6M edges from hoisting them).
+    */
+  private case class Walk(nodes: DataFrame, ew: DataFrame,
+      danglingNodes: DataFrame) {
+
+    /** `iterations` rounds from the checkpointed state `init` (node, …):
+      * each propagates the per-edge share `w` along `ew`, aggregates the
+      * dangling nodes' mass `dm` into a 1-row `__dm` broadcast back (the
+      * tiny-stat pattern), and selects `next` from `base` ⟕ `__m` ×
+      * `__dm`, checkpointed. The caller's columns carry its arithmetic.
+      */
+    def rounds(init: DataFrame, base: DataFrame, iterations: Int,
+        w: Column, dm: Column, next: Column*): DataFrame =
+      (1 to iterations).foldLeft(init) { (ranks, _) =>
+        val dangling = ranks.join(danglingNodes, Seq("node"), "left_semi")
+          .agg(dm.as("__dm"))
+        propagate(ranks, ew, "src", "dst", w, base)
+          .crossJoin(broadcast(dangling)).select(next: _*).localCheckpoint()
+      }
+  }
+
+  private def walk(edges: DataFrame, srcCol: String, dstCol: String)
+      : Walk = {
+    val (e, nodes) = edgeSetup(edges, srcCol, dstCol, lit(true))
+    val outDeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
+    // the checkpoint keeps no hash layout, so each round's ranks ⋈ ew
+    // join still exchanges the edge side; a repartition(src) before it
+    // would only add a set-up shuffle (PlanSpec pins this)
+    Walk(nodes, e.join(outDeg, Seq("src")).localCheckpoint(),
+      nodes.join(outDeg, col("node") === col("src"), "left_anti")
+        .select("node").localCheckpoint())
+  }
 
   /** Fixed-iteration damped PageRank (Page et al. 1999) on a directed
     * edge list, WITH dangling-node handling: mass held by nodes without
@@ -40,56 +103,28 @@ object Graph {
     * summation order (the property that lets a DuckDB oracle replay the
     * iterations as unrolled CTEs).
     *
-    * Per round: one edge join + one destination aggregate (both bucket on
-    * the node id at cluster scale) + one 1-row dangling aggregate. The
-    * degree-weighted edge relation (src, dst, deg) and the dangling-node
-    * set build ONCE outside the loop — joining out-degrees inside the
-    * round re-shuffled the full edge relation every iteration (SURVEY
-    * §6.1 iterative graph family: 134 s → 18 s for 3 rounds at 6M edges
-    * from hoisting them).
+    * Per round: one edge join + one destination aggregate + one 1-row
+    * dangling aggregate — 7 Spark jobs under AQE, 8 when some node has
+    * no out-edge (GraphSpec pins it). The degree-weighted edge relation
+    * and the dangling-node set build ONCE outside the loop.
     * Returns (node, rank) — rank as DOUBLE rounded 9 dp.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 3, damping: Double = 0.85): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
-    val e = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst")).distinct().localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
-    val outDeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    // degree-carrying edges: ONE join, checkpointed and reused every
-    // round. The checkpoint does not keep a hash layout (a checkpointed
-    // relation reports UnknownPartitioning), so each round's ranks ⋈ ew
-    // join still exchanges the edge side; a repartition(src) before the
-    // checkpoint would only add a set-up shuffle (PlanSpec pins this)
-    val ew = e.join(outDeg, Seq("src")).localCheckpoint()
-    val danglingNodes = nodes
-      .join(outDeg, col("node") === col("src"), "left_anti")
-      .select("node").localCheckpoint()
-    val n = nodes.count()
-    var ranks = nodes.select(col("node"),
-      round(lit(1.0 / n), 9).cast(D9).as("r")).localCheckpoint()
-    for (_ <- 1 to iterations) {
-      val contrib = ranks.join(ew, col("node") === col("src"))
-        .select(col("dst"),
-          round(col("r").cast("double") / col("deg"), 9).cast(D9).as("w"))
-        .groupBy("dst").agg(sum(col("w")).as("in_mass"))
-      // dangling mass: exact DECIMAL sum of ranks with no out-edge — a
-      // 1-row aggregate broadcast back onto every node
-      val dangling = ranks
-        .join(danglingNodes, Seq("node"), "left_semi")
-        .agg(coalesce(sum(col("r")), lit(0).cast(D9)).as("__dm"))
-      ranks = nodes
-        .join(contrib, col("node") === col("dst"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("node"),
-          round(lit((1.0 - damping) / n) + lit(damping) *
-            (coalesce(col("in_mass").cast("double"), lit(0.0)) +
-              col("__dm").cast("double") / lit(n.toDouble)),
-            9).cast(D9).as("r"))
-        .localCheckpoint()
-    }
-    ranks.select(col("node"), col("r").cast("double").as("rank"))
+    val g = walk(edges, srcCol, dstCol)
+    val n = g.nodes.count()
+    g.rounds(g.nodes.select(col("node"),
+        round(lit(1.0 / n), 9).cast(D9).as("r")).localCheckpoint(),
+      g.nodes, iterations,
+      round(col("r").cast("double") / col("deg"), 9).cast(D9),
+      coalesce(sum(col("r")), lit(0).cast(D9)),
+      col("node"),
+      round(lit((1.0 - damping) / n) + lit(damping) *
+        (coalesce(col("__m").cast("double"), lit(0.0)) +
+          col("__dm").cast("double") / lit(n.toDouble)),
+        9).cast(D9).as("r"))
+      .select(col("node"), col("r").cast("double").as("rank"))
   }
 
   /** Personalized PageRank (Page et al. 1999 §6; the random walk with
@@ -108,10 +143,9 @@ object Graph {
     * 0.85·(k·10⁻⁹) lands its 10th decimal digit on a 5 whenever
     * 85k ≡ 50 (mod 100) — ~5% of values sit ON a round-half tie where
     * double-path engines disagree (measured at sf0.1; pageRank's
-    * nonzero (1−d)/n teleport term masks the same hazard). Structure
-    * otherwise mirrors pageRank: degree-carrying edges joined ONCE,
-    * dangling mass a 1-row aggregate broadcast back, `localCheckpoint`
-    * per round. `seeds` must expose a `node` column; seeds outside the
+    * nonzero (1−d)/n teleport term masks the same hazard). The rounds
+    * are [[pageRank]]'s (same set-up, same jobs per round) with this
+    * arithmetic. `seeds` must expose a `node` column; seeds outside the
     * graph are ignored (must leave ≥1). Returns (node, rank) —
     * Σrank ≤ 1, with equality when no walk escapes the seed component.
     */
@@ -119,17 +153,8 @@ object Graph {
       dstCol: String, seeds: DataFrame, iterations: Int = 3,
       damping: Double = 0.85): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
-    val e = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst")).distinct().localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
-    val outDeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    // degree-carrying edges joined once (the pageRank discipline)
-    val ew = e.join(outDeg, Seq("src")).localCheckpoint()
-    val danglingNodes = nodes
-      .join(outDeg, col("node") === col("src"), "left_anti")
-      .select("node").localCheckpoint()
-    val seedNodes = nodes.join(
+    val g = walk(edges, srcCol, dstCol)
+    val seedNodes = g.nodes.join(
         seeds.select(col("node").cast("string").as("node")).distinct(),
         Seq("node"), "left_semi")
       .withColumn("__seed", lit(true)).localCheckpoint()
@@ -138,38 +163,27 @@ object Graph {
     require(damping == 0.85,
       "the integer recursion hard-codes d = 85/100; generalize the " +
         "15/85 numerators to change it")
-    val flagged = nodes.join(seedNodes, Seq("node"), "left")
+    val flagged = g.nodes.join(seedNodes, Seq("node"), "left")
       .select(col("node"), coalesce(col("__seed"), lit(false)).as("__seed"))
       .localCheckpoint()
     // s = round-half-up(10⁹/|S|) nano units, computed once in integers
     val sNano = (2L * 1000000000L + nS) / (2L * nS)
     val sFlag = when(col("__seed"), lit(sNano)).otherwise(lit(0L))
-    var ranks = flagged.select(col("node"), col("__seed"),
-      sFlag.as("rn")).localCheckpoint()
-    for (_ <- 1 to iterations) {
-      val contrib = ranks.join(ew, col("node") === col("src"))
-        .select(col("dst"),
-          expr("(2 * rn + deg) div (2 * deg)").as("w"))
-        .groupBy("dst").agg(sum(col("w")).as("inn"))
-      val dangling = ranks
-        .join(danglingNodes, Seq("node"), "left_semi")
-        .agg(coalesce(sum(col("rn")), lit(0L)).as("dmn"))
-      ranks = flagged
-        .join(contrib, col("node") === col("dst"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("node"), col("__seed"),
-          expr(s"""(15 * (CASE WHEN __seed THEN ${sNano}L ELSE 0L END)
-                  | + 85 * (coalesce(inn, 0L) +
-                  |     (CASE WHEN __seed THEN
-                  |        (2 * dmn * ${sNano}L + 1000000000L)
-                  |          div 2000000000L
-                  |      ELSE 0L END))
-                  | + 50) div 100""".stripMargin).as("rn"))
-        .localCheckpoint()
-    }
-    ranks.select(col("node"),
-      (col("rn").cast(org.apache.spark.sql.types.DoubleType) /
-        lit(1.0e9)).as("rank"))
+    g.rounds(flagged.select(col("node"), col("__seed"), sFlag.as("rn"))
+        .localCheckpoint(),
+      flagged, iterations,
+      expr("(2 * rn + deg) div (2 * deg)"),
+      coalesce(sum(col("rn")), lit(0L)),
+      col("node"), col("__seed"),
+      expr(s"""(15 * (CASE WHEN __seed THEN ${sNano}L ELSE 0L END)
+              | + 85 * (coalesce(__m, 0L) +
+              |     (CASE WHEN __seed THEN
+              |        (2 * __dm * ${sNano}L + 1000000000L)
+              |          div 2000000000L
+              |      ELSE 0L END))
+              | + 50) div 100""".stripMargin).as("rn"))
+      .select(col("node"), (col("rn").cast(DoubleType) / lit(1.0e9))
+        .as("rank"))
   }
 
   /** In/out degree profile per node — the 1-hop structural feature set
@@ -190,29 +204,28 @@ object Graph {
         coalesce(col("in_deg"), lit(0L)).as("in_deg"))
   }
 
-  /** Exact triangle count by degree-ordered orientation (Schank 2007; the
-    * MapReduce formulation of Suri & Vassilvitskii, WWW'11) — the graph
-    * clustering-coefficient primitive.
-    *
-    * Why not the naive 3-way self-join: its wedge step is Σ deg(v)² and a
-    * single celebrity vertex makes it quadratic. Orienting every edge from
-    * its (degree, id)-SMALLER endpoint bounds every out-degree by O(√m),
-    * so wedges = Σ outdeg² ≤ m^1.5 regardless of skew — the standard
-    * scalability trick, and it also counts each triangle exactly once (its
-    * orientation is acyclic: one vertex has out-degree 2).
-    *
-    * Input: undirected edges as (aCol, bCol) in any order/duplication;
-    * self-loops dropped, duplicates collapsed. Three equi-joins on bounded
-    * relations. Returns one row: (n_nodes, n_edges, n_wedges, n_triangles).
+  /** Canonical undirected edges (u, v), u < v, of the endpoint columns
+    * `a` and `b`: self-loops dropped, duplicates and both spellings
+    * collapsed.
     */
-  def triangles(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val und = edges
-      .select(least(col(aCol), col(bCol)).as("u"),
-        greatest(col(aCol), col(bCol)).as("v"))
+  private def undirected(edges: DataFrame, a: Column, b: Column)
+      : DataFrame =
+    edges.select(least(a, b).as("u"), greatest(a, b).as("v"))
       .filter(col("u") =!= col("v")).distinct()
-    val deg = und.select(explode(array(col("u"), col("v"))).as("n"))
+
+  /** Node degrees (n, d) of canonical edges `und`. */
+  private def degrees(und: DataFrame): DataFrame =
+    und.select(explode(array(col("u"), col("v"))).as("n"))
       .groupBy("n").agg(count(lit(1)).as("d"))
-    // orient from the (degree, id)-smaller endpoint
+
+  /** The wedges (s, w1, w2), w1 < w2, of canonical edges `und` under the
+    * degree-ordered orientation (Schank 2007): every edge points out of
+    * its (degree, id)-smaller endpoint, which bounds every out-degree by
+    * O(√m), so wedges = Σ outdeg² ≤ m^1.5 regardless of skew, and each
+    * triangle is one wedge (the orientation is acyclic). A wedge closes
+    * iff (w1, w2) is itself an edge of `und` — the caller's probe.
+    */
+  private def wedges(und: DataFrame, deg: DataFrame): DataFrame = {
     val oriented = und
       .join(deg.select(col("n").as("u"), col("d").as("du")), Seq("u"))
       .join(deg.select(col("n").as("v"), col("d").as("dv")), Seq("v"))
@@ -221,12 +234,29 @@ object Graph {
           struct(col("u").as("s"), col("v").as("t")))
           .otherwise(struct(col("v").as("s"), col("u").as("t"))).as("e"))
       .select(col("e.s").as("s"), col("e.t").as("t"))
-    val wedges = oriented.select(col("s"), col("t").as("w1"))
+    oriented.select(col("s"), col("t").as("w1"))
       .join(oriented.select(col("s"), col("t").as("w2")), Seq("s"))
       .filter(col("w1") < col("w2"))
-    // a wedge (w1 < w2 by id) closes iff {w1, w2} is an edge — und is
-    // already in (min, max) form, so the closing probe is a direct join
-    val counts = wedges
+  }
+
+  /** Exact triangle count by degree-ordered orientation (Schank 2007; the
+    * MapReduce formulation of Suri & Vassilvitskii, WWW'11) — the graph
+    * clustering-coefficient primitive.
+    *
+    * Why not the naive 3-way self-join: its wedge step is Σ deg(v)² and a
+    * single celebrity vertex makes it quadratic; the oriented wedges of
+    * [[wedges]] stay ≤ m^1.5 and count each triangle exactly once.
+    *
+    * Input: undirected edges as (aCol, bCol) in any order/duplication;
+    * self-loops dropped, duplicates collapsed. Three equi-joins on bounded
+    * relations. Returns one row: (n_nodes, n_edges, n_wedges, n_triangles).
+    */
+  def triangles(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
+    val und = undirected(edges, col(aCol), col(bCol))
+    val deg = degrees(und)
+    // und is already in (min, max) form, so the closing probe is a
+    // direct join
+    val counts = wedges(und, deg)
       .join(und.select(col("u").as("w1"), col("v").as("w2"))
           .withColumn("__closed", lit(1L)),
         Seq("w1", "w2"), "left_outer")
@@ -256,27 +286,11 @@ object Graph {
       rounds: Int): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3: $k")
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
-    var und = edges
-      .select(least(col(aCol).cast("string"), col(bCol).cast("string"))
-          .as("u"),
-        greatest(col(aCol).cast("string"), col(bCol).cast("string"))
-          .as("v"))
-      .filter(col("u") =!= col("v")).distinct().localCheckpoint()
+    var und = undirected(edges, col(aCol).cast("string"),
+      col(bCol).cast("string")).localCheckpoint()
     var support: DataFrame = null
     for (_ <- 1 to rounds) {
-      val deg = und.select(explode(array(col("u"), col("v"))).as("n"))
-        .groupBy("n").agg(count(lit(1)).as("d"))
-      val oriented = und
-        .join(deg.select(col("n").as("u"), col("d").as("du")), Seq("u"))
-        .join(deg.select(col("n").as("v"), col("d").as("dv")), Seq("v"))
-        .select(
-          when(struct(col("du"), col("u")) < struct(col("dv"), col("v")),
-            struct(col("u").as("s"), col("v").as("t")))
-            .otherwise(struct(col("v").as("s"), col("u").as("t"))).as("e"))
-        .select(col("e.s").as("s"), col("e.t").as("t"))
-      val tri = oriented.select(col("s"), col("t").as("w1"))
-        .join(oriented.select(col("s"), col("t").as("w2")), Seq("s"))
-        .filter(col("w1") < col("w2"))
+      val tri = wedges(und, degrees(und))
         .join(und.select(col("u").as("w1"), col("v").as("w2")),
           Seq("w1", "w2"), "left_semi")
       // each triangle (s, w1, w2) credits its three canonical edges
@@ -388,10 +402,7 @@ object Graph {
   def kcorePeel(edges: DataFrame, aCol: String, bCol: String, k: Int,
       rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, s"need k >= 1, rounds >= 1: $k, $rounds")
-    val sym = edges
-      .select(least(col(aCol), col(bCol)).as("u"),
-        greatest(col(aCol), col(bCol)).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
+    val sym = undirected(edges, col(aCol), col(bCol))
     // the repartition only spreads the union's rows over the shuffle
     // partitions: the checkpoint keeps no hash layout for the rounds
     var und = sym
@@ -413,24 +424,6 @@ object Graph {
       .withColumn("in_core", col("degree") >= k)
   }
 
-  /** Synchronous label-propagation community detection (Raghavan et al.
-    * 2007), bounded rounds — the near-linear community pass for
-    * link/interaction graphs (domain clusters in a web graph, user
-    * cohorts in a purchase graph) where modularity methods don't scale.
-    * Every node starts as its own community; each round it adopts the
-    * label carried by the MAJORITY of its neighbors, ties to the
-    * smallest label (min-struct over (−count, label) — the library
-    * argmin convention, so the whole run is deterministic and
-    * engine-replayable; classic LPA randomizes both the visit order and
-    * the tie, which no oracle could replay).
-    *
-    * Per round: ONE join of the label relation against the symmetrized
-    * edges + one (node, label) count collapse + one per-node argmin —
-    * all partial-aggregable — with `localCheckpoint` lineage discipline;
-    * bounded `rounds` keeps the plan unrolled-CTE-replayable (the
-    * pageRank rule). At cluster scale both relations bucket on the node
-    * id. Returns (node, community).
-    */
   /** Bounded-round HITS hubs & authorities (Kleinberg, JACM 1999) on a
     * directed edge list — the query-dependent companion to [[pageRank]]:
     * a node is a good AUTHORITY when good hubs point at it and a good HUB
@@ -450,10 +443,10 @@ object Graph {
     * is engine-identical, which lets the DuckDB oracle replay the
     * iterations as unrolled CTEs.
     *
-    * Per round: two edge joins + two destination aggregates (all bucket
-    * on the node id at cluster scale) + two 1-row norm aggregates
-    * broadcast back (the tiny-stat pattern). The deduplicated edge
-    * relation builds ONCE outside the loop. Returns
+    * Per round: two edge joins + two destination aggregates + two 1-row
+    * norm aggregates broadcast back (the tiny-stat pattern) — 14 Spark
+    * jobs under AQE (GraphSpec pins it). Self-loops are dropped; the
+    * deduplicated edge relation builds ONCE outside the loop. Returns
     * (node, hub, authority) as 9-dp doubles; nodes with no in-edges have
     * authority 0, nodes with no out-edges hub 0.
     */
@@ -462,11 +455,8 @@ object Graph {
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
     val decBig = DecimalType(38, 0)
     val d28 = DecimalType(28, 9)
-    val e = edges.select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
+    val (e, nodes) = edgeSetup(edges, srcCol, dstCol,
+      col("src") =!= col("dst"))
 
     // exact-integer L2 normalize: x/||x|| = x_nano/√(Σ x_nano²)
     def l2normalize(raw: DataFrame, c: String): DataFrame = {
@@ -481,24 +471,20 @@ object Graph {
             .otherwise(round(col("__xn").cast("double") /
               sqrt(col("__ss").cast("double")), 9).cast(D9)).as(c))
     }
+    // one half-step: score `s` summed over e at each edge's `to` end,
+    // zero-filled on every node, L2-normalized into `out`
+    def halfStep(score: DataFrame, s: String, from: String, to: String,
+        out: String): DataFrame =
+      l2normalize(propagate(score, e, from, to, col(s), nodes)
+          .select(col("node"),
+            coalesce(col("__m"), lit(0).cast(d28)).as(out)),
+        out).localCheckpoint()
 
     var hubs = nodes.select(col("node"), lit(1).cast(D9).as("h"))
     var auths = nodes.select(col("node"), lit(0).cast(D9).as("a"))
     for (_ <- 1 to iterations) {
-      val aSum = hubs.join(e, col("node") === col("src"))
-        .groupBy(col("dst")).agg(sum(col("h")).as("__m"))
-      auths = l2normalize(
-        nodes.join(aSum, col("node") === col("dst"), "left")
-          .select(col("node"),
-            coalesce(col("__m"), lit(0).cast(d28)).as("a")),
-        "a").localCheckpoint()
-      val hSum = auths.join(e, col("node") === col("dst"))
-        .groupBy(col("src")).agg(sum(col("a")).as("__m"))
-      hubs = l2normalize(
-        nodes.join(hSum, col("node") === col("src"), "left")
-          .select(col("node"),
-            coalesce(col("__m"), lit(0).cast(d28)).as("h")),
-        "h").localCheckpoint()
+      auths = halfStep(hubs, "h", "src", "dst", "a")
+      hubs = halfStep(auths, "a", "dst", "src", "h")
     }
     hubs.join(auths, Seq("node"))
       .select(col("node"), col("h").cast("double").as("hub"),
@@ -572,12 +558,8 @@ object Graph {
       labels: DataFrame): DataFrame = {
     val big = org.apache.spark.sql.types.DecimalType(38, 0)
     val dbl = org.apache.spark.sql.types.DoubleType
-    val e = edges.select(col(aCol).cast("string").as("u0"),
-        col(bCol).cast("string").as("v0"))
-      .filter(col("u0") =!= col("v0"))
-      .select(least(col("u0"), col("v0")).as("u"),
-        greatest(col("u0"), col("v0")).as("v"))
-      .distinct().localCheckpoint()
+    val e = undirected(edges, col(aCol).cast("string"),
+      col(bCol).cast("string")).localCheckpoint()
     val lab = labels.select(col("node"), col("community"))
     val deg = e.select(explode(array(col("u"), col("v"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("d"))
@@ -609,6 +591,23 @@ object Graph {
             .cast(dbl)).as("modularity"))
   }
 
+  /** Synchronous label-propagation community detection (Raghavan et al.
+    * 2007), bounded rounds — the near-linear community pass for
+    * link/interaction graphs (domain clusters in a web graph, user
+    * cohorts in a purchase graph) where modularity methods don't scale.
+    * Every node starts as its own community; each round it adopts the
+    * label carried by the MAJORITY of its neighbors, ties to the
+    * smallest label (min-struct over (−count, label) — the library
+    * argmin convention, so the whole run is deterministic and
+    * engine-replayable; classic LPA randomizes both the visit order and
+    * the tie, which no oracle could replay).
+    *
+    * Per round: ONE join of the label relation against the symmetrized
+    * edges + one (node, label) count collapse + one per-node argmin —
+    * all partial-aggregable — with `localCheckpoint` lineage discipline;
+    * bounded `rounds` keeps the plan unrolled-CTE-replayable (the
+    * pageRank rule). Returns (node, community).
+    */
   def lpaCommunities(edges: DataFrame, aCol: String, bCol: String,
       rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")

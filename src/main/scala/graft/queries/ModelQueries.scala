@@ -586,8 +586,8 @@ object ModelQueries {
     * leaf-keyed level-2 histogram/prefix/cand chain, the per-leaf
     * struct argmax, and the prediction update where a leaf with no
     * candidate falls back to the root's own stump value — mirroring
-    * [[graft.ops.Boost.fitTree2]] value for value. A fully degenerate
-    * round (empty ROOT candidate set → best is NULL) coalesces the
+    * [[graft.ops.Boost.fit]] at depth 2 value for value. A fully
+    * degenerate round (empty ROOT candidate set → best is NULL) coalesces the
     * whole contribution to 0, exactly as the Spark side's
     * constant-feature skip does — without it the oracle's pred would
     * go NULL on any data where a round finds no valid split.

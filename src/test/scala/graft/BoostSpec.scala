@@ -250,4 +250,31 @@ class BoostSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(tree == stump)
   }
+
+  test("gbm: jobs per round and set-up jobs of the stump and the depth-2 " +
+      "fit on a 61-row base") {
+    val rows = (0 until 61).map { i =>
+      val fa = (i * 37L) % 101
+      (i.toLong, if ((fa > 50) ^ (i % 8 > 3)) 1 else 0, Seq(fa, i % 8L))
+    }
+    import TestSpark.roundJobs
+    assert(roundJobs(Boost.gbmScore(toDf(rows), "id", "y", Seq("fa", "fb"),
+      8, _)) == ((4, 6)))
+    assert(roundJobs(Boost.gbmTree2Score(toDf(rows), "id", "y",
+      Seq("fa", "fb"), 8, _)) == ((4, 12)))
+  }
+
+  test("gbm degenerate bases: an empty base fits nothing; a one-row " +
+      "base has no split and scores its own label") {
+    val feats = Seq("fa", "fb")
+    val empty = toDf(Seq.empty)
+    assert(Boost.gbmStumps(empty, "id", "y", feats).count() == 0)
+    assert(Boost.gbmScore(empty, "id", "y", feats).count() == 0)
+    assert(Boost.gbmTree2(empty, "id", "y", feats).count() == 0)
+    assert(Boost.gbmTree2Score(empty, "id", "y", feats).count() == 0)
+    val one = toDf(Seq((1L, 1, Seq(3L, 4L))))
+    assert(Boost.gbmStumps(one, "id", "y", feats).count() == 0)
+    assert(Boost.gbmTree2Score(one, "id", "y", feats)
+      .as[(Long, Double, Double)].collect().toSeq == Seq((1L, 1.0, 1.0)))
+  }
 }

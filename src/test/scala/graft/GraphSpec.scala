@@ -305,4 +305,43 @@ class GraphSpec extends AnyFunSuite {
     // k=5 needs support 3: K4 can't provide it -> empty
     assert(Graph.ktruss(g, "x", "y", k = 5, rounds = 2).count() == 0)
   }
+
+  // 61 nodes "0".."60", out-edges i→i+1 and i→7i+1 (mod 61): no node is
+  // dangling (one that is adds a job per PageRank round) and "10"→"10"
+  // is a self-loop
+  private lazy val ring61 = (0 until 61).flatMap { i =>
+    Seq(i -> (i + 1) % 61, i -> (7 * i + 1) % 61)
+  }.map { case (a, b) => (a.toString, b.toString) }.toDF("src", "dst")
+
+  test("pageRank, personalizedPageRank and hits: jobs per round and " +
+      "set-up jobs on the 61-node fixture") {
+    import TestSpark.roundJobs
+    val seeds = Seq("0", "5").toDF("node")
+    assert(roundJobs(Graph.pageRank(ring61, "src", "dst", _)) == ((14, 7)))
+    assert(roundJobs(Graph.personalizedPageRank(ring61, "src", "dst", seeds,
+      _)) == ((19, 7)))
+    assert(roundJobs(Graph.hits(ring61, "src", "dst", _)) == ((8, 14)))
+  }
+
+  test("degenerate graphs: an empty edge relation and a graph of " +
+      "self-loops only") {
+    val none = Seq.empty[(String, String)].toDF("src", "dst")
+    assert(Graph.pageRank(none, "src", "dst").count() == 0)
+    assert(Graph.hits(none, "src", "dst").count() == 0)
+    assert(Graph.ktruss(none, "src", "dst", k = 3, rounds = 2).count() == 0)
+    assert(Graph.kcorePeel(none, "src", "dst", k = 2, rounds = 2)
+      .count() == 0)
+    assert(Graph.lpaCommunities(none, "src", "dst", 2).count() == 0)
+    assert(Graph.triangles(none, "src", "dst")
+      .as[(Long, Long, Long, Long)].collect().toSeq == Seq((0L, 0L, 0L, 0L)))
+    val noSeed = intercept[IllegalArgumentException](
+      Graph.personalizedPageRank(none, "src", "dst", Seq("a").toDF("node")))
+    assert(noSeed.getMessage.contains("no seed node appears in the graph"),
+      noSeed.getMessage)
+    // pageRank keeps self-loops, hits drops them
+    val loops = Seq(("a", "a"), ("b", "b")).toDF("src", "dst")
+    assert(Graph.pageRank(loops, "src", "dst").as[(String, Double)]
+      .collect().toMap == Map("a" -> 0.5, "b" -> 0.5))
+    assert(Graph.hits(loops, "src", "dst").count() == 0)
+  }
 }

@@ -466,9 +466,10 @@ class PlanSpec extends AnyFunSuite {
     // checkpointed per-round RDD; the leaf-assignment crossJoin (1-row
     // root) and the child join (≤2-row, broadcast) must both be
     // broadcast-shaped, never SortMergeJoin on the row relation
-    val fit = graft.ops.Boost.fitTree2(
+    val fit = graft.ops.Boost.fit(
       graft.queries.ModelQueries.base(spark, dir), "o_orderkey", "urgent",
-      Seq("price_c", "order_day", "acctbal_c"), bins = 16, rounds = 1)
+      Seq("price_c", "order_day", "acctbal_c"), bins = 16, rounds = 1,
+      depth = 2)
     val s = planString(fit.model)
     assert(!s.contains("CartesianProduct") && !s.contains("SortMergeJoin"),
       s)

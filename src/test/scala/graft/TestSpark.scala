@@ -44,4 +44,16 @@ object TestSpark {
       sc.removeSparkListener(listener)
     }
   }
+
+  /** (set-up jobs, jobs per extra round) of building `op(rounds)` and
+    * writing it to the noop sink, from runs at 1 and 3 rounds.
+    */
+  def roundJobs(op: Int => org.apache.spark.sql.DataFrame): (Int, Int) = {
+    def jobs(rounds: Int) = jobsIn(
+      op(rounds).write.format("noop").mode("overwrite").save())._2
+    val (one, three) = (jobs(1), jobs(3))
+    assert((three - one) % 2 == 0, s"1 round: $one jobs, 3 rounds: $three")
+    val perRound = (three - one) / 2
+    (one - perRound, perRound)
+  }
 }

@@ -10,14 +10,21 @@ An oracle_sql.json entry with no output directory is a failure too (the
 query crashed in graft.Verify; verify_failures.json, when present, gives
 the error). Exits non-zero on any failure.
 
+Each oracle runs in its own child process, one at a time, on a fresh
+DuckDB connection. A child that dies (the kernel's OOM killer, a DuckDB
+crash) is a named failure of that query, and the compare goes on with
+the next one.
+
 DuckDB is bounded by the machine it runs on: memory_limit is 4/5 of
 MemTotal, threads is the CPU count, and spill goes to a fresh directory
-under the system temp dir that is removed on exit. A lower limit fails
-text_lm_generate's oracle even at sf0.001: DuckDB accounts 11-12.5 GiB
-to its unrolled CTE chain while the process stays near 3.5 GiB resident
-(measured with DuckDB 1.0 on a 15.7 GiB, 4-core machine).
+under the system temp dir that is removed when the oracle ends. A lower
+limit fails text_lm_generate's oracle even at sf0.001: DuckDB accounts
+11-12.5 GiB to its unrolled CTE chain while the process stays near
+3.5 GiB resident (measured with DuckDB 1.0 on a 15.7 GiB, 4-core
+machine).
 """
-import json, sys, glob, os, shutil, tempfile
+import json, sys, glob, os, shutil, signal, tempfile
+import multiprocessing as mp
 import duckdb
 import pandas as pd
 
@@ -42,22 +49,61 @@ def mem_total_kib() -> int:
                 return int(line.split()[1])
     raise RuntimeError("no MemTotal in /proc/meminfo")
 
-def main(sf_dir: str, out_dir: str) -> int:
-    spill = tempfile.mkdtemp(prefix="check_oracle_spill_")
+def run_oracle(sf_dir: str, sql: str, spill: str, result: str) -> None:
+    """Child process: runs one oracle under the machine's bounds and
+    pickles its result to `result`, or writes the error to
+    `result`.err."""
     try:
         with duckdb.connect(config={
                 "memory_limit": f"{mem_total_kib() * 4 // 5}KiB",
                 "threads": len(os.sched_getaffinity(0)),
                 "temp_directory": spill}) as con:
-            return compare(con, sf_dir, out_dir)
+            for t in TABLES:
+                p = f"{sf_dir}/{t}.parquet"
+                if os.path.exists(p):
+                    con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+            con.sql(sql).df().to_pickle(result)
+    except Exception as e:
+        with open(result + ".err", "w") as f:
+            f.write(str(e))
+
+def oracle_result(ctx, sf_dir: str, sql: str, work: str):
+    """(DataFrame, None) from a child that ran `sql`, or (None, error).
+    The child's spill directory and result files are removed here, so a
+    killed child leaves nothing behind."""
+    spill = os.path.join(work, "spill")
+    result = os.path.join(work, "result.pkl")
+    os.makedirs(spill)
+    child = ctx.Process(target=run_oracle, args=(sf_dir, sql, spill, result))
+    child.start()
+    child.join()
+    try:
+        if os.path.exists(result + ".err"):
+            with open(result + ".err") as f:
+                return None, f"oracle SQL failed: {f.read()}"
+        if child.exitcode != 0:
+            died = (f"killed by {signal.Signals(-child.exitcode).name}"
+                    if child.exitcode < 0 else f"exit code {child.exitcode}")
+            return None, f"oracle process died ({died})"
+        return pd.read_pickle(result), None
     finally:
         shutil.rmtree(spill, ignore_errors=True)
+        for p in (result, result + ".err"):
+            if os.path.exists(p):
+                os.remove(p)
 
-def compare(con, sf_dir: str, out_dir: str) -> int:
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+def main(sf_dir: str, out_dir: str) -> int:
+    # children fork from a server started before this process reads any
+    # parquet, so none inherits the parent's reader threads
+    ctx = mp.get_context("forkserver")
+    ctx.set_forkserver_preload(["duckdb", "pandas"])
+    work = tempfile.mkdtemp(prefix="check_oracle_")
+    try:
+        return compare(ctx, sf_dir, out_dir, work)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+def compare(ctx, sf_dir: str, out_dir: str, work: str) -> int:
     with open(f"{out_dir}/oracle_sql.json") as f:
         oracle = json.load(f)
     n_pass = n_fail = 0
@@ -69,12 +115,12 @@ def compare(con, sf_dir: str, out_dir: str) -> int:
         if name not in oracle:
             print(f"  [rows-only] {name}: {len(got)} rows")
             continue
-        try:
-            exp = canon(con.sql(oracle[name]).df())
-        except Exception as e:
-            print(f"✗ {name}: oracle SQL failed: {e}")
+        exp, err = oracle_result(ctx, sf_dir, oracle[name], work)
+        if err is not None:
+            print(f"✗ {name}: {err}")
             n_fail += 1
             continue
+        exp = canon(exp)
         status = []
         if list(got.columns) != list(exp.columns):
             status.append(f"cols spark={list(got.columns)} duck={list(exp.columns)}")
